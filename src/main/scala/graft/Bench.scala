@@ -105,23 +105,23 @@ object Bench {
     // decontaminate → mix → shard shuffle) in its OPERATIONAL form
     // (materialize=true): the chain runs with its persist/checkpoint
     // discipline, exactly as a user executes it, and the timing covers
-    // those jobs. The lazy form is for the PLAN AUDIT only — executing
-    // it recomputes every shared subtree (the post-line-removal frame is
-    // referenced five times) and measures a plan no one should run.
+    // those jobs. The lazy form (materialize=false) recomputes every
+    // shared subtree (the post-line-removal frame is referenced five
+    // times) and measures a plan no one should run.
     // The standing index is built on the first rep and reused after
     // (the standing-index cost model — min-of-N measures steady state).
     "op_pipeline" -> ((s, dir) =>
-      PipelineHarness.runOn(s, dir, materialize = true)),
+      PipelineHarness.runOn(s, dir)),
     // the same chain with the round-7 sub-document stages switched on
     // (paragraph keep-first + span removal between line removal and the
     // index dedup) — the full Dolma/Lee-et-al. intake order
     "op_pipeline_full" -> ((s, dir) =>
-      PipelineHarness.runOnFull(s, dir, materialize = true)),
+      PipelineHarness.runOnFull(s, dir)),
     // the full chain PLUS the round-9 trainer tail (trained-BPE token
     // counts → token-budget mix → 512-token sequence packing) — the
     // complete intake-to-training-layout cost
     "op_pipeline_pack" -> ((s, dir) =>
-      PipelineHarness.runOnPack(s, dir, materialize = true)),
+      PipelineHarness.runOnPack(s, dir)),
     // sequential vs batched BPE merge selection over the corpus vocab:
     // identical 24-merge output here (weight gaps keep created pairs
     // from overtaking), but the batched route runs ~batchK× fewer
@@ -147,7 +147,7 @@ object Bench {
     // the r15 fold-route Lloyd iteration (init jobs + ONE per-(partition,
     // cell) normalized-vector-sum aggregate) — the per-iteration cost the
     // IVF/semdedup training loops pay, with its plan shape audited in
-    // PLANS.md (the loop itself is driver-side and appears in no plan)
+    // PLANS.tsv (the loop itself is driver-side and appears in no plan)
     "op_ivf_lloyd" -> ((s, dir) =>
       Similarity.lloydIterationFrame(Tables(s, dir, "embeddings"),
         "vec_id", "embedding", k = 8, seed = 42)))
@@ -216,7 +216,7 @@ object Bench {
 
   /** The incremental-minhash operator arm, SHARED with graft.Plans
     * (materialize=false keeps the lineage visible for the audit) so the
-    * plan audited in PLANS.md can never drift from the operator the
+    * plan audited in PLANS.tsv can never drift from the operator the
     * bench times. */
   def minhashIncrOp(s: SparkSession, dir: String,
                     materialize: Boolean): DataFrame = {

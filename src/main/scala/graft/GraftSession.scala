@@ -50,7 +50,7 @@ object GraftSession {
     spark.sparkContext.setLogLevel("WARN")
     // dev knob (r14, the SPARK_GRAFT_BENCH_ONLY convention): session
     // confs from the environment — "k=v,k2=v2" — so a storage-tier A/B
-    // (e.g. graft.components.checkpointStorage=memdisk vs disk) runs
+    // (e.g. graft.checkpointStorage=memdisk vs disk) runs
     // through the same harness entrypoints the driver grades, without
     // code edits between arms. The driver sets no such env; official
     // runs get the in-code defaults.

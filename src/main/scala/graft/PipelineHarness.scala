@@ -7,7 +7,7 @@ import graft.operators.Curation
 
 /** Shared wiring for the COMPOSED curation pipeline
   * ([[graft.operators.Curation.pipeline]]) over the synthetic corpus —
-  * used by Bench (`op_pipeline`), Plans (the composed-plan audit),
+  * used by Bench (`op_pipeline`), the benchmark's curate_chain,
   * ScaleProbe (`pipeline_*` tiers) and the ScaleSpec output-count gate,
   * so all four drive the IDENTICAL chain.
   *
@@ -84,7 +84,7 @@ object PipelineHarness {
   }
 
   /** K isomorphic, shingle-decoupled replicas of the seeded corpus.
-    * Spread (r15 session 2, measured: PipeStageProbe): the seeding and
+    * Spread (r15 session 2, measured per stage at sf0.1): the seeding and
     * the C4 gate are heavy per-row regex/transform passes that inherited
     * the sub-block-size documents file's single scan task (the r14
     * gopher/c4 signature — the gate alone ran ~4.6 s serial at sf0.1);
@@ -163,28 +163,26 @@ object PipelineHarness {
       bpeMerges = if (trainerTail) tailBpeMerges else None,
       materialize = materialize)
 
-  /** One-call form for Bench/Plans: seeded 1x corpus from `dir`, index
-    * built on first use (later bench reps and other callers in the same
+  /** One-call form for Bench: the materialized chain over the seeded 1x
+    * corpus from `dir`, index built on first use (later bench reps and other callers in the same
     * session reuse it — the standing-index cost model). */
-  def runOn(spark: SparkSession, dir: String,
-            materialize: Boolean): DataFrame = {
+  def runOn(spark: SparkSession, dir: String): DataFrame = {
     val c = corpus(spark, dir)
     val table = "pipeline_mh_idx"
     ensureIndex(spark, c, table)
-    run(spark, c, table, materialize = materialize)
+    run(spark, c, table, materialize = true)
   }
 
   /** [[runOn]] with the round-7 sub-document stages enabled (paragraph
     * keep-first + span removal at gram 20 between line removal and the
     * index dedup) — the full Dolma/Lee-et-al. intake order. A separate
-    * entry so the default chain's bench/audit numbers stay comparable
+    * entry so the default chain's bench numbers stay comparable
     * across rounds. */
-  def runOnFull(spark: SparkSession, dir: String,
-                materialize: Boolean): DataFrame = {
+  def runOnFull(spark: SparkSession, dir: String): DataFrame = {
     val c = corpus(spark, dir)
     val table = "pipeline_mh_idx"
     ensureIndex(spark, c, table)
-    run(spark, c, table, materialize = materialize, subDocStages = true)
+    run(spark, c, table, materialize = true, subDocStages = true)
   }
 
   /** [[runOnFull]] plus the round-9 trainer tail: trained-BPE token
@@ -193,12 +191,11 @@ object PipelineHarness {
     * intake chain quality gate → sub-document dedup → index dedup →
     * decontamination → BPE count → token mix → pack in ONE job. Output
     * rows are sequence fragments, not documents. */
-  def runOnPack(spark: SparkSession, dir: String,
-                materialize: Boolean): DataFrame = {
+  def runOnPack(spark: SparkSession, dir: String): DataFrame = {
     val c = corpus(spark, dir)
     val table = "pipeline_mh_idx"
     ensureIndex(spark, c, table)
-    run(spark, c, table, materialize = materialize, subDocStages = true,
+    run(spark, c, table, materialize = true, subDocStages = true,
       trainerTail = true)
   }
 }

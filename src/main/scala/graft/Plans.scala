@@ -2,17 +2,36 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-/** Dumps `.explain("formatted")` for every SparkEntry query into
-  * PLANS.md — the plan-audit artifact: verifies parquet filter/column
-  * pushdown, broadcast choices and whole-stage codegen spans survive
-  * changes. Run after operator work; diff in review. */
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.{FormattedMode, ReusedSubqueryExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike}
+
+/** The plan audit: one structural digest row per audited section — every
+  * SparkEntry query plus the lazy operator forms below — committed as
+  * PLANS.tsv and recomputed by PlansAuditSpec, so a plan change that is
+  * not regenerated fails a test. A row records the physical node count,
+  * the shuffle and broadcast exchanges, and the `graft.*` expression
+  * classes the plan evaluates.
+  *
+  * `runMain graft.Plans` rewrites PLANS.tsv; `runMain graft.Plans
+  * <name>...` prints the formatted physical plans of the named sections
+  * (the full plan text for review is generated on demand, not
+  * committed). */
 object Plans {
+
+  val File = "PLANS.tsv"
+  /** The tables the committed digest is planned over: routing and
+    * broadcast choices depend on table sizes, so the digest is pinned
+    * to one scale. */
+  private val SfDir = "/root/testdata/sf0.01"
+  val Header = "name\tnodes\tshuffles\tbroadcasts\tgraft_exprs"
 
   /** One BPE training iteration as a single lazy plan: the text_bpe_train
     * vocabulary, split to symbols, pair census, top-`limit` TakeOrdered
     * (1 = sequential argmax, 4·batchK = the batched candidate pull). */
-  private def bpeIterationPlan(spark: org.apache.spark.sql.SparkSession,
-                               sfDir: String, limit: Int): org.apache.spark.sql.DataFrame = {
+  private def bpeIterationPlan(spark: SparkSession, sfDir: String,
+                               limit: Int): DataFrame = {
     import org.apache.spark.sql.functions.{col, split}
     import graft.operators.Bpe
     val words = Bpe.wordCounts(Tables(spark, sfDir, "documents"), "text")
@@ -22,20 +41,13 @@ object Plans {
       .orderBy(col("w").desc, col("a"), col("b")).limit(limit)
   }
 
-  /** Build one named operator-plan frame (the lazy audit forms below) —
-    * shared with graft.PlanDump so per-round before/after evidence files
-    * come from the identical builders the PLANS.md audit uses. */
-  def operatorPlan(spark: org.apache.spark.sql.SparkSession, sfDir: String,
-                   name: String): org.apache.spark.sql.DataFrame =
-    operatorPlanBuilders(spark, sfDir).toMap.apply(name)()
-
   // the self-verifying gate queries materialize their operator arms
   // eagerly (localCheckpoint — cache-release discipline), so their own
   // entries show truncated checkpoint scans; the true candidate-
   // generation plans are audited via the operators' lazy forms
   // (materialize = false keeps the full lineage visible and runs no job)
-  private def operatorPlanBuilders(spark: => org.apache.spark.sql.SparkSession,
-                                   sfDir: String): Seq[(String, () => org.apache.spark.sql.DataFrame)] = {
+  private def operatorPlans(spark: SparkSession,
+                            sfDir: String): Seq[(String, () => DataFrame)] = {
     import graft.operators.{Dedup, Similarity}
     Seq(
       "op_dedup_minhash" -> (() =>
@@ -97,21 +109,6 @@ object Plans {
       // shared with Bench at the same lloydIters (iterations add stages
       // to the audited training lineage)
       "op_sim_ann_ivf_topk" -> (() => Bench.ivfTopkOp(spark, sfDir)),
-      // the COMPOSED curation chain in its lazy form: the audit point is
-      // the cross-stage plan — pushdown through the quality scan, the
-      // line-df anti-join, the in-place (batch-side-only exchange) index
-      // probe, the unhinted decontamination semi-join (the measured
-      // broadcast route is a materialized-run action; the lazy form
-      // leaves the promotion to AQE), the mix's group-limit pair and the
-      // shard window all in ONE DAG
-      "op_pipeline" -> (() =>
-        PipelineHarness.runOn(spark, sfDir, materialize = false)),
-      // the full chain with the sub-document stages on: audit point is
-      // that the paragraph winner agg and the span census compose into
-      // the same single DAG between the line anti-join and the index
-      // probe
-      "op_pipeline_full" -> (() =>
-        PipelineHarness.runOnFull(spark, sfDir, materialize = false)),
       // the incremental SemDeDup probe path (dedup_semdedup_incr's
       // operator arm, shared shape with Bench's op entry): audit point is
       // the batch-side-only assignment + the corpus cells joining in
@@ -130,24 +127,6 @@ object Plans {
           "vec_id", "embedding", cents, probes = 3, tau = 0.3,
           materialize = false)
       }),
-      // the chain with the round-9 trainer tail: audit point is the
-      // token-count projection, the budget mix's sharded cumsums and the
-      // packing window/explode composing into the same DAG after the
-      // decontamination anti-join. The lazy form counts whitespace
-      // tokens — BPE training is a driver loop outside any one plan (the
-      // bpe entries below audit its per-iteration shape)
-      "op_pipeline_pack" -> (() => {
-        val cp = PipelineHarness.corpus(spark, sfDir)
-        PipelineHarness.ensureIndex(spark, cp, "pipeline_mh_idx")
-        PipelineHarness.run(spark, cp, "pipeline_mh_idx",
-          materialize = false, subDocStages = true, trainerTail = true,
-          tailBpeMerges = None)
-      }),
-      // sequential vs batched BPE: the driver loop sits outside any one
-      // plan, so the audit covers the per-iteration shape both share —
-      // word count → symbol split → pair census (hash agg with map-side
-      // partial combine) → k-bounded TakeOrdered argmax; the batched
-      // route's only plan difference is the limit (1 vs 4·batchK)
       // the steady-state components fold (dedup_components_incr's
       // operator arm, shared fixture with Bench so the audited shape
       // cannot drift): the fold/append jobs are imperative (ledger-
@@ -159,6 +138,11 @@ object Plans {
       // (Bench times fold+resolve; the resolve read is the audit point)
       "op_components_fold" -> (() => graft.catalog.Layout.componentsResolve(
         spark, Bench.componentsFoldFixture(spark, sfDir))),
+      // sequential vs batched BPE: the driver loop sits outside any one
+      // plan, so the audit covers the per-iteration shape both share —
+      // word count → symbol split → pair census (hash agg with map-side
+      // partial combine) → k-bounded TakeOrdered argmax; the batched
+      // route's only plan difference is the limit (1 vs 4·batchK)
       "op_bpe_train" -> (() => bpeIterationPlan(spark, sfDir, limit = 1)),
       "op_bpe_train_batched" -> (() =>
         bpeIterationPlan(spark, sfDir, limit = 32)),
@@ -186,93 +170,68 @@ object Plans {
           "vec_id", "embedding", seed = 42)))
   }
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val out = args.headOption.getOrElse("PLANS.md")
-    // the composed-chain sections run real routing jobs during plan
-    // construction, and a SparkOutOfMemoryError in one of them kills the
-    // whole local context — every LATER section would then report
-    // "stopped SparkContext" instead of its plan (observed r14). The
-    // audit must degrade per-section, so `session()` replaces a dead
-    // context with a fresh one and `emit` retries the section once.
-    var spark = GraftSession.local("plans", 8)
-    def session(): org.apache.spark.sql.SparkSession = {
-      if (spark.sparkContext.isStopped) spark = GraftSession.local("plans", 8)
-      spark
-    }
-    val sb = new StringBuilder
-    sb ++= "# Physical plan audit (generated by graft.Plans; sf dir: " + sfDir + ")\n\n"
-    sb ++= "Checklist per query: parquet `PushedFilters`/narrow `ReadSchema`, " +
-      "broadcast joins on dimension tables, `WholeStageCodegen` spans over the hot path, " +
-      "no `BroadcastNestedLoopJoin` or `CartesianProduct` except the " +
-      "documented all-pairs operators (r14: the bitmap-jaccard pair loop " +
-      "is a CartesianProduct over checkpointed blocks — deliberately, " +
-      "BROADCASTS.md round-14 note: the stats-free build side is never " +
-      "implicitly broadcast).\n"
-    val operatorPlans: Seq[(String, () => org.apache.spark.sql.DataFrame)] =
-      operatorPlanBuilders(session(), sfDir)
+  /** Every audited section in digest order: the SparkEntry queries by
+    * name, then the operator forms. The three composed curation chains
+    * (`op_pipeline`, `_full`, `_pack`) are not audited: their lazy trees
+    * repeat each stage's subtree at every reference, every stage has its
+    * own section, and the benchmark's curate_chain times the chain as it
+    * runs. */
+  private def sections(spark: SparkSession): Seq[(String, () => DataFrame)] =
+    SparkEntry.queries.toSeq.sortBy(_._1)
+      .map { case (n, fn) => n -> (() => fn(spark, SfDir)) } ++
+      operatorPlans(spark, SfDir)
 
-    def emit(name: String, mk: () => org.apache.spark.sql.DataFrame): Unit =
-      try {
-        def explain(): String = {
-          session()
-          mk().queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode)
-        }
-        val plan =
-          try explain()
-          // ADVICE r14: retry only NonFatal failures (an executor-side
-          // SparkOutOfMemoryError surfaces driver-side wrapped in a
-          // SparkException) — a genuinely fatal DRIVER error
-          // (java.lang.OutOfMemoryError, LinkageError) must propagate,
-          // not re-run plan construction on a half-broken driver
-          catch {
-            case scala.util.control.NonFatal(_)
-                if spark.sparkContext.isStopped =>
-              explain() // the section killed the context — once more, fresh
-          }
-        // composed-chain trees repeat each stage's subtree at every
-        // reference (Catalyst plans are trees, not DAGs), so a deep
-        // composition's TEXT grows multiplicatively while the audited
-        // per-stage plans already have their own sections — cap the
-        // artifact rather than committing a 100k-line section
-        val lines = plan.linesIterator.toSeq
-        val maxLines = 4000
-        val body =
-          if (lines.size <= maxLines) plan
-          else lines.take(maxLines).mkString("", "\n", "\n") +
-            s"… TRUNCATED ${lines.size - maxLines} more lines — the " +
-            "composed tree repeats per-stage subtrees audited in their " +
-            "own sections\n"
-        sb ++= s"\n## $name\n\n```\n$body```\n"
-      } catch { case scala.util.control.NonFatal(e) =>
-        // fatal driver errors propagate and abort the audit run (the
-        // NonFatal retry above already handles a section-killed context)
-        sb ++= s"\n## $name\n\nERROR: ${e.getMessage}\n"
-      } finally
-        // the measure-then-route constructions persist their routing
-        // relations (vocab gates, bucket maps) and rely on session-end
-        // reclaim; across 120 sections those caches accumulate and can
-        // starve Tungsten execution memory in the late composed-chain
-        // sections (op_pipeline_full OOMed here) — every section starts
-        // cold anyway, so drop them eagerly (skip if the section killed
-        // the context: the next emit starts a fresh session)
-        if (!spark.sparkContext.isStopped) spark.catalog.clearCache()
+  /** Physical-plan nodes, looking through adaptive query stages and
+    * subqueries. */
+  private def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+    case q: QueryStageExec => nodes(q.plan)
+    case r: ReusedSubqueryExec => Seq(r)
+    case _ => p +: (p.children.flatMap(nodes) ++ p.subqueries.flatMap(nodes))
+  }
 
-    (SparkEntry.queries.toSeq.sortBy(_._1)
-      .map { case (n, fn) => n -> (() => fn(session(), sfDir)) } ++ operatorPlans)
-      .foreach { case (name, mk) =>
-        emit(name, mk)
-        if (!spark.sparkContext.isStopped)
-          spark.catalog.clearCache() // gate queries checkpoint eagerly
-        // eager-checkpoint BLOCKS release only once their frames are
-        // GC-collected (the Bench rep discipline) — without this the
-        // dead blocks starve Tungsten memory in the late composed-chain
-        // sections (op_pipeline_* OOMed intermittently here)
+  /** The PLANS.tsv row of one section: name, physical node count,
+    * shuffle exchanges, broadcast exchanges and the sorted `graft.*`
+    * expression classes (`-` for none), tab-separated. Plans `df`
+    * without executing it and reads the plan tree, not its text. */
+  def digest(name: String, df: DataFrame): String = {
+    val ns = nodes(df.queryExecution.executedPlan)
+    val exprs = ns.flatMap(_.expressions.flatMap(_.collect {
+      case e if e.getClass.getName.startsWith("graft.") => e.getClass.getSimpleName
+    })).distinct.sorted
+    Seq(name, ns.size, ns.count(_.isInstanceOf[ShuffleExchangeLike]),
+      ns.count(_.isInstanceOf[BroadcastExchangeLike]),
+      if (exprs.isEmpty) "-" else exprs.mkString(",")).mkString("\t")
+  }
+
+  /** The digest rows of every section, in [[sections]] order. */
+  def digests(spark: SparkSession): Seq[String] =
+    sections(spark).map { case (name, mk) =>
+      try digest(name, mk())
+      finally {
+        // gate queries checkpoint eagerly, and their blocks are released
+        // only once the frames are garbage-collected
+        spark.catalog.clearCache()
         System.gc()
       }
-    Files.writeString(Paths.get(out), sb.toString)
-    println(s"PLANS written to $out")
-    spark.stop()
+    }
+
+  def main(args: Array[String]): Unit = {
+    val spark = GraftSession.local("plans", 4)
+    try {
+      if (args.isEmpty) {
+        Files.writeString(Paths.get(File),
+          (Header +: digests(spark)).mkString("", "\n", "\n"))
+        println(s"PLANS written to $File")
+      } else {
+        val all = sections(spark).toMap
+        args.foreach { n =>
+          val mk = all.getOrElse(n, throw new IllegalArgumentException(
+            s"no audited section named $n"))
+          println(s"## $n\n\n" +
+            mk().queryExecution.explainString(FormattedMode))
+        }
+      }
+    } finally spark.stop()
   }
 }

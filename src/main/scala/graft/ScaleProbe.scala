@@ -929,10 +929,10 @@ object ScaleProbe {
         // signal is the pair count (C(40,2)·K + stray fp collisions,
         // r11 pins: 780 / 7,802 / 78,128 at 1×/10×/100×).
         t(s"entropy_winnow_auto_disk_$tag") {
-          spark.conf.set(Winnow.CheckpointStorageConf, "disk")
+          spark.conf.set(graft.Storage.CheckpointStorageConf, "disk")
           try Winnow.overlapPairs(c, "doc_id", "text", k = 8, w = 6,
             minShared = 3).count()
-          finally spark.conf.unset(Winnow.CheckpointStorageConf)
+          finally spark.conf.unset(graft.Storage.CheckpointStorageConf)
         }
         c.unpersist()
         return
@@ -955,10 +955,10 @@ object ScaleProbe {
       // where the memdisk blocks needed 48 GB at the 100× tier
       var autoDisk = -3L
       t(s"entropy_winnow_auto_disk_$tag") {
-        spark.conf.set(Winnow.CheckpointStorageConf, "disk")
+        spark.conf.set(graft.Storage.CheckpointStorageConf, "disk")
         try autoDisk = Winnow.overlapPairs(c, "doc_id", "text", k = 8,
           w = 6, minShared = 3).count()
-        finally spark.conf.unset(Winnow.CheckpointStorageConf)
+        finally spark.conf.unset(graft.Storage.CheckpointStorageConf)
         autoDisk
       }
       println(s"SCALE entropy_winnow_auto_$tag: auto=$auto" +

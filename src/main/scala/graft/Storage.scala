@@ -5,10 +5,9 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset}
 /** Engine-wide storage policy for eager materializations of
   * multiply-consumed or iteration-superseded corpus-scale frames.
   *
-  * Round 12 proved the pattern winnow-first (`graft.winnow
-  * .checkpointStorage`, SCALE.md: the 100× entropy tier ran at the
-  * DEFAULT 8 GB heap on the `disk` tier, ~2× faster than the 48 GB
-  * memdisk run) — and round 12's verdict asked for the same knob behind
+  * Round 12 proved the pattern winnow-first (SCALE.md: the 100× entropy
+  * tier ran at the DEFAULT 8 GB heap on the `disk` tier, ~2× faster
+  * than the 48 GB memdisk run) — and round 12's verdict asked for the same knob behind
   * the connected-components family, whose one-time 100× history build
   * hit the identical local-mode heap wall (VERDICT r12 next #2). This
   * object is that generalization: one session conf, one materializer,
@@ -40,22 +39,18 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset}
   */
 object Storage {
 
-  /** Engine-wide session conf: memdisk | disk | reliable. Families may
-    * layer a family-specific conf ON TOP (e.g. winnow's) — family conf
-    * wins, then this, then the family's own default. */
+  /** Engine-wide session conf: memdisk | disk | reliable. When unset,
+    * each family falls back to its own default. */
   val CheckpointStorageConf = "graft.checkpointStorage"
 
-  /** Eagerly materialize `ds` per the storage policy. Resolution order:
-    * `familyConf` (if provided and set) → [[CheckpointStorageConf]] →
-    * `familyDefault`. Runs Spark jobs NOW. The returned plan is a bare
-    * `LogicalRDD`, so `Glue.releaseLocalCheckpoint` can free its blocks
-    * deterministically when superseded. */
+  /** Eagerly materialize `ds` per the storage policy:
+    * [[CheckpointStorageConf]] if set, else `familyDefault`. Runs Spark
+    * jobs NOW. The returned plan is a bare `LogicalRDD`, so
+    * `Glue.releaseLocalCheckpoint` can free its blocks deterministically
+    * when superseded. */
   def materializeOnce[T](ds: Dataset[T],
-                         familyConf: Option[String] = None,
                          familyDefault: String = "memdisk"): Dataset[T] = {
-    val conf = ds.sparkSession.conf
-    val mode = familyConf.flatMap(conf.getOption)
-      .orElse(conf.getOption(CheckpointStorageConf))
+    val mode = ds.sparkSession.conf.getOption(CheckpointStorageConf)
       .getOrElse(familyDefault)
     mode match {
       case "memdisk" => ds.localCheckpoint(true)

@@ -652,7 +652,7 @@ object Layout {
     * fingerprinting subtree three times on every auto-capped build) —
     * fps and census are eagerly materialized ONCE via
     * [[graft.operators.Winnow.materializeOnce]], storage selected by
-    * the same `graft.winnow.checkpointStorage` session conf. */
+    * the engine `graft.checkpointStorage` session conf. */
   private def dfCapped(fps0: DataFrame,
                        maxDf: Option[Long]): (DataFrame, Seq[DataFrame]) = {
     import org.apache.spark.sql.functions.{broadcast, count, lit}
@@ -997,9 +997,9 @@ object Layout {
                            maxIter: Int = 50): DataFrame = {
     import org.apache.spark.sql.graftglue.Glue
     import org.apache.spark.sql.functions.coalesce
-    // storage behind the per-round blocks: the CC family conf
-    // (graft.components.checkpointStorage -> graft.checkpointStorage ->
-    // `disk`; graft.operators.Dedup.ComponentsStorageConf, round 14)
+    // storage behind the per-round blocks: the engine
+    // graft.checkpointStorage tier, CC family default `disk`
+    // (graft.operators.Dedup.componentsMaterialize)
     val parents = graft.operators.Dedup.componentsMaterialize(parents0)
     // error-path hygiene (ADVICE r13): the non-convergence throw below —
     // and any mid-loop failure — must not orphan the round's blocks; a

@@ -263,10 +263,9 @@ object Curation {
     *    against everything this run admitted.
     *
     * `materialize = false` keeps the whole chain lazy (no checkpoint, no
-    * append, persist left to the caller) — the form PLANS.md audits and
-    * Bench times. Composed-plan audit: PLANS.md `op_pipeline`; scale
-    * posture: SCALE.md `pipeline_*` tiers + the ScaleSpec output-count
-    * gate. */
+    * append, persist left to the caller). Each stage's plan has its own
+    * PLANS.tsv row; scale posture: SCALE.md `pipeline_*` tiers + the
+    * ScaleSpec output-count gate. */
   def pipeline(spark: org.apache.spark.sql.SparkSession, docs: DataFrame,
                idCol: String, textCol: String, srcCol: String,
                targetTotal: Long,
@@ -328,8 +327,8 @@ object Curation {
         stagePersists += p
         p
       }
-    // the GATE is a stage boundary too (r15 session 2, measured:
-    // PipeStageProbe): the quality rewrite is the chain's heaviest
+    // the GATE is a stage boundary too (r15 session 2, measured per
+    // stage at sf0.1): the quality rewrite is the chain's heaviest
     // per-row pass (regex/line transforms over every corpus byte) and
     // the line-removal join references it THREE times — the line census,
     // the per-doc reassembly's n_lines side, and the surviving-rows join
@@ -362,7 +361,7 @@ object Curation {
           .select(col(idCol), col("clean_text").as(textCol)), Seq(idCol))
         .select(cols: _*)
     }
-    // the lazy form (plan audits / bench) takes NO action at construction:
+    // the lazy form takes NO action at construction:
     // no persist (nothing would unpersist it), no routing count, no
     // checkpoint — caching is the caller's concern there. The persist
     // point sits AFTER the last text-rewriting stage, so the optional
@@ -386,7 +385,7 @@ object Curation {
     // decontamination references the deduped frame TWICE (the shingle
     // explode and the anti-join's kept side) — unpersisted, the intra
     // minhash signatures and both anti-joins computed twice per run
-    // (r15 session 2, PipeStageProbe: ~4 s per evaluation at sf0.1).
+    // (r15 session 2, measured: ~4 s per evaluation at sf0.1).
     // Stage boundary only when that double reference exists.
     val afterDedup = stageBoundary(afterDedup0,
       needed = evalShingles.nonEmpty && indexTable.nonEmpty)

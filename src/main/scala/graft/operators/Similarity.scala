@@ -34,14 +34,6 @@ object Similarity {
     * k-means‖-style oversample + driver-local refine. */
   val FarthestPointExactK: Int = 16
 
-  /** Session conf selecting [[trainIvfCentroids]]' Lloyd aggregation
-    * route: `fold` (default — per-row NormalizedVectorSumAgg, merge
-    * order pinned to ascending partition id) or `posexplode` (the
-    * replaced dim-rows-per-member route, kept as the fallback; r15,
-    * VERDICT r14 next #4). Bit-identical centroids under both
-    * (SimilaritySpec-gated). */
-  val LloydRouteConf = "graft.ivf.lloydRoute"
-
   /** Per-band numeric bucket keys from packed hyperplane sign bits:
     * band i covers bits [i*r, (i+1)*r); key packs (band, bits) so a single
     * equality join covers all bands after an explode. */
@@ -276,43 +268,20 @@ object Similarity {
     // posexplode route's map-side partials performed), and the driver
     // folds the partials in ascending partition id. The replaced route's
     // final-aggregate merge followed shuffle fetch order, so the fold is
-    // strictly more deterministic; SimilaritySpec pins both routes
-    // bit-identical on the fixtures, and `graft.ivf.lloydRoute =
-    // posexplode` keeps the old route as the fallback.
-    val route = df.sparkSession.conf.getOption(LloydRouteConf)
-      .getOrElse("fold")
+    // strictly more deterministic; SimilaritySpec pins the fold
+    // bit-identical to a posexplode reference on the fixtures.
     for (_ <- 1 to lloydIters) {
       val acc = Array.fill(k, dim)(0.0)
       val seen = new Array[Boolean](k)
-      if (route == "posexplode") {
-        // mean of row-normalized members per (cell, dim): partial+final
-        // agg, k×dim rows collected — the only driver-side data per
-        // iteration. pos < dim guards ragged rows (IvfAssignExpr clamps
-        // the same way).
-        val perDim = base
-          .select(element_at(ivfAssign(col("emb"), cents, 1), 1).as("cell"),
-            sqrt(col("nsq")).as("nrm"), col("emb"))
-          .select(col("cell"), col("nrm"), posexplode(col("emb")))
-          .filter(col("pos") < dim)
-          .groupBy(col("cell"), col("pos"))
-          .agg(sum(col("col") / col("nrm")).as("s"))
-          .collect()
-        perDim.foreach { r =>
-          val cell = r.getInt(0) // centroid id (element_at(…, 1) of the 1-probe array)
-          acc(cell)(r.getInt(1)) = r.getDouble(2)
-          seen(cell) = true
-        }
-      } else {
-        val perPart = lloydFoldFrame(base, cents, dim)
-          .collect()
-          .sortBy(_.getInt(0)) // ascending partition id — pinned merge order
-        perPart.foreach { r =>
-          val cell = r.getInt(1)
-          val s = r.getSeq[Double](2)
-          var j = 0
-          while (j < dim) { acc(cell)(j) += s(j); j += 1 }
-          seen(cell) = true
-        }
+      val perPart = lloydFoldFrame(base, cents, dim)
+        .collect()
+        .sortBy(_.getInt(0)) // ascending partition id — pinned merge order
+      perPart.foreach { r =>
+        val cell = r.getInt(1)
+        val s = r.getSeq[Double](2)
+        var j = 0
+        while (j < dim) { acc(cell)(j) += s(j); j += 1 }
+        seen(cell) = true
       }
       cents = cents.zipWithIndex.map { case (old, c) =>
         val m = normalized(acc(c))

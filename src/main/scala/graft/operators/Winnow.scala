@@ -62,31 +62,24 @@ object Winnow {
     * from the corpus's own df distribution (the safe-by-default route). */
   val AutoMaxDf: Long = -1L
 
-  /** Session conf selecting the storage behind [[overlapPairs]]' eager
-    * corpus-scale materializations (the fingerprint frame and df census
-    * — BOTH routes since round 13 — and graft.catalog.Layout.dfCapped's
-    * index-build twins). Family-specific override of the engine-wide
-    * [[graft.Storage.CheckpointStorageConf]]; tier semantics are
-    * [[graft.Storage]]'s (memdisk | disk | reliable). The lineage-free
-    * plan shape — and therefore the pair set — is identical under every
-    * value (ScaleSpec-gated).
+  /** Eagerly materialize a multiply-consumed corpus-scale frame — the
+    * fingerprint frame and df census behind [[overlapPairs]] (BOTH routes
+    * since round 13) and graft.catalog.Layout.dfCapped's index-build
+    * twins — on the engine [[graft.Storage.CheckpointStorageConf]] tier
+    * (memdisk | disk | reliable). The lineage-free plan shape — and
+    * therefore the pair set — is identical under every tier
+    * (ScaleSpec-gated). Runs Spark jobs NOW (see the [[overlapPairs]]
+    * eager-execution note).
     *
-    * The winnow family DEFAULT is `disk` (round 13; the other families
-    * default memdisk): SCALE.md measured the disk tier ~2× FASTER than
-    * memdisk at the 100× entropy tier while running at the default 8 GB
-    * heap, and the r12 graded bench showed the disk-checkpointed auto
-    * route immune to the full-suite block-store pressure that inflated
-    * the then-lazy uncapped siblings 3–6×. Zero heap residency is the
-    * right default for frames that scale with corpus characters. */
-  val CheckpointStorageConf = "graft.winnow.checkpointStorage"
-
-  /** Eagerly materialize a multiply-consumed corpus-scale frame per
-    * [[CheckpointStorageConf]] → `graft.checkpointStorage` → `disk`.
-    * Runs Spark jobs NOW (see the [[overlapPairs]] eager-execution
-    * note). */
+    * The winnow family DEFAULT is `disk` (round 13): SCALE.md measured
+    * the disk tier ~2× FASTER than memdisk at the 100× entropy tier
+    * while running at the default 8 GB heap, and the r12 graded bench
+    * showed the disk-checkpointed auto route immune to the full-suite
+    * block-store pressure that inflated the then-lazy uncapped siblings
+    * 3–6×. Zero heap residency is the right default for frames that
+    * scale with corpus characters. */
   private[graft] def materializeOnce(df: DataFrame): DataFrame =
-    graft.Storage.materializeOnce(df,
-      familyConf = Some(CheckpointStorageConf), familyDefault = "disk")
+    graft.Storage.materializeOnce(df, familyDefault = "disk")
 
   /** [[overlapPairs]] broadcasts a relation (the capped census attach,
     * the pair-join build side, the per-doc counts) only when its
@@ -127,7 +120,7 @@ object Winnow {
       .select(col(idCol), col("__s.pos").as("pos"), col("__s.fp").as("fp"))
     // materialize = true is the OPERATIONAL form for direct consumers
     // (round 13, VERDICT r12 next #1): the selected relation lands on
-    // [[CheckpointStorageConf]] storage (family default `disk`) and the
+    // the engine storage tier (family default `disk`) and the
     // caller's downstream (sort, export, join) reads the blocks.
     // Composing callers ([[fingerprintSets]] → [[overlapPairs]], the
     // index builders) keep the default: they checkpoint their own
@@ -228,8 +221,8 @@ object Winnow {
     * consumer reads the materialized by-id blocks — which is also what
     * keeps a hot fp's pair generation distributed across scan-order
     * tasks instead of concentrated on one fp-hashed task. The storage
-    * behind those blocks is the
-    * [[CheckpointStorageConf]] session conf: executor-local DISK_ONLY
+    * behind those blocks is the engine
+    * [[graft.Storage.CheckpointStorageConf]] tier: executor-local DISK_ONLY
     * (family default — no heap residency, the measured-fastest tier at
     * corpus scale), executor-local MEMORY_AND_DISK, or a reliable
     * `setCheckpointDir`-backed `checkpoint()` for clusters where
@@ -247,8 +240,8 @@ object Winnow {
     * scale gram window, census and pair join into one giant shuffle
     * job whose wall time swung 3–6× with session history in the graded
     * full-suite runs, while the checkpointed route sat flat through the
-    * same runs. Storage behind the materializations:
-    * [[CheckpointStorageConf]] (family default `disk`). */
+    * same runs. Storage behind the materializations: the engine tier
+    * (family default `disk`). */
   /** The AutoMaxDf cap derivation over a (fp, df) census relation: a
     * 1-row frame whose `__cap` column is
     * max(`floor`, the exact discrete `quantile` of df over distinct
@@ -324,7 +317,7 @@ object Winnow {
     // suffix slices) was built and MEASURED OUT this round: one
     // checkpoint and zero joins, but sf0.1's df census is dominated by
     // boilerplate fps (max df 2758, Σ df(df−1)/2 = 59.6M generated
-    // pairs from 395k joinable rows — WinnowProbe), and grouping
+    // pairs from 395k joinable rows), and grouping
     // concentrates each hot fp's whole df² on the task holding its
     // group row while the per-id_a suffix slices allocate ~Σ df²/2
     // array elements of garbage; the paired control regressed the tier

@@ -2,59 +2,75 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.scalatest.funsuite.AnyFunSuite
+import scala.collection.immutable.ListMap
 
-/** Staleness tripwire for the committed plan-audit artifact (VERDICT_r05
-  * next-round #3: PLANS.md silently went stale when dedup_jaccard_prefix
-  * landed without a regeneration). No SparkSession needed — the contract
-  * is purely "the artifact covers the current query surface".
+/** The plan audit: the committed PLANS.tsv must equal a fresh
+  * [[Plans.digest]] of every audited section, so a plan change that was
+  * not regenerated with `runMain graft.Plans` fails here.
   */
-class PlansAuditSpec extends AnyFunSuite {
+class PlansAuditSpec extends SparkSpec {
 
-  private lazy val sections: Set[String] = {
-    val path = Paths.get("PLANS.md")
-    assert(Files.exists(path), "PLANS.md is missing — run `runMain graft.Plans`")
-    Files.readString(path).linesIterator
-      .filter(_.startsWith("## ")).map(_.drop(3).trim).toSet
+  /** Operator benches with no audit row. The composed curation chains
+    * repeat every stage's subtree at each reference (their lazy trees
+    * ran to 8k–1.85M formatted lines, and planning one runs a collect
+    * over the unmaterialised chain); each stage has its own row and the
+    * benchmark's curate_chain times the chain as it runs. */
+  private val composedChains =
+    Set("op_pipeline", "op_pipeline_full", "op_pipeline_pack")
+
+  private def byName(rows: Seq[String]): ListMap[String, String] =
+    ListMap(rows.map(r => r.takeWhile(_ != '\t') -> r): _*)
+
+  /** Every way `fresh` differs from `committed`: changed rows as
+    * committed vs fresh, then names missing from or extra in the
+    * committed file. Empty when they agree. */
+  private def differences(committed: Seq[String], fresh: Seq[String]): Seq[String] = {
+    val (c, f) = (byName(committed), byName(fresh))
+    c.keys.filter(f.contains).filter(n => c(n) != f(n)).toSeq
+      .map(n => s"$n\n  committed: ${c(n)}\n  fresh:     ${f(n)}") ++
+      (f.keySet -- c.keySet).toSeq.sorted.map(n => s"missing from ${Plans.File}: $n") ++
+      (c.keySet -- f.keySet).toSeq.sorted.map(n => s"extra in ${Plans.File}: $n")
   }
 
+  private lazy val committed: Seq[String] = {
+    val path = Paths.get(Plans.File)
+    assert(Files.exists(path), s"${Plans.File} is missing — run `runMain graft.Plans`")
+    val lines = Files.readString(path).linesIterator.toSeq
+    assert(lines.headOption.contains(Plans.Header), s"bad header: ${lines.headOption}")
+    lines.tail
+  }
+
+  private def assertRows(required: Set[String]): Unit = {
+    val missing = required -- byName(committed).keySet
+    assert(missing.isEmpty, s"${Plans.File} is missing rows: ${missing.toSeq.sorted}")
+  }
+
+  // The two coverage cases keep the names they had when the audit was
+  // PLANS.md, so their history stays continuous; both read PLANS.tsv.
   test("PLANS.md has a section for every SparkEntry query") {
-    val missing = SparkEntry.queries.keySet -- sections
-    assert(missing.isEmpty,
-      s"PLANS.md is stale — regenerate with `runMain graft.Plans`. Missing: ${missing.toSeq.sorted}")
+    assertRows(SparkEntry.queries.keySet)
   }
 
   test("PLANS.md has a section for every op_* operator bench") {
-    val missing = Bench.operatorBenches.keySet -- sections
-    assert(missing.isEmpty,
-      s"PLANS.md is missing operator plans: ${missing.toSeq.sorted}")
+    assert(composedChains.subsetOf(Bench.operatorBenches.keySet))
+    assertRows(Bench.operatorBenches.keySet -- composedChains)
   }
 
-  test("committed plans/<round> evidence files are real plans, not error stubs") {
-    // VERDICT r14 "what's wrong" #4: plans/r14/op_winnow_fps_after.txt was
-    // committed as a "stopped SparkContext" error dump and cited as Change-1
-    // evidence. A cited plan artifact must contain a physical plan; any
-    // ERROR body (or a file with no plan at all) fails here.
-    import scala.jdk.CollectionConverters._
-    val root = Paths.get("plans")
-    if (Files.isDirectory(root)) {
-      val bad = Files.walk(root).iterator().asScala
-        .filter(p => p.toString.endsWith(".txt"))
-        .filter { p =>
-          val body = Files.readString(p)
-          body.contains("ERROR:") || body.contains("stopped SparkContext") ||
-            !body.contains("== Physical Plan ==")
-        }.map(_.toString).toSeq.sorted
-      assert(bad.isEmpty,
-        s"plan evidence files are error stubs or contain no plan: $bad")
-    }
+  test("the comparison reports an edited row, a missing name and an extra name") {
+    val edited = committed.head.split("\t", -1)
+    edited(1) = (edited(1).toInt + 1).toString
+    val altered = edited.mkString("\t") +: committed.tail
+    val diff = differences(altered, committed)
+    assert(diff.size == 1 && diff.head.startsWith(edited(0) + "\n"), diff)
+    assert(diff.head.contains(s"committed: ${altered.head}") &&
+      diff.head.contains(s"fresh:     ${committed.head}"), diff)
+    assert(differences(committed.tail :+ "op_gone\t1\t0\t0\t-", committed) ==
+      Seq(s"missing from ${Plans.File}: ${edited(0)}", s"extra in ${Plans.File}: op_gone"))
   }
 
-  test("PLANS.md has no leftover sections or failed explains") {
-    val extra = sections -- SparkEntry.queries.keySet -- Bench.operatorBenches.keySet
-    assert(extra.isEmpty, s"PLANS.md has stale sections: ${extra.toSeq.sorted}")
-    val errors = Files.readString(Paths.get("PLANS.md")).linesIterator
-      .filter(_.startsWith("ERROR:")).toSeq
-    assert(errors.isEmpty, s"PLANS.md recorded failed explains: $errors")
+  test("PLANS.tsv equals a fresh digest of every audited plan") {
+    val diff = differences(committed, Plans.digests(spark))
+    if (diff.nonEmpty) fail(s"${Plans.File} is stale — regenerate with " +
+      s"`runMain graft.Plans`:\n${diff.mkString("\n")}")
   }
 }

@@ -627,9 +627,9 @@ class ScaleSpec extends SparkSpec {
       // default-heap local-mode route) and the reliable
       // setCheckpointDir-backed checkpoint both equal the memdisk run
       def pairsWith(mode: String): Long = {
-        spark.conf.set(Winnow.CheckpointStorageConf, mode)
+        spark.conf.set(graft.Storage.CheckpointStorageConf, mode)
         try pairs(c1, auto = true)
-        finally spark.conf.unset(Winnow.CheckpointStorageConf)
+        finally spark.conf.unset(graft.Storage.CheckpointStorageConf)
       }
       assert(pairsWith("disk") == a1, "DISK_ONLY route drifted the pair set")
       val ckDir = java.nio.file.Files

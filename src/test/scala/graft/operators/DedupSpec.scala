@@ -532,7 +532,7 @@ class DedupSpec extends SparkSpec {
     "(memdisk/disk/reliable; r14 eager materialization)") {
     // gates the r14 eager-checkpoint rework: the shingle frame and the
     // bitmap route's docSets build side materialize on the
-    // graft.jaccard.checkpointStorage tier — the answer must not depend
+    // graft.checkpointStorage tier — the answer must not depend
     // on which tier holds the blocks, on either route
     val expectLow = bruteJaccard(0.2)  // bitmap route at the default gates
     val expectHigh = bruteJaccard(0.8) // prefix route past the vocab gate
@@ -540,7 +540,7 @@ class DedupSpec extends SparkSpec {
       .createTempDirectory("jac_reliable").toString
     spark.sparkContext.setCheckpointDir(ckDir)
     for (mode <- Seq("memdisk", "disk", "reliable")) {
-      spark.conf.set(Dedup.JaccardStorageConf, mode)
+      spark.conf.set(graft.Storage.CheckpointStorageConf, mode)
       try {
         val bm = Dedup.jaccardPairs(docs, "doc_id", "text", 2, 0.2)
           .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
@@ -549,7 +549,7 @@ class DedupSpec extends SparkSpec {
           .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
         assert(bm == expectLow, s"bitmap route, mode $mode")
         assert(pf == expectHigh, s"prefix route, mode $mode")
-      } finally spark.conf.unset(Dedup.JaccardStorageConf)
+      } finally spark.conf.unset(graft.Storage.CheckpointStorageConf)
     }
   }
 

@@ -105,21 +105,53 @@ class SimilaritySpec extends SparkSpec {
   test("Lloyd fold route yields bit-identical centroids to the posexplode route (r15)") {
     // the r15 per-row fold (NormalizedVectorSumAgg, merge pinned to
     // ascending partition id) vs the replaced posexplode + (cell, pos)
-    // aggregate — centroids must agree to the BIT on a multi-partition
-    // frame, or the candidate sets downstream could silently drift
-    def train(df: org.apache.spark.sql.DataFrame, route: String): Seq[Seq[Double]] = {
-      spark.conf.set(Similarity.LloydRouteConf, route)
-      try Similarity.trainIvfCentroids(df, "vec_id", "embedding",
-        k = 3, lloydIters = 3, seed = 42)
-      finally spark.conf.unset(Similarity.LloydRouteConf)
+    // aggregate, kept here as the reference — centroids must agree to
+    // the BIT on a multi-partition frame, or the candidate sets
+    // downstream could silently drift
+    def normalized(v: Array[Double]): Array[Double] = {
+      val n = math.sqrt(v.map(x => x * x).sum)
+      if (n == 0) v else v.map(_ / n)
+    }
+    // the same init, then Lloyd by the per-(cell, dim) sum of
+    // row-normalized members over dim rows per member
+    def posexplodeLloyd(df: DataFrame, iters: Int): Seq[Seq[Double]] = {
+      var cents = Similarity.trainIvfCentroids(df, "vec_id", "embedding",
+        k = 3, lloydIters = 0, seed = 42)
+      val dim = cents.head.length
+      val base = df
+        .select(col("embedding").cast("array<double>").as("emb"),
+          graft.functions.l2NormSq(col("embedding")).as("nsq"))
+        .filter(col("nsq") > 0)
+      for (_ <- 1 to iters) {
+        val acc = Array.fill(cents.size, dim)(0.0)
+        val seen = new Array[Boolean](cents.size)
+        base
+          .select(element_at(graft.functions.ivfAssign(col("emb"), cents, 1), 1)
+            .as("cell"), sqrt(col("nsq")).as("nrm"), col("emb"))
+          .select(col("cell"), col("nrm"), posexplode(col("emb")))
+          .filter(col("pos") < dim)
+          .groupBy(col("cell"), col("pos"))
+          .agg(sum(col("col") / col("nrm")).as("s"))
+          .collect()
+          .foreach { r =>
+            acc(r.getInt(0))(r.getInt(1)) = r.getDouble(2)
+            seen(r.getInt(0)) = true
+          }
+        cents = cents.zipWithIndex.map { case (old, c) =>
+          val m = normalized(acc(c))
+          if (seen(c) && m.exists(_ != 0.0)) m.toSeq else old
+        }
+      }
+      cents
     }
     for (df <- Seq(clustered, clustered.repartition(7, col("vec_id")))) {
-      val fold = train(df, "fold").flatten
+      val fold = Similarity.trainIvfCentroids(df, "vec_id", "embedding",
+          k = 3, lloydIters = 3, seed = 42).flatten
         .map(java.lang.Double.doubleToRawLongBits)
-      val old = train(df, "posexplode").flatten
+      val old = posexplodeLloyd(df, 3).flatten
         .map(java.lang.Double.doubleToRawLongBits)
       assert(fold == old,
-        "fold-route centroids must be bit-identical to the posexplode route")
+        "fold-route centroids must be bit-identical to the posexplode reference")
     }
   }
 

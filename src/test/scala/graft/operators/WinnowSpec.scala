@@ -337,13 +337,13 @@ class WinnowSpec extends SparkSpec {
     val lazyFps = Winnow.winnowFingerprints(docs, "doc_id", "text", k = 8, w = 4)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet
     for (mode <- Seq("memdisk", "disk")) {
-      spark.conf.set(Winnow.CheckpointStorageConf, mode)
+      spark.conf.set(graft.Storage.CheckpointStorageConf, mode)
       try {
         val mat = Winnow.winnowFingerprints(docs, "doc_id", "text",
             k = 8, w = 4, materialize = true)
           .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet
         assert(mat == lazyFps, s"mode $mode")
-      } finally spark.conf.unset(Winnow.CheckpointStorageConf)
+      } finally spark.conf.unset(graft.Storage.CheckpointStorageConf)
     }
   }
 }
