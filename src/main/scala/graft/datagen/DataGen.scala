@@ -122,23 +122,30 @@ object DataGen {
 /** Rate-controlled producer: drives [[DataGen]] through a traffic-pattern
   * governor into a topic (reference: producer.go:85-235 ticker loop +
   * traffic_pattern.go piecewise rates). Instead of a wall-clock ticker,
-  * each tick's row budget is the exact integral of the rate over the tick
-  * window ([[TrafficPatterns.rowsBetween]]) — deterministic totals, no
-  * drift at high rates (documented divergence, SURVEY.md §7.4 risk 5). */
+  * each window's row budget is the exact integral of the rate over it
+  * ([[TrafficPatterns.rowsBetween]]) — deterministic totals, no drift at
+  * high rates (documented divergence, SURVEY.md §7.4 risk 5).
+  *
+  * A flat-out run (tests, backfills) is one bounded input: it writes the
+  * whole integral over `[0, durationMs)` with one `topics.produce`, i.e.
+  * one Spark job, the way an `AvailableNow` query drains a backfill in one
+  * pass. Ticks exist only to pace a `realTime` run; budgets telescope, so
+  * both write the same rows with the same contiguous ids. */
 object RatedProducer {
 
-  /** Produce synthetic rows for `durationMs` of virtual time in `tickMs`
-    * windows. Returns the total row count (= floor of the rate integral).
-    * `realTime=false` runs the loop flat out (tests, backfills);
-    * `realTime=true` paces ticks on the wall clock like the reference. */
+  /** Produce synthetic rows for `durationMs` of virtual time. Returns the
+    * total row count (= floor of the rate integral). `realTime=false`
+    * writes it in one window; `realTime=true` writes one `tickMs` window
+    * at a time and paces them on the wall clock like the reference. */
   def run(spark: SparkSession, topics: Topics, topic: String,
           schema: AvroSchemas.AvroSchema, patterns: TrafficPatterns,
           durationMs: Long, tickMs: Long = 1000L, seed: Long = 42L,
           realTime: Boolean = false): Long = {
+    val step = if (realTime) tickMs else durationMs
     var produced = 0L
     var t = 0L
     while (t < durationMs) {
-      val t1 = math.min(t + tickMs, durationMs)
+      val t1 = math.min(t + step, durationMs)
       val budget = patterns.rowsBetween(t, t1)
       if (budget > 0) {
         topics.produce(DataGen.rows(spark, schema, budget, startId = produced, seed = seed), topic)

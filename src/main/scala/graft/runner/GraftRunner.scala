@@ -66,7 +66,12 @@ object GraftRunner {
       durationMs: Long,
       resources: Resources,
       queryStats: Seq[MetricsCollector#QueryStats],
-      reportPath: Option[Path])
+      reportPath: Option[Path],
+      // wall time of steps 7, 8 and 9 (produce, run to completion,
+      // validate output); they sum to at most `durationMs`
+      produceMs: Long,
+      streamMs: Long,
+      validateMs: Long)
 
   private val createTableName: Regex = """(?is)CREATE\s+TABLE\s+(?:IF\s+NOT\s+EXISTS\s+)?[`"]?(\w+)""".r
   private val insertTarget: Regex = """(?is)INSERT\s+INTO\s+[`"]?(\w+)[`"]?\s+(SELECT.*)""".r
@@ -90,8 +95,15 @@ object GraftRunner {
         s"traffic pattern ending at ${p.endMs}ms exceeds producer duration ${durationMs}ms")
     }
 
+  /** `body`'s result and its wall time in whole milliseconds. */
+  private def timedMs[A](body: => A): (A, Long) = {
+    val t = System.nanoTime()
+    val out = body
+    (out, (System.nanoTime() - t) / 1000000L)
+  }
+
   def run(spark: SparkSession, cfg: Config): RunResult = {
-    val t0 = System.currentTimeMillis()
+    val t0 = System.nanoTime()
     val ts = java.time.LocalDateTime.now()
       .format(java.time.format.DateTimeFormatter.ofPattern("yyyyMMdd-HHmmss"))
     val executionId = s"graft-$ts-${java.util.UUID.randomUUID().toString.take(8)}"
@@ -216,7 +228,7 @@ object GraftRunner {
         insertQueries = inserts.map(startInsert(_, Trigger.ProcessingTime("500 milliseconds")))
 
       // 7: produce (skipped in CSV mode, reference cmd/run.go:118-127)
-      val produced =
+      val (produced, produceMs) = timedMs {
         if (isCsvMode(statements)) 0L
         else {
           val tp = TrafficPatterns.parse(cfg.trafficPattern, cfg.messageRate)
@@ -225,47 +237,52 @@ object GraftRunner {
           RatedProducer.run(spark, topics, resources.inputTopic, inputAvro, tp,
             cfg.durationMs, seed = cfg.seed)
         }
+      }
 
       // 8: run to completion
-      if (cfg.continuous) {
-        val expected = cfg.expectedOutputRows.getOrElse(produced)
-        insertQueries.foreach(q =>
-          BoundedRun.awaitExpectedCount(spark, q, expected, cfg.noProgressTimeoutMs))
-      } else {
-        // bounded: everything is on disk now — one AvailableNow pass per
-        // stage, run SEQUENTIALLY in statement order. AvailableNow fixes
-        // the set of available input at query start, so a downstream
-        // INSERT reading an intermediate topic must not start until the
-        // upstream INSERT has finished writing it (starting all stages
-        // concurrently made stage B snapshot an empty intermediate topic
-        // and terminate with zero rows).
-        inserts.foreach { spec =>
-          val q = startInsert(spec, Trigger.AvailableNow())
-          insertQueries ::= q
-          q.awaitTermination()
+      val (_, streamMs) = timedMs {
+        if (cfg.continuous) {
+          val expected = cfg.expectedOutputRows.getOrElse(produced)
+          insertQueries.foreach(q =>
+            BoundedRun.awaitExpectedCount(spark, q, expected, cfg.noProgressTimeoutMs))
+        } else {
+          // bounded: everything is on disk now — one AvailableNow pass per
+          // stage, run SEQUENTIALLY in statement order. AvailableNow fixes
+          // the set of available input at query start, so a downstream
+          // INSERT reading an intermediate topic must not start until the
+          // upstream INSERT has finished writing it (starting all stages
+          // concurrently made stage B snapshot an empty intermediate topic
+          // and terminate with zero rows).
+          inserts.foreach { spec =>
+            val q = startInsert(spec, Trigger.AvailableNow())
+            insertQueries ::= q
+            q.awaitTermination()
+          }
         }
       }
 
       // 9: validate output
       val outputSchema = schemas.get("output").map(_.structType).getOrElse(inputSchema)
-      val outputRows =
+      val (outputRows, validateMs) = timedMs {
         try topics.readAll(spark, resources.outputTopic, outputSchema).count()
         catch { case _: Exception => 0L }
+      }
 
       val status =
         if (cfg.expectedOutputRows.forall(outputRows >= _)) "SUCCESS" else "INCOMPLETE"
-      val durationMs = System.currentTimeMillis() - t0
+      val durationMs = (System.nanoTime() - t0) / 1000000L
 
       // 10: report
       val reportPath =
         if (cfg.generateReport)
           Some(Report.write(cfg.projectDir.resolve("reports"), executionId, status,
             durationMs, cfg, resources, schemas.keys.toSeq, produced, outputRows,
-            metrics.snapshot))
+            metrics.snapshot,
+            Seq("produce" -> produceMs, "stream" -> streamMs, "validate" -> validateMs)))
         else None
 
       RunResult(executionId, produced, outputRows, status, durationMs, resources,
-        metrics.snapshot, reportPath)
+        metrics.snapshot, reportPath, produceMs, streamMs, validateMs)
     } finally {
       // 11: deferred cleanup (reference runner.go:295-304)
       insertQueries.foreach(q => if (q.isActive) q.stop())

@@ -4,7 +4,8 @@ import java.nio.file.{Files, Path}
 
 /** HTML execution report (reference: internal/pipeline/runner.go:466-654 +
   * internal/templates/files/execution_report.html): run parameters,
-  * producer/consumer stats, topics, schemas, per-query streaming metrics.
+  * producer/consumer stats, wall time per run phase, topics, schemas,
+  * per-query streaming metrics.
   * Plain string template — the metrics come from the listener-fed
   * collector rather than REST polls. */
 object Report {
@@ -12,11 +13,12 @@ object Report {
   def write(reportsDir: Path, executionId: String, status: String, durationMs: Long,
             cfg: GraftRunner.Config, resources: Resources, schemaKeys: Seq[String],
             produced: Long, outputRows: Long,
-            queryStats: Seq[MetricsCollector#QueryStats]): Path = {
+            queryStats: Seq[MetricsCollector#QueryStats],
+            phases: Seq[(String, Long)]): Path = {
     Files.createDirectories(reportsDir)
     val path = reportsDir.resolve(s"graft-execution-report-$executionId.html")
     Files.writeString(path, render(executionId, status, durationMs, cfg, resources,
-      schemaKeys, produced, outputRows, queryStats))
+      schemaKeys, produced, outputRows, queryStats, phases))
     path
   }
 
@@ -26,13 +28,17 @@ object Report {
   private def render(executionId: String, status: String, durationMs: Long,
                      cfg: GraftRunner.Config, resources: Resources, schemaKeys: Seq[String],
                      produced: Long, outputRows: Long,
-                     queryStats: Seq[MetricsCollector#QueryStats]): String = {
+                     queryStats: Seq[MetricsCollector#QueryStats],
+                     phases: Seq[(String, Long)]): String = {
     val statusColor = if (status == "SUCCESS") "#2e7d32" else "#c62828"
     val queryRows = queryStats.map { q =>
       s"""<tr><td>${esc(q.name)}</td><td>${q.totalInputRows}</td><td>${q.batches}</td>
          |<td>${f"${q.lastRowsPerSecond}%.1f"}</td><td>${q.lastBatchMs} ms</td>
          |<td>${if (q.terminated) "terminated" else "active"}</td>
          |<td>${esc(q.error.getOrElse(""))}${q.error.flatMap(ErrorSuggester.suggest).map(s => s"<br><i>${esc(s)}</i>").getOrElse("")}</td></tr>""".stripMargin
+    }.mkString("\n")
+    val phaseRows = phases.map { case (phase, ms) =>
+      s"<tr><th>${esc(phase)}</th><td>$ms ms</td></tr>"
     }.mkString("\n")
     s"""<!DOCTYPE html>
        |<html><head><meta charset="utf-8"><title>graft execution report</title>
@@ -58,6 +64,10 @@ object Report {
        |<table>
        |<tr><th>messages produced</th><td>$produced</td></tr>
        |<tr><th>output rows</th><td>$outputRows</td></tr>
+       |</table>
+       |<h2>Timings</h2>
+       |<table>
+       |$phaseRows
        |</table>
        |<h2>Topics</h2>
        |<table>

@@ -21,7 +21,9 @@ import org.apache.spark.sql.Row
   * Scale note: JSON-lines is the debug-friendly choice at test scale; the
   * envelope columns and checkpointing behave identically under
   * `format("parquet")`, and a real deployment uses Kafka partitions where
-  * this uses files-per-microbatch.
+  * this uses files. Each `produce` and each micro-batch appends one file
+  * per task; a flat-out producer run is a single `produce`, so a backfill
+  * topic holds one write's files however long its virtual duration.
   */
 final case class FileTopics(root: String) extends Topics {
 

@@ -1,5 +1,7 @@
 package graft.datagen
 
+import org.apache.spark.graftglue.JobCount
+
 import graft.SparkSpec
 import graft.avro.AvroSchemas
 
@@ -104,5 +106,46 @@ class DataGenSpec extends SparkSpec {
     // ids are contiguous across ticks (resumable determinism)
     assert(back.select("event_id").collect().map(_.getString(0)).toSet ==
       (0 until 50).map(i => s"event_id-$i").toSet)
+  }
+
+  private def fileTopics() = graft.streaming.FileTopics(
+    java.nio.file.Files.createTempDirectory("graft-datagen").toString)
+
+  private def ids(t: graft.streaming.FileTopics, topic: String): Seq[String] =
+    t.readAll(spark, topic, schema.structType).select("event_id").collect().map(_.getString(0)).toSeq
+
+  test("a flat-out run over several ticks submits exactly one Spark job") {
+    val t = fileTopics()
+    val tp = TrafficPatterns.parse("2s-4s:300%", 5)
+    val (produced, jobs) = JobCount(spark.sparkContext)(
+      RatedProducer.run(spark, t, "one-job", schema, tp, durationMs = 6000, tickMs = 500))
+    assert(produced == 50)
+    assert(jobs == 1, s"12 ticks of virtual time must be one write, saw $jobs jobs")
+  }
+
+  test("a spiky fractional pattern writes the sum of its tick budgets with ids 0 until total") {
+    val t = fileTopics()
+    val tp = TrafficPatterns.parse("1s-2500ms:300%", 7) // 7/s; 21/s in [1s, 2.5s)
+    val ticks = (0L until 4000L by 500L).map(s => tp.rowsBetween(s, s + 500))
+    assert(ticks.distinct.size > 1) // fractional budgets: ticks differ
+    val produced = RatedProducer.run(spark, t, "spiky", schema, tp,
+      durationMs = 4000, tickMs = 500)
+    assert(produced == ticks.sum)
+    assert(ids(t, "spiky").sorted == (0L until produced).map(i => s"event_id-$i").sorted)
+  }
+
+  test("a paced run writes what the flat-out run writes, on the wall clock") {
+    // 1/s with a 25/s spike in [400ms, 800ms): budgets 0, 10, 0 per tick,
+    // so the wall time measures the pacing, not the one write
+    val tp = TrafficPatterns.parse("400ms-800ms:2500%", 1)
+    val flat, paced = fileTopics()
+    val flatOut = RatedProducer.run(spark, flat, "gen", schema, tp, durationMs = 1200, tickMs = 400)
+    val t0 = System.nanoTime()
+    val pacedOut = RatedProducer.run(spark, paced, "gen", schema, tp,
+      durationMs = 1200, tickMs = 400, realTime = true)
+    val wallMs = (System.nanoTime() - t0) / 1e6
+    assert(pacedOut == flatOut && flatOut == 10)
+    assert(ids(paced, "gen").sorted == ids(flat, "gen").sorted)
+    assert(wallMs >= 1150, s"three 400 ms ticks must be paced, took $wallMs ms")
   }
 }

@@ -59,6 +59,12 @@ class GraftRunnerSpec extends SparkSpec {
     val report = res.reportPath.get
     val html = Files.readString(report)
     assert(html.contains(res.executionId) && html.contains("SUCCESS") && html.contains("80"))
+    val phases = Seq(res.produceMs, res.streamMs, res.validateMs)
+    assert(phases.forall(_ >= 0))
+    assert(phases.sum <= res.durationMs, s"phases $phases exceed the run's ${res.durationMs} ms")
+    assert(html.contains("<h2>Timings</h2>"))
+    assert(Seq("produce", "stream", "validate").forall(p =>
+      html.contains(s"<tr><th>$p</th><td>")))
   }
 
   test("bounded multi-stage pipeline: chained INSERTs run sequentially, not concurrently") {
