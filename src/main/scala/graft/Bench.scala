@@ -194,14 +194,15 @@ object Bench {
       Layout.dropComponentsIndex(s, t)
       Layout.dropTable(s, batchT)
       Layout.dropTable(s, markT)
-      val pairs = SparkEntry.queries("dedup_embedding_cosine")(s, dir)
-        .select(col("id_a"), col("id_b"))
-        .localCheckpoint()
-      Layout.componentsIndex(s, pairs.filter(col("id_a") % 3 =!= 2),
-        "id_a", "id_b", buckets = 4, tableName = t)
-      pairs.filter(col("id_a") % 3 === 2)
-        .write.mode("overwrite").format("parquet").saveAsTable(batchT)
-      org.apache.spark.sql.graftglue.Glue.releaseLocalCheckpoint(pairs)
+      Storage.scoped { st =>
+        val pairs = st.materialize(
+          SparkEntry.queries("dedup_embedding_cosine")(s, dir)
+            .select(col("id_a"), col("id_b")))
+        Layout.componentsIndex(s, pairs.filter(col("id_a") % 3 =!= 2),
+          "id_a", "id_b", buckets = 4, tableName = t)
+        pairs.filter(col("id_a") % 3 === 2)
+          .write.mode("overwrite").format("parquet").saveAsTable(batchT)
+      }
       import s.implicits._
       Seq(dir).toDF("dir").write.mode("overwrite")
         .format("parquet").saveAsTable(markT)

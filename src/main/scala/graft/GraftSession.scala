@@ -32,7 +32,7 @@ object GraftSession {
       // reliable-tier reclamation (graft.Storage scaladoc, ADVICE r13):
       // iterative loops under graft.checkpointStorage=reliable write one
       // checkpoint FILE SET per round; without this the superseded sets
-      // are never deleted (releaseLocalCheckpoint is a no-op there) —
+      // are never deleted (a scope release is a no-op there) —
       // with it the ContextCleaner removes checkpoint files of GC'd RDDs
       .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
       // catalog tables (graft.catalog.Layout) materialize here; keep the

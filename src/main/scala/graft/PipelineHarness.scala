@@ -136,13 +136,16 @@ object PipelineHarness {
   /** The full composed chain over `corpus`: C4 gate → boilerplate-line
     * removal → index dedup (+ intra-batch) → decontamination →
     * temperature mix on `lang` → shard shuffle. `ensureIndex` must have
-    * run for `indexTable`. */
+    * run for `indexTable`. `materialize` must be true (the chain has
+    * one, materialized form; the parameter stays for existing callers
+    * that pass it by name). */
   def run(spark: SparkSession, corpus: DataFrame, indexTable: String,
           targetTotal: Long = 1000L,
           materialize: Boolean = true,
           subDocStages: Boolean = false,
           trainerTail: Boolean = false,
-          tailBpeMerges: Option[Int] = Some(12)): DataFrame =
+          tailBpeMerges: Option[Int] = Some(12)): DataFrame = {
+    require(materialize, "the curation chain has only a materialized form")
     Curation.pipeline(spark, corpus, "doc_id", "text", "lang",
       targetTotal = targetTotal, alpha = 0.5, minLineDocs = 50,
       paragraphDedup = subDocStages,
@@ -160,8 +163,8 @@ object PipelineHarness {
       // incomparable, while whitespace counts are replica-invariant)
       tokenBudget = if (trainerTail) Some(targetTotal * 60L) else None,
       packSeqLen = if (trainerTail) Some(512) else None,
-      bpeMerges = if (trainerTail) tailBpeMerges else None,
-      materialize = materialize)
+      bpeMerges = if (trainerTail) tailBpeMerges else None)
+  }
 
   /** One-call form for Bench: the materialized chain over the seeded 1x
     * corpus from `dir`, index built on first use (later bench reps and other callers in the same
@@ -170,7 +173,7 @@ object PipelineHarness {
     val c = corpus(spark, dir)
     val table = "pipeline_mh_idx"
     ensureIndex(spark, c, table)
-    run(spark, c, table, materialize = true)
+    run(spark, c, table)
   }
 
   /** [[runOn]] with the round-7 sub-document stages enabled (paragraph
@@ -182,7 +185,7 @@ object PipelineHarness {
     val c = corpus(spark, dir)
     val table = "pipeline_mh_idx"
     ensureIndex(spark, c, table)
-    run(spark, c, table, materialize = true, subDocStages = true)
+    run(spark, c, table, subDocStages = true)
   }
 
   /** [[runOnFull]] plus the round-9 trainer tail: trained-BPE token
@@ -195,7 +198,7 @@ object PipelineHarness {
     val c = corpus(spark, dir)
     val table = "pipeline_mh_idx"
     ensureIndex(spark, c, table)
-    run(spark, c, table, materialize = true, subDocStages = true,
+    run(spark, c, table, subDocStages = true,
       trainerTail = true)
   }
 }

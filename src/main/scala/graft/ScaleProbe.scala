@@ -341,15 +341,13 @@ object ScaleProbe {
       * docs, vocabulary ∝ corpus): wall time AND candidate-set cardinality
       * — the candidate count is the deterministic signal (an all-pairs
       * degeneration is superlinear there regardless of box speed). */
-    def prefixProbe(tag: String, k: Int): Unit = {
-      val docs = prefixCorpus(spark, 5000L * k)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    def prefixProbe(tag: String, k: Int): Unit = Storage.scoped { st =>
+      val docs = st.cache(prefixCorpus(spark, 5000L * k))
       docs.count() // materialize outside the timing
       t(s"prefix_jaccard_$tag")(
         Dedup.jaccardPrefixPairs(docs, "doc_id", "text", 2, 0.8).count())
       t(s"prefix_candidates_$tag")(
         Dedup.jaccardPrefixCandidates(docs, "doc_id", "text", 2, 0.8).count())
-      docs.unpersist()
     }
 
     /** Cost of the opt-in Unicode normalization at corpus scale
@@ -369,14 +367,13 @@ object ScaleProbe {
       * relation EXACTLY equals the byte-level fingerprints of the
       * NFC-normalized re-encoding — the form changes bytes, never
       * content identity. */
-    def unicodeProbe(tag: String, docs: DataFrame): Unit = {
+    def unicodeProbe(tag: String, docs: DataFrame): Unit = Storage.scoped { st =>
       import graft.functions.unicodeNormalize
       val accented = docs.select(col("doc_id"),
         translate(col("text"), "aeiou", "àéîöü")
           .as("text"))
-      val nfdDocs = accented.select(col("doc_id"),
-          unicodeNormalize(col("text"), "NFD").as("text"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val nfdDocs = st.cache(accented.select(col("doc_id"),
+          unicodeNormalize(col("text"), "NFD").as("text")))
       nfdDocs.count() // materialize the re-encoding outside the timings
       t(s"unicode_fp_byte_$tag")(
         Dedup.fingerprints(docs, "doc_id", "text").count())
@@ -392,7 +389,6 @@ object ScaleProbe {
       println(s"SCALE unicode_fp_gate_$tag equal=$ok")
       require(ok, s"unicode_fp_gate_$tag: NFC-on-NFD fingerprints must " +
         "equal byte fingerprints of the NFC re-encoding")
-      nfdDocs.unpersist()
     }
 
     /** The IVF partitioned-layout story at scale: train centroids (on a
@@ -569,13 +565,12 @@ object ScaleProbe {
       * corpus but at ~1% of its shingle count; the final contaminated-doc
       * count is EXACTLY flat — growth there means the sketch leaked into
       * the answer, which the exact confirm join exists to prevent. */
-    def bloomProbe(tag: String, docs: DataFrame): Unit = {
+    def bloomProbe(tag: String, docs: DataFrame): Unit = Storage.scoped { st =>
       import graft.functions.{bloomMightContain, tokens, wordShingles}
       val sh = docs.select(col("doc_id"),
         explode(wordShingles(tokens(col("text")), 3)).as("s"))
       val isEval = col("doc_id") % 50 === 0 && col("doc_id") < IdStride
-      val evalSet = sh.filter(isEval).select(col("s")).distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val evalSet = st.cache(sh.filter(isEval).select(col("s")).distinct())
       val nEval = math.max(evalSet.count(), 1L)
       val bloom = evalSet.stat.bloomFilter("s", nEval, 0.01)
       t(s"bloom_survivors_$tag")(
@@ -584,7 +579,6 @@ object ScaleProbe {
         sh.filter(!isEval).filter(bloomMightContain(col("s"), bloom))
           .join(evalSet, Seq("s"), "left_semi")
           .select(col("doc_id")).distinct().count())
-      evalSet.unpersist()
     }
 
     /** The curation layer at scale. Boilerplate-line removal is seeded
@@ -598,7 +592,7 @@ object ScaleProbe {
       * tier size. Edit-distance runs on its own growing-entropy title
       * corpus with candidate cardinality as the blowup signal (the
       * jaccard-prefix discipline); the exact answer is the planted ~n/10. */
-    def curationProbe(tag: String, k: Int, docs: DataFrame): Unit = {
+    def curationProbe(tag: String, k: Int, docs: DataFrame): Unit = Storage.scoped { st =>
       import graft.operators.Curation
       val seeded = docs.select(col("doc_id"),
         concat(col("text"),
@@ -627,8 +621,7 @@ object ScaleProbe {
         Sampling.temperatureMix(mixRows, "id", "domain", alpha = 0.5,
           targetTotal = 50000L).count())
       val nTitles = 5000L * k
-      val titles = editCorpus(spark, nTitles)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val titles = st.cache(editCorpus(spark, nTitles))
       titles.count() // materialize outside the timing
       // q is MEASURED (round-7 Dedup.measureEditQ) — the hand table
       // editQ remains as the documented expected tiering the measured
@@ -638,7 +631,6 @@ object ScaleProbe {
         Dedup.editDistanceCandidates(titles, "id", "t", maxDist = 1, q = q).count())
       t(s"edit_distance_$tag")(
         Dedup.editDistancePairs(titles, "id", "t", maxDist = 1, q = q, unicodeForm = None).count())
-      titles.unpersist()
     }
 
     /** Streaming-curation batch latency vs standing-index size
@@ -804,10 +796,9 @@ object ScaleProbe {
       * trains on EXACT-copy replication (uniform K x weights), where the
       * merge sequence is scale-invariant and the cost after the word
       * count is vocab-bound, not corpus-bound. */
-    def subdocProbe(tag: String, k: Int): Unit = {
+    def subdocProbe(tag: String, k: Int): Unit = Storage.scoped { st =>
       import graft.operators.Bpe
-      val c = subdocCorpus(spark, 5000L, k)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val c = st.cache(subdocCorpus(spark, 5000L, k))
       c.count()
       t(s"span_dedup_$tag")(
         Dedup.removeRepeatedSpans(c, "doc_id", "text", gramLen = 20)
@@ -836,7 +827,7 @@ object ScaleProbe {
         Dedup.removeRepeatedSpansAgainst(batch, "doc_id", "text",
             spark.table(s"${censusTable}_grams"), gramLen = 20)
           .agg(sum(col("n_removed"))).head().getLong(0))
-      c.unpersist()
+      st.release(c)
       val copies = (0 until k).map(i => subdocReplica(spark, 5000L, 0, i))
         .reduce(_ unionAll _)
       t(s"bpe_train_$tag")(
@@ -865,9 +856,8 @@ object ScaleProbe {
       * The rows signal (removed count) must be identical between the
       * two forms at every tier (the SemDedupSpec equality, measured at
       * scale). */
-    def hotcellProbe(tag: String, n: Long): Unit = {
-      val emb = hotCellCorpus(spark, n, 64)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    def hotcellProbe(tag: String, n: Long): Unit = Storage.scoped { st =>
+      val emb = st.cache(hotCellCorpus(spark, n, 64))
       emb.count()
       val tf = math.min(1.0, 20000.0 / n)
       t(s"semdedup_hot_whole_$tag")(
@@ -880,7 +870,6 @@ object ScaleProbe {
           probes = 1, lloydIters = 2, seed = 42, tau = 0.8,
           trainFraction = tf, chunks = 16)
           .filter(!col("kept")).count())
-      emb.unpersist()
     }
 
     /** Realistic-entropy span/winnow constants (round-10): the
@@ -890,9 +879,8 @@ object ScaleProbe {
       * Deterministic signals: span removals = passage chars × (n/50 − 1)
       * per replica (K-linear); winnow pairs = C(n/50, 2) × K exactly
       * (replicas gram-decoupled). */
-    def entropyProbe(tag: String, k: Int): Unit = {
-      val c = entropyCorpus(spark, 5000L, k)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    def entropyProbe(tag: String, k: Int): Unit = Storage.scoped { st =>
+      val c = st.cache(entropyCorpus(spark, 5000L, k))
       c.count()
       t(s"entropy_span_$tag")(
         Dedup.removeRepeatedSpans(c, "doc_id", "text", gramLen = 20)
@@ -900,7 +888,6 @@ object ScaleProbe {
       t(s"entropy_winnow_pairs_$tag")(
         graft.operators.Winnow.overlapPairs(c, "doc_id", "text",
           k = 8, w = 6, minShared = 3, maxDf = Long.MaxValue).count())
-      c.unpersist()
     }
 
     /** AUTO-capped winnow route at the production-entropy geometry
@@ -916,10 +903,9 @@ object ScaleProbe {
       * excised by design (boilerplate by the cap's own argument), which
       * is why this fixture seeds under it. */
     def entropyAutoProbe(tag: String, k: Int,
-                         diskArmOnly: Boolean = false): Unit = {
+                         diskArmOnly: Boolean = false): Unit = Storage.scoped { st =>
       import graft.operators.Winnow
-      val c = entropyCorpus(spark, 5000L, k, dupEvery = 125)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val c = st.cache(entropyCorpus(spark, 5000L, k, dupEvery = 125))
       c.count()
       if (diskArmOnly) {
         // the DEFAULT-HEAP arm (SPARK_GRAFT_PROBE_ONLY=entropyautodisk,
@@ -934,44 +920,41 @@ object ScaleProbe {
             minShared = 3).count()
           finally spark.conf.unset(graft.Storage.CheckpointStorageConf)
         }
-        c.unpersist()
-        return
+      } else {
+        var uncapped = -1L
+        t(s"entropy_winnow_auto_uncapped_pin_$tag") {
+          uncapped = Winnow.overlapPairs(c, "doc_id", "text", k = 8, w = 6,
+            minShared = 3, maxDf = Long.MaxValue).count()
+          uncapped
+        }
+        var auto = -2L
+        t(s"entropy_winnow_auto_$tag") {
+          auto = Winnow.overlapPairs(c, "doc_id", "text", k = 8, w = 6,
+            minShared = 3).count()
+          auto
+        }
+        // the DISK_ONLY storage knob (round-12, VERDICT r11 next #2): the
+        // same auto route with zero checkpoint heap residency — the arm
+        // that must hold at DEFAULT driver heap in single-JVM local mode
+        // where the memdisk blocks needed 48 GB at the 100× tier
+        var autoDisk = -3L
+        t(s"entropy_winnow_auto_disk_$tag") {
+          spark.conf.set(graft.Storage.CheckpointStorageConf, "disk")
+          try autoDisk = Winnow.overlapPairs(c, "doc_id", "text", k = 8,
+            w = 6, minShared = 3).count()
+          finally spark.conf.unset(graft.Storage.CheckpointStorageConf)
+          autoDisk
+        }
+        println(s"SCALE entropy_winnow_auto_$tag: auto=$auto" +
+          s" autoDisk=$autoDisk uncapped=$uncapped" +
+          (if (auto == uncapped && autoDisk == uncapped) " (EXACT match)"
+           else " (MISMATCH)"))
       }
-      var uncapped = -1L
-      t(s"entropy_winnow_auto_uncapped_pin_$tag") {
-        uncapped = Winnow.overlapPairs(c, "doc_id", "text", k = 8, w = 6,
-          minShared = 3, maxDf = Long.MaxValue).count()
-        uncapped
-      }
-      var auto = -2L
-      t(s"entropy_winnow_auto_$tag") {
-        auto = Winnow.overlapPairs(c, "doc_id", "text", k = 8, w = 6,
-          minShared = 3).count()
-        auto
-      }
-      // the DISK_ONLY storage knob (round-12, VERDICT r11 next #2): the
-      // same auto route with zero checkpoint heap residency — the arm
-      // that must hold at DEFAULT driver heap in single-JVM local mode
-      // where the memdisk blocks needed 48 GB at the 100× tier
-      var autoDisk = -3L
-      t(s"entropy_winnow_auto_disk_$tag") {
-        spark.conf.set(graft.Storage.CheckpointStorageConf, "disk")
-        try autoDisk = Winnow.overlapPairs(c, "doc_id", "text", k = 8,
-          w = 6, minShared = 3).count()
-        finally spark.conf.unset(graft.Storage.CheckpointStorageConf)
-        autoDisk
-      }
-      println(s"SCALE entropy_winnow_auto_$tag: auto=$auto" +
-        s" autoDisk=$autoDisk uncapped=$uncapped" +
-        (if (auto == uncapped && autoDisk == uncapped) " (EXACT match)"
-         else " (MISMATCH)"))
-      c.unpersist()
     }
 
-    def winnowProbe(tag: String, k: Int): Unit = {
+    def winnowProbe(tag: String, k: Int): Unit = Storage.scoped { st =>
       import graft.operators.Winnow
-      val c = winnowCorpus(spark, 5000L, k)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val c = st.cache(winnowCorpus(spark, 5000L, k))
       c.count()
       t(s"winnow_pairs_$tag")(
         // uncapped pin: the tier measures the raw Σ df² pair geometry
@@ -985,7 +968,7 @@ object ScaleProbe {
           k = 8, w = 6, buckets = 16, maxDf = None, tableName = table)
         spark.table(s"${table}_wfps").count()
       }
-      c.unpersist()
+      st.release(c)
       val batch = winnowReplica(spark, 5000L, 0, 2000)
       t(s"winnow_incr_$tag")(
         Winnow.overlapPairsAgainst(batch, "doc_id", "text",
@@ -1245,15 +1228,13 @@ object ScaleProbe {
       val k = 10
       Seq("memdisk", "disk", "reliable").foreach { tier =>
         spark.conf.set(graft.Storage.CheckpointStorageConf, tier)
-        try {
+        try Storage.scoped { st =>
           componentsProbe(s"${k}x_$tier", k)
-          val c = entropyCorpus(spark, 5000L, k, dupEvery = 125)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          val c = st.cache(entropyCorpus(spark, 5000L, k, dupEvery = 125))
           c.count()
           t(s"entropy_winnow_auto_${k}x_$tier")(
             Winnow.overlapPairs(c, "doc_id", "text", k = 8, w = 6,
               minShared = 3).count())
-          c.unpersist()
         } finally spark.conf.unset(graft.Storage.CheckpointStorageConf)
       }
       spark.stop(); return

@@ -1,36 +1,60 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.graftglue.Glue
+import org.apache.spark.storage.StorageLevel
 
-/** Engine-wide storage policy for eager materializations of
-  * multiply-consumed or iteration-superseded corpus-scale frames.
+/** The one way the engine materializes a frame. Every persist, eager
+  * checkpoint and release in the engine goes through this object; no
+  * other source file calls `persist`, `unpersist`, `localCheckpoint`,
+  * `checkpoint` or `Glue.releaseLocalCheckpoint` (`StorageGuardSpec`
+  * scans the sources for them).
   *
-  * Round 12 proved the pattern winnow-first (SCALE.md: the 100× entropy
-  * tier ran at the DEFAULT 8 GB heap on the `disk` tier, ~2× faster
-  * than the 48 GB memdisk run) — and round 12's verdict asked for the same knob behind
-  * the connected-components family, whose one-time 100× history build
-  * hit the identical local-mode heap wall (VERDICT r12 next #2). This
-  * object is that generalization: one session conf, one materializer,
-  * honored by every iterative/eager checkpoint site in the engine.
+  * Two forms:
+  *  - [[scoped]] for working sets: `Storage.scoped { s => ... }` hands
+  *    the body a [[Scope]]. What the body caches (`s.cache`) or
+  *    checkpoints (`s.materialize`) is released when the block exits,
+  *    whether it returns or throws. `s.release` frees a superseded
+  *    iteration round early. A frame the block returns — and any held
+  *    frame the returned frame's plan still reads — is detached: it
+  *    stays valid after the scope and the caller owns it (a returned
+  *    checkpoint is reclaimed by the ContextCleaner once it is garbage;
+  *    a lazy result over a cached working set keeps that cache entry,
+  *    the opt-out the `materialize = false` plan audits rely on).
+  *  - [[materializeOnce]] for a result that outlives the call: an eager
+  *    checkpoint with no owner, reclaimed by the ContextCleaner when the
+  *    frame is garbage. A plain `persist` returned in a lazy plan would
+  *    instead leave a CacheManager entry that only `clearCache()`
+  *    reclaims.
   *
-  * Tiers (the lineage-free plan shape — and therefore every operator's
-  * output — is identical under all three; spec-gated per family):
+  * Tiers of the eager form (the lineage-free plan shape — and therefore
+  * every operator's output — is identical under all three; spec-gated
+  * per family), chosen by [[CheckpointStorageConf]], else by the call
+  * site's family default:
   *  - `memdisk`: executor-local `localCheckpoint` at MEMORY_AND_DISK —
   *    fastest when the blocks fit; they compete with execution memory.
+  *    The default of every family not listed below.
   *  - `disk`: executor-local `localCheckpoint` at DISK_ONLY — zero heap
-  *    residency; the knob that lets 100×-scale builds run at default
-  *    heap in local mode, and measured FASTER than memdisk there.
+  *    residency. The default of the winnow, exact-jaccard and
+  *    connected-components families, whose frames scale with corpus
+  *    characters or whole-history graphs: SCALE.md measured the disk
+  *    tier ~2× faster than memdisk at the 100× winnow entropy tier and
+  *    5.5× faster on the 100× components-index history build, both at
+  *    the default heap, and the disk-checkpointed routes were immune to
+  *    the suite-neighbor block-store pressure that evicted and silently
+  *    recomputed lazy MEMORY_AND_DISK persists.
   *  - `reliable`: `sparkContext.setCheckpointDir`-backed `checkpoint()`
   *    — one distributed write, blocks survive executor loss (clusters
   *    where mid-query loss is routine; the localCheckpoint variants
   *    recompute-from-nothing there).
   *
-  * Reliable-tier reclamation (ADVICE r13): `Glue.releaseLocalCheckpoint`
-  * frees LOCAL checkpoint blocks only — it is a documented no-op on a
-  * reliable checkpoint, whose data is FILES under the checkpoint dir. An
-  * iterative loop on the reliable tier therefore writes up to maxIter
-  * corpus-scale checkpoint file sets per call, and Spark deletes a
-  * superseded set only when `spark.cleaner.referenceTracking
+  * Reliable-tier reclamation: a scope's release frees LOCAL checkpoint
+  * blocks only — reliable checkpoint data are FILES under the checkpoint
+  * dir. An iterative loop on the reliable tier therefore writes up to
+  * maxIter corpus-scale checkpoint file sets per call, and Spark deletes
+  * a superseded set only when `spark.cleaner.referenceTracking
   * .cleanCheckpoints=true` lets the ContextCleaner remove checkpoint
   * files of GC'd RDDs. [[GraftSession.builder]] sets that conf, so
   * engine-built sessions reclaim them; a caller embedding the engine in
@@ -45,18 +69,17 @@ object Storage {
 
   /** Eagerly materialize `ds` per the storage policy:
     * [[CheckpointStorageConf]] if set, else `familyDefault`. Runs Spark
-    * jobs NOW. The returned plan is a bare `LogicalRDD`, so
-    * `Glue.releaseLocalCheckpoint` can free its blocks deterministically
-    * when superseded. */
+    * jobs NOW. The returned plan is a bare `LogicalRDD`; nothing owns
+    * it, so its blocks live until the frame is garbage (the unscoped
+    * form — inside a [[scoped]] block use `Scope.materialize`). A local
+    * checkpoint whose job fails releases the blocks it had written. */
   def materializeOnce[T](ds: Dataset[T],
                          familyDefault: String = "memdisk"): Dataset[T] = {
     val mode = ds.sparkSession.conf.getOption(CheckpointStorageConf)
       .getOrElse(familyDefault)
     mode match {
-      case "memdisk" => ds.localCheckpoint(true)
-      case "disk" =>
-        ds.localCheckpoint(true,
-          org.apache.spark.storage.StorageLevel.DISK_ONLY)
+      case "memdisk" => filled(ds.localCheckpoint(false))
+      case "disk" => filled(ds.localCheckpoint(false, StorageLevel.DISK_ONLY))
       case "reliable" =>
         require(
           ds.sparkSession.sparkContext.getCheckpointDir.isDefined,
@@ -65,6 +88,92 @@ object Storage {
         ds.checkpoint(true)
       case other => throw new IllegalArgumentException(
         s"checkpointStorage must be memdisk|disk|reliable, got $other")
+    }
+  }
+
+  /** Fill a lazy local checkpoint: the job an eager `localCheckpoint`
+    * runs (a count of every partition, which stores them at the
+    * checkpoint's level; none for an RDD without partitions). Unlike the
+    * eager call, the RDD is in hand when the job fails, so its partial
+    * blocks are released instead of waiting for the frame to be
+    * collected. */
+  private def filled[T](ck: Dataset[T]): Dataset[T] = {
+    val rdd = ck.queryExecution.analyzed.asInstanceOf[LogicalRDD].rdd
+    try if (rdd.getNumPartitions > 0) rdd.count()
+    catch { case t: Throwable => Glue.releaseLocalCheckpoint(ck); throw t }
+    ck
+  }
+
+  /** Run `body` with a fresh [[Scope]] and release everything it holds
+    * when the body exits — on return or on throw. Frames reachable from
+    * the returned value (a `Dataset`, or one inside a tuple) are
+    * detached, together with every held frame their plans read; the
+    * rest is released. */
+  def scoped[A](body: Scope => A): A = {
+    val s = new Scope
+    var result: Option[A] = None
+    try { result = Some(body(s)); result.get }
+    finally s.close(result)
+  }
+
+  /** The frames one [[scoped]] block has materialized. */
+  final class Scope private[Storage] () {
+    // (frame, is an eager checkpoint); a cached frame is a persist
+    private val held = scala.collection.mutable.ArrayBuffer
+      .empty[(Dataset[_], Boolean)]
+
+    /** Lazy MEMORY_AND_DISK persist of a frame the block reads more
+      * than once; built by the first action that reads it. */
+    def cache[T](ds: Dataset[T]): Dataset[T] = {
+      val p = ds.persist(StorageLevel.MEMORY_AND_DISK)
+      held += ((p, false))
+      p
+    }
+
+    /** Eager checkpoint of `ds` on the storage tier
+      * ([[materializeOnce]]), owned by this scope. */
+    def materialize[T](ds: Dataset[T],
+                       familyDefault: String = "memdisk"): Dataset[T] = {
+      val m = materializeOnce(ds, familyDefault)
+      held += ((m, true))
+      m
+    }
+
+    /** Free a held frame now — a superseded iteration round. No-op for
+      * a frame this scope does not hold. */
+    def release(ds: Dataset[_]): Unit = {
+      val i = held.indexWhere(_._1 eq ds)
+      if (i >= 0) free(held.remove(i))
+    }
+
+    private def free(h: (Dataset[_], Boolean)): Unit =
+      if (h._2) Glue.releaseLocalCheckpoint(h._1) else h._1.unpersist()
+
+    private[Storage] def close(result: Option[Any]): Unit = {
+      val kept = result.toSeq.flatMap(frames).map(_.queryExecution.analyzed)
+      val drop = held.filterNot(h => kept.exists(reads(_, h)))
+      held.clear()
+      drop.foreach(free)
+    }
+
+    private def frames(x: Any): Iterator[Dataset[_]] = x match {
+      case d: Dataset[_] => Iterator.single(d)
+      case t: Product if t.productPrefix.startsWith("Tuple") =>
+        t.productIterator.flatMap(frames)
+      case _ => Iterator.empty
+    }
+
+    /** Does `plan` read the held frame: its checkpoint RDD, or (for a
+      * cached frame) a subtree the CacheManager would serve from it. */
+    private def reads(plan: LogicalPlan, h: (Dataset[_], Boolean)): Boolean = {
+      val own = h._1.queryExecution.analyzed
+      if (h._2) own match {
+        case lr: LogicalRDD => plan.exists {
+          case r: LogicalRDD => r.rdd eq lr.rdd
+          case _ => false
+        }
+        case _ => false
+      } else plan.exists(n => n.getClass == own.getClass && n.sameResult(own))
     }
   }
 

@@ -3,7 +3,7 @@ package graft.catalog
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, element_at}
 
-import graft.Tables
+import graft.{Storage, Tables}
 import graft.statements.Statements
 
 /** Catalog registration + physical table layout (SURVEY.md §7.4.6; VERDICT
@@ -440,10 +440,10 @@ object Layout {
     // they fold together). The residual marker window costs duplicate
     // rows only: the probe dedups sig rows per id and distincts pairs,
     // so a replayed fold never changes answers.
-    idempotently(spark, tableName, batchTag) {
-      val sigs = Dedup.minHashSignatures(batch, idCol, textCol, shingleN,
-        numHashes, unicodeForm)
-        .localCheckpoint(eager = true) // one text pass feeds both appends
+    idempotently(spark, tableName, batchTag)(Storage.scoped { st =>
+      // one text pass feeds both appends; released when they are done
+      val sigs = st.materialize(Dedup.minHashSignatures(batch, idCol,
+        textCol, shingleN, numHashes, unicodeForm))
       sigs.repartition(buckets, col("id"))
         .write.mode("append")
         .bucketBy(buckets, "id").sortBy("id")
@@ -458,7 +458,7 @@ object Layout {
       // appends in alternation, so this is the common case, not the edge)
       spark.catalog.refreshTable(s"${tableName}_sigs")
       spark.catalog.refreshTable(s"${tableName}_bands")
-    }
+    })
   }
 
   /** Re-attach a [[minhashBandIndex]] written by an EARLIER session — the
@@ -616,21 +616,17 @@ object Layout {
                   unicodeForm: Option[String] = None): Unit = {
     clearLedger(spark, s"${tableName}_wfps") // fresh incarnation
     clearStreamOwner(spark, s"${tableName}_wfps") // and no standing owner
-    // unicodeForm joins k/w as version-pinned layout metadata
-    val (capped, mats) = dfCapped(
+    // unicodeForm joins k/w as version-pinned layout metadata; the
+    // auto-cap route's corpus-scale blocks are released after the write
+    // (or when it fails)
+    Storage.scoped(st => dfCapped(st,
       graft.operators.Winnow.fingerprintSets(docs, idCol, textCol, k, w,
         unicodeForm)
         .toDF("id", "fp"), maxDf)
-    // release in finally (r14 error-path hygiene, the chaseParents
-    // discipline): a failed index write must not orphan the auto-cap
-    // route's corpus-scale fps/census blocks
-    try capped
       .repartition(buckets, col("fp"))
       .write.mode("overwrite")
       .bucketBy(buckets, "fp").sortBy("fp")
-      .format("parquet").saveAsTable(s"${tableName}_wfps")
-    finally mats.foreach(
-      org.apache.spark.sql.graftglue.Glue.releaseLocalCheckpoint)
+      .format("parquet").saveAsTable(s"${tableName}_wfps"))
   }
 
   /** Drop fingerprints whose document frequency exceeds the cap — the
@@ -650,37 +646,32 @@ object Layout {
     * branch mirrors the operator's reuse discipline (round-12, ADVICE
     * r11: unpersisted, the census subtree ran twice and the
     * fingerprinting subtree three times on every auto-capped build) —
-    * fps and census are eagerly materialized ONCE via
-    * [[graft.operators.Winnow.materializeOnce]], storage selected by
-    * the engine `graft.checkpointStorage` session conf. */
-  private def dfCapped(fps0: DataFrame,
-                       maxDf: Option[Long]): (DataFrame, Seq[DataFrame]) = {
+    * fps and census are eagerly materialized ONCE in the caller's scope
+    * (winnow family default `disk`), released after the index write. */
+  private def dfCapped(st: Storage.Scope, fps0: DataFrame,
+                       maxDf: Option[Long]): DataFrame = {
     import org.apache.spark.sql.functions.{broadcast, count, lit}
     maxDf match {
-      case None => (fps0, Nil)
+      case None => fps0
       case Some(graft.operators.Winnow.AutoMaxDf) =>
-        val fps = graft.operators.Winnow.materializeOnce(fps0)
-        val census = graft.operators.Winnow.materializeOnce(
-          fps.groupBy(col("fp")).agg(count(lit(1)).as("df")))
+        val fps = st.materialize(fps0, "disk")
+        val census = st.materialize(
+          fps.groupBy(col("fp")).agg(count(lit(1)).as("df")), "disk")
         val cap = graft.operators.Winnow.autoCapFromCensus(
           census, quantile = 0.999, floor = 64L)
         val dfs = census.crossJoin(broadcast(cap))
           .filter(col("df") <= col("__cap"))
           .select(col("fp").as("fp_c"))
-        // second element: the corpus-scale eager materializations —
-        // callers release their blocks right after the index write
-        // (deterministic, not ContextCleaner-when-GC'd: a long session
-        // building index after index would otherwise accumulate them)
-        (fps.join(dfs.hint("merge"), col("fp") === col("fp_c"))
-          .select(col("id"), col("fp")), Seq(fps, census))
+        fps.join(dfs.hint("merge"), col("fp") === col("fp_c"))
+          .select(col("id"), col("fp"))
       case Some(cap) =>
         require(cap >= 1, s"winnow index maxDf must be >= 1 or " +
           s"Some(Winnow.AutoMaxDf), got $cap")
         val dfs = fps0.groupBy(col("fp")).agg(count(lit(1)).as("df"))
           .filter(col("df") <= cap)
           .select(col("fp").as("fp_c"))
-        (fps0.join(dfs.hint("merge"), col("fp") === col("fp_c"))
-          .select(col("id"), col("fp")), Nil)
+        fps0.join(dfs.hint("merge"), col("fp") === col("fp_c"))
+          .select(col("id"), col("fp"))
     }
   }
 
@@ -700,14 +691,13 @@ object Layout {
     // rows only — the probe dedups the corpus side per (id, fp)
     // bucket-locally, so answers never change
     idempotently(spark, s"${tableName}_wfps", batchTag) {
-      graft.operators.Winnow.fingerprintSets(batch, idCol, textCol, k, w,
-          unicodeForm)
-        .toDF("id", "fp")
-        .localCheckpoint(true)
+      Storage.scoped(st => st.materialize(
+          graft.operators.Winnow.fingerprintSets(batch, idCol, textCol, k, w,
+            unicodeForm).toDF("id", "fp"))
         .repartition(buckets, col("fp"))
         .write.mode("append")
         .bucketBy(buckets, "fp").sortBy("fp")
-        .format("parquet").saveAsTable(s"${tableName}_wfps")
+        .format("parquet").saveAsTable(s"${tableName}_wfps"))
       spark.catalog.refreshTable(s"${tableName}_wfps")
     }
 
@@ -720,16 +710,12 @@ object Layout {
                          maxDf: Option[Long] = None,
                          tableName: String = "winnow_index"): Unit = {
     dropTable(spark, s"${tableName}_wfps_new")
-    val (capped, mats) = dfCapped(spark.table(s"${tableName}_wfps"), maxDf)
-    // release in finally (r14 error-path hygiene): a failed rewrite
-    // must not orphan the auto-cap route's fps/census blocks
-    try capped
-      .repartition(buckets, col("fp"))
-      .write.mode("overwrite")
-      .bucketBy(buckets, "fp").sortBy("fp")
-      .format("parquet").saveAsTable(s"${tableName}_wfps_new")
-    finally mats.foreach(
-      org.apache.spark.sql.graftglue.Glue.releaseLocalCheckpoint)
+    Storage.scoped(st =>
+      dfCapped(st, spark.table(s"${tableName}_wfps"), maxDf)
+        .repartition(buckets, col("fp"))
+        .write.mode("overwrite")
+        .bucketBy(buckets, "fp").sortBy("fp")
+        .format("parquet").saveAsTable(s"${tableName}_wfps_new"))
     swapInNew(spark, s"${tableName}_wfps")
   }
 
@@ -780,12 +766,12 @@ object Layout {
     // batchTag: replay ledger; the marker window costs duplicate keys
     // only — the probe is an anti-join, so answers never change
     idempotently(spark, s"${tableName}_pkeys", batchTag) {
-      graft.operators.Dedup.paragraphKeys(batch, textCol, sep, unicodeForm)
-        .localCheckpoint(true)
+      Storage.scoped(st => st.materialize(
+          graft.operators.Dedup.paragraphKeys(batch, textCol, sep, unicodeForm))
         .repartition(buckets, col("pkey"))
         .write.mode("append")
         .bucketBy(buckets, "pkey").sortBy("pkey")
-        .format("parquet").saveAsTable(s"${tableName}_pkeys")
+        .format("parquet").saveAsTable(s"${tableName}_pkeys"))
       spark.catalog.refreshTable(s"${tableName}_pkeys")
     }
 
@@ -845,13 +831,13 @@ object Layout {
                            buckets: Int = 8,
                            tableName: String = "span_index",
                            unicodeForm: Option[String] = None): Unit = {
-    graft.operators.Dedup.gramCensus(batch, textCol, gramLen, unicodeForm)
-      .withColumn("src", org.apache.spark.sql.functions.lit(srcTag))
-      .localCheckpoint(true)
+    Storage.scoped(st => st.materialize(
+        graft.operators.Dedup.gramCensus(batch, textCol, gramLen, unicodeForm)
+          .withColumn("src", org.apache.spark.sql.functions.lit(srcTag)))
       .repartition(buckets, col("g"))
       .write.mode("append")
       .bucketBy(buckets, "g").sortBy("g")
-      .format("parquet").saveAsTable(s"${tableName}_grams")
+      .format("parquet").saveAsTable(s"${tableName}_grams"))
     spark.catalog.refreshTable(s"${tableName}_grams")
   }
 
@@ -993,52 +979,36 @@ object Layout {
     * [[graft.operators.Dedup.connectedComponents]] discipline). The
     * merge log itself is checkpointed once up front so its groupBy isn't
     * re-planned and re-read every round. */
-  private def chaseParents(cur0: DataFrame, parents0: DataFrame,
+  private def chaseParents(st: Storage.Scope, cur0: DataFrame,
+                           parents0: DataFrame,
                            maxIter: Int = 50): DataFrame = {
-    import org.apache.spark.sql.graftglue.Glue
     import org.apache.spark.sql.functions.coalesce
-    // storage behind the per-round blocks: the engine
-    // graft.checkpointStorage tier, CC family default `disk`
-    // (graft.operators.Dedup.componentsMaterialize)
-    val parents = graft.operators.Dedup.componentsMaterialize(parents0)
-    // error-path hygiene (ADVICE r13): the non-convergence throw below —
-    // and any mid-loop failure — must not orphan the round's blocks; a
-    // session that repeatedly hits the "compact the index" error would
-    // otherwise accumulate exactly the block-store crowding this
-    // release discipline exists to prevent. `cur` ownership transfers
-    // to the caller only on the success return.
-    var cur: DataFrame = null
-    var handedOff = false
-    try {
-      cur = graft.operators.Dedup.componentsMaterialize(cur0)
-      var iter = 0
-      var converged = false
-      while (!converged && iter < maxIter) {
-        val next = graft.operators.Dedup.componentsMaterialize(
-          cur.join(parents, cur("lbl") === parents("child"), "left")
-            .select(cur("key"),
-              coalesce(col("parent"), col("lbl")).as("lbl"),
-              col("parent").isNotNull.as("_hit")))
-        val hits = next.filter(col("_hit")).count() // scan of local blocks
-        // release superseded rounds deterministically — the per-batch
-        // fold path must not leave blocks for ContextCleaner-on-GC to
-        // find (they crowd the block store of whatever runs next)
-        Glue.releaseLocalCheckpoint(cur)
-        cur = next
-        if (hits == 0) converged = true
-        iter += 1
-      }
-      require(converged, s"component parent chase did not converge in " +
-        s"$maxIter rounds — compact the index (componentsIndexCompact)")
-      handedOff = true
-      // returned AS the checkpointed frame (callers release it; a Project
-      // on top would hide the LogicalRDD from releaseLocalCheckpoint and
-      // leak the blocks) — callers select (key, lbl) and ignore `_hit`
-      cur
-    } finally {
-      Glue.releaseLocalCheckpoint(parents)
-      if (!handedOff && cur != null) Glue.releaseLocalCheckpoint(cur)
+    // per-round blocks in the caller's scope, on the engine storage tier
+    // (CC family default `disk`): a non-convergence throw releases them
+    val parents = st.materialize(parents0, "disk")
+    var cur = st.materialize(cur0, "disk")
+    var iter = 0
+    var converged = false
+    while (!converged && iter < maxIter) {
+      val next = st.materialize(
+        cur.join(parents, cur("lbl") === parents("child"), "left")
+          .select(cur("key"),
+            coalesce(col("parent"), col("lbl")).as("lbl"),
+            col("parent").isNotNull.as("_hit")), "disk")
+      val hits = next.filter(col("_hit")).count() // scan of local blocks
+      // release superseded rounds deterministically — the per-batch
+      // fold path must not leave blocks for ContextCleaner-on-GC to
+      // find (they crowd the block store of whatever runs next)
+      st.release(cur)
+      cur = next
+      if (hits == 0) converged = true
+      iter += 1
     }
+    require(converged, s"component parent chase did not converge in " +
+      s"$maxIter rounds — compact the index (componentsIndexCompact)")
+    st.release(parents)
+    // callers select (key, lbl) and ignore `_hit`
+    cur
   }
 
   /** Deduplicated merge log as (child, parent). Min-per-child: replay
@@ -1078,20 +1048,14 @@ object Layout {
                             srcCol: String, dstCol: String,
                             buckets: Int = 8,
                             tableName: String = "cmp_index",
-                            batchTag: Option[String] = None): Unit = {
+                            batchTag: Option[String] = None): Unit =
+    Storage.scoped { st =>
     import org.apache.spark.sql.functions.{coalesce, min}
-    // error-path hygiene (r14, the chaseParents discipline one level
-    // up): chaseParents throws the RECOVERABLE "compact the index"
-    // error while `fwd` (and later frames) hold checkpointed blocks —
-    // a user who compacts and retries must not accumulate a leaked
-    // batch-scale frame per failed attempt. Every materialization
-    // registers here and the finally releases whatever landed.
-    val mats = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def mat(df: DataFrame): DataFrame = {
-      val m = graft.operators.Dedup.componentsMaterialize(df)
-      mats += m; m
-    }
-    try {
+    // chaseParents throws the RECOVERABLE "compact the index" error
+    // while `fwd` (and later frames) hold checkpointed blocks — the
+    // scope releases them, so a user who compacts and retries does not
+    // accumulate a leaked batch-scale frame per failed attempt
+    def mat(df: DataFrame): DataFrame = st.materialize(df, "disk")
     val fwd = mat(
       edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
         .filter(col("u") =!= col("v"))
@@ -1105,8 +1069,7 @@ object Layout {
       .groupBy(col("u").as("key")).agg(min(col("root")).as("lbl"))
     // chaseParents already returns a checkpointed frame — reused thrice
     // (two translations + merge detect) off that one materialization
-    val resolved = chaseParents(known, parentLog(spark, tableName))
-    mats += resolved
+    val resolved = chaseParents(st, known, parentLog(spark, tableName))
     val ra = resolved.select(col("key").as("ku"), col("lbl").as("ru"))
     val rb = resolved.select(col("key").as("kv"), col("lbl").as("rv"))
     val translated = fwd
@@ -1152,9 +1115,7 @@ object Layout {
         .format("parquet").saveAsTable(s"${tableName}_croots")
       spark.catalog.refreshTable(s"${tableName}_croots")
     }
-    } finally mats.foreach(
-      org.apache.spark.sql.graftglue.Glue.releaseLocalCheckpoint)
-  }
+    }
 
   /** Current labeling of a [[componentsIndex]]: (id, component) with
     * component the min id of the component as of all folded batches —
@@ -1165,13 +1126,16 @@ object Layout {
     * component makes that key hot, which is AQE skew-join territory, not
     * a rewrite (the map side carries only ids). */
   def componentsResolve(spark: SparkSession,
-                        tableName: String = "cmp_index"): DataFrame = {
+                        tableName: String = "cmp_index"): DataFrame =
+    Storage.scoped { st =>
     import org.apache.spark.sql.functions.min
     val croots = spark.table(s"${tableName}_croots")
       .groupBy(col("id")).agg(min(col("root")).as("root"))
     val roots = croots.select(col("root").as("key"), col("root").as("lbl"))
       .distinct()
-    val finalRoots = chaseParents(roots, parentLog(spark, tableName))
+    // the returned plan reads the chased roots' blocks (they leave the
+    // scope with it)
+    val finalRoots = chaseParents(st, roots, parentLog(spark, tableName))
       .select(col("key").as("r0"), col("lbl").as("component"))
     croots.join(finalRoots, col("root") === col("r0"))
       .select(col("id"), col("component"))

@@ -108,14 +108,13 @@ object Bpe {
     * object scaladoc for the tie rule and the per-iteration plan shape). */
   def train(words: DataFrame, wordCol: String, weightCol: String,
             numMerges: Int, minPairCount: Long = 2L,
-            checkpointEvery: Int = 8): DataFrame = {
+            checkpointEvery: Int = 8): DataFrame = graft.Storage.scoped { st =>
     require(numMerges >= 1, s"numMerges must be >= 1, got $numMerges")
     val spark = words.sparkSession
     import spark.implicits._
-    var base = words
+    var base = st.materialize(words
       .select(split(col(wordCol), "").as("syms"),
-        col(weightCol).cast("long").as("weight"))
-      .localCheckpoint(true)
+        col(weightCol).cast("long").as("weight")))
     // merges since the last checkpoint ride in ONE BpeApplyMergesExpr
     // (r15): the census plan's SOURCE is then identical at every
     // iteration (the list lives in the expression object, not the
@@ -140,7 +139,9 @@ object Bpe {
         merges += ((merges.size + 1, a, b, w))
         pending += ((a, b))
         if (merges.size % checkpointEvery == 0) {
-          base = symsNow.localCheckpoint(true)
+          val superseded = base
+          base = st.materialize(symsNow)
+          st.release(superseded)
           pending.clear()
         }
       }
@@ -183,15 +184,14 @@ object Bpe {
     * ~batchK× scan saving. */
   def trainBatched(words: DataFrame, wordCol: String, weightCol: String,
                    numMerges: Int, batchK: Int = 8, minPairCount: Long = 2L,
-                   checkpointEvery: Int = 8): DataFrame = {
+                   checkpointEvery: Int = 8): DataFrame = graft.Storage.scoped { st =>
     require(numMerges >= 1, s"numMerges must be >= 1, got $numMerges")
     require(batchK >= 1, s"batchK must be >= 1, got $batchK")
     val spark = words.sparkSession
     import spark.implicits._
-    var base = words
+    var base = st.materialize(words
       .select(split(col(wordCol), "").as("syms"),
-        col(weightCol).cast("long").as("weight"))
-      .localCheckpoint(true)
+        col(weightCol).cast("long").as("weight")))
     // same pending-merges discipline as [[train]] (r15): one
     // BpeApplyMergesExpr carries every merge since the last checkpoint
     val pending = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
@@ -235,7 +235,9 @@ object Bpe {
         }
         scans += 1
         if (scans % checkpointEvery == 0) {
-          base = symsNow.localCheckpoint(true)
+          val superseded = base
+          base = st.materialize(symsNow)
+          st.release(superseded)
           pending.clear()
         }
       }
@@ -275,10 +277,13 @@ object Bpe {
       s"checkpointEvery must be >= 1, got $checkpointEvery")
     val start = words.select(col(wordCol),
       split(col(wordCol), "").as("pieces"))
-    merges.grouped(checkpointEvery).foldLeft(start) { (acc, group) =>
-      acc.withColumn("pieces",
-          graft.functions.bpeApplyMerges(col("pieces"), group))
-        .localCheckpoint(true)
+    graft.Storage.scoped { st =>
+      merges.grouped(checkpointEvery).foldLeft(start) { (acc, group) =>
+        val next = st.materialize(acc.withColumn("pieces",
+          graft.functions.bpeApplyMerges(col("pieces"), group)))
+        st.release(acc) // the superseded window (no-op on `start`)
+        next
+      }
     }
   }
 

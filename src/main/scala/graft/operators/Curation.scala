@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.Storage
 import graft.functions.tokens
 
 /** Corpus-level document curation: the cleaning passes that need to see
@@ -84,14 +85,15 @@ object Curation {
   /** Join term-level stats `tf` with the per-term relation `dfRel`,
     * broadcasting only under a MEASURED vocabulary bound — the
     * measure-then-route pattern of `Dedup.jaccardPairs` (VERDICT_r05
-    * next-round #2). The relation is persisted first, so the routing
+    * next-round #2). The relation is materialized first, so the routing
     * count is one cheap pass over the (vocab-sized) aggregate the query
-    * needs anyway; storage is reclaimed by `spark.catalog.clearCache()`
-    * or session end. Shared by tfidf/bm25 (queries.Text forwards here)
-    * and [[unigramLogProb]]. */
+    * needs anyway; the returned plan reads the checkpoint, which the
+    * ContextCleaner reclaims with it (no CacheManager entry outlives the
+    * call). Shared by tfidf/bm25 (queries.Text forwards here) and
+    * [[unigramLogProb]]. */
   private[graft] def idfJoinVocabGated(tf: DataFrame, dfRel: DataFrame,
                                        maxBroadcastVocab: Long): DataFrame = {
-    val dfp = dfRel.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val dfp = Storage.materializeOnce(dfRel)
     val vocab = dfp.count()
     if (vocab <= maxBroadcastVocab) tf.join(broadcast(dfp), "term")
     else tf.join(dfp, "term")
@@ -252,7 +254,7 @@ object Curation {
     *    distinct shingle relation, and unpersists BOTH before returning —
     *    a tiered probe running many pipelines in one session must not
     *    accumulate dead blocks;
-    *  - with `materialize` on, the post-decontamination survivor set is
+    *  - the post-decontamination survivor set is
     *    eagerly checkpointed BEFORE any index append — the survivors are
     *    computed by READING the index tables, and deferring their
     *    evaluation past the append would re-read the grown index (the
@@ -262,10 +264,11 @@ object Curation {
     *    sample) into the standing index, so the next increment dedups
     *    against everything this run admitted.
     *
-    * `materialize = false` keeps the whole chain lazy (no checkpoint, no
-    * append, persist left to the caller). Each stage's plan has its own
-    * PLANS.tsv row; scale posture: SCALE.md `pipeline_*` tiers + the
-    * ScaleSpec output-count gate. */
+    * Every stage cache and checkpoint is released when the call exits,
+    * on return or throw (`Storage.scoped`); the returned frame is the
+    * eagerly materialized shard-shuffled output. Each stage's plan has
+    * its own PLANS.tsv row; scale posture: SCALE.md `pipeline_*` tiers +
+    * the ScaleSpec output-count gate. */
   def pipeline(spark: org.apache.spark.sql.SparkSession, docs: DataFrame,
                idCol: String, textCol: String, srcCol: String,
                targetTotal: Long,
@@ -287,7 +290,6 @@ object Curation {
                packSeqLen: Option[Int] = None,
                bpeMerges: Option[Int] = None,
                maxBroadcastVocab: Long = 1L << 20,
-               materialize: Boolean = true,
                // opt-in Unicode canonical normalization for every
                // identity-keyed stage (line census, paragraph keys, span
                // grams, minhash signatures, decontamination shingles on
@@ -299,34 +301,20 @@ object Curation {
                // substring surgery cuts character ranges of the
                // normalized text and cannot map them back to the
                // original bytes (removeRepeatedSpans scaladoc).
-               unicodeForm: Option[String] = None): DataFrame = {
+               unicodeForm: Option[String] = None): DataFrame = Storage.scoped { st =>
     require(!appendToIndex || indexTable.nonEmpty,
       "appendToIndex requires an indexTable")
-    require(!appendToIndex || materialize,
-      "appendToIndex requires materialize=true: the survivors are computed " +
-        "by reading the index tables and must be checkpointed before the " +
-        "append grows them")
-    require(bpeMerges.isEmpty || materialize,
-      "bpeMerges requires materialize=true: BPE training is a driver loop " +
-        "of Spark jobs, not a lazy plan")
     require(bpeMerges.isEmpty || tokenBudget.nonEmpty || packSeqLen.nonEmpty,
       "bpeMerges without tokenBudget/packSeqLen counts tokens nothing consumes")
     val cols = docs.columns.map(col)
     val gate = qualityFilter.getOrElse(c4ThenGopherFilter(textCol))
     // each text-rewriting stage joins its rewrite back to the surviving
-    // rows, REFERENCING its input twice — on the materialized path every
-    // enabled stage boundary therefore persists (computed once, both
-    // references read cache; at 100 TB recomputing the line-removal agg
-    // under the paragraph join would double the most expensive pass).
-    // All stage persists release before return.
-    val stagePersists = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    // rows, REFERENCING its input twice — so every enabled stage
+    // boundary is cached (computed once, both references read cache; at
+    // 100 TB recomputing the line-removal agg under the paragraph join
+    // would double the most expensive pass)
     def stageBoundary(df: DataFrame, needed: Boolean): DataFrame =
-      if (!materialize || !needed) df
-      else {
-        val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        stagePersists += p
-        p
-      }
+      if (needed) st.cache(df) else df
     // the GATE is a stage boundary too (r15 session 2, measured per
     // stage at sf0.1): the quality rewrite is the chain's heaviest
     // per-row pass (regex/line transforms over every corpus byte) and
@@ -361,21 +349,14 @@ object Curation {
           .select(col(idCol), col("clean_text").as(textCol)), Seq(idCol))
         .select(cols: _*)
     }
-    // the lazy form takes NO action at construction:
-    // no persist (nothing would unpersist it), no routing count, no
-    // checkpoint — caching is the caller's concern there. The persist
-    // point sits AFTER the last text-rewriting stage, so the optional
-    // sub-document passes are inside the one reuse point too.
-    val cleaned =
-      if (materialize)
-        cleanedLazy.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else cleanedLazy
+    // the cache point sits AFTER the last text-rewriting stage, so the
+    // optional sub-document passes are inside the one reuse point too
+    val cleaned = st.cache(cleanedLazy)
     val afterDedup0 = indexTable match {
       case Some(table) =>
         val idxSurv = Dedup.curateBatchAgainstIndex(cleaned, spark, table,
           idCol, textCol, shingleN, numHashes, bands, buckets, estThreshold,
-          appendSurvivors = false, materialize = materialize,
-          unicodeForm = unicodeForm)
+          appendSurvivors = false, unicodeForm = unicodeForm)
         val intra = Dedup.minHashNearDups(idxSurv, idCol, textCol, shingleN,
           numHashes, bands, estThreshold, unicodeForm)
         idxSurv.join(intra.select(col("id_b").as(idCol)).distinct(),
@@ -389,7 +370,6 @@ object Curation {
     // Stage boundary only when that double reference exists.
     val afterDedup = stageBoundary(afterDedup0,
       needed = evalShingles.nonEmpty && indexTable.nonEmpty)
-    var esPersisted: Option[DataFrame] = None
     val decon = evalShingles match {
       case Some(es) =>
         // the eval side joins the (normalized) corpus shingles, so it
@@ -401,16 +381,10 @@ object Curation {
         // sequence, so the per-token and whole-string forms agree.
         val espLazy = es.select(graft.functions.unicodeNormalizeOpt(
             col(es.columns.head), unicodeForm).as("__pl_s")).distinct()
-        // measure-then-route needs a count (a job): materialized runs only.
-        // The lazy form keeps the join unhinted — the honest at-scale plan
-        // (AQE promotes a small eval set to broadcast at runtime anyway).
+        // measure-then-route: one count over the cached eval set
+        val esp = st.cache(espLazy)
         val esJoin =
-          if (materialize) {
-            val esp = espLazy
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            esPersisted = Some(esp)
-            if (esp.count() <= maxBroadcastShingles) broadcast(esp) else esp
-          } else espLazy
+          if (esp.count() <= maxBroadcastShingles) broadcast(esp) else esp
         val contaminated = afterDedup.select(col(idCol),
             explode(graft.functions.wordShingles(tokens(
               graft.functions.unicodeNormalizeOpt(col(textCol), unicodeForm)),
@@ -420,7 +394,7 @@ object Curation {
         afterDedup.join(contaminated, Seq(idCol), "left_anti")
       case None => afterDedup
     }
-    val accepted = if (materialize) decon.localCheckpoint(true) else decon
+    val accepted = st.materialize(decon)
     if (appendToIndex)
       graft.catalog.Layout.minhashIndexAppend(spark, accepted.select(cols: _*),
         idCol, textCol, shingleN, numHashes, bands, buckets, indexTable.get,
@@ -439,8 +413,7 @@ object Curation {
           accepted.withColumn("n_tokens",
             size(tokens(lower(col(textCol)))).cast("long"))
         case Some(m) =>
-          val words = Bpe.wordCounts(accepted, textCol)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          val words = st.cache(Bpe.wordCounts(accepted, textCol))
           val merges = Bpe.collectMerges(
             Bpe.train(words, "word", "weight", numMerges = m,
               minPairCount = 1L))
@@ -448,7 +421,7 @@ object Curation {
               merges)
             .select(col("word").as("__w"), size(col("pieces")).cast("long").as("__np"))
           val vocabSize = words.count()
-          words.unpersist()
+          st.release(words)
           val piecesRouted =
             if (vocabSize <= maxBroadcastVocab) broadcast(pieces) else pieces
           val perDoc = accepted
@@ -469,13 +442,7 @@ object Curation {
         shardSeed)
       case None => Sampling.shardShuffle(mixed, idCol, shardSeed)
     }
-    if (materialize) {
-      val mat = out.localCheckpoint(true)
-      cleaned.unpersist()
-      stagePersists.foreach(_.unpersist())
-      esPersisted.foreach(_.unpersist())
-      mat
-    } else out
+    Storage.materializeOnce(out)
   }
 
   /** Per-document mean corpus log-probability (the CCNet perplexity-
@@ -574,7 +541,7 @@ object Curation {
       .agg(count(lit(1)).as("n"))
     // measured route on the BIGRAM type count (the idfJoinVocabGated
     // discipline, keyed on the pair)
-    val lpp = lp.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val lpp = Storage.materializeOnce(lp)
     val nTypes = lpp.count()
     val joined =
       if (nTypes <= maxBroadcastVocab) docBg.join(broadcast(lpp), Seq("w1", "w2"))

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.Storage
 import graft.functions.{bitAndCount, bitmapFromInts, minhashSig, simhash64, tokens, wordShingles}
 
 /** Near-duplicate detection for text at scale (SURVEY.md §2.B north-star
@@ -22,27 +23,6 @@ import graft.functions.{bitAndCount, bitmapFromInts, minhashSig, simhash64, toke
   *    under-banding.
   */
 object Dedup {
-
-  /** The exact-jaccard family's eager materializations (the shingle
-    * frame, the bitmap route's docSets build side) on the engine
-    * [[graft.Storage.CheckpointStorageConf]] tier, family default `disk`
-    * (zero heap residency; immune to suite-neighbor block-store
-    * pressure — VERDICT r13 next #1). */
-  private def jaccardMaterialize(df: DataFrame): DataFrame =
-    graft.Storage.materializeOnce(df, familyDefault = "disk")
-
-  /** The connected-components family's per-round materializations —
-    * batch CC ([[connectedComponents]], [[connectedComponentsStar]]) and
-    * the standing-index fold/chase
-    * ([[graft.catalog.Layout.componentsIndexAppend]]) — on the engine
-    * [[graft.Storage.CheckpointStorageConf]] tier, family default `disk`
-    * (measured at 10×/100× AND at sf0.1: the disk tier wins the 100×
-    * history build 5.5× at default heap — SCALE.md components rows — and
-    * removes the memdisk tier's heap-residency exposure to suite
-    * neighbors, the dedup_components_star graded-spread signature,
-    * VERDICT r13 wrong #2). */
-  private[graft] def componentsMaterialize(df: DataFrame): DataFrame =
-    graft.Storage.materializeOnce(df, familyDefault = "disk")
 
   /** Exact-dedup fingerprints `(id, fp)`: md5 of the whitespace-normalized
     * lowercase body — one row-local pass, no shuffle. The same canonical
@@ -263,13 +243,10 @@ object Dedup {
   private def crossNearDups(batchSigsRaw: DataFrame, corpusSigs: DataFrame,
                             bandedCorpus: DataFrame, bands: Int, rows: Int,
                             estThreshold: Double,
-                            materialize: Boolean = true): DataFrame = {
+                            materialize: Boolean = true): DataFrame = Storage.scoped { st =>
     // materialize=false keeps the lineage visible for plan audits (no
     // persist/checkpoint side effects, runs no job) — graft.Plans only
-    val batchSigs =
-      if (materialize)
-        batchSigsRaw.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else batchSigsRaw
+    val batchSigs = if (materialize) st.cache(batchSigsRaw) else batchSigsRaw
     val pairs = bandedSignatures(batchSigs, bands, rows)
       .select(col("id").as("batch_id"), col("bucket"))
       .join(bandedCorpus.select(col("id").as("corpus_id"), col("bucket")),
@@ -292,10 +269,7 @@ object Dedup {
       .filter(col("est_jaccard") >= estThreshold)
       .select(col("batch_id"), col("corpus_id"),
         round(col("est_jaccard"), 4).as("est_jaccard"))
-    if (!materialize) return out
-    val mat = out.localCheckpoint(eager = true)
-    batchSigs.unpersist()
-    mat
+    if (materialize) Storage.materializeOnce(out) else out
   }
 
   /** 64-bit SimHash per document — one row pass, no shuffle.
@@ -398,16 +372,16 @@ object Dedup {
     * equality), so results stay deterministic.
     *
     * Returns (dictionary (sh, shid), vocabulary size). The dictionary is
-    * persisted — the caller reads it once to size bitmaps and once in the
-    * build join.
+    * cached — the caller reads it once to size bitmaps and once in the
+    * build join — and returned with its cache (the scope detaches it).
     */
-  private[graft] def denseDictionary(sh: DataFrame, numShards: Int): (DataFrame, Long) = {
+  private[graft] def denseDictionary(sh: DataFrame,
+                                     numShards: Int): (DataFrame, Long) = Storage.scoped { st =>
     import org.apache.spark.sql.expressions.Window
-    val local = sh.select(col("sh")).distinct()
+    val local = st.cache(sh.select(col("sh")).distinct()
       .withColumn("shard", pmod(xxhash64(col("sh")), lit(numShards.toLong)).cast("int"))
       .withColumn("lrank",
-        row_number().over(Window.partitionBy(col("shard")).orderBy(col("sh"))).cast("long") - 1)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        row_number().over(Window.partitionBy(col("shard")).orderBy(col("sh"))).cast("long") - 1))
     val counts = local.groupBy(col("shard")).agg(count(lit(1)).as("cnt"))
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
     var running = 0L
@@ -462,7 +436,7 @@ object Dedup {
                    maxBitmapVocab: Long = 1L << 18,
                    maxBruteDocs: Long = 1L << 16,
                    prefixThreshold: Double = 0.5,
-                   unicodeForm: Option[String] = None): DataFrame = {
+                   unicodeForm: Option[String] = None): DataFrame = Storage.scoped { st =>
     // once-materialized measured-routed shape (the winnow cure, r14):
     // the shingle frame is checkpointed eagerly on the jaccard storage
     // tier (engine conf, default `disk`: zero heap residency,
@@ -472,23 +446,17 @@ object Dedup {
     // read those measured blocks. On the bitmap route the shingle
     // blocks are released deterministically as soon as the docSets
     // build side materializes (the returned plan no longer needs them).
-    val sh = jaccardMaterialize(
-      shingleRows(df, idCol, textCol, shingleN, unicodeForm))
-    // a throw anywhere before the routed result exists must release the
-    // shingle blocks (r14 error-path hygiene; on the prefix/inverted
-    // routes the RETURNED plan reads sh, so success keeps them there)
-    try {
-      val vocab = sh.select(col("sh")).distinct().count()
-      val nDocs = sh.select(col("id")).distinct().count()
-      if (vocab <= maxBitmapVocab && nDocs <= maxBruteDocs) {
-        val (dict, v) = denseDictionary(sh, df.sparkSession.sparkContext.defaultParallelism)
-        jaccardBitmapFrom(sh, dict, v.toInt, threshold, releaseShingles = true)
-      } else if (threshold >= prefixThreshold) jaccardPrefixFrom(sh, threshold)
-      else jaccardInvertedFrom(sh, threshold)
-    } catch { case t: Throwable =>
-      org.apache.spark.sql.graftglue.Glue.releaseLocalCheckpoint(sh)
-      throw t
-    }
+    // (on the prefix/inverted routes the RETURNED plan reads sh, so it
+    // leaves the scope with the result)
+    val sh = st.materialize(
+      shingleRows(df, idCol, textCol, shingleN, unicodeForm), "disk")
+    val vocab = sh.select(col("sh")).distinct().count()
+    val nDocs = sh.select(col("id")).distinct().count()
+    if (vocab <= maxBitmapVocab && nDocs <= maxBruteDocs) {
+      val (dict, v) = denseDictionary(sh, df.sparkSession.sparkContext.defaultParallelism)
+      jaccardBitmapFrom(st, sh, dict, v.toInt, threshold)
+    } else if (threshold >= prefixThreshold) jaccardPrefixFrom(sh, threshold)
+    else jaccardInvertedFrom(sh, threshold)
   }
 
   /** Exact Jaccard pairs via PREFIX FILTERING (AllPairs/PPJoin family:
@@ -532,8 +500,8 @@ object Dedup {
     // same once-materialized shape as the routed entry (r14): the
     // multiply-consumed shingle frame (dfreq, prefix ranking, doc
     // arrays) reads eager checkpoint blocks, not an evictable cache
-    val sh = jaccardMaterialize(
-      shingleRows(df, idCol, textCol, shingleN, unicodeForm))
+    val sh = Storage.materializeOnce(
+      shingleRows(df, idCol, textCol, shingleN, unicodeForm), "disk")
     jaccardPrefixFrom(sh, threshold)
   }
 
@@ -614,7 +582,7 @@ object Dedup {
   def jaccardBitmapPairs(df: DataFrame, idCol: String, textCol: String,
                          shingleN: Int, threshold: Double,
                          maxVocab: Long = 1L << 22,
-                         unicodeForm: Option[String] = None): DataFrame = {
+                         unicodeForm: Option[String] = None): DataFrame = Storage.scoped { st =>
     val sh = shingleRows(df, idCol, textCol, shingleN, unicodeForm)
     val (dict, vocab) = denseDictionary(sh, df.sparkSession.sparkContext.defaultParallelism)
     require(vocab <= maxVocab,
@@ -623,12 +591,12 @@ object Dedup {
         s"bitmaps are vocabulary-sized; use the inverted-index path " +
         s"(jaccardPairs routes on measured vocab) or raise maxVocab " +
         s"deliberately")
-    jaccardBitmapFrom(sh, dict, vocab.toInt, threshold)
+    jaccardBitmapFrom(st, sh, dict, vocab.toInt, threshold)
   }
 
-  private def jaccardBitmapFrom(sh: DataFrame, dict: DataFrame, v: Int,
-                                threshold: Double,
-                                releaseShingles: Boolean = false): DataFrame = {
+  private def jaccardBitmapFrom(st: Storage.Scope, sh: DataFrame,
+                                dict: DataFrame, v: Int,
+                                threshold: Double): DataFrame = {
     val spark = sh.sparkSession
     // once-materialized build side (r14, the winnow cure — VERDICT r13
     // next #1): the self-join below references docSets on both sides,
@@ -638,18 +606,16 @@ object Dedup {
     // jaccard storage tier (default `disk`: n rows x V/8 bytes of
     // zero-heap blocks — at cluster scale this table is the natural
     // build-side cache of the operator).
-    val docSets = jaccardMaterialize(
+    val docSets = st.materialize(
       sh.join(broadcast(dict), "sh")
         .groupBy(col("id"))
         .agg(collect_set(col("shid")).as("ids"))
         .select(col("id"), size(col("ids")).as("sz"),
-          bitmapFromInts(col("ids"), v).as("bm")))
+          bitmapFromInts(col("ids"), v).as("bm")), "disk")
     // the returned plan reads docSets blocks only — a checkpointed
     // shingle frame (the routed entry's) is superseded the moment the
-    // docSets build lands; release it instead of leaving it for
-    // clearCache/ContextCleaner (no-op on a non-checkpointed sh)
-    if (releaseShingles)
-      org.apache.spark.sql.graftglue.Glue.releaseLocalCheckpoint(sh)
+    // docSets build lands; release it now (no-op on a lazy sh)
+    st.release(sh)
     // the broadcast-nested-loop stream side must be spread across cores:
     // docSets comes out of a (small, AQE-coalesced) aggregation, often a
     // single partition — which would serialize the O(n²) pair loop
@@ -744,71 +710,55 @@ object Dedup {
     * Output: (id, component) for every node appearing in a real edge —
     * callers left-join isolated nodes back with coalesce(component, id). */
   def connectedComponents(edges: DataFrame, srcCol: String, dstCol: String,
-                          maxIter: Int = 20): DataFrame = {
+                          maxIter: Int = 20): DataFrame = Storage.scoped { st =>
     val fwd = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .filter(col("src") =!= col("dst"))
     // eager materialization after each round: iterative plans otherwise
     // accumulate lineage — by round ~10 the logical plan is exponentially
     // nested and planning itself OOMs. Truncating lineage per round keeps
     // every iteration's plan O(1). Storage behind the blocks is the
-    // engine storage tier (CC family default `disk`:
-    // a 100×-scale history build runs at default heap in local mode and
-    // measured 5.5× faster than memdisk there — SCALE.md; `reliable`
-    // covers executor loss on real clusters).
-    val und = componentsMaterialize(
+    // engine storage tier (CC family default `disk`, Storage scaladoc).
+    // A non-convergence throw releases every round through the scope.
+    val und = st.materialize(
       fwd.union(fwd.select(col("dst").as("src"), col("src").as("dst")))
-        .distinct())
-    // error-path hygiene (the chaseParents discipline, ADVICE r13): a
-    // non-convergence throw must not orphan the round's blocks; `labels`
-    // ownership transfers to the caller only on the success return
-    var labels: DataFrame = null
-    var handedOff = false
-    try {
-      labels = componentsMaterialize(
-        und.select(col("src").as("id")).distinct()
-          .select(col("id"), col("id").as("component")))
-      var iter = 0
-      var converged = false
-      while (!converged && iter < maxIter) {
-        // push each node's label to its neighbors, keep the min seen.
-        // ONE action per round (r15 session 2, the chaseParents one-join
-        // discipline): the prev-label comparison is folded INTO the
-        // materialized frame as a `__chg` flag, so convergence is read
-        // off the checkpointed blocks with a plain filter+count instead
-        // of a second join job re-reading `next` against `labels` —
-        // half the per-round job count, identical labels and identical
-        // round count (the flag is exactly the old join's predicate).
-        val cur = labels.select(col("id"), col("component"))
-        val pushed = und.join(cur, col("src") === col("id"))
-          .select(col("dst").as("id"), col("component"))
-        val next = componentsMaterialize(
-          cur.union(pushed)
-            .groupBy(col("id")).agg(min(col("component")).as("component"))
-            .join(cur.select(col("id"), col("component").as("__prev")), "id")
-            .select(col("id"), col("component"),
-              (col("component") < col("__prev")).as("__chg")))
-        val changed = next.filter(col("__chg")).count() // local-block scan
-        // superseded round released deterministically (round-12): the
-        // blocks are otherwise freed only when ContextCleaner notices the
-        // frame is garbage, and across many CC calls in one session they
-        // crowd the block store of whatever runs next
-        org.apache.spark.sql.graftglue.Glue.releaseLocalCheckpoint(labels)
-        labels = next
-        converged = changed == 0
-        iter += 1
-      }
-      require(converged, s"connectedComponents did not converge in $maxIter rounds")
-      handedOff = true
-      // callers consume (id, component); the flag column stays inside the
-      // returned checkpointed frame (a Project on top would hide the
-      // LogicalRDD from releaseLocalCheckpoint — the chaseParents rule),
-      // so it is selected away LAZILY here over the blocks
-      labels.select(col("id"), col("component"))
-    } finally {
-      org.apache.spark.sql.graftglue.Glue.releaseLocalCheckpoint(und)
-      if (!handedOff && labels != null)
-        org.apache.spark.sql.graftglue.Glue.releaseLocalCheckpoint(labels)
+        .distinct(), "disk")
+    var labels = st.materialize(
+      und.select(col("src").as("id")).distinct()
+        .select(col("id"), col("id").as("component")), "disk")
+    var iter = 0
+    var converged = false
+    while (!converged && iter < maxIter) {
+      // push each node's label to its neighbors, keep the min seen.
+      // ONE action per round (r15 session 2, the chaseParents one-join
+      // discipline): the prev-label comparison is folded INTO the
+      // materialized frame as a `__chg` flag, so convergence is read
+      // off the checkpointed blocks with a plain filter+count instead
+      // of a second join job re-reading `next` against `labels` —
+      // half the per-round job count, identical labels and identical
+      // round count (the flag is exactly the old join's predicate).
+      val cur = labels.select(col("id"), col("component"))
+      val pushed = und.join(cur, col("src") === col("id"))
+        .select(col("dst").as("id"), col("component"))
+      val next = st.materialize(
+        cur.union(pushed)
+          .groupBy(col("id")).agg(min(col("component")).as("component"))
+          .join(cur.select(col("id"), col("component").as("__prev")), "id")
+          .select(col("id"), col("component"),
+            (col("component") < col("__prev")).as("__chg")), "disk")
+      val changed = next.filter(col("__chg")).count() // local-block scan
+      // superseded round released deterministically (round-12): the
+      // blocks are otherwise freed only when ContextCleaner notices the
+      // frame is garbage, and across many CC calls in one session they
+      // crowd the block store of whatever runs next
+      st.release(labels)
+      labels = next
+      converged = changed == 0
+      iter += 1
     }
+    require(converged, s"connectedComponents did not converge in $maxIter rounds")
+    // the flag column is selected away LAZILY over the final round's
+    // blocks, which leave the scope with the result
+    labels.select(col("id"), col("component"))
   }
 
   /** Connected components via alternating large-star / small-star — the
@@ -832,7 +782,7 @@ object Dedup {
     * Output matches [[connectedComponents]]: (id, component) for every
     * node with at least one edge, component = min member id. */
   def connectedComponentsStar(edges: DataFrame, srcCol: String, dstCol: String,
-                              maxIter: Int = 50): DataFrame = {
+                              maxIter: Int = 50): DataFrame = Storage.scoped { st =>
     def checksum(e: DataFrame): (Long, Long) = {
       // bit_xor: order-free AND overflow-free (sum of hashes trips the
       // ANSI long-overflow check); edges are distinct so no XOR cancel
@@ -865,43 +815,28 @@ object Dedup {
     }
 
     // per-round storage on the engine storage tier (CC family default
-    // `disk`; the 100× components-index history build needs
-    // the disk tier to run at default heap in local mode — VERDICT r12 #2)
-    var e = componentsMaterialize(
+    // `disk`); a failed or non-converged run releases through the scope
+    var e = st.materialize(
       edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
         .filter(col("u") =!= col("v"))
-        .distinct())
+        .distinct(), "disk")
     var sig = checksum(e)
     var iter = 0
     var converged = false
-    try {
-      while (!converged && iter < maxIter) {
-        val prev = e
-        e = componentsMaterialize(smallStar(largeStar(e)))
-        // superseded round released deterministically (round-12, the
-        // connectedComponents discipline)
-        org.apache.spark.sql.graftglue.Glue.releaseLocalCheckpoint(prev)
-        val next = checksum(e)
-        converged = next == sig
-        sig = next
-        iter += 1
-      }
-    } catch {
-      // error-path hygiene (the chaseParents discipline, ADVICE r13):
-      // a mid-round failure must not orphan the current round's blocks
-      case t: Throwable =>
-        org.apache.spark.sql.graftglue.Glue.releaseLocalCheckpoint(e)
-        throw t
+    while (!converged && iter < maxIter) {
+      val prev = e
+      e = st.materialize(smallStar(largeStar(e)), "disk")
+      st.release(prev) // the superseded round
+      val next = checksum(e)
+      converged = next == sig
+      sig = next
+      iter += 1
     }
-    if (!converged) {
-      org.apache.spark.sql.graftglue.Glue.releaseLocalCheckpoint(e)
-      throw new IllegalArgumentException(
-        s"requirement failed: connectedComponentsStar did not converge " +
-          s"in $maxIter rounds")
-    }
+    require(converged,
+      s"connectedComponentsStar did not converge in $maxIter rounds")
     // converged stars: (member, min); add the centers labeling themselves.
-    // The returned plan references e's checkpointed blocks, so ownership
-    // transfers to the caller (session GC reclaims via ContextCleaner).
+    // The returned plan reads e's blocks, so they leave the scope with it
+    // (session GC reclaims them via the ContextCleaner).
     e.select(col("u").as("id"), col("v").as("component"))
       .union(e.select(col("v").as("id"), col("v").as("component")).distinct())
       .distinct()
@@ -999,12 +934,8 @@ object Dedup {
     // the q-gram blocking and the verify see the same canonical string.
     val src = unicodeForm.fold(df)(f =>
       df.withColumn(strCol, graft.functions.unicodeNormalize(col(strCol), f)))
-    val s = strRelation(src, idCol, strCol)
-    try pairsFromStrs(s, maxDist, q)
-    catch { case t: Throwable =>
-      org.apache.spark.sql.graftglue.Glue.releaseLocalCheckpoint(s)
-      throw t
-    }
+    Storage.scoped(st =>
+      pairsFromStrs(st.materialize(strRelation(src, idCol, strCol)), maxDist, q))
   }
 
   /** [[editDistancePairs]] with the gram length q MEASURED from the data
@@ -1039,21 +970,18 @@ object Dedup {
     // subtree (r15: the gate query's derived-title subtree — tokenize +
     // groupBy + union — was recomputed by every probe pass and ~5 more
     // times inside the candidate/verify plan)
-    val s = strRelation(src, idCol, strCol)
-    try {
+    Storage.scoped { st =>
+      val s = st.materialize(strRelation(src, idCol, strCol))
       val probe =
         if (probeFraction >= 1.0) s
         else Sampling.stableSample(s, "str", probeFraction)
       pairsFromStrs(s, maxDist, measureEditQ(probe, "str"))
-    } catch { case t: Throwable =>
-      org.apache.spark.sql.graftglue.Glue.releaseLocalCheckpoint(s)
-      throw t
     }
   }
 
   /** The (id, str, len) distinct-string relation every edit-distance
-    * phase reads — materialized ONCE per call on the engine storage
-    * policy ([[graft.Storage.materializeOnce]]; r15, guide §1.2/§2.4):
+    * phase reads — its callers materialize it ONCE per call on the
+    * engine storage policy (memdisk default; r15, guide §1.2/§2.4):
     * the q-density probe, the gram census, the rarest-gram window, the
     * candidate join's build side and the verify's two str joins each
     * re-derived the caller's subtree from scratch otherwise (the gate
@@ -1064,9 +992,8 @@ object Dedup {
     * memory class. */
   private def strRelation(src: DataFrame, idCol: String,
                           strCol: String): DataFrame =
-    graft.Storage.materializeOnce(
-      src.select(col(idCol).cast("long").as("id"),
-        col(strCol).as("str"), length(col(strCol)).as("len")))
+    src.select(col(idCol).cast("long").as("id"),
+      col(strCol).as("str"), length(col(strCol)).as("len"))
 
   /** Candidate generation + exact levenshtein verify over the
     * materialized string relation. */

@@ -58,15 +58,14 @@ object Quantize {
     * centroid (same policy as the IVF Lloyd). */
   def trainPqCodebooks(df: DataFrame, idCol: String, embCol: String,
                        dim: Int, m: Int, ksub: Int, lloydIters: Int,
-                       seed: Long, trainFraction: Double = 1.0): Seq[Seq[Seq[Double]]] = {
-    require(dim % m == 0, s"m=$m must divide dim=$dim")
-    val dsub = dim / m
-    val sampled = if (trainFraction < 1.0) df.sample(trainFraction, seed) else df
-    val base = sampled
-      .select(col(idCol).as("id"), col(embCol).cast("array<double>").as("emb"))
-      .filter(size(col("emb")) >= dim)
-      .persist()
-    try {
+                       seed: Long, trainFraction: Double = 1.0): Seq[Seq[Seq[Double]]] =
+    graft.Storage.scoped { st =>
+      require(dim % m == 0, s"m=$m must divide dim=$dim")
+      val dsub = dim / m
+      val sampled = if (trainFraction < 1.0) df.sample(trainFraction, seed) else df
+      val base = st.cache(sampled
+        .select(col(idCol).as("id"), col(embCol).cast("array<double>").as("emb"))
+        .filter(size(col("emb")) >= dim))
       val cand = base.orderBy(xxhash64(col("id"), lit(seed)), col("id"))
         .limit(math.max(64 * ksub, 4096))
         .select(col("emb")).collect()
@@ -122,8 +121,7 @@ object Quantize {
         }
       }
       books
-    } finally base.unpersist()
-  }
+    }
 
   /** The query-side ADC lookup table: lut[s·ksub + j] = dot(query subvec
     * s, codebook entry (s, j)) — so Σ_s lut[s][code_s] approximates

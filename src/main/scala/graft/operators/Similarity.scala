@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.Storage
 import graft.functions.{cosineSim, dotProduct, hyperplaneBits, ivfAssign, l2NormSq}
 
 /** Approximate similarity search — the 100 TB path for embedding
@@ -70,16 +71,14 @@ object Similarity {
   def lshNearDupPairs(df: DataFrame, idCol: String, embCol: String,
                       dim: Int, rowsPerBand: Int, bands: Int, seed: Long,
                       simThreshold: Double,
-                      materialize: Boolean = true): DataFrame = {
+                      materialize: Boolean = true): DataFrame = Storage.scoped { s =>
     val numPlanes = rowsPerBand * bands
-    // persist: base feeds the banded self-join AND both verify joins —
+    // cached: base feeds the banded self-join AND both verify joins —
     // without it the O(dim·numPlanes)-per-row hyperplane projection (and
-    // the source scan) re-executes once per reference. Released before
-    // return by materializeAndRelease.
-    val base = df.select(col(idCol).as("id"), col(embCol).as("emb"),
+    // the source scan) re-executes once per reference
+    val base = s.cache(df.select(col(idCol).as("id"), col(embCol).as("emb"),
       l2NormSq(col(embCol)).as("nsq"),
-      hyperplaneBits(col(embCol), dim, numPlanes, seed).as("bits"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      hyperplaneBits(col(embCol), dim, numPlanes, seed).as("bits")))
     val banded = base.select(col("id"),
       explode(bandKeys(col("bits"), bands, rowsPerBand)).as("bucket"))
     val pairs = banded.toDF("id_a", "bucket")
@@ -87,30 +86,21 @@ object Similarity {
         col("bucket") === col("bucket_b") && col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b"))
       .distinct()
-    materializeAndRelease(
-      verifyPairs(pairs, base.select(col("id"), col("emb"), col("nsq")), simThreshold),
-      base, materialize)
+    output(verifyPairs(pairs, base.select(col("id"), col("emb"), col("nsq")),
+      simThreshold), materialize)
   }
 
-  /** Eagerly materialize the (small) verified pair output so the persisted
-    * working set can be unpersisted BEFORE returning — a long-lived session
-    * calling these operators repeatedly must not accumulate CacheManager
-    * entries that only `spark.catalog.clearCache()` reclaims. The
-    * checkpoint blocks themselves are ContextCleaner-managed: they are
-    * dropped when the returned frame is garbage-collected.
-    *
-    * `materialize = false` opts out (plan inspection, or a caller that
-    * composes the lazy plan further and manages the cache itself): the
-    * working set STAYS persisted and the caller owns releasing it
-    * (`spark.catalog.clearCache()` or unpersisting via its own handle). */
-  private def materializeAndRelease(out: DataFrame, cached: DataFrame,
-                                    materialize: Boolean): DataFrame =
-    if (!materialize) out
-    else {
-      val result = out.localCheckpoint(eager = true)
-      cached.unpersist()
-      result
-    }
+  /** The scoped operators' result: the (small) output eagerly
+    * materialized, so the scope releases the cached working set before
+    * returning — a long-lived session calling these operators repeatedly
+    * must not accumulate CacheManager entries that only
+    * `spark.catalog.clearCache()` reclaims; the checkpoint itself is
+    * ContextCleaner-managed. `materialize = false` returns the lazy plan
+    * (plan inspection, or a caller composing it further): the working
+    * set it reads STAYS cached (the scope detaches it) and the caller
+    * owns it (`spark.catalog.clearCache()`). */
+  private def output(out: DataFrame, materialize: Boolean): DataFrame =
+    if (materialize) Storage.materializeOnce(out) else out
 
   /** Exact cosine verification of candidate (id_a, id_b) pairs — the shared
     * tail of every approximate candidate generator (LSH, IVF). Joins
@@ -159,16 +149,15 @@ object Similarity {
     */
   def trainIvfCentroids(df: DataFrame, idCol: String, embCol: String,
                         k: Int, lloydIters: Int, seed: Long,
-                        trainFraction: Double = 1.0): Seq[Seq[Double]] = {
+                        trainFraction: Double = 1.0): Seq[Seq[Double]] = Storage.scoped { s =>
     val sampled = if (trainFraction < 1.0) df.sample(trainFraction, seed) else df
-    // persist: init runs k TakeOrdered actions and each Lloyd iteration
+    // cached: init runs k TakeOrdered actions and each Lloyd iteration
     // one aggregation — without caching, every action re-scans (and with
     // trainFraction < 1, RE-SAMPLES) the upstream source
-    val base = sampled
+    val base = s.cache(sampled
       .select(col(idCol).as("id"), col(embCol).cast("array<double>").as("emb"),
         l2NormSq(col(embCol)).as("nsq"))
-      .filter(col("nsq") > 0)
-      .persist()
+      .filter(col("nsq") > 0))
 
     def normalized(v: Array[Double]): Array[Double] = {
       val n = math.sqrt(v.map(x => x * x).sum)
@@ -288,7 +277,6 @@ object Similarity {
         if (seen(c) && m.exists(_ != 0.0)) m.toSeq else old
       }
     }
-    base.unpersist()
     cents
   }
 
@@ -375,13 +363,12 @@ object Similarity {
                       k: Int, probes: Int, lloydIters: Int, seed: Long,
                       simThreshold: Double,
                       trainFraction: Double = 1.0,
-                      materialize: Boolean = true): DataFrame = {
+                      materialize: Boolean = true): DataFrame = Storage.scoped { s =>
     val cents = trainIvfCentroids(df, idCol, embCol, k, lloydIters, seed, trainFraction)
-    // persist — base feeds the cell self-join and both verify joins (see
-    // lshNearDupPairs); released before return by materializeAndRelease
-    val base = df.select(col(idCol).as("id"), col(embCol).as("emb"),
-      l2NormSq(col(embCol)).as("nsq"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // cached — base feeds the cell self-join and both verify joins (see
+    // lshNearDupPairs)
+    val base = s.cache(df.select(col(idCol).as("id"), col(embCol).as("emb"),
+      l2NormSq(col(embCol)).as("nsq")))
     val cells = base.select(col("id"),
       explode(ivfAssign(col("emb"), cents, probes)).as("cell"))
     val pairs = cells.toDF("id_a", "cell")
@@ -389,9 +376,8 @@ object Similarity {
         col("cell") === col("cell_b") && col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b"))
       .distinct()
-    materializeAndRelease(
-      verifyPairs(pairs, base.select(col("id"), col("emb"), col("nsq")), simThreshold),
-      base, materialize)
+    output(verifyPairs(pairs, base.select(col("id"), col("emb"), col("nsq")),
+      simThreshold), materialize)
   }
 
   /** Incremental embedding near-dup detection: a NEW batch of vectors
@@ -422,10 +408,9 @@ object Similarity {
                                idCol: String, embCol: String,
                                centroids: Seq[Seq[Double]], probes: Int,
                                simThreshold: Double,
-                               materialize: Boolean = true): DataFrame = {
-    val batchSides = batch.select(col(idCol).as("batch_id"),
-        col(embCol).as("emb_a"), l2NormSq(col(embCol)).as("nsq_a"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+                               materialize: Boolean = true): DataFrame = Storage.scoped { s =>
+    val batchSides = s.cache(batch.select(col(idCol).as("batch_id"),
+        col(embCol).as("emb_a"), l2NormSq(col(embCol)).as("nsq_a")))
     val batchCells = batchSides.select(col("batch_id"),
       explode(ivfAssign(col("emb_a"), centroids, probes)).as("cell"))
     // k-bounded driver collect (<= min(|batch|·probes, k) cell ids) — the
@@ -449,7 +434,7 @@ object Similarity {
       .filter(col("sim_q") >= simThreshold)
       .select(col("batch_id"), col("corpus_id"),
         col("sim_q").cast("double").as("sim"))
-    materializeAndRelease(joined, batchSides, materialize)
+    output(joined, materialize)
   }
 
   /** The IVF candidate set BEFORE exact verification — the deterministic
@@ -609,15 +594,14 @@ object Similarity {
                k: Int, probes: Int, lloydIters: Int, seed: Long,
                tau: Double, keepBy: String = "id",
                trainFraction: Double = 1.0,
-               materialize: Boolean = true): DataFrame = {
+               materialize: Boolean = true): DataFrame = Storage.scoped { s =>
     require(keepBy == "id" || keepBy == "centroid",
       s"keepBy must be 'id' or 'centroid', got '$keepBy'")
     val cents = trainIvfCentroids(df, idCol, embCol, k, lloydIters, seed,
       trainFraction)
-    // persisted: feeds the assignment self-join and both verify joins
-    val base = df.select(col(idCol).as("id"), col(embCol).as("emb"),
-        l2NormSq(col(embCol)).as("nsq"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // cached: feeds the assignment self-join and both verify joins
+    val base = s.cache(df.select(col(idCol).as("id"), col(embCol).as("emb"),
+        l2NormSq(col(embCol)).as("nsq")))
     // cent_sim = cosine to the PRIMARY centroid == max over cells (the
     // assignment is the argmax). Zero-norm rows have no cosine (NULL
     // cent_sim, guarded — ANSI mode makes a bare /0 an error, not NULL)
@@ -650,11 +634,9 @@ object Similarity {
         .select(col("id"), col("emb"), col("nsq")), tau)
       .select(col("id_b").as("id")).distinct()
       .withColumn("__rm", lit(true))
-    materializeAndRelease(
-      assigned.join(removed, Seq("id"), "left")
+    output(assigned.join(removed, Seq("id"), "left")
         .select(col("id"), col("cell"), col("cent_sim"),
-          coalesce(!col("__rm"), lit(true)).as("kept")),
-      base, materialize)
+          coalesce(!col("__rm"), lit(true)).as("kept")), materialize)
   }
 
   /** [[semDedup]] with PER-CELL LOCAL verification — the shuffle-feasible
@@ -707,15 +689,14 @@ object Similarity {
                     trainFraction: Double = 1.0,
                     materialize: Boolean = true,
                     chunks: Int = 1,
-                    maxCellRows: Long = 0L): DataFrame = {
+                    maxCellRows: Long = 0L): DataFrame = Storage.scoped { s =>
     require(keepBy == "id" || keepBy == "centroid",
       s"keepBy must be 'id' or 'centroid', got '$keepBy'")
     require(chunks >= 1, s"chunks must be >= 1, got $chunks")
     val cents = trainIvfCentroids(df, idCol, embCol, k, lloydIters, seed,
       trainFraction)
-    val base = df.select(col(idCol).as("id"), col(embCol).as("emb"),
-        l2NormSq(col(embCol)).as("nsq"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val base = s.cache(df.select(col(idCol).as("id"), col(embCol).as("emb"),
+        l2NormSq(col(embCol)).as("nsq")))
     val cos = cents.map(c => dotProduct(col("emb"), typedLit(c)) / sqrt(col("nsq")))
     val centSim = when(col("nsq") > 0,
       round(if (cos.size == 1) cos.head else greatest(cos: _*), 6))
@@ -743,7 +724,6 @@ object Similarity {
         .filter(col("n") > maxCellRows)
         .orderBy(col("n").desc).limit(1).collect()
       if (hot.nonEmpty) {
-        base.unpersist()
         throw new IllegalStateException(
           s"semDedupLocal: cell ${hot.head.getInt(0)} holds " +
           s"${hot.head.getLong(1)} members (> maxCellRows=$maxCellRows). " +
@@ -785,11 +765,9 @@ object Similarity {
     val removed = removedRows
       .select(col("r.id").as("id")).distinct()
       .withColumn("__rm", lit(true))
-    materializeAndRelease(
-      assigned.join(removed, Seq("id"), "left")
+    output(assigned.join(removed, Seq("id"), "left")
         .select(col("id"), col("cell"), col("cent_sim"),
-          coalesce(!col("__rm"), lit(true)).as("kept")),
-      base, materialize)
+          coalesce(!col("__rm"), lit(true)).as("kept")), materialize)
   }
 
   /** Incremental SemDeDup: a NEW batch of vectors deduped against the
@@ -825,12 +803,11 @@ object Similarity {
                       idCol: String, embCol: String,
                       centroids: Seq[Seq[Double]], probes: Int,
                       tau: Double, keepBy: String = "id",
-                      materialize: Boolean = true): DataFrame = {
+                      materialize: Boolean = true): DataFrame = Storage.scoped { s =>
     require(keepBy == "id" || keepBy == "centroid",
       s"keepBy must be 'id' or 'centroid', got '$keepBy'")
-    val batchSides = batch.select(col(idCol).as("id"), col(embCol).as("emb"),
-        l2NormSq(col(embCol)).as("nsq"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val batchSides = s.cache(batch.select(col(idCol).as("id"), col(embCol).as("emb"),
+        l2NormSq(col(embCol)).as("nsq")))
     val cos = centroids.map(c =>
       dotProduct(col("emb"), typedLit(c)) / sqrt(col("nsq")))
     val centSim = when(col("nsq") > 0,
@@ -873,10 +850,8 @@ object Similarity {
       .select(col("id_b").as("id")).distinct()
     val removed = crossRemoved.unionByName(intraRemoved).distinct()
       .withColumn("__rm", lit(true))
-    materializeAndRelease(
-      assigned.join(removed, Seq("id"), "left")
+    output(assigned.join(removed, Seq("id"), "left")
         .select(col("id"), col("cell"), col("cent_sim"),
-          coalesce(!col("__rm"), lit(true)).as("kept")),
-      batchSides, materialize)
+          coalesce(!col("__rm"), lit(true)).as("kept")), materialize)
   }
 }

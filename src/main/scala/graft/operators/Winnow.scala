@@ -62,25 +62,6 @@ object Winnow {
     * from the corpus's own df distribution (the safe-by-default route). */
   val AutoMaxDf: Long = -1L
 
-  /** Eagerly materialize a multiply-consumed corpus-scale frame — the
-    * fingerprint frame and df census behind [[overlapPairs]] (BOTH routes
-    * since round 13) and graft.catalog.Layout.dfCapped's index-build
-    * twins — on the engine [[graft.Storage.CheckpointStorageConf]] tier
-    * (memdisk | disk | reliable). The lineage-free plan shape — and
-    * therefore the pair set — is identical under every tier
-    * (ScaleSpec-gated). Runs Spark jobs NOW (see the [[overlapPairs]]
-    * eager-execution note).
-    *
-    * The winnow family DEFAULT is `disk` (round 13): SCALE.md measured
-    * the disk tier ~2× FASTER than memdisk at the 100× entropy tier
-    * while running at the default 8 GB heap, and the r12 graded bench
-    * showed the disk-checkpointed auto route immune to the full-suite
-    * block-store pressure that inflated the then-lazy uncapped siblings
-    * 3–6×. Zero heap residency is the right default for frames that
-    * scale with corpus characters. */
-  private[graft] def materializeOnce(df: DataFrame): DataFrame =
-    graft.Storage.materializeOnce(df, familyDefault = "disk")
-
   /** [[overlapPairs]] broadcasts a relation (the capped census attach,
     * the pair-join build side, the per-doc counts) only when its
     * MEASURED row bound is at or below this — 2M rows ≈ 64 MB
@@ -120,13 +101,14 @@ object Winnow {
       .select(col(idCol), col("__s.pos").as("pos"), col("__s.fp").as("fp"))
     // materialize = true is the OPERATIONAL form for direct consumers
     // (round 13, VERDICT r12 next #1): the selected relation lands on
-    // the engine storage tier (family default `disk`) and the
+    // the engine storage tier (winnow family default `disk`) and the
     // caller's downstream (sort, export, join) reads the blocks.
     // Composing callers ([[fingerprintSets]] → [[overlapPairs]], the
     // index builders) keep the default: they checkpoint their own
     // narrower distinct-set projection instead of this wider
     // (id, pos, fp) one.
-    if (materialize) materializeOnce(selected) else selected
+    if (materialize) graft.Storage.materializeOnce(selected, "disk")
+    else selected
   }
 
   /** The shared normalization prefix: (id, __t) with __t the lowercased,
@@ -288,7 +270,8 @@ object Winnow {
                    maxDf: Long = AutoMaxDf,
                    autoDfQuantile: Double = 0.999,
                    autoDfFloor: Long = 64L,
-                   unicodeForm: Option[String] = None): DataFrame = {
+                   unicodeForm: Option[String] = None): DataFrame =
+    graft.Storage.scoped { st =>
     require(minShared >= 1, s"minShared must be >= 1, got $minShared")
     require(maxDf == AutoMaxDf || maxDf >= 1,
       s"maxDf must be >= 1 or AutoMaxDf, got $maxDf")
@@ -325,23 +308,18 @@ object Winnow {
     // still trailed baseline after spreading the group blocks. The
     // broadcast-hash pair join over by-id fps blocks streams the same
     // 59.6M pairs allocation-free and df-ways distributed.
-    val fps = materializeOnce(
+    // the scope releases fps and census if anything below throws; on
+    // success the returned plan reads both, so they leave with it
+    val fps = st.materialize(
       fingerprintSets(docs, idCol, textCol, k, w, unicodeForm)
-        .select(col(idCol).as("id"), col("fp")))
-    // error-path hygiene (r14, the chaseParents discipline): the eager
-    // stats action below runs while fps holds checkpointed blocks the
-    // RETURNED plan needs on success — a throw before the routed plan
-    // exists must release them instead of leaving corpus-scale blocks
-    // for ContextCleaner-on-GC
-    try {
+        .select(col(idCol).as("id"), col("fp")), "disk")
     // census stays CHECKPOINTED (census ≤ fps rows): its subtree feeds
     // the stats reduction plus every attach site (the capped filter on
     // both pair-join sides and the counts build), and the initial plan
     // computes it per site — four fps re-reads + four census exchanges
     // without the checkpoint (r15 probe)
-    val census = materializeOnce(
-      fps.groupBy(col("fp")).agg(count(lit(1)).as("df")))
-    try {
+    val census = st.materialize(
+      fps.groupBy(col("fp")).agg(count(lit(1)).as("df")), "disk")
     // MEASURED routing (the Curation vocab-gate discipline): a
     // localCheckpoint erases Catalyst's size estimates (an ExistingRDD
     // scan reads as unbounded) and winnowing's 2/(w+1) density is an
@@ -392,15 +370,7 @@ object Winnow {
         col("n_a"), col("n_b"),
         round(col("shared_fps") / least(col("n_a"), col("n_b")), 4)
           .as("overlap"))
-    } catch { case t: Throwable =>
-      org.apache.spark.sql.graftglue.Glue.releaseLocalCheckpoint(census)
-      throw t
     }
-    } catch { case t: Throwable =>
-      org.apache.spark.sql.graftglue.Glue.releaseLocalCheckpoint(fps)
-      throw t
-    }
-  }
 
   /** Incremental overlap detection: a NEW batch against a standing
     * corpus fingerprint relation — `corpusFps`, a 2-column

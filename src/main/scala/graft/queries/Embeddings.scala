@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.Storage.materializeOnce
 import graft.Tables
 import graft.functions.cosineSim
 import graft.operators.Similarity
@@ -99,14 +100,12 @@ object Embeddings extends QueryPack {
       // the banding pipeline run once, not twice. ContextCleaner-managed —
       // blocks are released when the frames are GC'd, unlike persist whose
       // CacheManager entries outlive the call until clearCache().
-      val brute = queries("dedup_embedding_cosine")(s, dir)
-        .select(col("id_a"), col("id_b"))
-        .localCheckpoint()
-      val lsh = Similarity.lshNearDupPairs(Tables(s, dir, "embeddings"),
+      val brute = materializeOnce(queries("dedup_embedding_cosine")(s, dir)
+        .select(col("id_a"), col("id_b")))
+      val lsh = materializeOnce(Similarity.lshNearDupPairs(Tables(s, dir, "embeddings"),
           "vec_id", "embedding",
           dim = 64, rowsPerBand = 4, bands = 24, seed = 42, simThreshold = 0.3)
-        .select(col("id_a"), col("id_b"))
-        .localCheckpoint()
+        .select(col("id_a"), col("id_b")))
       brute.agg(count(lit(1)).as("n_true"))
         .crossJoin(lsh.except(brute).agg(count(lit(1)).as("n_extra")))
         .crossJoin(lsh.agg(count(lit(1)).as("n_found")))
@@ -179,23 +178,22 @@ object Embeddings extends QueryPack {
     //    [[graft.catalog.Layout.componentsResolve]].
     "dedup_components_incr" -> ((s, dir) => {
       import graft.catalog.Layout
-      val pairs = queries("dedup_embedding_cosine")(s, dir)
-        .select(col("id_a"), col("id_b"))
-        .localCheckpoint()
       val table = "cmp_incr_gate"
-      Layout.dropComponentsIndex(s, table)
-      def slice(i: Int) = pairs.filter(col("id_a") % 3 === i)
-      Layout.componentsIndex(s, slice(0), "id_a", "id_b", buckets = 4,
-        tableName = table)
-      Layout.componentsIndexAppend(s, slice(1), "id_a", "id_b", buckets = 4,
-        tableName = table, batchTag = Some("gate_b1"))
-      Layout.componentsIndexCompact(s, buckets = 4, tableName = table)
-      Layout.componentsIndexAppend(s, slice(2), "id_a", "id_b", buckets = 4,
-        tableName = table, batchTag = Some("gate_b2"))
-      // the folds are complete and the result below reads only the
-      // standing tables — release the pair checkpoint deterministically
-      // (its blocks otherwise linger in the block store until GC)
-      org.apache.spark.sql.graftglue.Glue.releaseLocalCheckpoint(pairs)
+      // the pair checkpoint is released once the folds are complete: the
+      // result below reads only the standing tables
+      graft.Storage.scoped { st =>
+        val pairs = st.materialize(queries("dedup_embedding_cosine")(s, dir)
+          .select(col("id_a"), col("id_b")))
+        Layout.dropComponentsIndex(s, table)
+        def slice(i: Int) = pairs.filter(col("id_a") % 3 === i)
+        Layout.componentsIndex(s, slice(0), "id_a", "id_b", buckets = 4,
+          tableName = table)
+        Layout.componentsIndexAppend(s, slice(1), "id_a", "id_b", buckets = 4,
+          tableName = table, batchTag = Some("gate_b1"))
+        Layout.componentsIndexCompact(s, buckets = 4, tableName = table)
+        Layout.componentsIndexAppend(s, slice(2), "id_a", "id_b", buckets = 4,
+          tableName = table, batchTag = Some("gate_b2"))
+      }
       val comps = Layout.componentsResolve(s, table)
       Tables(s, dir, "embeddings").select(col("vec_id"))
         .join(comps, col("vec_id") === col("id"), "left")
@@ -217,14 +215,12 @@ object Embeddings extends QueryPack {
     //    except, recall >= 0.9, nonempty.
     "sim_ann_ivf" -> ((s, dir) => {
       // materialize both sides once — see sim_ann_lsh
-      val brute = queries("dedup_embedding_cosine")(s, dir)
-        .select(col("id_a"), col("id_b"))
-        .localCheckpoint()
-      val ivf = Similarity.ivfNearDupPairs(Tables(s, dir, "embeddings"),
+      val brute = materializeOnce(queries("dedup_embedding_cosine")(s, dir)
+        .select(col("id_a"), col("id_b")))
+      val ivf = materializeOnce(Similarity.ivfNearDupPairs(Tables(s, dir, "embeddings"),
           "vec_id", "embedding",
           k = 8, probes = 3, lloydIters = 3, seed = 42, simThreshold = 0.3)
-        .select(col("id_a"), col("id_b"))
-        .localCheckpoint()
+        .select(col("id_a"), col("id_b")))
       brute.agg(count(lit(1)).as("n_true"))
         .crossJoin(ivf.except(brute).agg(count(lit(1)).as("n_extra")))
         .crossJoin(ivf.agg(count(lit(1)).as("n_found")))
@@ -260,13 +256,13 @@ object Embeddings extends QueryPack {
     //    >= 0.9 (2-probe boundary replication recovers cell-split
     //    neighborhoods), nonempty.
     "dedup_semdedup" -> ((s, dir) => {
-      val globalRemoved = queries("dedup_embedding_cosine")(s, dir)
-        .select(col("id_b")).distinct().localCheckpoint()
-      val removed = Similarity.semDedup(Tables(s, dir, "embeddings"),
+      val globalRemoved = materializeOnce(queries("dedup_embedding_cosine")(s, dir)
+        .select(col("id_b")).distinct())
+      val removed = materializeOnce(Similarity.semDedup(Tables(s, dir, "embeddings"),
           "vec_id", "embedding",
           k = 8, probes = 3, lloydIters = 3, seed = 42, tau = 0.3)
         .filter(!col("kept"))
-        .select(col("id").as("id_b")).localCheckpoint()
+        .select(col("id").as("id_b")))
       globalRemoved.agg(count(lit(1)).as("n_true"))
         .crossJoin(removed.except(globalRemoved).agg(count(lit(1)).as("n_extra")))
         .crossJoin(removed.agg(count(lit(1)).as("n_removed")))
@@ -282,13 +278,13 @@ object Embeddings extends QueryPack {
     //    shuffle-feasible in-group pairwise pass instead of the
     //    candidate join. [[graft.operators.Similarity.semDedupLocal]].
     "dedup_semdedup_local" -> ((s, dir) => {
-      val globalRemoved = queries("dedup_embedding_cosine")(s, dir)
-        .select(col("id_b")).distinct().localCheckpoint()
-      val removed = Similarity.semDedupLocal(Tables(s, dir, "embeddings"),
+      val globalRemoved = materializeOnce(queries("dedup_embedding_cosine")(s, dir)
+        .select(col("id_b")).distinct())
+      val removed = materializeOnce(Similarity.semDedupLocal(Tables(s, dir, "embeddings"),
           "vec_id", "embedding",
           k = 8, probes = 3, lloydIters = 3, seed = 42, tau = 0.3)
         .filter(!col("kept"))
-        .select(col("id").as("id_b")).localCheckpoint()
+        .select(col("id").as("id_b")))
       globalRemoved.agg(count(lit(1)).as("n_true"))
         .crossJoin(removed.except(globalRemoved).agg(count(lit(1)).as("n_extra")))
         .crossJoin(removed.agg(count(lit(1)).as("n_removed")))
@@ -307,14 +303,14 @@ object Embeddings extends QueryPack {
     //    against DuckDB's exact global rule.
     //    [[graft.operators.Similarity.semDedupLocal]] (chunks = 3).
     "dedup_semdedup_chunked" -> ((s, dir) => {
-      val globalRemoved = queries("dedup_embedding_cosine")(s, dir)
-        .select(col("id_b")).distinct().localCheckpoint()
-      val removed = Similarity.semDedupLocal(Tables(s, dir, "embeddings"),
+      val globalRemoved = materializeOnce(queries("dedup_embedding_cosine")(s, dir)
+        .select(col("id_b")).distinct())
+      val removed = materializeOnce(Similarity.semDedupLocal(Tables(s, dir, "embeddings"),
           "vec_id", "embedding",
           k = 8, probes = 3, lloydIters = 3, seed = 42, tau = 0.3,
           chunks = 3)
         .filter(!col("kept"))
-        .select(col("id").as("id_b")).localCheckpoint()
+        .select(col("id").as("id_b")))
       globalRemoved.agg(count(lit(1)).as("n_true"))
         .crossJoin(removed.except(globalRemoved).agg(count(lit(1)).as("n_extra")))
         .crossJoin(removed.agg(count(lit(1)).as("n_removed")))
@@ -352,18 +348,18 @@ object Embeddings extends QueryPack {
       // gate's isotropic tau = 0.3 (the weak-pruning regime — a corpus
       // twin is caught iff its top-1 cell is among the batch vector's
       // probes; 3 of 8 measured 0.87, under the 0.9 contract)
-      val removed = Similarity.semDedupAgainst(batch, s.table(table),
+      val removed = materializeOnce(Similarity.semDedupAgainst(batch, s.table(table),
           "vec_id", "embedding", cents, probes = 5, tau = 0.3)
-        .filter(!col("kept")).select(col("id")).localCheckpoint()
+        .filter(!col("kept")).select(col("id")))
       // exact global-rule arm, same sequential-fold + decimal semantics
-      val globalRemoved = batch
+      val globalRemoved = materializeOnce(batch
         .select(col("vec_id").as("b_id"), col("embedding").as("emb_a"))
         .crossJoin(emb.select(col("vec_id").as("a_id"),
           col("embedding").as("emb_b")))
         .filter(col("a_id") % 10 =!= 0 || col("a_id") < col("b_id"))
         .filter(cosineSim(col("emb_a"), col("emb_b"))
           .cast(DecimalType(9, 4)) >= 0.3)
-        .select(col("b_id").as("id")).distinct().localCheckpoint()
+        .select(col("b_id").as("id")).distinct())
       globalRemoved.agg(count(lit(1)).as("n_true"))
         .crossJoin(removed.except(globalRemoved).agg(count(lit(1)).as("n_extra")))
         .crossJoin(removed.agg(count(lit(1)).as("n_removed")))
@@ -473,13 +469,12 @@ object Embeddings extends QueryPack {
         .select((col("vec_id") + 1000000L).as("batch_id"),
           col("vec_id").as("corpus_id"))
       // exact cross arm, same sequential-fold + decimal semantics
-      val exact = batch.toDF("batch_id", "emb_a")
+      val exact = materializeOnce(batch.toDF("batch_id", "emb_a")
         .crossJoin(emb.select(col("vec_id").as("corpus_id"),
           col("embedding").as("emb_b")))
         .filter(cosineSim(col("emb_a"), col("emb_b"))
           .cast(DecimalType(9, 4)) >= 0.8)
-        .select(col("batch_id"), col("corpus_id"))
-        .localCheckpoint()
+        .select(col("batch_id"), col("corpus_id")))
       exact.agg(count(lit(1)).as("n_exact_high"))
         .crossJoin(twins.except(got).agg(count(lit(1)).as("n_twin_missed")))
         .crossJoin(got.except(exact).agg(count(lit(1)).as("n_false")))

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
+import graft.Storage.materializeOnce
 import graft.Tables
 import graft.multimodal.Multimodal
 import graft.operators.Dedup
@@ -132,14 +133,12 @@ object MultimodalPack extends QueryPack {
       // ContextCleaner-managed — released when the frames are GC'd, so
       // repeated calls in a long session don't accumulate CacheManager
       // entries that only clearCache() reclaims.
-      val cand = Dedup.minHashNearDups(docs, "doc_id", "text",
+      val cand = materializeOnce(Dedup.minHashNearDups(docs, "doc_id", "text",
           shingleN = 2, numHashes = 128, bands = 32, estThreshold = 0.1)
-        .select(col("id_a"), col("id_b"))
-        .localCheckpoint()
-      val exactHigh = Dedup.jaccardPairs(docs, "doc_id", "text",
+        .select(col("id_a"), col("id_b")))
+      val exactHigh = materializeOnce(Dedup.jaccardPairs(docs, "doc_id", "text",
           shingleN = 2, threshold = 0.8)
-        .select(col("id_a"), col("id_b"))
-        .localCheckpoint()
+        .select(col("id_a"), col("id_b")))
       exactHigh.agg(count(lit(1)).as("n_exact_high"))
         .crossJoin(exactHigh.except(cand).agg(count(lit(1)).as("n_missed")))
         .crossJoin(cand.agg(count(lit(1)).as("n_cand")))
@@ -170,20 +169,18 @@ object MultimodalPack extends QueryPack {
       val batch = docs.filter(col("doc_id") % 3 === 0)
       // the "previously computed" index premise: signatures materialized
       // once (ContextCleaner-managed localCheckpoint, see dedup_minhash_lsh)
-      val index = Dedup.minHashSignatures(corpus, "doc_id", "text",
-          shingleN = 2, numHashes = 128)
-        .localCheckpoint()
-      val cand = Dedup.minHashNearDupsAgainst(batch, index, "doc_id", "text",
+      val index = materializeOnce(Dedup.minHashSignatures(corpus, "doc_id", "text",
+          shingleN = 2, numHashes = 128))
+      val cand = materializeOnce(Dedup.minHashNearDupsAgainst(batch, index,
+          "doc_id", "text",
           shingleN = 2, numHashes = 128, bands = 32, estThreshold = 0.1)
-        .select(col("batch_id"), col("corpus_id"))
-        .localCheckpoint()
-      val exactHigh = Dedup.jaccardPairs(docs, "doc_id", "text",
+        .select(col("batch_id"), col("corpus_id")))
+      val exactHigh = materializeOnce(Dedup.jaccardPairs(docs, "doc_id", "text",
           shingleN = 2, threshold = 0.8)
         .filter((col("id_a") % 3 === 0) =!= (col("id_b") % 3 === 0))
         .select(
           when(col("id_a") % 3 === 0, col("id_a")).otherwise(col("id_b")).as("batch_id"),
-          when(col("id_a") % 3 === 0, col("id_b")).otherwise(col("id_a")).as("corpus_id"))
-        .localCheckpoint()
+          when(col("id_a") % 3 === 0, col("id_b")).otherwise(col("id_a")).as("corpus_id")))
       exactHigh.agg(count(lit(1)).as("n_exact_high"))
         .crossJoin(exactHigh.except(cand).agg(count(lit(1)).as("n_missed")))
         .crossJoin(cand.agg(count(lit(1)).as("n_cand")))
@@ -211,18 +208,17 @@ object MultimodalPack extends QueryPack {
       val docs = Tables(s, dir, "documents")
       // materialize both pair sets once — each feeds two contract arms
       // (ContextCleaner-managed localCheckpoint, see dedup_minhash_lsh)
-      val banded = Dedup.simHashNearDups(docs, "doc_id", "text", maxDist = 3)
-        .select(col("id_a"), col("id_b"))
-        .localCheckpoint()
+      val banded = materializeOnce(
+        Dedup.simHashNearDups(docs, "doc_id", "text", maxDist = 3)
+          .select(col("id_a"), col("id_b")))
       val sh = Dedup.simHash(docs, "doc_id", "text")
       // barrier keeps the XOR/popcount above the join, after the id
       // compare halves the pairs (see graft.functions.evalBarrier)
-      val brute = sh.toDF("id_a", "sh_a")
+      val brute = materializeOnce(sh.toDF("id_a", "sh_a")
         .join(sh.toDF("id_b", "sh_b"), col("id_a") < col("id_b"))
         .filter(graft.functions.evalBarrier(
           bit_count(col("sh_a").bitwiseXOR(col("sh_b"))) <= 3))
-        .select(col("id_a"), col("id_b"))
-        .localCheckpoint()
+        .select(col("id_a"), col("id_b")))
       docs.agg(count(lit(1)).as("n_docs"))
         .crossJoin(brute.except(banded).agg(count(lit(1)).as("n_missing")))
         .crossJoin(banded.except(brute).agg(count(lit(1)).as("n_extra")))

@@ -3,8 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
-import org.apache.spark.storage.StorageLevel
 
+import graft.Storage.materializeOnce
 import graft.Tables
 import graft.functions.{tokens, wordShingles}
 import graft.operators.Dedup
@@ -388,7 +388,7 @@ object Text extends QueryPack {
     //    benchmark shingle set is bounded by the benchmark suite, not the
     //    corpus — but bounded-by-construction is still MEASURED before
     //    broadcasting (the same discipline as the vocab-gated term joins):
-    //    the persisted eval set is counted once, broadcast under the
+    //    the materialized eval set is counted once, broadcast under the
     //    MaxBroadcastVocab cap, shuffle-joined past it. Past broadcast
     //    scale entirely, text_decontaminate_bloom is the documented path
     //    (the sketch ships like a literal regardless of set size). The
@@ -399,8 +399,8 @@ object Text extends QueryPack {
       val sh = Tables(s, dir, "documents")
         .select(col("doc_id"),
           explode(wordShingles(tokens(col("text")), 3)).as("s"))
-      val evalSet = sh.filter(col("doc_id") % 50 === 0).select(col("s"))
-        .distinct().persist(StorageLevel.MEMORY_AND_DISK)
+      val evalSet = materializeOnce(
+        sh.filter(col("doc_id") % 50 === 0).select(col("s")).distinct())
       val evalJoin =
         if (evalSet.count() <= MaxBroadcastVocab) broadcast(evalSet) else evalSet
       sh.filter(col("doc_id") % 50 =!= 0)
@@ -413,7 +413,7 @@ object Text extends QueryPack {
     // -- decontamination at the scale past broadcast: when the eval-set
     //    shingle relation no longer fits a broadcast join as raw strings,
     //    its Bloom image (~1.2 B/item at 1% fpp) still ships like a
-    //    literal. Shape: build the sketch from the (persisted, counted)
+    //    literal. Shape: build the sketch from the (materialized, counted)
     //    eval set, prefilter the training scan row-locally with the
     //    codegen'd might_contain — no shuffle, false is definitive — then
     //    confirm the survivors with an exact shuffle semi-join keyed on
@@ -425,8 +425,8 @@ object Text extends QueryPack {
       val sh = Tables(s, dir, "documents")
         .select(col("doc_id"),
           explode(wordShingles(tokens(col("text")), 3)).as("s"))
-      val evalSet = sh.filter(col("doc_id") % 50 === 0).select(col("s"))
-        .distinct().persist(StorageLevel.MEMORY_AND_DISK)
+      val evalSet = materializeOnce(
+        sh.filter(col("doc_id") % 50 === 0).select(col("s")).distinct())
       // measured sizing, same discipline as the vocab-gated broadcasts:
       // the count is one pass over the (small) aggregate we need anyway
       val nEval = math.max(evalSet.count(), 1L)
@@ -1074,20 +1074,18 @@ object Text extends QueryPack {
     //    signatures never estimate 1.0 across the two encodings.
     "dedup_minhash_nfc" -> ((s, dir) => {
       val corpus = nfcTwinCorpus(Tables(s, dir, "documents"))
-      val cand = Dedup.minHashNearDups(corpus, "doc_id", "text",
+      val cand = materializeOnce(Dedup.minHashNearDups(corpus, "doc_id", "text",
           shingleN = 2, numHashes = 32, bands = 8, estThreshold = 0.9,
           unicodeForm = Some("NFC"))
         .filter(col("est_jaccard") === 1.0)
-        .select(col("id_a"), col("id_b"))
-        .localCheckpoint()
+        .select(col("id_a"), col("id_b")))
       val normed = corpus.select(col("doc_id"),
         graft.functions.unicodeNormalize(col("text"), "NFC").as("nt"),
         col("text"))
-      val twins = normed.toDF("id_a", "nt", "ta")
+      val twins = materializeOnce(normed.toDF("id_a", "nt", "ta")
         .join(normed.toDF("id_b", "ntb", "tb"),
           col("nt") === col("ntb") && col("id_a") < col("id_b"))
-        .select(col("id_a"), col("id_b"), (col("ta") === col("tb")).as("byte_eq"))
-        .localCheckpoint()
+        .select(col("id_a"), col("id_b"), (col("ta") === col("tb")).as("byte_eq")))
       twins.agg(count(lit(1)).as("n_twins"),
           coalesce(sum(when(col("byte_eq"), 1L).otherwise(0L)), lit(0L))
             .as("n_byte_eq"))

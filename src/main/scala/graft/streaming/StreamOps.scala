@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 
+import graft.Storage
+
 /** Streaming transforms the reference's generated pipelines rely on,
   * expressed Spark-first:
   *
@@ -70,16 +72,16 @@ object StreamOps {
       val wm = watermarkMs
       val tsMs = unix_millis(col(tsCol))
       // three actions consume this batch (late sink, on-time sink, max
-      // agg) — persist so the micro-batch source is read once, not thrice
-      batch.persist()
-      try {
+      // agg) — cached so the micro-batch source is read once, not thrice
+      Storage.scoped { st =>
+        st.cache(batch)
         late(batch.filter(tsMs < wm || tsMs.isNull), id)
         onTime(batch.filter(tsMs >= wm), id)
         val maxRow = batch.agg(max(unix_millis(col(tsCol)))).collect().head
         if (!maxRow.isNullAt(0)) {
           watermarkMs = math.max(watermarkMs, maxRow.getLong(0) - delayMs)
         }
-      } finally batch.unpersist()
+      }
     }
   }
 
@@ -260,9 +262,8 @@ object StreamOps {
       graft.catalog.Layout.minhashIndexAppend(spark, batch, idCol, textCol,
         shingleN, numHashes, bands, buckets, tableName,
         batchTag = Some(tag), unicodeForm = unicodeForm)
-    } else {
-      batch.persist()
-      try {
+    } else Storage.scoped { st =>
+        st.cache(batch)
         // dedup BEFORE append: a batch must not collide with itself here
         // (run minHashNearDups on the batch for intra-batch pairs)
         val pairs = graft.operators.Dedup.minHashNearDupsAgainstIndex(
@@ -277,7 +278,6 @@ object StreamOps {
         graft.catalog.Layout.minhashIndexAppend(spark, batch, idCol, textCol,
           shingleN, numHashes, bands, buckets, tableName,
           batchTag = Some(tag), unicodeForm = unicodeForm)
-      } finally batch.unpersist()
     }
     // retention: batch N-1's snapshot and markers can never be consulted
     // again once this batch runs (micro-batch commits are sequential)
@@ -517,9 +517,12 @@ object StreamOps {
         Layout.minhashIndexAppend(spark, kept, idCol, textCol,
           shingleN, numHashes, bands, buckets, tableName,
           batchTag = Some(tag), unicodeForm = unicodeForm)
-      } else {
-      val q0 = qualityFilter(batch).select(batch.columns.map(col): _*).persist()
-      try {
+      } else Storage.scoped { st =>
+        // every cache and checkpoint of this micro-batch is released when
+        // the batch body exits — after onBatch and the index folds that
+        // read them
+        val q0 = st.cache(
+          qualityFilter(batch).select(batch.columns.map(col): _*))
         // sub-document stages: strip already-admitted paragraphs, then
         // already-admitted spans; drop docs with nothing left, continue
         // with the cleaned text. Checkpointed: the plans read the
@@ -527,7 +530,7 @@ object StreamOps {
         val q1 = paraIndexTable match {
           case None => q0
           case Some(pt) =>
-            q0.drop(textCol)
+            st.materialize(q0.drop(textCol)
               .join(graft.operators.Dedup.dedupParagraphsAgainst(
                   q0, idCol, textCol, spark.table(s"${pt}_pkeys"), paraSep,
                   unicodeForm)
@@ -540,21 +543,19 @@ object StreamOps {
                   "\\s+", " "))) > 0)
                 .select(col(idCol), col("clean_text").as(textCol)),
                 Seq(idCol))
-              .select(q0.columns.map(col): _*)
-              .localCheckpoint(true)
+              .select(q0.columns.map(col): _*))
         }
         val q = spanCensusTable match {
           case None => q1
-          case Some(st) =>
-            q1.drop(textCol)
+          case Some(census) =>
+            st.materialize(q1.drop(textCol)
               .join(graft.operators.Dedup.removeRepeatedSpansAgainst(
-                  q1, idCol, textCol, spark.table(s"${st}_grams"), spanGramLen,
+                  q1, idCol, textCol, spark.table(s"${census}_grams"), spanGramLen,
                   unicodeForm)
                 .filter(length(col("clean_text")) > 0)
                 .select(col(idCol), col("clean_text").as(textCol)),
                 Seq(idCol))
-              .select(q1.columns.map(col): _*)
-              .localCheckpoint(true)
+              .select(q1.columns.map(col): _*))
         }
         // winnow containment stage: reject docs that are mostly
         // substrings of already-admitted content (the overlap detector
@@ -562,13 +563,12 @@ object StreamOps {
         // has no whole-doc near-dup for LSH to catch). Checkpointed:
         // reads the _wfps table appended below.
         val winnowHits = winnowIndexTable.map { wt =>
-          graft.operators.Winnow.overlapPairsAgainst(
+          st.materialize(graft.operators.Winnow.overlapPairsAgainst(
               q, idCol, textCol, spark.table(s"${wt}_wfps"),
               winnowK, winnowW, winnowMinShared, unicodeForm)
             .filter(col("overlap") >= winnowMinOverlap)
             .select(col("batch_id"), col("corpus_id"),
-              col("overlap").as("est_jaccard"))
-            .localCheckpoint(true)
+              col("overlap").as("est_jaccard")))
         }
         val q2 = winnowHits match {
           case None => q
@@ -576,26 +576,24 @@ object StreamOps {
             hits.select(col("batch_id").as(idCol)).distinct(), Seq(idCol),
             "left_anti")
         }
-        val idxPairs = graft.operators.Dedup.minHashNearDupsAgainstIndex(
+        val idxPairs = st.materialize(
+          graft.operators.Dedup.minHashNearDupsAgainstIndex(
             q2, spark, tableName, idCol, textCol, shingleN, numHashes,
-            bands, estThreshold, unicodeForm = unicodeForm)
-          .localCheckpoint(true)
+            bands, estThreshold, unicodeForm = unicodeForm))
         val idxSurvivors = q2.join(
           idxPairs.select(col("batch_id").as(idCol)).distinct(), Seq(idCol),
           "left_anti")
-        val intraPairs = graft.operators.Dedup.minHashNearDups(
+        val intraPairs = st.materialize(graft.operators.Dedup.minHashNearDups(
             idxSurvivors, idCol, textCol, shingleN, numHashes, bands,
-            estThreshold, unicodeForm)
-          .localCheckpoint(true)
+            estThreshold, unicodeForm))
         val pairs = idxPairs.unionByName(
             intraPairs.select(col("id_b").as("batch_id"),
               col("id_a").as("corpus_id"), col("est_jaccard")))
           .unionByName(winnowHits.getOrElse(
             idxPairs.limit(0)))
-        val kept = idxSurvivors.join(
+        val kept = st.materialize(idxSurvivors.join(
             intraPairs.select(col("id_b").as(idCol)).distinct(), Seq(idCol),
-            "left_anti")
-          .localCheckpoint(true)
+            "left_anti"))
         // snapshot the decided output BEFORE any fold: once the folds
         // run, live probes can no longer reproduce this batch's answer
         Layout.batchOutputWrite(spark, tableName, tag,
@@ -620,7 +618,6 @@ object StreamOps {
         graft.catalog.Layout.minhashIndexAppend(spark, kept, idCol, textCol,
           shingleN, numHashes, bands, buckets, tableName,
           batchTag = Some(tag), unicodeForm = unicodeForm)
-      } finally q0.unpersist()
       }
       // retention (ADVICE r10 low): earlier batches' snapshots and
       // ledger markers are dead once this batch runs — without pruning

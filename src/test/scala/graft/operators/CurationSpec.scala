@@ -62,6 +62,19 @@ class CurationSpec extends SparkSpec {
       3L -> "keep me three"))
   }
 
+  test("repeated unigramLogProb calls on different inputs add no CacheManager entry") {
+    // the vocab-gated route materializes its term relation instead of
+    // persisting it: a returned lazy plan over a persist left one entry
+    // per call that only clearCache() reclaimed
+    val entries = graft.StorageSpec.cachedEntries(spark)
+    val a = Curation.unigramLogProb(docs((1L, "a b a"), (2L, "b c")), "id",
+      "text", maxBroadcastVocab = 1000L).collect()
+    val b = Curation.unigramLogProb(docs((1L, "x y"), (2L, "y y z")), "id",
+      "text", maxBroadcastVocab = 1000L).collect()
+    assert(a.length == 2 && b.length == 2)
+    assert(graft.StorageSpec.cachedEntries(spark) == entries)
+  }
+
   test("pipeline composes exactly the chain of its stages and appends accepted docs to the index") {
     import graft.{PipelineHarness, Tables}
     val sf = "/root/testdata/sf0.001"
