@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.operators.{Dedup, Similarity}
@@ -24,7 +26,7 @@ import graft.operators.{Dedup, Similarity}
   *    its timed reps (round-14 fix: the per-query codegen-JIT ramp —
   *    fresh-session series 16.0 → 2.6 → 1.8 → 1.6 s on the bitmap-jaccard
   *    row — landed inside 3-rep windows as the graded spike cluster;
-  *    `SPARK_GRAFT_BENCH_WARMUP`, stamped into the JSON).
+  *    stamped into the JSON as `"warmup":1`).
   */
 object Bench {
 
@@ -298,14 +300,14 @@ object Bench {
     // warmup: touch every table (scan + codegen paths), then one query
     Tables.names.foreach { t =>
       try Tables(spark, sfDir, t).write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () }
+      catch { case NonFatal(_) => () }
     }
     try SparkEntry.queries("q03_tpch_q1_agg")(spark, sfDir)
       .write.format("noop").mode("overwrite").save()
-    catch { case _: Throwable => () }
+    catch { case NonFatal(_) => () }
 
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-    // untimed warmup execution(s) per query BEFORE the timed reps (r14,
+    // one untimed warmup execution per query BEFORE the timed reps (r14,
     // the JMH warmup-iteration discipline): a query's first execution in
     // a session pays codegen JIT + first parquet touch — measured
     // fresh-session series on dedup_ngram_jaccard: 16.0 → 2.6 → 1.8 →
@@ -314,22 +316,19 @@ object Bench {
     // sub-5-s spike cluster, BASELINE.md "rep-noise floor"). One warmup
     // exec moves every timed rep onto the warm side; spreads measure
     // run-to-run variance of the CODE, not of the JIT. Stamped into the
-    // JSON ("warmup") for cross-round comparability; 0 disables.
-    val warmup = sys.env.getOrElse("SPARK_GRAFT_BENCH_WARMUP", "1").toInt
+    // JSON ("warmup":1) for cross-round comparability.
     def time(entries: Seq[(String, (SparkSession, String) => DataFrame)]) =
       entries.sortBy(_._1).map { case (name, fn) =>
-        (1 to warmup).foreach { _ =>
-          try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          catch { case _: Throwable => () }
-          // same inter-rep hygiene as the timed loop, so rep 1 starts
-          // from the identical clean-block-store state
-          spark.catalog.clearCache()
-          System.gc(); Thread.sleep(250); System.gc()
-        }
+        try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+        catch { case NonFatal(_) => () }
+        // same inter-rep hygiene as the timed loop, so rep 1 starts
+        // from the identical clean-block-store state
+        spark.catalog.clearCache()
+        System.gc(); Thread.sleep(250); System.gc()
         val times = (1 to reps).map { _ =>
           val t0 = System.nanoTime()
           try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          catch { case _: Throwable => () }
+          catch { case NonFatal(_) => () }
           val dt = (System.nanoTime() - t0) / 1e9
           // operators may persist intermediates (e.g. the bitmap docSets
           // table); drop them so repetitions and other queries measure the
@@ -362,7 +361,7 @@ object Bench {
     // dev-only narrowing (the driver always runs the full bench):
     // SPARK_GRAFT_BENCH_ONLY=name1,name2 re-measures just those queries —
     // the isolation tool for telling a real per-query regression from
-    // box drift (the ScaleProbe SPARK_GRAFT_PROBE_ONLY convention)
+    // box drift
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).toSet)
     val selected = only match {
@@ -412,7 +411,7 @@ object Bench {
       onlyStamp +
       s""""total_with_contract_arms":${total + armTotal},""" +
       s""""total_with_operators":${total + armTotal + opResults.map(_._2.min).sum},""" +
-      s""""reps":$reps,"warmup":$warmup,"queries":${obj(results)(_.min)},""" +
+      s""""reps":$reps,"warmup":1,"queries":${obj(results)(_.min)},""" +
       s""""median":${obj(results)(ts => ts(ts.length / 2))},""" +
       s""""spread":${obj(results)(ts => ts.max - ts.min)},""" +
       s""""contract_arms":${obj(armResults)(_.min)},""" +
@@ -434,7 +433,7 @@ object Bench {
       onlyStamp +
       s""""total_with_contract_arms":${total + armTotal},""" +
       s""""n_engine":${results.size},"n_arms":${armResults.size},""" +
-      s""""n_operators":${opResults.size},"reps":$reps,"warmup":$warmup,""" +
+      s""""n_operators":${opResults.size},"reps":$reps,"warmup":1,""" +
       s""""queries":${slowest5.map { case (k, v) => "\"" + k + "\":" + v }
         .mkString("{", ",", "}")},""" +
       s""""full_map":"$out","sf":"$sfDir"}"""

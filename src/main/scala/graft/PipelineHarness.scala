@@ -7,9 +7,8 @@ import graft.operators.Curation
 
 /** Shared wiring for the COMPOSED curation pipeline
   * ([[graft.operators.Curation.pipeline]]) over the synthetic corpus —
-  * used by Bench (`op_pipeline`), the benchmark's curate_chain,
-  * ScaleProbe (`pipeline_*` tiers) and the ScaleSpec output-count gate,
-  * so all four drive the IDENTICAL chain.
+  * used by Bench (`op_pipeline`), the benchmark's curate_chain and the
+  * ScaleSpec output-count gate, so all three drive the IDENTICAL chain.
   *
   * The synthetic documents are single-line with no punctuation (C4's
   * line rules would be vacuous) and their tiny vocabulary holds at most
@@ -27,7 +26,7 @@ import graft.operators.Curation
   *
   * Replication model for the scale tiers: K replicas with a FIXED-WIDTH
   * per-token suffix `_q%02d` — cross-replica shingles are disjoint (the
-  * ScaleProbe decoupling argument) while every replica stays
+  * decoupled-shard argument) while every replica stays
   * STRUCTURALLY isomorphic to replica 0 (same token counts, same token
   * lengths, and all id-residue seeding keyed on the WITHIN-replica id).
   * Every rule-based stage outcome — C4 verdicts, line dfs,
@@ -42,7 +41,8 @@ import graft.operators.Curation
   * count — repeat at every tier. */
 object PipelineHarness {
 
-  /** Replica id stride; the standing-index history lives above 10^9. */
+  /** Replica id stride, shared by the scale-test fixtures; the
+    * standing-index history lives above 10^9. */
   val IdStride = 10_000_000L
   private val HistoryOffset = 1_000_000_000L
 
@@ -111,7 +111,8 @@ object PipelineHarness {
     * replica (IdStride % 20 == 0) under ids offset past 10^9 — exact-
     * text twins of batch documents, so the index dedup removes a
     * deterministic per-replica-constant slice. Drops any stale
-    * warehouse location first (the ScaleProbe discipline). */
+    * warehouse location first: the in-memory catalog forgets the
+    * table, the warehouse dir keeps it. */
   def ensureIndex(spark: SparkSession, corpus: DataFrame, table: String): Unit = {
     // BOTH tables must exist to reuse — a half-built index (died between
     // the two writes) must rebuild, not silently serve stale bands
@@ -158,7 +159,7 @@ object PipelineHarness {
       // trainer tail (round-9): token-budget mix (~60 tokens/doc keeps
       // the draw comparable to the doc-count target) + 512-token packing;
       // tailBpeMerges = None counts whitespace tokens instead of
-      // trained-BPE pieces (the ScaleProbe exactness tiers use that —
+      // trained-BPE pieces (the scale exactness tiers use that —
       // replica-salted vocabularies make cross-tier BPE counts
       // incomparable, while whitespace counts are replica-invariant)
       tokenBudget = if (trainerTail) Some(targetTotal * 60L) else None,

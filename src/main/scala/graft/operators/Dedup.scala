@@ -371,12 +371,13 @@ object Dedup {
     * the id permutation (bitmap popcounts only compare positions for
     * equality), so results stay deterministic.
     *
-    * Returns (dictionary (sh, shid), vocabulary size). The dictionary is
-    * cached — the caller reads it once to size bitmaps and once in the
-    * build join — and returned with its cache (the scope detaches it).
+    * Returns (dictionary (sh, shid), vocabulary size). The shard-rank
+    * relation is cached in the caller's scope `st` — the caller reads the
+    * dictionary once to size bitmaps and once in the build join — and is
+    * released when that scope exits.
     */
-  private[graft] def denseDictionary(sh: DataFrame,
-                                     numShards: Int): (DataFrame, Long) = Storage.scoped { st =>
+  private[graft] def denseDictionary(st: Storage.Scope, sh: DataFrame,
+                                     numShards: Int): (DataFrame, Long) = {
     import org.apache.spark.sql.expressions.Window
     val local = st.cache(sh.select(col("sh")).distinct()
       .withColumn("shard", pmod(xxhash64(col("sh")), lit(numShards.toLong)).cast("int"))
@@ -427,9 +428,9 @@ object Dedup {
     * docSets build side — is EAGERLY checkpointed on the engine
     * storage tier (family default `disk`); the
     * bitmap route releases the shingle blocks deterministically once
-    * docSets materializes. The dictionary's shard-rank relation stays a
-    * small lazy persist (vocab-bounded), reclaimed by
-    * `spark.catalog.clearCache()` or session end.
+    * docSets materializes. The dictionary's shard-rank relation is a
+    * small lazy persist (vocab-bounded), released when the call returns:
+    * the returned plan reads only the docSets checkpoint.
     */
   def jaccardPairs(df: DataFrame, idCol: String, textCol: String,
                    shingleN: Int, threshold: Double,
@@ -453,7 +454,8 @@ object Dedup {
     val vocab = sh.select(col("sh")).distinct().count()
     val nDocs = sh.select(col("id")).distinct().count()
     if (vocab <= maxBitmapVocab && nDocs <= maxBruteDocs) {
-      val (dict, v) = denseDictionary(sh, df.sparkSession.sparkContext.defaultParallelism)
+      val (dict, v) = denseDictionary(st, sh,
+        df.sparkSession.sparkContext.defaultParallelism)
       jaccardBitmapFrom(st, sh, dict, v.toInt, threshold)
     } else if (threshold >= prefixThreshold) jaccardPrefixFrom(sh, threshold)
     else jaccardInvertedFrom(sh, threshold)
@@ -507,7 +509,7 @@ object Dedup {
 
   /** The prefix path's candidate pairs BEFORE exact verification — the
     * deterministic regression target for the near-linearity gates
-    * (ScaleSpec / ScaleProbe): an all-pairs degeneration shows up here as
+    * (ScaleSpec): an all-pairs degeneration shows up here as
     * a superlinear candidate count regardless of box speed, while wall
     * clock alone is noisy on a shared box. Shares the exact candidate
     * generation of [[jaccardPrefixPairs]]. */
@@ -584,7 +586,8 @@ object Dedup {
                          maxVocab: Long = 1L << 22,
                          unicodeForm: Option[String] = None): DataFrame = Storage.scoped { st =>
     val sh = shingleRows(df, idCol, textCol, shingleN, unicodeForm)
-    val (dict, vocab) = denseDictionary(sh, df.sparkSession.sparkContext.defaultParallelism)
+    val (dict, vocab) = denseDictionary(st, sh,
+      df.sparkSession.sparkContext.defaultParallelism)
     require(vocab <= maxVocab,
       s"jaccardBitmapPairs: measured shingle vocabulary $vocab exceeds " +
         s"maxVocab=$maxVocab — the dense-dictionary broadcast and per-doc " +

@@ -437,29 +437,6 @@ object Similarity {
     output(joined, materialize)
   }
 
-  /** The IVF candidate set BEFORE exact verification — the deterministic
-    * regression target for the scale probes (ScaleProbe): with k sized to
-    * the corpus (constant expected cell size, the scaladoc contract of
-    * [[ivfNearDupPairs]]) the candidate cardinality must grow ~linearly in
-    * the corpus; a cell-occupancy blowup (degenerate centroids, saturated
-    * cells) shows up here as superlinear growth regardless of box speed,
-    * while the full verify's wall clock is dominated by shipping two
-    * embeddings per candidate and is too expensive to probe at 100×.
-    * Shares the train/assign/join shape of [[ivfNearDupPairs]]. */
-  private[graft] def ivfCandidatePairs(df: DataFrame, idCol: String,
-                                       embCol: String, k: Int, probes: Int,
-                                       lloydIters: Int, seed: Long,
-                                       trainFraction: Double = 1.0): DataFrame = {
-    val cents = trainIvfCentroids(df, idCol, embCol, k, lloydIters, seed, trainFraction)
-    val cells = df.select(col(idCol).as("id"),
-      explode(ivfAssign(col(embCol), cents, probes)).as("cell"))
-    cells.toDF("id_a", "cell")
-      .join(cells.toDF("id_b", "cell_b"),
-        col("cell") === col("cell_b") && col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"))
-      .distinct()
-  }
-
   /** IVF-accelerated top-k for one query vector: probe the query's
     * `nprobe` nearest cells and rank only vectors assigned (top-1) to
     * those cells — the classic IVF search path.
@@ -670,7 +647,7 @@ object Similarity {
     * other side's. A mega-cell of n rows becomes chunks² independent
     * tasks of ≤ (n/chunks)² comparisons over ≤ 2n/chunks gathered rows —
     * task COUNT absorbs the skew, peak per-task memory and wall drop by
-    * chunks (ScaleProbe semdedup_hotcell tier). Same keep-first rule: x
+    * chunks (the SCALE.md semdedup_hotcell tier). Same keep-first rule: x
     * is removed iff ANY chunk-pair group holds a preceding witness at
     * `tau`, and every (witness, target) chunk combination meets in
     * exactly one group, so the union over groups is exactly the per-cell

@@ -337,7 +337,9 @@ object Embeddings extends QueryPack {
       val cents = Similarity.trainIvfCentroids(corpus, "vec_id", "embedding",
         k = 8, lloydIters = 2, seed = 42)
       val table = "emb_semdedup_incr_gate"
-      // a stale managed-table dir survives the session (ScaleProbe note)
+      // a stale managed-table dir survives the session (the in-memory
+      // catalog forgets the table, the warehouse dir keeps it), and
+      // saveAsTable then refuses with LOCATION_ALREADY_EXISTS
       s.sql(s"DROP TABLE IF EXISTS $table")
       val loc = new org.apache.hadoop.fs.Path(
         s.conf.get("spark.sql.warehouse.dir") + s"/$table")
@@ -453,7 +455,9 @@ object Embeddings extends QueryPack {
       val cents = Similarity.trainIvfCentroids(emb, "vec_id", "embedding",
         k = 8, lloydIters = 2, seed = 42)
       val table = "emb_ivf_incr_gate"
-      // a stale managed-table dir survives the session (ScaleProbe note)
+      // a stale managed-table dir survives the session (the in-memory
+      // catalog forgets the table, the warehouse dir keeps it), and
+      // saveAsTable then refuses with LOCATION_ALREADY_EXISTS
       s.sql(s"DROP TABLE IF EXISTS $table")
       val loc = new org.apache.hadoop.fs.Path(
         s.conf.get("spark.sql.warehouse.dir") + s"/$table")

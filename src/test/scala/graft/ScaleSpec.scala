@@ -7,8 +7,8 @@ import graft.operators.Dedup
 /** CI-able near-linearity gate for the cheapest scale-path operator
   * (VERDICT_r04 next-round #1): a 5× decoupled-shard corpus must cost
   * well under 12× the 1× wall time. The full 10×/30× evidence lives in
-  * SCALE.md (produced by [[ScaleProbe]]); this test is the regression
-  * tripwire — an accidental all-pairs formulation in the MinHash path
+  * SCALE.md (measured on the [[ScaleCorpora]] fixtures); this test is
+  * the regression tripwire — an accidental all-pairs formulation in the MinHash path
   * turns the 25k-doc run into hundreds of millions of verified pairs and
   * blows the bound, while the intended banded-join path stays within a
   * small constant of the 1× time.
@@ -18,8 +18,8 @@ class ScaleSpec extends SparkSpec {
   test("minHash near-dup wall time grows near-linearly on a 5x sharded corpus", SlowScale) {
     val src = "/root/testdata/sf0.1"
     val tmp = Files.createTempDirectory("graft-scale-ci")
-    val (docs1, _) = ScaleProbe.shardedCorpus(spark, src, s"$tmp/1x", 1)
-    val (docs5, _) = ScaleProbe.shardedCorpus(spark, src, s"$tmp/5x", 5)
+    val (docs1, _) = ScaleCorpora.shardedCorpus(spark, src, s"$tmp/1x", 1)
+    val (docs5, _) = ScaleCorpora.shardedCorpus(spark, src, s"$tmp/5x", 5)
 
     def run(df: org.apache.spark.sql.DataFrame): (Long, Double) = {
       val t0 = System.nanoTime()
@@ -49,8 +49,8 @@ class ScaleSpec extends SparkSpec {
     import org.apache.spark.sql.functions.{col, lit}
     val src = "/root/testdata/sf0.1"
     val tmp = Files.createTempDirectory("graft-scale-incr")
-    val (docs1, _) = ScaleProbe.shardedCorpus(spark, src, s"$tmp/1x", 1)
-    val (docs5, _) = ScaleProbe.shardedCorpus(spark, src, s"$tmp/5x", 5)
+    val (docs1, _) = ScaleCorpora.shardedCorpus(spark, src, s"$tmp/1x", 1)
+    val (docs5, _) = ScaleCorpora.shardedCorpus(spark, src, s"$tmp/5x", 5)
     // the fixed daily batch: exact-text twins of 500 replica-0 docs under
     // fresh ids — each must rediscover its twin via the index, at 1x and 5x
     val batch = docs1.filter(col("doc_id") % 10 === 0)
@@ -92,10 +92,10 @@ class ScaleSpec extends SparkSpec {
     // (real text), so each document's rarest prefix tokens stay rare and
     // the candidate set stays ∝ corpus. The regression this trips on is a
     // candidate blowup (prefix join degenerating toward all-pairs), which
-    // turns the 5× run quadratic. Corpus = ScaleProbe.prefixCorpus — the
+    // turns the 5× run quadratic. Corpus = ScaleCorpora.prefixCorpus — the
     // same deterministic distributed generator the 10×/100× SCALE.md
     // probes use (hash-based, so counts below are run-to-run stable).
-    def corpus(n: Int) = ScaleProbe.prefixCorpus(spark, n.toLong)
+    def corpus(n: Int) = ScaleCorpora.prefixCorpus(spark, n.toLong)
       .repartition(8).cache()
 
     def run(df: org.apache.spark.sql.DataFrame): (Long, Double) = {
@@ -142,9 +142,9 @@ class ScaleSpec extends SparkSpec {
     import org.apache.spark.sql.functions.{col, explode}
     val src = "/root/testdata/sf0.1"
     val tmp = Files.createTempDirectory("graft-scale-bloom")
-    val (docs1, _) = ScaleProbe.shardedCorpus(spark, src, s"$tmp/1x", 1)
-    val (docs5, _) = ScaleProbe.shardedCorpus(spark, src, s"$tmp/5x", 5)
-    val stride = 10000000L // ScaleProbe.IdStride: replica 0 is doc_id < stride
+    val (docs1, _) = ScaleCorpora.shardedCorpus(spark, src, s"$tmp/1x", 1)
+    val (docs5, _) = ScaleCorpora.shardedCorpus(spark, src, s"$tmp/5x", 5)
+    val stride = PipelineHarness.IdStride // replica 0 is doc_id < stride
 
     // (survivor shingle rows, contaminated docs, training shingle rows)
     def run(docs: org.apache.spark.sql.DataFrame): (Long, Long, Long) = {
@@ -183,7 +183,7 @@ class ScaleSpec extends SparkSpec {
   }
 
   test("edit-distance blocking: candidates and answer grow ~linearly with q MEASURED from the corpus", SlowScale) {
-    // ScaleProbe.editCorpus plants one distance-1 variant per 10 titles;
+    // ScaleCorpora.editCorpus plants one distance-1 variant per 10 titles;
     // the answer is ~n/10 and candidate cardinality is the deterministic
     // blowup signal (the jaccard-prefix gate pattern). q SCALES with the
     // tier: at fixed q the gram space alphabet^q is finite, postings
@@ -191,9 +191,9 @@ class ScaleSpec extends SparkSpec {
     // prefix grams — the measured 3→5000-title run at q=3 grew 37×.
     // Since round 7 the operator MEASURES q itself (Dedup.measureEditQ,
     // the posting-density bound) — this gate runs with NO manual q and
-    // asserts the auto route keeps the same sublinear shape the
-    // hand-tiered ScaleProbe.editQ run had.
-    def corpus(n: Long) = ScaleProbe.editCorpus(spark, n).repartition(8).cache()
+    // asserts the auto route keeps the same sublinear shape a
+    // hand-tiered q (3 up to 2000 titles, 4 up to 50000, else 5) had.
+    def corpus(n: Long) = ScaleCorpora.editCorpus(spark, n).repartition(8).cache()
     val c1 = corpus(1000); val c5 = corpus(5000)
     c1.count(); c5.count()
 
@@ -362,13 +362,13 @@ class ScaleSpec extends SparkSpec {
     // census and at a 5x census alike (batch text is tier-invariant:
     // the deterministic, box-speed-immune signal). The wall tripwire
     // bounds what a fixed batch pays as the census grows 5x.
-    val batch = ScaleProbe.subdocReplica(spark, 2000L, 0, 9)
+    val batch = ScaleCorpora.subdocReplica(spark, 2000L, 0, 9)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val totalChars = batch.agg(sum(length(col("text")))).head().getLong(0)
       def run(k: Int): (Long, Double) = {
         val census = Dedup.gramCensus(
-          ScaleProbe.subdocCorpus(spark, 2000L, k), "text", 20)
+          ScaleCorpora.subdocCorpus(spark, 2000L, k), "text", 20)
           .localCheckpoint(true) // the "previously built" census premise
         val t0 = System.nanoTime()
         val removed = Dedup.removeRepeatedSpansAgainst(batch, "doc_id",
@@ -392,8 +392,8 @@ class ScaleSpec extends SparkSpec {
     import graft.operators.Curation
     val src = "/root/testdata/sf0.1"
     val tmp = Files.createTempDirectory("graft-scale-lines")
-    val (docs1, _) = ScaleProbe.shardedCorpus(spark, src, s"$tmp/1x", 1)
-    val (docs5, _) = ScaleProbe.shardedCorpus(spark, src, s"$tmp/5x", 5)
+    val (docs1, _) = ScaleCorpora.shardedCorpus(spark, src, s"$tmp/1x", 1)
+    val (docs5, _) = ScaleCorpora.shardedCorpus(spark, src, s"$tmp/5x", 5)
 
     def run(docs: org.apache.spark.sql.DataFrame): (Long, Long) = {
       val seeded = docs.select(col("doc_id"),
@@ -432,14 +432,14 @@ class ScaleSpec extends SparkSpec {
 
   test("span removal and paragraph keep-first replicate exactly across decoupled replicas", SlowScale) {
     import org.apache.spark.sql.functions.{col, sum}
-    // window-isomorphic salted replicas (ScaleProbe.subdocReplica): the
+    // window-isomorphic salted replicas (ScaleCorpora.subdocReplica): the
     // per-replica answer is EXACTLY replica 0's and replicas are char-
     // decoupled, so the K-replica aggregate must be exactly K x the 1x
     // aggregate — any drift means cross-replica gram/paragraph leakage or
     // a broken dup census. Deterministic, box-speed-immune.
-    val c1 = ScaleProbe.subdocCorpus(spark, 2000L, 1)
+    val c1 = ScaleCorpora.subdocCorpus(spark, 2000L, 1)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val c5 = ScaleProbe.subdocCorpus(spark, 2000L, 5)
+    val c5 = ScaleCorpora.subdocCorpus(spark, 2000L, 5)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       def spans(df: org.apache.spark.sql.DataFrame): (Long, Long, Double) = {
@@ -488,9 +488,9 @@ class ScaleSpec extends SparkSpec {
     // corpus fingerprint sets can only match replica 0, so the
     // incremental pair count is invariant in the index size.
     // Deterministic, box-speed-immune.
-    val c1 = ScaleProbe.winnowCorpus(spark, 300L, 1)
+    val c1 = ScaleCorpora.winnowCorpus(spark, 300L, 1)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val c3 = ScaleProbe.winnowCorpus(spark, 300L, 3)
+    val c3 = ScaleCorpora.winnowCorpus(spark, 300L, 3)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       def pairs(df: org.apache.spark.sql.DataFrame): (Long, Double) = {
@@ -507,7 +507,7 @@ class ScaleSpec extends SparkSpec {
       assert(p3 == 3 * p1, s"pair count must be exactly 3x: $p1 -> $p3")
       assert(t3 < 9.0 * math.max(t1, 0.3),
         f"3x wall $t3%.1f s vs 1x $t1%.1f s — superlinear blowup")
-      val batch = ScaleProbe.winnowReplica(spark, 300L, 0, 5)
+      val batch = ScaleCorpora.winnowReplica(spark, 300L, 0, 5)
       def incr(corpus: org.apache.spark.sql.DataFrame): Long =
         Winnow.overlapPairsAgainst(batch, "doc_id", "text",
           Winnow.fingerprintSets(corpus, "doc_id", "text", 8, 6),
@@ -531,7 +531,7 @@ class ScaleSpec extends SparkSpec {
     // semdedup_hot_* — 79 s -> 22 s at the 60k tier). Deterministic,
     // box-speed-immune: set equality + the fixture's premise (the hot
     // cell really is a mega-cell).
-    val emb = ScaleProbe.hotCellCorpus(spark, 2000L, 64)
+    val emb = ScaleCorpora.hotCellCorpus(spark, 2000L, 64)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       emb.count()
@@ -570,9 +570,9 @@ class ScaleSpec extends SparkSpec {
     // window collisions — measured ±10 chars on ~6.6k — so per-replica
     // sums are near-identical constants, not byte-equal).
     // Wall constants live in SCALE.md entropy_*.
-    val c1 = ScaleProbe.entropyCorpus(spark, 500L, 1)
+    val c1 = ScaleCorpora.entropyCorpus(spark, 500L, 1)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val c3 = ScaleProbe.entropyCorpus(spark, 500L, 3)
+    val c3 = ScaleCorpora.entropyCorpus(spark, 500L, 3)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       def spans(df: org.apache.spark.sql.DataFrame): Long =
@@ -604,9 +604,9 @@ class ScaleSpec extends SparkSpec {
     // planted cluster — auto pair count == uncapped == C(4, 2) × K
     // EXACTLY, at both tiers. (A cluster past the floor is excised by
     // design — the probe-side fixtures seed under it deliberately.)
-    val c1 = ScaleProbe.entropyCorpus(spark, 500L, 1, dupEvery = 125)
+    val c1 = ScaleCorpora.entropyCorpus(spark, 500L, 1, dupEvery = 125)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val c3 = ScaleProbe.entropyCorpus(spark, 500L, 3, dupEvery = 125)
+    val c3 = ScaleCorpora.entropyCorpus(spark, 500L, 3, dupEvery = 125)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       def pairs(df: org.apache.spark.sql.DataFrame, auto: Boolean): Long =
@@ -650,7 +650,7 @@ class ScaleSpec extends SparkSpec {
     // scaladoc). Deterministic signal: table equality, plus the 12x wall
     // tripwire on the corpus-side word count.
     def corpus(k: Int) = (0 until k)
-      .map(i => ScaleProbe.subdocReplica(spark, 2000L, 0, i))
+      .map(i => ScaleCorpora.subdocReplica(spark, 2000L, 0, i))
       .reduce(_ unionAll _)
     def train(k: Int): (Seq[(String, String)], Double) = {
       val t0 = System.nanoTime()
@@ -679,8 +679,8 @@ class ScaleSpec extends SparkSpec {
     // 3-probe replication absorbing any cell-boundary split.
     val src = "/root/testdata/sf0.1"
     val tmp = Files.createTempDirectory("graft-semdedup-ci")
-    val (_, emb1) = ScaleProbe.shardedCorpus(spark, src, s"$tmp/1x", 1)
-    val (_, emb5) = ScaleProbe.shardedCorpus(spark, src, s"$tmp/5x", 5)
+    val (_, emb1) = ScaleCorpora.shardedCorpus(spark, src, s"$tmp/1x", 1)
+    val (_, emb5) = ScaleCorpora.shardedCorpus(spark, src, s"$tmp/5x", 5)
     def run(df: org.apache.spark.sql.DataFrame, k: Int): (Long, Double) = {
       val t0 = System.nanoTime()
       val n = Similarity.semDedup(df, "vec_id", "embedding", k = k,
@@ -692,7 +692,8 @@ class ScaleSpec extends SparkSpec {
     }
     // planted ids sit at base + IdStride/2 within each shard's id range
     val planted1 = emb1
-      .filter(col("vec_id") % ScaleProbe.IdStride >= ScaleProbe.IdStride / 2)
+      .filter(col("vec_id") % PipelineHarness.IdStride >=
+        PipelineHarness.IdStride / 2)
       .count()
     assert(planted1 > 0, "fixture must plant near-dups")
     run(emb1, 8) // warm, unmeasured
@@ -711,12 +712,12 @@ class ScaleSpec extends SparkSpec {
     // its own k ∝ corpus matrix and a source on a probe-rank cell
     // boundary could fall outside the batch's probes under one geometry
     // (the probes-governed recall of the operator scaladoc; measured
-    // COMPLETE — 80/80 — at both tiers here and at 1×/2× in ScaleProbe).
+    // COMPLETE — 80/80 — at both tiers here and at 1×/2× in the SCALE.md runs).
     import org.apache.spark.sql.functions.{element_at, expr, lit}
     import graft.functions.ivfAssign
     val sdBatch = emb1
       .filter(col("vec_id") % 25 === 0 &&
-        col("vec_id") < lit(ScaleProbe.IdStride / 2))
+        col("vec_id") < lit(PipelineHarness.IdStride / 2))
       .select((col("vec_id") + lit(3000000000L)).as("vec_id"),
         col("embedding").cast("array<double>").as("emb0"))
       .select(col("vec_id"), expr("transform(emb0, (x, j) -> " +
@@ -751,14 +752,14 @@ class ScaleSpec extends SparkSpec {
     // >= 2-token document — K-linear. Box-speed-immune.
     val src = "/root/testdata/sf0.1"
     val tmp = Files.createTempDirectory("graft-bigram-ci")
-    val (docs1, _) = ScaleProbe.shardedCorpus(spark, src, s"$tmp/1x", 1)
-    val (docs5, _) = ScaleProbe.shardedCorpus(spark, src, s"$tmp/5x", 5)
+    val (docs1, _) = ScaleCorpora.shardedCorpus(spark, src, s"$tmp/1x", 1)
+    val (docs5, _) = ScaleCorpora.shardedCorpus(spark, src, s"$tmp/5x", 5)
     def score(df: org.apache.spark.sql.DataFrame) =
       Curation.bigramLogProb(df, "doc_id", "text", alpha = 0.1,
         maxBroadcastVocab = 2000000L)
     val n1 = score(docs1).count()
     val out5 = score(docs5)
-      .select(pmod(col("doc_id"), lit(ScaleProbe.IdStride)).as("base_id"),
+      .select(pmod(col("doc_id"), lit(PipelineHarness.IdStride)).as("base_id"),
         col("n_bigrams"), col("mean_logp"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     assert(out5.length == 5 * n1, s"5x rows ${out5.length} != ${5 * n1}")

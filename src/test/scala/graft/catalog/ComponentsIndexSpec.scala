@@ -213,6 +213,34 @@ class ComponentsIndexSpec extends SparkSpec {
     Layout.dropComponentsIndex(spark, t)
   }
 
+  test("a batch of merges between standing groups resolves each merged " +
+    "group to the pair min, with one merge-log row per merged root") {
+    val t = "cmp_spec_merge_batch"
+    Layout.dropComponentsIndex(spark, t)
+    // history: 20 groups {4g..4g+3} chained by path edges, root 4g
+    val hist = spark.range(60)
+      .select((expr("id div 3") * 4 + col("id") % 3).as("a"))
+      .select(col("a"), (col("a") + 1).as("b"))
+    Layout.componentsIndex(spark, hist, "a", "b", buckets = 2, tableName = t)
+    // one batch: 5 brand-new two-id components and 5 merges joining
+    // standing groups 2m and 2m+1 (roots 8m and 8m+4)
+    val fresh = (0 until 5).map(i => (1000L + 2 * i, 1001L + 2 * i))
+    val merges = (0 until 5).map(m => (8L * m, 8L * m + 4))
+    Layout.componentsIndexAppend(spark, edges(fresh ++ merges: _*), "a", "b",
+      buckets = 2, tableName = t, batchTag = Some("merge_b1"))
+    val got = resolveMap(t)
+    (0L until 80L).foreach { id =>
+      val root = if (id < 40) id / 8 * 8 else id / 4 * 4
+      assert(got(id) == root, s"id $id")
+    }
+    fresh.foreach { case (u, v) => assert(got(u) == u && got(v) == u) }
+    val parents = spark.table(s"${t}_cparents")
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toSet
+    assert(parents == merges.map { case (lo, hi) => hi -> lo }.toSet,
+      s"got $parents")
+    Layout.dropComponentsIndex(spark, t)
+  }
+
   test("self-loops and isolated ids are excluded, like the batch operators") {
     val t = "cmp_spec_iso"
     Layout.dropComponentsIndex(spark, t)

@@ -151,7 +151,7 @@ class CurationSpec extends SparkSpec {
     // every 3rd doc. minLineDocs is set above the corpus size so the
     // line stage is a pass-through and the sub-document stages do the
     // work; the mix target exceeds the population so the draw keeps all.
-    val corpus = graft.ScaleProbe.subdocReplica(spark, 200L, 0, 0)
+    val corpus = graft.ScaleCorpora.subdocReplica(spark, 200L, 0, 0)
       .withColumn("lang", lit("en")).withColumn("source", lit("s"))
     val cols = corpus.columns.map(col)
     val out = Curation.pipeline(spark, corpus, "doc_id", "text", "lang",

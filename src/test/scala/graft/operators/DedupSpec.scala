@@ -51,12 +51,31 @@ class DedupSpec extends SparkSpec {
     // shingle universe large enough that every one of the 32 shards is hit
     val sh = (0 until 5000).map(i => (i.toLong % 7, s"shingle_$i"))
       .toDF("id", "sh").repartition(16)
-    val (dict, vocab) = Dedup.denseDictionary(sh, numShards = 32)
+    val (ids, vocab) = graft.Storage.scoped { st =>
+      val (dict, vocab) = Dedup.denseDictionary(st, sh, numShards = 32)
+      (dict.select(col("shid")).collect().map(_.getLong(0)).sorted, vocab)
+    }
     assert(vocab == 5000L)
-    val ids = dict.select(col("shid")).collect().map(_.getLong(0)).sorted
     // dense cover of [0, V): unique, min 0, max V-1
     assert(ids.length == 5000 && ids.head == 0L && ids.last == 4999L)
     assert(ids.distinct.length == 5000)
+  }
+
+  test("repeated jaccardBitmapPairs calls on different inputs add no CacheManager entry") {
+    // the dictionary's shard-rank cache lives in the call's scope: a
+    // cache returned with the dictionary left one entry per call that
+    // only clearCache() reclaimed
+    val sp = spark
+    import sp.implicits._
+    val entries = graft.StorageSpec.cachedEntries(spark)
+    val a = Dedup.jaccardBitmapPairs(
+      Seq((1L, "a b c d"), (2L, "a b c e")).toDF("doc_id", "text"),
+      "doc_id", "text", 2, 0.2).collect()
+    val b = Dedup.jaccardBitmapPairs(
+      Seq((1L, "x y z"), (2L, "x y z"), (3L, "q r")).toDF("doc_id", "text"),
+      "doc_id", "text", 2, 0.2).collect()
+    assert(a.length == 1 && b.length == 1)
+    assert(graft.StorageSpec.cachedEntries(spark) == entries)
   }
 
   test("jaccardPairs (auto strategy) equals brute force on both sides of the vocab cutoff") {

@@ -182,24 +182,6 @@ class SimilaritySpec extends SparkSpec {
     }
   }
 
-  test("ivfCandidatePairs (the scale-probe signal) matches the operator's candidate generation") {
-    val cand = Similarity.ivfCandidatePairs(clustered, "vec_id", "embedding",
-        k = 3, probes = 1, lloydIters = 3, seed = 42)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val verified = Similarity.ivfNearDupPairs(clustered, "vec_id", "embedding",
-        k = 3, probes = 1, lloydIters = 3, seed = 42, simThreshold = 0.8)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    // every verified pair must come from the shared candidate generator —
-    // otherwise the SCALE.md candidate counts measure a different plan
-    // than the operator executes
-    assert(verified.subsetOf(cand), "verified pairs outside the candidate set")
-    // and on clustered data the candidates stay within-cell (real pruning):
-    // 3 clusters × C(20,2) pairs, never the all-pairs C(60,2)
-    assert(cand.size <= 3 * 190, s"candidate set ${cand.size} is not cell-bounded")
-    assert(cand.forall { case (a, b) => a / 100 == b / 100 },
-      "cross-cluster candidates — cells did not align with clusters")
-  }
-
   test("trainIvfCentroids returns unit-norm centroids, one per separated cluster") {
     val cents = Similarity.trainIvfCentroids(clustered, "vec_id", "embedding",
       k = 3, lloydIters = 3, seed = 42)

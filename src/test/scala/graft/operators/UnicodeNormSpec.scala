@@ -67,6 +67,32 @@ class UnicodeNormSpec extends SparkSpec {
       s"the DEFAULT must keep byte identity (oracle-pinned): $off")
   }
 
+  test("exact fingerprints: NFC on an NFD re-encoding equal the byte fingerprints of the NFC re-encoding") {
+    // the form changes bytes, never content identity: every row, not
+    // just the twins, fingerprints as its NFC re-encoding does
+    val sp = spark
+    import sp.implicits._
+    val accented = (0 until 40).map { i =>
+      i.toLong -> s"doc $i about a veiled ouzo aria ${i % 7} unique"
+    }.toDF("doc_id", "plain")
+      .select(col("doc_id"),
+        translate(col("plain"), "aeiou", "àéîöü").as("text"))
+    val nfdDocs = accented.select(col("doc_id"),
+      unicodeNormalize(col("text"), "NFD").as("text"))
+    val nfcDocs = accented.select(col("doc_id"),
+      unicodeNormalize(col("text"), "NFC").as("text"))
+    def texts(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    val (d, c) = (texts(nfdDocs), texts(nfcDocs))
+    assert(d.size == 40 && d.forall { case (id, t) => t != c(id) },
+      "the NFD re-encoding must differ in bytes on every row")
+    val viaForm = Dedup.fingerprints(nfdDocs, "doc_id", "text", Some("NFC"))
+    val viaBytes = Dedup.fingerprints(nfcDocs, "doc_id", "text")
+    assert(viaForm.count() == 40)
+    assert(viaForm.exceptAll(viaBytes).isEmpty &&
+      viaBytes.exceptAll(viaForm).isEmpty)
+  }
+
   test("paragraph keep-first: NFD paragraph copy is deleted with NFC on, kept with it off") {
     val sp = spark
     import sp.implicits._
