@@ -292,6 +292,136 @@ object Bench {
                               // one batch folded into a STANDING map —
                               // is op_components_fold.
 
+  /** One entry's timing: its timed reps in ascending order, or `failed`
+    * (and no times) when its warm-up or any rep threw. */
+  final case class Timing(name: String, times: Seq[Double], failed: Boolean)
+
+  /** Time `entries` in sorted-name order, each materialised through the
+    * `noop` datasource: one untimed warm-up execution, then `reps` timed
+    * ones. An entry whose warm-up or rep throws a non-fatal error is
+    * marked failed and not run further — a query that fails fast must
+    * not read as a fast query.
+    *
+    * The warm-up is the JMH warmup-iteration discipline (r14): a query's
+    * first execution in a session pays codegen JIT + first parquet touch
+    * — measured fresh-session series on dedup_ngram_jaccard: 16.0 → 2.6 →
+    * 1.8 → ~1.6 s — so a 3-rep min-of-3 window that opens cold reports
+    * the JIT tail as the operator (the r13 graded 7.03 s weak row and the
+    * sub-5-s spike cluster, BASELINE.md "rep-noise floor"). One warmup
+    * exec moves every timed rep onto the warm side; spreads measure
+    * run-to-run variance of the CODE, not of the JIT. Stamped into the
+    * JSON ("warmup":1) for cross-round comparability. */
+  def timeEntries(spark: SparkSession, sfDir: String, reps: Int,
+                  entries: Seq[(String, (SparkSession, String) => DataFrame)]): Seq[Timing] =
+    entries.sortBy(_._1).map { case (name, fn) =>
+      def exec(): Boolean =
+        try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
+        catch { case NonFatal(_) => false }
+      // the warm-up gets the same hygiene as a timed rep, so rep 1 starts
+      // from the identical clean-block-store state
+      var failed = !exec()
+      settle(spark)
+      val times = scala.collection.mutable.ArrayBuffer.empty[Double]
+      while (!failed && times.size < reps) {
+        val t0 = System.nanoTime()
+        failed = !exec()
+        times += (System.nanoTime() - t0) / 1e9
+        settle(spark)
+      }
+      Timing(name, if (failed) Nil else times.sorted.toSeq, failed)
+    }
+
+  /** Inter-rep hygiene, outside every timed window. */
+  private def settle(spark: SparkSession): Unit = {
+    // operators may persist intermediates (e.g. the bitmap docSets
+    // table); drop them so repetitions and other queries measure the
+    // full pipeline, not a warm cache
+    spark.catalog.clearCache()
+    // the self-verifying gates materialize pair sets via eager
+    // localCheckpoint; those blocks are ContextCleaner-managed and
+    // only release after the frames are COLLECTED BY GC. Across
+    // 70+ queries × reps the unreferenced blocks otherwise pile up
+    // until storage eviction + GC churn dominates the tail of the
+    // run (r5: medians 10× the mins). One explicit GC per rep keeps
+    // each measurement starting from a clean block store.
+    System.gc()
+    // …and the cleanup itself is ASYNCHRONOUS: the GC only
+    // enqueues the weak references — the ContextCleaner thread
+    // then drops blocks/shuffles/broadcasts concurrently with
+    // whatever runs next, which is how a heavy neighbor's
+    // teardown lands inside a sub-second query's measured window
+    // (r13: q19_date_trunc min 0.47 s isolated vs 2.08 s
+    // in-suite, the drift-tail signature). A short settle plus a
+    // second GC (the first collection ENQUEUES, the second
+    // collects what the cleaner just dereferenced) runs the
+    // teardown OUTSIDE the timed window.
+    Thread.sleep(250)
+    System.gc()
+  }
+
+  /** The full `bench_out.json` object and the compact summary line for
+    * the three timed sections. Failed entries are listed under "failed"
+    * in both and stay out of every per-entry map and every total. */
+  def report(results: Seq[Timing], armResults: Seq[Timing], opResults: Seq[Timing],
+             reps: Int, only: Option[Set[String]], out: String,
+             sfDir: String): (String, String) = {
+    def done(rs: Seq[Timing]): Seq[(String, Seq[Double])] =
+      rs.filterNot(_.failed).map(t => t.name -> t.times)
+    val failed = (results ++ armResults ++ opResults).filter(_.failed).map(_.name).sorted
+      .map("\"" + _ + "\"").mkString("[", ",", "]")
+    def obj(rs: Seq[Timing])(f: Seq[Double] => Double): String =
+      done(rs).map { case (k, ts) => "\"" + k + "\":" + f(ts) }
+        .mkString("{", ",", "}")
+    val total = done(results).map(_._2.min).sum
+    val armTotal = done(armResults).map(_._2.min).sum
+    // headline numbers stay min-of-N (measures the code, not the noise);
+    // median + spread (max-min) expose per-query run-to-run variance so a
+    // one-off box-contention spike is distinguishable from a regression.
+    // "schema":3 marks the round-7 output change (contract-arm gates moved
+    // out of the headline into "contract_arms"); "total_with_contract_arms"
+    // is the round-5/6 schema-2 definition and "total_with_operators" the
+    // round-4-and-earlier one, so a consumer diffing raw JSON across rounds
+    // has like-for-like numbers without reading BASELINE.md.
+    // a BENCH_ONLY-narrowed run must never be mistakable for the official
+    // full map (ADVICE r12): the filter is stamped into the JSON and the
+    // headline metric renamed, so a partial map diffed against a full one
+    // fails loudly instead of reading as a regression/improvement.
+    val onlyStamp = only.map(ns =>
+      s""""bench_only":${ns.toSeq.sorted.map("\"" + _ + "\"")
+        .mkString("[", ",", "]")},""").getOrElse("")
+    val metric = if (only.isDefined) "bench_only_subset" else "total"
+    val full =
+      s"""{"metric":"$metric","value":$total,"unit":"sec","schema":3,""" +
+      onlyStamp +
+      s""""total_with_contract_arms":${total + armTotal},""" +
+      s""""total_with_operators":${total + armTotal + done(opResults).map(_._2.min).sum},""" +
+      s""""reps":$reps,"warmup":1,"failed":$failed,"queries":${obj(results)(_.min)},""" +
+      s""""median":${obj(results)(ts => ts(ts.length / 2))},""" +
+      s""""spread":${obj(results)(ts => ts.max - ts.min)},""" +
+      s""""contract_arms":${obj(armResults)(_.min)},""" +
+      s""""arm_median":${obj(armResults)(ts => ts(ts.length / 2))},""" +
+      s""""operators":${obj(opResults)(_.min)},"sf":"$sfDir"}"""
+    // a caller parsing stdout may keep only the TAIL of long lines
+    // (BENCH_r06, BENCH_r08: "parsed": null with a mid-object "tail") — so
+    // the durable FULL artifact is a FILE (`out`), and the very last stdout
+    // line is a compact (≤1 KB) summary that survives such a tail window
+    // whole: totals, per-section counts, and only the slowest 5 engine
+    // queries in the "queries" map (round-8 verdict "what's wrong" #1).
+    val slowest5 = done(results).map { case (k, ts) => k -> ts.min }
+      .sortBy(-_._2).take(5)
+    val summary =
+      s"""{"metric":"$metric","value":$total,"unit":"sec","schema":3,""" +
+      onlyStamp +
+      s""""total_with_contract_arms":${total + armTotal},""" +
+      s""""n_engine":${results.size},"n_arms":${armResults.size},""" +
+      s""""n_operators":${opResults.size},"reps":$reps,"warmup":1,""" +
+      s""""failed":$failed,""" +
+      s""""queries":${slowest5.map { case (k, v) => "\"" + k + "\":" + v }
+        .mkString("{", ",", "}")},""" +
+      s""""full_map":"$out","sf":"$sfDir"}"""
+    (full, summary)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.local("graft-bench",
@@ -307,57 +437,8 @@ object Bench {
     catch { case NonFatal(_) => () }
 
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-    // one untimed warmup execution per query BEFORE the timed reps (r14,
-    // the JMH warmup-iteration discipline): a query's first execution in
-    // a session pays codegen JIT + first parquet touch — measured
-    // fresh-session series on dedup_ngram_jaccard: 16.0 → 2.6 → 1.8 →
-    // ~1.6 s — so a 3-rep min-of-3 window that opens cold reports the
-    // JIT tail as the operator (the r13 graded 7.03 s weak row and the
-    // sub-5-s spike cluster, BASELINE.md "rep-noise floor"). One warmup
-    // exec moves every timed rep onto the warm side; spreads measure
-    // run-to-run variance of the CODE, not of the JIT. Stamped into the
-    // JSON ("warmup":1) for cross-round comparability.
     def time(entries: Seq[(String, (SparkSession, String) => DataFrame)]) =
-      entries.sortBy(_._1).map { case (name, fn) =>
-        try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        catch { case NonFatal(_) => () }
-        // same inter-rep hygiene as the timed loop, so rep 1 starts
-        // from the identical clean-block-store state
-        spark.catalog.clearCache()
-        System.gc(); Thread.sleep(250); System.gc()
-        val times = (1 to reps).map { _ =>
-          val t0 = System.nanoTime()
-          try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          catch { case NonFatal(_) => () }
-          val dt = (System.nanoTime() - t0) / 1e9
-          // operators may persist intermediates (e.g. the bitmap docSets
-          // table); drop them so repetitions and other queries measure the
-          // full pipeline, not a warm cache
-          spark.catalog.clearCache()
-          // the self-verifying gates materialize pair sets via eager
-          // localCheckpoint; those blocks are ContextCleaner-managed and
-          // only release after the frames are COLLECTED BY GC. Across
-          // 70+ queries × reps the unreferenced blocks otherwise pile up
-          // until storage eviction + GC churn dominates the tail of the
-          // run (r5: medians 10× the mins). One explicit GC per rep keeps
-          // each measurement starting from a clean block store.
-          System.gc()
-          // …and the cleanup itself is ASYNCHRONOUS: the GC only
-          // enqueues the weak references — the ContextCleaner thread
-          // then drops blocks/shuffles/broadcasts concurrently with
-          // whatever runs next, which is how a heavy neighbor's
-          // teardown lands inside a sub-second query's measured window
-          // (r13: q19_date_trunc min 0.47 s isolated vs 2.08 s
-          // in-suite, the drift-tail signature). A short settle plus a
-          // second GC (the first collection ENQUEUES, the second
-          // collects what the cleaner just dereferenced) runs the
-          // teardown OUTSIDE the timed window.
-          Thread.sleep(250)
-          System.gc()
-          dt
-        }.sorted
-        name -> times
-      }
+      timeEntries(spark, sfDir, reps, entries)
     // dev-only narrowing (the driver always runs the full bench):
     // SPARK_GRAFT_BENCH_ONLY=name1,name2 re-measures just those queries —
     // the isolation tool for telling a real per-query regression from
@@ -385,58 +466,10 @@ object Bench {
       case None => operatorBenches.toSeq
       case Some(names) => operatorBenches.toSeq.filter(e => names(e._1))
     })
-    def obj(rs: Seq[(String, Seq[Double])])(f: Seq[Double] => Double): String =
-      rs.map { case (k, ts) => "\"" + k + "\":" + f(ts) }
-        .mkString("{", ",", "}")
-    val total = results.map(_._2.min).sum
-    val armTotal = armResults.map(_._2.min).sum
-    // headline numbers stay min-of-N (measures the code, not the noise);
-    // median + spread (max-min) expose per-query run-to-run variance so a
-    // one-off box-contention spike is distinguishable from a regression.
-    // "schema":3 marks the round-7 output change (contract-arm gates moved
-    // out of the headline into "contract_arms"); "total_with_contract_arms"
-    // is the round-5/6 schema-2 definition and "total_with_operators" the
-    // round-4-and-earlier one, so a consumer diffing raw JSON across rounds
-    // has like-for-like numbers without reading BASELINE.md.
-    // a BENCH_ONLY-narrowed run must never be mistakable for the official
-    // full map (ADVICE r12): the filter is stamped into the JSON and the
-    // headline metric renamed, so a partial map diffed against a full one
-    // fails loudly instead of reading as a regression/improvement.
-    val onlyStamp = only.map(ns =>
-      s""""bench_only":${ns.toSeq.sorted.map("\"" + _ + "\"")
-        .mkString("[", ",", "]")},""").getOrElse("")
-    val metric = if (only.isDefined) "bench_only_subset" else "total"
-    val full =
-      s"""{"metric":"$metric","value":$total,"unit":"sec","schema":3,""" +
-      onlyStamp +
-      s""""total_with_contract_arms":${total + armTotal},""" +
-      s""""total_with_operators":${total + armTotal + opResults.map(_._2.min).sum},""" +
-      s""""reps":$reps,"warmup":1,"queries":${obj(results)(_.min)},""" +
-      s""""median":${obj(results)(ts => ts(ts.length / 2))},""" +
-      s""""spread":${obj(results)(ts => ts.max - ts.min)},""" +
-      s""""contract_arms":${obj(armResults)(_.min)},""" +
-      s""""arm_median":${obj(armResults)(ts => ts(ts.length / 2))},""" +
-      s""""operators":${obj(opResults)(_.min)},"sf":"$sfDir"}"""
-    // the driver captures only the TAIL of long stdout lines (BENCH_r06,
-    // BENCH_r08: "parsed": null with a mid-object "tail") — so the durable
-    // FULL artifact is a FILE, and the very last stdout line is a compact
-    // (≤1 KB) summary that survives the driver's tail window whole: totals,
-    // per-section counts, and only the slowest 5 engine queries in the
-    // "queries" map (round-8 verdict "what's wrong" #1).
     val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
+    val (full, summary) = report(results, armResults, opResults, reps, only, out, sfDir)
     java.nio.file.Files.write(java.nio.file.Paths.get(out),
       (full + "\n").getBytes("UTF-8"))
-    val slowest5 = results.map { case (k, ts) => k -> ts.min }
-      .sortBy(-_._2).take(5)
-    val summary =
-      s"""{"metric":"$metric","value":$total,"unit":"sec","schema":3,""" +
-      onlyStamp +
-      s""""total_with_contract_arms":${total + armTotal},""" +
-      s""""n_engine":${results.size},"n_arms":${armResults.size},""" +
-      s""""n_operators":${opResults.size},"reps":$reps,"warmup":1,""" +
-      s""""queries":${slowest5.map { case (k, v) => "\"" + k + "\":" + v }
-        .mkString("{", ",", "}")},""" +
-      s""""full_map":"$out","sf":"$sfDir"}"""
     println(summary)
     spark.stop()
   }

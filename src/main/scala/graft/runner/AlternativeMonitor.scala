@@ -17,7 +17,10 @@ import graft.streaming.FileTopics
   * On the file transport the analogs are directory-level observations:
   * byte growth of the output topic, an estimated record count from bytes
   * (the reference's size/100 heuristic, kept verbatim), and lag as
-  * produced-vs-consumed row counts. Largely obsolete when the
+  * produced-vs-consumed row counts. The size/100 figure was calibrated
+  * for JSON/Kafka record bytes; file topics are compressed Parquet, so it
+  * now under-counts them by roughly 4–9× (the `graft init` project at
+  * 200 000 events: 26 bytes per input record, 11 per output record). Largely obsolete when the
   * [[MetricsCollector]] listener feed is available — these exist for the
   * same reason the reference kept them: a second opinion that does not
   * depend on the engine's own reporting.

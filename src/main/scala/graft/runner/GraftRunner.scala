@@ -4,8 +4,11 @@ import java.nio.file.{Files, Path, Paths}
 
 import scala.util.matching.Regex
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Cast
+import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 import graft.avro.{AvroSchemas, InMemorySchemaRegistry}
 import graft.datagen.{RatedProducer, TrafficPatterns}
@@ -24,7 +27,8 @@ import graft.streaming.{BoundedRun, Topics}
   *  6. deploy statements: topic-backed CREATE TABLE becomes a streaming
   *     view over the topic; plain DDL runs through spark.sql; INSERT INTO
   *     a topic-backed table becomes a streaming insert (the continuous
-  *     INSERT-SELECT, 03_create_processing.sql analog)
+  *     INSERT-SELECT, 03_create_processing.sql analog) whose SELECT is
+  *     cast to the target topic's payload schema ([[conformToPayload]])
   *  7. produce synthetic traffic              (RatedProducer, A14-A16)
   *  8. run to completion: bounded mode uses Trigger.AvailableNow;
   *     continuous mode stops on expected-count/no-progress (BoundedRun,
@@ -102,6 +106,36 @@ object GraftRunner {
     (out, (System.nanoTime() - t) / 1000000L)
   }
 
+  /** `df` projected onto a topic's declared payload schema by exact field
+    * name: a declared field `df` lacks becomes null, a column the schema
+    * does not declare is dropped, and a column of another type is cast
+    * when `Cast.canUpCast` allows it (nullability aside — topic reads are
+    * nullable). Typed topics do not coerce on read, so a column that
+    * cannot be up-cast throws here, naming the table, the field and both
+    * types. */
+  def conformToPayload(df: DataFrame, payload: StructType, table: String): DataFrame = {
+    val have = df.schema.fields.map(f => f.name -> f.dataType).toMap
+    df.select(payload.fields.toSeq.map { f =>
+      val to = anyNull(f.dataType)
+      have.get(f.name) match {
+        case None => lit(null).cast(to).as(f.name)
+        case Some(from) if Cast.canUpCast(anyNull(from), to) => col(f.name).cast(to).as(f.name)
+        case Some(from) =>
+          throw new IllegalArgumentException(
+            s"INSERT INTO $table: field ${f.name} is ${from.catalogString}, which " +
+              s"cannot be up-cast to the declared ${f.dataType.catalogString}")
+      }
+    }: _*)
+  }
+
+  /** `dt` with every nested element, value and field nullable. */
+  private def anyNull(dt: DataType): DataType = dt match {
+    case ArrayType(e, _) => ArrayType(anyNull(e), containsNull = true)
+    case MapType(k, v, _) => MapType(anyNull(k), anyNull(v), valueContainsNull = true)
+    case StructType(fs) => StructType(fs.map(f => f.copy(dataType = anyNull(f.dataType), nullable = true)))
+    case other => other
+  }
+
   def run(spark: SparkSession, cfg: Config): RunResult = {
     val t0 = System.nanoTime()
     val ts = java.time.LocalDateTime.now()
@@ -162,7 +196,7 @@ object GraftRunner {
     // per-topic payload schema, mirroring the registry mapping above: the
     // output topic carries the output schema — reading EVERY topic with
     // the input schema parsed output-only columns to null downstream
-    def schemaForTopic(topic: String): org.apache.spark.sql.types.StructType =
+    def schemaForTopic(topic: String): StructType =
       if (topic == resources.outputTopic)
         schemas.get("output").map(_.structType).getOrElse(inputSchema)
       else inputSchema
@@ -215,17 +249,25 @@ object GraftRunner {
             spark.sql(sql)
         }
       }
-      inserts = inserts.reverse // statement order
+      // each INSERT's SELECT, cast to its target topic's payload schema —
+      // built here, before anything is produced, so a SELECT whose types
+      // do not fit its target fails the deploy instead of writing a topic
+      val insertFrames = inserts.reverse.map { spec => // statement order
+        val topic = tableTopics(spec.target)
+        spec -> conformToPayload(spark.sql(spec.select), schemaForTopic(topic), spec.target)
+      }
 
-      def startInsert(spec: InsertSpec, trigger: Trigger) =
-        topics.insertInto(spark.sql(spec.select), tableTopics(spec.target),
+      def startInsert(insert: (InsertSpec, DataFrame), trigger: Trigger) = {
+        val (spec, df) = insert
+        topics.insertInto(df, tableTopics(spec.target),
           if (cfg.stableCheckpoints) spec.name else s"$executionId-${spec.name}",
           trigger = trigger)
+      }
 
       // continuous mode: standing queries first, like the reference's
       // deploy-then-produce ordering
       if (cfg.continuous)
-        insertQueries = inserts.map(startInsert(_, Trigger.ProcessingTime("500 milliseconds")))
+        insertQueries = insertFrames.map(startInsert(_, Trigger.ProcessingTime("500 milliseconds")))
 
       // 7: produce (skipped in CSV mode, reference cmd/run.go:118-127)
       val (produced, produceMs) = timedMs {
@@ -253,8 +295,8 @@ object GraftRunner {
           // upstream INSERT has finished writing it (starting all stages
           // concurrently made stage B snapshot an empty intermediate topic
           // and terminate with zero rows).
-          inserts.foreach { spec =>
-            val q = startInsert(spec, Trigger.AvailableNow())
+          insertFrames.foreach { insert =>
+            val q = startInsert(insert, Trigger.AvailableNow())
             insertQueries ::= q
             q.awaitTermination()
           }

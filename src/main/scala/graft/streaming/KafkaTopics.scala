@@ -20,10 +20,12 @@ import org.apache.spark.sql.types.StructType
   * `spark-sql-kafka-0-10` + `kafka-clients` on the classpath every method
   * works as-is; tests keep running on [[FileTopics]].
   *
-  * Payload encoding is JSON in the record value, mirroring FileTopics. The
-  * AVRO-Confluent wire format the reference uses is available as composable
-  * expressions (graft.avro.ConfluentWire strip/add the 5-byte frame) and
-  * slots between the Kafka `value` and `from_json`/`from_avro` here.
+  * Payload encoding is JSON in the record value, because Kafka values are
+  * bytes ([[FileTopics]] stores the same payload as a typed Parquet
+  * struct). The AVRO-Confluent wire format the reference uses is available
+  * as composable expressions (graft.avro.ConfluentWire strip/add the
+  * 5-byte frame) and slots between the Kafka `value` and
+  * `from_json`/`from_avro` here.
   */
 final case class KafkaTopics(bootstrapServers: String, checkpointRoot: String,
                              consumerGroup: Option[String] = None) extends Topics {
@@ -72,18 +74,26 @@ final case class KafkaTopics(bootstrapServers: String, checkpointRoot: String,
       .select(from_json(col("value").cast("string"), payload).as("v"))
       .select(payload.fieldNames.map(f => col(s"v.$f")): _*)
 
+  /** Engine rows → Kafka record: the key (like a Kafka record key)
+    * duplicates its payload column, and the whole payload is JSON-encoded
+    * into the value — the value stays complete so the round trip is
+    * lossless. No timestamp column: the broker stamps its own, so a
+    * `tsCol` given to `produce`/`insertInto` is not written. */
+  private def envelopeOf(df: DataFrame, keyCol: Option[String]): DataFrame =
+    df.select(
+      keyCol.map(k => col(k).cast("string")).getOrElse(lit(null).cast("string")).as("key"),
+      to_json(struct(df.columns.map(col): _*)).as("value"))
+
   def produce(df: DataFrame, topic: String, keyCol: Option[String] = None,
               tsCol: Option[String] = None): Unit =
-    envelopeOf(df, keyCol, tsCol)
-      .select(col("key"), col("value")) // broker stamps its own timestamp
+    envelopeOf(df, keyCol)
       .write.format("kafka").options(writeOptions(topic)).save()
 
   def insertInto(df: DataFrame, topic: String, queryName: String,
                  keyCol: Option[String] = None, tsCol: Option[String] = None,
                  trigger: Trigger = Trigger.ProcessingTime("1 second"),
                  outputMode: String = "append"): StreamingQuery =
-    envelopeOf(df, keyCol, tsCol)
-      .select(col("key"), col("value"))
+    envelopeOf(df, keyCol)
       .writeStream
       .queryName(queryName)
       .outputMode(outputMode)

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
@@ -19,15 +18,14 @@ import org.apache.spark.sql.types.StructType
   *    has the spark-sql-kafka connector on the classpath.
   *
   * Every method contract is identical across the two: `readStream`
-  * returns `(key STRING, kafka_ts TIMESTAMP, <payload fields>)`, `produce`
-  * JSON-encodes the payload into the record value, `insertInto` stands up
-  * the continuous INSERT-SELECT (03_create_processing.sql analog).
+  * returns `(key STRING, kafka_ts TIMESTAMP, <payload fields>)`, `readAll`
+  * returns `<payload fields>`, `insertInto` stands up the continuous
+  * INSERT-SELECT (03_create_processing.sql analog). `produce` and
+  * `insertInto` store the payload in the record value, each transport in
+  * its own encoding: [[FileTopics]] writes it as a typed Parquet struct,
+  * [[KafkaTopics]] JSON-encodes it into the value bytes.
   */
 trait Topics {
-
-  /** Envelope: what a Kafka wire record carries. */
-  final val envelope: StructType = StructType.fromDDL(
-    "key STRING, value STRING, ts TIMESTAMP")
 
   def checkpointDir(name: String): String
 
@@ -36,8 +34,8 @@ trait Topics {
   def deleteTopic(topic: String): Unit
   def topicExists(topic: String): Boolean
 
-  /** Produce a batch of rows to a topic: payload columns are JSON-encoded
-    * into `value` (analog of the reference producer's AVRO/JSON encode,
+  /** Produce a batch of rows to a topic: the payload columns become the
+    * record value (analog of the reference producer's AVRO/JSON encode,
     * internal/pipeline/producer.go:406-447). `keyCol` feeds the record key. */
   def produce(df: DataFrame, topic: String, keyCol: Option[String] = None,
               tsCol: Option[String] = None): Unit
@@ -56,16 +54,6 @@ trait Topics {
                  keyCol: Option[String] = None, tsCol: Option[String] = None,
                  trigger: Trigger = Trigger.ProcessingTime("1 second"),
                  outputMode: String = "append"): StreamingQuery
-
-  /** Shared envelope projection: the key (like a Kafka record key)
-    * duplicates its payload column — the value stays complete so the round
-    * trip is lossless. */
-  protected final def envelopeOf(df: DataFrame, keyCol: Option[String],
-                                 tsCol: Option[String]): DataFrame =
-    df.select(
-      keyCol.map(k => col(k).cast("string")).getOrElse(lit(null).cast("string")).as("key"),
-      to_json(struct(df.columns.map(col): _*)).as("value"),
-      tsCol.map(col).getOrElse(current_timestamp()).cast("timestamp").as("ts"))
 }
 
 object Topics {

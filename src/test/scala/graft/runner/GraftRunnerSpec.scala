@@ -2,9 +2,12 @@ package graft.runner
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.types.{DoubleType, LongType}
+
 import graft.SparkSpec
 import graft.datagen.TrafficPatterns
 import graft.statements.SqlStatement
+import graft.streaming.FileTopics
 
 /** End-to-end orchestrator run over a scaffolded project — the `pipegen
   * run` lifecycle (reference runner.go:169-448) against the file-backed
@@ -162,6 +165,68 @@ class GraftRunnerSpec extends SparkSpec {
     assert(res.produced == 30)
     assert(res.outputRows >= 30)
     assert(res.status == "SUCCESS")
+  }
+
+  /** `scaffold()` with its output schema fields and its INSERT replaced. */
+  private def scaffoldInsert(outputFields: String, insert: String): java.nio.file.Path = {
+    val dir = scaffold()
+    Files.writeString(dir.resolve("schemas/output_result.avsc"),
+      s"""{"type":"record","name":"OutputResult","namespace":"graft.generated",
+         |"fields":[$outputFields]}""".stripMargin)
+    Files.writeString(dir.resolve("sql/03_create_processing.sql"), insert)
+    dir
+  }
+
+  /** The payload struct as the output topic's Parquet files store it. */
+  private def storedPayload(runDir: java.nio.file.Path) =
+    spark.read.parquet(FileTopics(runDir.toString).topicDir("output-results")).select("value.*")
+
+  test("INSERT into a typed topic: a missing declared field is written null, an extra column dropped") {
+    val project = scaffoldInsert(
+      """{"name":"event_id","type":"string"},{"name":"boosted","type":"double"},
+        |{"name":"note","type":["null","string"]}""".stripMargin,
+      "INSERT INTO output_results SELECT event_id, score * 2 AS boosted, event_type AS extra " +
+        "FROM input_events")
+    val runDir = Files.createTempDirectory("graft-run")
+    val res = GraftRunner.run(spark, GraftRunner.Config(project, runDir,
+      messageRate = 20, durationMs = 1000, generateReport = false))
+    assert(res.outputRows == 20 && res.status == "SUCCESS")
+    val stored = storedPayload(runDir)
+    assert(stored.columns.toSeq == Seq("event_id", "boosted", "note"))
+    assert(stored.filter("note IS NOT NULL OR boosted IS NULL").count() == 0)
+  }
+
+  test("INSERT into a typed topic up-casts a narrower column to the declared type") {
+    val project = scaffoldInsert(
+      """{"name":"event_id","type":"string"},{"name":"n","type":"long"},
+        |{"name":"boosted","type":"double"}""".stripMargin,
+      "INSERT INTO output_results SELECT event_id, CAST(7 AS INT) AS n, " +
+        "CAST(score AS FLOAT) AS boosted FROM input_events")
+    val runDir = Files.createTempDirectory("graft-run")
+    val res = GraftRunner.run(spark, GraftRunner.Config(project, runDir,
+      messageRate = 20, durationMs = 1000, generateReport = false))
+    assert(res.outputRows == 20 && res.status == "SUCCESS")
+    val stored = storedPayload(runDir)
+    assert(stored.schema("n").dataType == LongType && stored.schema("boosted").dataType == DoubleType)
+    assert(stored.filter("n = 7 AND boosted IS NOT NULL").count() == 20)
+  }
+
+  test("INSERT of a column that cannot be up-cast to its topic's type fails the deploy, naming it") {
+    val project = scaffoldInsert(
+      """{"name":"event_id","type":"string"},{"name":"boosted","type":"int"}""",
+      "INSERT INTO output_results SELECT event_id, score * 2 AS boosted FROM input_events")
+    val runDir = Files.createTempDirectory("graft-run")
+    val e = intercept[IllegalArgumentException](GraftRunner.run(spark,
+      GraftRunner.Config(project, runDir, messageRate = 20, durationMs = 1000,
+        generateReport = false)))
+    Seq("output_results", "boosted", "double", "int").foreach(w =>
+      assert(e.getMessage.contains(w), e.getMessage))
+    // thrown before the producer ran: no topic holds a record
+    val topics = FileTopics(runDir.toString)
+    Seq("input-events", "output-results").foreach { t =>
+      val listing = Files.list(java.nio.file.Paths.get(topics.topicDir(t)))
+      try assert(listing.count() == 0, t) finally listing.close()
+    }
   }
 
   test("destructive statement aborts the run before deployment") {
