@@ -45,7 +45,9 @@ object Plans {
   // eagerly (localCheckpoint — cache-release discipline), so their own
   // entries show truncated checkpoint scans; the true candidate-
   // generation plans are audited via the operators' lazy forms
-  // (materialize = false keeps the full lineage visible and runs no job)
+  // (materialize = false keeps the full lineage visible and runs no job),
+  // each at Bench's parameters — lloydIters included, since a cheaper
+  // audit-only setting would audit a different plan than the one timed
   private def operatorPlans(spark: SparkSession,
                             sfDir: String): Seq[(String, () => DataFrame)] = {
     import graft.operators.{Dedup, Similarity}
@@ -62,7 +64,7 @@ object Plans {
           seed = 42, simThreshold = 0.3, materialize = false)),
       "op_sim_ann_ivf" -> (() =>
         Similarity.ivfNearDupPairs(Tables(spark, sfDir, "embeddings"),
-          "vec_id", "embedding", k = 8, probes = 3, lloydIters = 1,
+          "vec_id", "embedding", k = 8, probes = 3, lloydIters = 3,
           seed = 42, simThreshold = 0.3, materialize = false)),
       // SemDeDup's operator path (dedup_semdedup's gate arm is the brute
       // census): audit point is that candidate pairs carry only
@@ -70,7 +72,7 @@ object Plans {
       // per surviving candidate in the verify tail
       "op_semdedup" -> (() =>
         Similarity.semDedup(Tables(spark, sfDir, "embeddings"),
-          "vec_id", "embedding", k = 8, probes = 3, lloydIters = 1,
+          "vec_id", "embedding", k = 8, probes = 3, lloydIters = 3,
           seed = 42, tau = 0.3, materialize = false)),
       // the per-cell local-verification form: audit point is the single
       // member exchange (one row per vector per probed cell) feeding the
@@ -78,7 +80,7 @@ object Plans {
       // as array HOFs — no candidate join, no per-pair embedding payload
       "op_semdedup_local" -> (() =>
         Similarity.semDedupLocal(Tables(spark, sfDir, "embeddings"),
-          "vec_id", "embedding", k = 8, probes = 3, lloydIters = 1,
+          "vec_id", "embedding", k = 8, probes = 3, lloydIters = 3,
           seed = 42, tau = 0.3, materialize = false)),
       // the chunk-pair gather (r10 hot-cell form): audit point is the
       // 2·chunks-way member replication (targets + witnesses exploded
@@ -86,7 +88,7 @@ object Plans {
       // one exchange, no candidate join, same HOF verification
       "op_semdedup_chunked" -> (() =>
         Similarity.semDedupLocal(Tables(spark, sfDir, "embeddings"),
-          "vec_id", "embedding", k = 8, probes = 3, lloydIters = 1,
+          "vec_id", "embedding", k = 8, probes = 3, lloydIters = 3,
           seed = 42, tau = 0.3, materialize = false, chunks = 3)),
       // the auto-router runs its vocabulary-measuring job, then the plan
       // shows whichever strategy the corpus admits (bitmaps at sf0.01)
@@ -120,7 +122,7 @@ object Plans {
         val emb = Tables(spark, sfDir, "embeddings")
         val corpus = emb.filter(c("vec_id") % 10 =!= 0)
         val cents = Similarity.trainIvfCentroids(corpus, "vec_id",
-          "embedding", k = 8, lloydIters = 1, seed = 42)
+          "embedding", k = 8, lloydIters = 2, seed = 42)
         Similarity.semDedupAgainst(emb.filter(c("vec_id") % 10 === 0),
           corpus.withColumn("cell", org.apache.spark.sql.functions.element_at(
             graft.functions.ivfAssign(c("embedding"), cents, 1), 1)),

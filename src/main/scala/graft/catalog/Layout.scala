@@ -912,8 +912,8 @@ object Layout {
 
   // ===== incremental connected components (standing component map) =====
   //
-  // The batch operators (graft.operators.Dedup.connectedComponents*)
-  // recompute the labeling from the FULL edge list — correct for a one-shot
+  // The batch operator (graft.operators.Dedup.connectedComponents)
+  // recomputes the labeling from the FULL edge list — correct for a one-shot
   // job, wrong shape for the streaming loop, whose per-batch near-dup pairs
   // would force an ever-growing full-history CC per micro-batch. The
   // standing layout is the classic union-find split into two tables:
@@ -941,8 +941,8 @@ object Layout {
 
   /** Build a standing component map from an initial edge list (either
     * orientation, dups fine, self-loops ignored — the
-    * [[graft.operators.Dedup.connectedComponentsStar]] contract; ids of
-    * isolated documents are NOT stored, exactly like the batch operators:
+    * [[graft.operators.Dedup.connectedComponents]] contract; ids of
+    * isolated documents are NOT stored, exactly like the batch operator:
     * readers coalesce missing ids to themselves). `buckets` is
     * version-pinned layout metadata — appends must pass the same value. */
   def componentsIndex(spark: SparkSession, edges: DataFrame,
@@ -954,7 +954,7 @@ object Layout {
       dropTable(spark, s"$tableName$sfx")
       clearStreamOwner(spark, s"$tableName$sfx") // rebuild w/o drop (ADVICE r12)
     }
-    val comps = graft.operators.Dedup.connectedComponentsStar(
+    val comps = graft.operators.Dedup.connectedComponents(
       edges, srcCol, dstCol)
     comps.select(col("id"), col("component").as("root"))
       .repartition(buckets, col("id"))
@@ -975,8 +975,7 @@ object Layout {
     * merge chain. ONE join per round (ADVICE r12 low): the left join both
     * advances the frame and, via a `_hit` flag counted off the
     * checkpointed blocks, decides convergence — no separate inner-join
-    * job, half the per-round shuffle (the
-    * [[graft.operators.Dedup.connectedComponents]] discipline). The
+    * job, half the per-round shuffle. The
     * merge log itself is checkpointed once up front so its groupBy isn't
     * re-planned and re-read every round. */
   private def chaseParents(st: Storage.Scope, cur0: DataFrame,
@@ -1030,7 +1029,7 @@ object Layout {
     *  2. translate batch edge endpoints to those roots (unknown ids stay
     *     themselves); edges that collapse inside one standing component
     *     vanish;
-    *  3. run [[graft.operators.Dedup.connectedComponentsStar]] on the
+    *  3. run [[graft.operators.Dedup.connectedComponents]] on the
     *     translated edge set — batch-sized: its nodes are batch ids and
     *     the standing roots the batch touches;
     *  4. append (root → smaller new label) rows to the merge log for every
@@ -1079,7 +1078,7 @@ object Layout {
         coalesce(col("rv"), col("v")).as("tv"))
       .filter(col("tu") =!= col("tv"))
     val comps = mat(
-      graft.operators.Dedup.connectedComponentsStar(
+      graft.operators.Dedup.connectedComponents(
         translated, "tu", "tv")) // reused twice: merge rows + new-id rows
     // 4a. merge log: standing roots relabeled smaller by this batch
     val mergedRoots = comps

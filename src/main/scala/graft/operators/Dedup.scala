@@ -691,101 +691,31 @@ object Dedup {
     * pairwise matches into dedup GROUPS (component id = min member id, the
     * canonical document every pipeline keeps).
     *
-    * Iterative min-label propagation: each round every node takes the min
-    * of its own label and its neighbors' labels; convergence needs
-    * O(diameter) rounds. Dedup-cluster graphs have tiny diameters (near-dup
-    * groups are quasi-cliques — LSH/cosine edges connect most members
-    * directly), so 3–5 rounds settle real corpora; `maxIter` caps the
-    * worst case and the method throws rather than return a half-converged
-    * labeling. Each round is one shuffle join + one min-aggregate, both
-    * key-partitioned — no driver-side graph, no global sort; the per-round
-    * driver action is a single changed-count. (For adversarial
-    * long-chain graphs the upgrade is the large-star/small-star
-    * alternation, which converges in O(log n) rounds with the same
-    * join+min building blocks — implemented as
-    * [[connectedComponentsStar]].)
-    *
-    * Input: one row per undirected edge (either orientation, dups fine).
-    * Self-loops are ignored — they connect nothing, so a node whose only
-    * edge is (x, x) is treated as isolated and does NOT appear in the
-    * output (identical to [[connectedComponentsStar]]; round-4 fix — the
-    * two variants previously diverged on self-loop-only nodes).
-    * Output: (id, component) for every node appearing in a real edge —
-    * callers left-join isolated nodes back with coalesce(component, id). */
-  def connectedComponents(edges: DataFrame, srcCol: String, dstCol: String,
-                          maxIter: Int = 20): DataFrame = Storage.scoped { st =>
-    val fwd = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .filter(col("src") =!= col("dst"))
-    // eager materialization after each round: iterative plans otherwise
-    // accumulate lineage — by round ~10 the logical plan is exponentially
-    // nested and planning itself OOMs. Truncating lineage per round keeps
-    // every iteration's plan O(1). Storage behind the blocks is the
-    // engine storage tier (CC family default `disk`, Storage scaladoc).
-    // A non-convergence throw releases every round through the scope.
-    val und = st.materialize(
-      fwd.union(fwd.select(col("dst").as("src"), col("src").as("dst")))
-        .distinct(), "disk")
-    var labels = st.materialize(
-      und.select(col("src").as("id")).distinct()
-        .select(col("id"), col("id").as("component")), "disk")
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIter) {
-      // push each node's label to its neighbors, keep the min seen.
-      // ONE action per round (r15 session 2, the chaseParents one-join
-      // discipline): the prev-label comparison is folded INTO the
-      // materialized frame as a `__chg` flag, so convergence is read
-      // off the checkpointed blocks with a plain filter+count instead
-      // of a second join job re-reading `next` against `labels` —
-      // half the per-round job count, identical labels and identical
-      // round count (the flag is exactly the old join's predicate).
-      val cur = labels.select(col("id"), col("component"))
-      val pushed = und.join(cur, col("src") === col("id"))
-        .select(col("dst").as("id"), col("component"))
-      val next = st.materialize(
-        cur.union(pushed)
-          .groupBy(col("id")).agg(min(col("component")).as("component"))
-          .join(cur.select(col("id"), col("component").as("__prev")), "id")
-          .select(col("id"), col("component"),
-            (col("component") < col("__prev")).as("__chg")), "disk")
-      val changed = next.filter(col("__chg")).count() // local-block scan
-      // superseded round released deterministically (round-12): the
-      // blocks are otherwise freed only when ContextCleaner notices the
-      // frame is garbage, and across many CC calls in one session they
-      // crowd the block store of whatever runs next
-      st.release(labels)
-      labels = next
-      converged = changed == 0
-      iter += 1
-    }
-    require(converged, s"connectedComponents did not converge in $maxIter rounds")
-    // the flag column is selected away LAZILY over the final round's
-    // blocks, which leave the scope with the result
-    labels.select(col("id"), col("component"))
-  }
-
-  /** Connected components via alternating large-star / small-star — the
-    * O(log n)-round algorithm (public MapReduce-CC literature) that
-    * [[connectedComponents]]'s scaladoc names as the upgrade for
-    * adversarial long-chain graphs, where plain min-label propagation
-    * needs O(diameter) rounds.
-    *
-    * Each round is two join+aggregate steps over the edge list:
+    * Alternating large-star / small-star (Kiveris et al., SoCC 2014):
+    * O(log² n) rounds proven and about log n in practice, whatever the
+    * graph's diameter, where per-hop min-label propagation needs one
+    * round per hop of the longest chain. Each round is two
+    * join+aggregate steps over the edge list:
     *  - large-star: every node links its strictly-LARGER neighbors to the
     *    minimum of its neighborhood (incl. itself) — doubles the reach of
     *    small labels along chains;
     *  - small-star: every node links its smaller-or-equal neighbors (and
     *    itself) to that minimum — flattens local structure into stars.
     * Convergence = edge set stable (checked with a count + order-free
-    * xxhash64 checksum, two tiny aggregates per round); the converged set
-    * is exactly {(member, min(component)) : member != min}. Same
-    * localCheckpoint-per-round lineage discipline as the propagation
-    * variant.
+    * xxhash64 checksum in one aggregate per round); the converged set is
+    * exactly {(member, min(component)) : member != min}. `maxIter` caps
+    * the rounds and the method throws rather than return a half-converged
+    * labeling. Every round is materialized, which keeps each round's plan
+    * O(1) instead of nesting the whole iteration's lineage.
     *
-    * Output matches [[connectedComponents]]: (id, component) for every
-    * node with at least one edge, component = min member id. */
-  def connectedComponentsStar(edges: DataFrame, srcCol: String, dstCol: String,
-                              maxIter: Int = 50): DataFrame = Storage.scoped { st =>
+    * Input: one row per undirected edge (either orientation, dups fine).
+    * Self-loops are ignored — they connect nothing, so a node whose only
+    * edge is (x, x) is treated as isolated and does NOT appear in the
+    * output.
+    * Output: (id, component) for every node appearing in a real edge —
+    * callers left-join isolated nodes back with coalesce(component, id). */
+  def connectedComponents(edges: DataFrame, srcCol: String, dstCol: String,
+                          maxIter: Int = 50): DataFrame = Storage.scoped { st =>
     def checksum(e: DataFrame): (Long, Long) = {
       // bit_xor: order-free AND overflow-free (sum of hashes trips the
       // ANSI long-overflow check); edges are distinct so no XOR cancel
@@ -835,8 +765,7 @@ object Dedup {
       sig = next
       iter += 1
     }
-    require(converged,
-      s"connectedComponentsStar did not converge in $maxIter rounds")
+    require(converged, s"connectedComponents did not converge in $maxIter rounds")
     // converged stars: (member, min); add the centers labeling themselves.
     // The returned plan reads e's blocks, so they leave the scope with it
     // (session GC reclaims them via the ContextCleaner).
@@ -857,9 +786,8 @@ object Dedup {
     * non-canonical ids — the dropped-id side is a DISTINCT of component
     * members, proportional to duplicates found, not corpus size. */
   def dedupCorpus(df: DataFrame, idCol: String, pairs: DataFrame,
-                  srcCol: String = "id_a", dstCol: String = "id_b",
-                  maxIter: Int = 20): DataFrame = {
-    val comps = connectedComponents(pairs, srcCol, dstCol, maxIter)
+                  srcCol: String = "id_a", dstCol: String = "id_b"): DataFrame = {
+    val comps = connectedComponents(pairs, srcCol, dstCol)
     val drop = comps.filter(col("id") =!= col("component")).select(col("id"))
     df.join(drop, df(idCol) === drop("id"), "left_anti")
   }
@@ -878,9 +806,8 @@ object Dedup {
     * Non-matched documents pass through untouched. */
   def dedupCorpusByQuality(df: DataFrame, idCol: String, qualityCol: String,
                            pairs: DataFrame, srcCol: String = "id_a",
-                           dstCol: String = "id_b",
-                           maxIter: Int = 20): DataFrame = {
-    val comps = connectedComponents(pairs, srcCol, dstCol, maxIter)
+                           dstCol: String = "id_b"): DataFrame = {
+    val comps = connectedComponents(pairs, srcCol, dstCol)
     val members = df.select(col(idCol).cast("long").as("__id"),
         col(qualityCol).as("__q"))
       .join(comps, col("__id") === col("id"))

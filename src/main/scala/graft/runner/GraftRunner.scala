@@ -303,11 +303,11 @@ object GraftRunner {
         }
       }
 
-      // 9: validate output
-      val outputSchema = schemas.get("output").map(_.structType).getOrElse(inputSchema)
+      // 9: validate output — the topic was recreated in step 5, so an
+      // empty one reads as 0 rows; a failed read leaves `run`
       val (outputRows, validateMs) = timedMs {
-        try topics.readAll(spark, resources.outputTopic, outputSchema).count()
-        catch { case _: Exception => 0L }
+        topics.readAll(spark, resources.outputTopic,
+          schemaForTopic(resources.outputTopic)).count()
       }
 
       val status =

@@ -8,10 +8,10 @@ import graft.operators.Dedup
 
 /** The standing component map ([[Layout.componentsIndex]] family) — the
   * incremental union-find the streaming loop needs where the batch
-  * operators would recompute the full-history CC per micro-batch.
+  * operator would recompute the full-history CC per micro-batch.
   *
   * The load-bearing invariant: folding ANY batching of an edge list must
-  * resolve to exactly the one-shot [[Dedup.connectedComponentsStar]]
+  * resolve to exactly the one-shot [[Dedup.connectedComponents]]
   * labeling of the union — including across merge chains (a root merged
   * under a smaller root merged under a yet smaller one), compactions, and
   * replays.
@@ -28,7 +28,7 @@ class ComponentsIndexSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
 
   private def batchMap(all: DataFrame): Map[Long, Long] =
-    Dedup.connectedComponentsStar(all, "a", "b")
+    Dedup.connectedComponents(all, "a", "b")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
 
   test("batched folds resolve to the one-shot labeling, across merge chains") {

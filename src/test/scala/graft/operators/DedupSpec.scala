@@ -311,15 +311,12 @@ class DedupSpec extends SparkSpec {
   test("self-loop-only nodes are ignored identically by both components variants") {
     val sp = spark
     import sp.implicits._
-    // node 3's only edge is a self-loop; both variants must drop it (the
-    // caller's left-join + coalesce labels it with its own id)
+    // node 3's only edge is a self-loop, so it is dropped (the caller's
+    // left-join + coalesce labels it with its own id)
     val edges = Seq((1L, 2L), (3L, 3L), (2L, 2L)).toDF("id_a", "id_b")
-    val prop = Dedup.connectedComponents(edges, "id_a", "id_b")
+    val got = Dedup.connectedComponents(edges, "id_a", "id_b")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val star = Dedup.connectedComponentsStar(edges, "id_a", "id_b")
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(prop == Map(1L -> 1L, 2L -> 1L))
-    assert(star == prop)
+    assert(got == Map(1L -> 1L, 2L -> 1L))
   }
 
   test("connectedComponents matches a local union-find on random graphs") {
@@ -349,7 +346,7 @@ class DedupSpec extends SparkSpec {
     }
   }
 
-  test("connectedComponentsStar matches union-find on random graphs and long chains") {
+  test("connectedComponents matches union-find on random graphs and long chains") {
     val sp = spark
     import sp.implicits._
     val rng = new scala.util.Random(47)
@@ -368,13 +365,9 @@ class DedupSpec extends SparkSpec {
       }
       val expect = edges.flatMap(e => Seq(e._1, e._2)).distinct
         .map(id => id -> find(id.toInt).toLong).toMap
-      val got = Dedup.connectedComponentsStar(edges.toDF("id_a", "id_b"), "id_a", "id_b")
+      val got = Dedup.connectedComponents(edges.toDF("id_a", "id_b"), "id_a", "id_b")
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(got == expect, s"case $ci mismatch")
-      // and the two CC implementations agree
-      val prop = Dedup.connectedComponents(edges.toDF("id_a", "id_b"), "id_a", "id_b", 64)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(got == prop, s"case $ci: star vs propagation mismatch")
     }
   }
 
@@ -386,6 +379,17 @@ class DedupSpec extends SparkSpec {
     val kept = Dedup.dedupCorpus(corpus, "doc_id", pairs)
       .select(col("doc_id")).collect().map(_.getLong(0)).toSet
     assert(kept == Set(1L, 4L, 5L, 6L, 7L, 9L, 10L, 11L, 12L))
+  }
+
+  test("dedupCorpus over a 40-node chain keeps only its min id") {
+    val sp = spark
+    import sp.implicits._
+    // a chain's diameter is 39: a per-hop labeling would need ~40 rounds
+    val corpus = (1L to 40L).map(i => (i, s"doc_$i")).toDF("doc_id", "body")
+    val pairs = (1L until 40L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val kept = Dedup.dedupCorpus(corpus, "doc_id", pairs)
+      .select(col("doc_id")).collect().map(_.getLong(0)).toSet
+    assert(kept == Set(1L))
   }
 
   test("connectedComponents converges on a long chain and enforces maxIter") {
@@ -582,18 +586,13 @@ class DedupSpec extends SparkSpec {
     // a leak means a NEW rdd id created during the call survives it
     def persisted = spark.sparkContext.getPersistentRDDs.keySet
     val before = persisted
-    // label propagation needs ~|chain| rounds; maxIter=2 throws, and the
-    // finally block must release und + the current labels frame — a
-    // session repeatedly hitting the error must not accumulate blocks
+    // one round cannot settle a chain; maxIter=1 throws, and the scope
+    // must release the edge and round frames — a session repeatedly
+    // hitting the error must not accumulate blocks
     intercept[IllegalArgumentException] {
-      Dedup.connectedComponents(chain, "id_a", "id_b", maxIter = 2)
+      Dedup.connectedComponents(chain, "id_a", "id_b", maxIter = 1)
     }
     assert((persisted -- before).isEmpty,
-      s"label-propagation error path leaked checkpoint blocks: ${persisted -- before}")
-    intercept[IllegalArgumentException] {
-      Dedup.connectedComponentsStar(chain, "id_a", "id_b", maxIter = 1)
-    }
-    assert((persisted -- before).isEmpty,
-      s"star error path leaked checkpoint blocks: ${persisted -- before}")
+      s"error path leaked checkpoint blocks: ${persisted -- before}")
   }
 }

@@ -229,6 +229,23 @@ class GraftRunnerSpec extends SparkSpec {
     }
   }
 
+  test("a failed read of the output topic fails the run, naming the topic, after cleanup") {
+    // the project's own DDL writes JSON files into the output topic's
+    // directory after step 5 recreated it; the validating read refuses them
+    val project = scaffold()
+    Files.writeString(project.resolve("sql/04_plant_json.sql"),
+      "CREATE TABLE planted_json USING json " +
+        "LOCATION '${BOOTSTRAP_SERVERS}/topics/${OUTPUT_TOPIC}' AS SELECT 1 AS a")
+    val cfg = GraftRunner.Config(project, Files.createTempDirectory("graft-run"),
+      messageRate = 20, durationMs = 1000, generateReport = false)
+    try {
+      val e = intercept[IllegalStateException](GraftRunner.run(spark, cfg))
+      assert(e.getMessage.contains("output-results"), e.getMessage)
+      assert(spark.streams.active.isEmpty)
+      assert(!spark.catalog.tableExists("output_results"))
+    } finally spark.sql("DROP TABLE IF EXISTS planted_json")
+  }
+
   test("destructive statement aborts the run before deployment") {
     val project = scaffold()
     Files.writeString(project.resolve("sql/00_evil.sql"), "DELETE FROM input_events")
