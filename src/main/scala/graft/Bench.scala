@@ -59,17 +59,11 @@ object Bench {
       Similarity.semDedup(Tables(s, dir, "embeddings"),
         "vec_id", "embedding",
         k = 8, probes = 3, lloydIters = 3, seed = 42, tau = 0.3)),
-    // the per-cell local-verification path of dedup_semdedup_local
-    // without its brute census arm
-    "op_semdedup_local" -> ((s, dir) =>
-      Similarity.semDedupLocal(Tables(s, dir, "embeddings"),
-        "vec_id", "embedding",
-        k = 8, probes = 3, lloydIters = 3, seed = 42, tau = 0.3)),
     // the chunk-pair gather path of dedup_semdedup_chunked without its
     // brute census arm: the hot-cell mitigation's steady-state overhead
-    // vs op_semdedup_local is the 2·chunks member-copy factor
+    // vs op_semdedup is the 2·chunks member-copy factor
     "op_semdedup_chunked" -> ((s, dir) =>
-      Similarity.semDedupLocal(Tables(s, dir, "embeddings"),
+      Similarity.semDedup(Tables(s, dir, "embeddings"),
         "vec_id", "embedding",
         k = 8, probes = 3, lloydIters = 3, seed = 42, tau = 0.3,
         chunks = 3)),
@@ -124,21 +118,21 @@ object Bench {
     // complete intake-to-training-layout cost
     "op_pipeline_pack" -> ((s, dir) =>
       pipelineOp(s, dir, subDocStages = true, trainerTail = true)),
-    // sequential vs batched BPE merge selection over the corpus vocab:
-    // identical 24-merge output here (weight gaps keep created pairs
-    // from overtaking), but the batched route runs ~batchK× fewer
-    // sequential driver jobs — the production-vocabulary cost story
     // the steady-state incremental-components cost: ONE batch folded
     // into a STANDING component map (built on the first rep, the
     // op_pipeline standing-index convention) + the resolve read. The
     // dedup_components_incr gate (contract_arms) rebuilds the whole
     // index 3 ways with a compaction — choreography, not operator cost.
     "op_components_fold" -> ((s, dir) => componentsFoldOp(s, dir)),
+    // sequential vs batched BPE merge selection over the corpus vocab:
+    // identical 24-merge output here (weight gaps keep created pairs
+    // from overtaking), but batchK = 8 runs ~8× fewer sequential driver
+    // jobs — the production-vocabulary cost story
     "op_bpe_train" -> ((s, dir) =>
       graft.operators.Bpe.train(bpeWords(s, dir), "word", "weight",
         numMerges = 24, minPairCount = 1L)),
     "op_bpe_train_batched" -> ((s, dir) =>
-      graft.operators.Bpe.trainBatched(bpeWords(s, dir), "word", "weight",
+      graft.operators.Bpe.train(bpeWords(s, dir), "word", "weight",
         numMerges = 24, batchK = 8, minPairCount = 1L)),
     // the r14 per-row winnow fingerprinting pass alone (lazy form — the
     // text_winnow gate adds the eager checkpoint + export sort): the
@@ -290,9 +284,8 @@ object Bench {
     "dedup_semdedup_incr",    // exact batch×(corpus ∪ preceding-batch)
                               // cross census arm (r9); operator path
                               // alone is op_semdedup_incr
-    "dedup_semdedup_local",   // same global brute census arm as
-                              // dedup_semdedup (r9); operator path
-                              // alone is op_semdedup_local
+    "dedup_semdedup_local",   // alias of dedup_semdedup
+                              // (SparkEntry.aliases)
     "dedup_semdedup_chunked", // same arm again for the chunk-pair
                               // gather (r10); operator path alone is
                               // op_semdedup_chunked
@@ -342,6 +335,20 @@ object Bench {
       }
       Timing(name, if (failed) Nil else times.sorted.toSeq, failed)
     }
+
+  /** [[timeEntries]] over the named `queries`, timing each ALIAS
+    * (a key of `aliases`, see SparkEntry.aliases) through its target: a
+    * target runs once however many of `names` map to it, and every name
+    * is reported with that timing under its own key. */
+  def timeAliased(spark: SparkSession, sfDir: String, reps: Int, names: Seq[String],
+                  queries: Map[String, (SparkSession, String) => DataFrame],
+                  aliases: Map[String, String]): Seq[Timing] = {
+    def target(n: String) = aliases.getOrElse(n, n)
+    val timed = timeEntries(spark, sfDir, reps,
+        names.map(target).distinct.map(t => t -> queries(t)))
+      .map(t => t.name -> t).toMap
+    names.sorted.map(n => timed(target(n)).copy(name = n))
+  }
 
   /** Inter-rep hygiene, outside every timed window. */
   private def settle(spark: SparkSession): Unit = {
@@ -449,35 +456,30 @@ object Bench {
     catch { case NonFatal(_) => () }
 
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-    def time(entries: Seq[(String, (SparkSession, String) => DataFrame)]) =
-      timeEntries(spark, sfDir, reps, entries)
     // dev-only narrowing (the driver always runs the full bench):
     // SPARK_GRAFT_BENCH_ONLY=name1,name2 re-measures just those queries —
     // the isolation tool for telling a real per-query regression from
     // box drift
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).toSet)
-    val selected = only match {
-      case None => SparkEntry.queries.toSeq
-      case Some(names) => SparkEntry.queries.toSeq.filter(e => names(e._1))
-    }
-    val (armEntries, engineEntries) =
-      selected.partition(e => contractArmQueries(e._1))
-    val results = time(engineEntries)
+    val queries = SparkEntry.queries
+    def timeQueries(names: Seq[String]) =
+      timeAliased(spark, sfDir, reps, names, queries, SparkEntry.aliases)
+    val (armNames, engineNames) = queries.keys.toSeq
+      .filter(n => only.forall(_(n))).partition(contractArmQueries)
+    val results = timeQueries(engineNames)
     // the exact-arm GATE queries go in a separate key too (round-6 verdict
     // "next round" #2): each deliberately runs a brute-force contract arm
     // (full cross-pair set, exact top-k, recall census) NEXT TO the
     // operator so correctness is self-verifying — their wall time measures
     // the gate, not the engine. Their operator paths are timed under op_*.
-    val armResults = time(armEntries)
+    val armResults = timeQueries(armNames)
     // the op_* diagnostics go in a SEPARATE key: their cost is already
     // inside the gate queries' timings (the gates run operator + exact
     // contract arm), so folding them into `total` would double-count the
     // operators and break round-over-round comparability of the headline.
-    val opResults = time(only match {
-      case None => operatorBenches.toSeq
-      case Some(names) => operatorBenches.toSeq.filter(e => names(e._1))
-    })
+    val opResults = timeEntries(spark, sfDir, reps,
+      operatorBenches.toSeq.filter(e => only.forall(_(e._1))))
     val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
     val (full, summary) = report(results, armResults, opResults, reps, only, out, sfDir)
     java.nio.file.Files.write(java.nio.file.Paths.get(out),

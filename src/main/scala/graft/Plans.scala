@@ -29,7 +29,7 @@ object Plans {
 
   /** One BPE training iteration as a single lazy plan: the text_bpe_train
     * vocabulary, split to symbols, pair census, top-`limit` TakeOrdered
-    * (1 = sequential argmax, 4·batchK = the batched candidate pull). */
+    * (`Bpe.train` pulls 4·batchK candidates per scan). */
   private def bpeIterationPlan(spark: SparkSession, sfDir: String,
                                limit: Int): DataFrame = {
     import org.apache.spark.sql.functions.{col, split}
@@ -67,19 +67,12 @@ object Plans {
           "vec_id", "embedding", k = 8, probes = 3, lloydIters = 3,
           seed = 42, simThreshold = 0.3, materialize = false)),
       // SemDeDup's operator path (dedup_semdedup's gate arm is the brute
-      // census): audit point is that candidate pairs carry only
-      // (id, order-key) through the cell self-join — embeddings join back
-      // per surviving candidate in the verify tail
+      // census): audit point is the single member exchange (one row per
+      // vector per probed cell) feeding the collect_list gather, with the
+      // pairwise cosine INSIDE the group as array HOFs — no candidate
+      // join, no per-pair embedding payload
       "op_semdedup" -> (() =>
         Similarity.semDedup(Tables(spark, sfDir, "embeddings"),
-          "vec_id", "embedding", k = 8, probes = 3, lloydIters = 3,
-          seed = 42, tau = 0.3, materialize = false)),
-      // the per-cell local-verification form: audit point is the single
-      // member exchange (one row per vector per probed cell) feeding the
-      // collect_list gather, with the pairwise cosine INSIDE the group
-      // as array HOFs — no candidate join, no per-pair embedding payload
-      "op_semdedup_local" -> (() =>
-        Similarity.semDedupLocal(Tables(spark, sfDir, "embeddings"),
           "vec_id", "embedding", k = 8, probes = 3, lloydIters = 3,
           seed = 42, tau = 0.3, materialize = false)),
       // the chunk-pair gather (r10 hot-cell form): audit point is the
@@ -87,7 +80,7 @@ object Plans {
       // over chunk ids) feeding a (cell, cw, ct)-keyed gather — still
       // one exchange, no candidate join, same HOF verification
       "op_semdedup_chunked" -> (() =>
-        Similarity.semDedupLocal(Tables(spark, sfDir, "embeddings"),
+        Similarity.semDedup(Tables(spark, sfDir, "embeddings"),
           "vec_id", "embedding", k = 8, probes = 3, lloydIters = 3,
           seed = 42, tau = 0.3, materialize = false, chunks = 3)),
       // the auto-router runs its vocabulary-measuring job, then the plan
@@ -114,7 +107,8 @@ object Plans {
       // the incremental SemDeDup probe path (dedup_semdedup_incr's
       // operator arm, shared shape with Bench's op entry): audit point is
       // the batch-side-only assignment + the corpus cells joining in
-      // place and embeddings riding the candidate join once. The frame
+      // place and embeddings riding the candidate join once; the
+      // intra-batch pass is op_semdedup's gather. The frame
       // form is audited; the partition-pruned table form's scan shape is
       // LayoutSpec-asserted.
       "op_semdedup_incr" -> (() => {
@@ -143,9 +137,9 @@ object Plans {
       // sequential vs batched BPE: the driver loop sits outside any one
       // plan, so the audit covers the per-iteration shape both share —
       // word count → symbol split → pair census (hash agg with map-side
-      // partial combine) → k-bounded TakeOrdered argmax; the batched
-      // route's only plan difference is the limit (1 vs 4·batchK)
-      "op_bpe_train" -> (() => bpeIterationPlan(spark, sfDir, limit = 1)),
+      // partial combine) → k-bounded TakeOrdered argmax; batchK = 1 and
+      // 8 differ only in the limit (4 vs 32)
+      "op_bpe_train" -> (() => bpeIterationPlan(spark, sfDir, limit = 4)),
       "op_bpe_train_batched" -> (() =>
         bpeIterationPlan(spark, sfDir, limit = 32)),
       // the r14 per-row winnow fingerprinting in its LAZY form (the

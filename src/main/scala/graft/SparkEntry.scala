@@ -22,14 +22,25 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("q03_tpch_q1_agg")(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
+  /** Query names kept only because the oracle's query set is frozen,
+    * each mapped to the query it now is: an alias runs its target's
+    * query and is checked against its target's oracle. */
+  val aliases: Map[String, String] = Map(
+    "dedup_components_star" -> "dedup_components",
+    "dedup_semdedup_local" -> "dedup_semdedup")
+
+  /** One entry per implemented operator from SURVEY.md §2, aliases
+    * included. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    packs.flatMap(_.queries).toMap
+    withAliases(packs.flatMap(_.queries).toMap)
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops
     * (approximate LSH/SimHash candidates, mapPartitions stubs) → driver
     * records a weaker rows-only check. */
   def oracleSql: Map[String, String] =
-    packs.flatMap(_.oracles).toMap
+    withAliases(packs.flatMap(_.oracles).toMap)
+
+  private def withAliases[V](byName: Map[String, V]): Map[String, V] =
+    byName ++ aliases.map { case (alias, target) => alias -> byName(target) }
 }

@@ -19,14 +19,14 @@ import graft.functions.tokens
   *  1. one codegen'd scan of the vocab table exploding adjacent symbol
   *     pairs weighted by word frequency, into a hash aggregation with
   *     map-side partial combine (the pair space is vocab-bounded);
-  *  2. a 1-row `orderBy(...).limit(1)` TakeOrdered — the argmax pair —
-  *     collected to the driver. This is a k-bounded driver action
-  *     (k = numMerges rows over the whole run), not a corpus collect;
+  *  2. a `orderBy(...).limit(4·batchK)` TakeOrdered — the argmax pair
+  *     and its runners-up — collected to the driver. This is a k-bounded
+  *     driver action, not a corpus collect;
   *  3. a per-row fold rewriting each word's symbol array, merging the
   *     chosen pair left-to-right without overlap (pure expression work).
   *
   * Lineage is capped with `localCheckpoint` every `checkpointEvery`
-  * merges — without it the plan nests `numMerges` folds and analysis
+  * scans — without it the plan nests `numMerges` folds and analysis
   * time goes quadratic. Ties at the argmax break deterministically by
   * (weight DESC, left ASC, right ASC), so training is reproducible and
   * engine-independent.
@@ -105,69 +105,28 @@ object Bpe {
     * is the first, highest-frequency merge, `weight` the pair's corpus
     * frequency AT SELECTION TIME (an exactly-recomputable training anchor
     * — the oracle gate re-derives it per iteration). Deterministic (see
-    * object scaladoc for the tie rule and the per-iteration plan shape). */
-  def train(words: DataFrame, wordCol: String, weightCol: String,
-            numMerges: Int, minPairCount: Long = 2L,
-            checkpointEvery: Int = 8): DataFrame = graft.Storage.scoped { st =>
-    require(numMerges >= 1, s"numMerges must be >= 1, got $numMerges")
-    val spark = words.sparkSession
-    import spark.implicits._
-    var base = st.materialize(words
-      .select(split(col(wordCol), "").as("syms"),
-        col(weightCol).cast("long").as("weight")))
-    // merges since the last checkpoint ride in ONE BpeApplyMergesExpr
-    // (r15): the census plan's SOURCE is then identical at every
-    // iteration (the list lives in the expression object, not the
-    // tree), so whole-stage codegen compiles once per checkpoint window
-    // instead of once per merge, and each pass rewrites a word in
-    // O(symbols) instead of the chained fold's O(symbols²) appends.
-    // Selection order, censuses and the merge table are unchanged
-    // (SubDocSpec: naive-reference parity, expression-vs-fold pin).
-    val pending = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-    def symsNow: DataFrame =
-      if (pending.isEmpty) base
-      else base.withColumn("syms",
-        graft.functions.bpeApplyMerges(col("syms"), pending.toList))
-    val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
-    var done = false
-    while (merges.size < numMerges && !done) {
-      val top = pairCounts(symsNow)
-        .orderBy(col("w").desc, col("a"), col("b")).limit(1).collect()
-      if (top.isEmpty || top(0).getLong(2) < minPairCount) done = true
-      else {
-        val (a, b, w) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
-        merges += ((merges.size + 1, a, b, w))
-        pending += ((a, b))
-        if (merges.size % checkpointEvery == 0) {
-          val superseded = base
-          base = st.materialize(symsNow)
-          st.release(superseded)
-          pending.clear()
-        }
-      }
-    }
-    merges.toSeq.toDF("rank", "left", "right", "weight")
-  }
-
-  /** [[train]] with BATCHED merge selection — the production-vocabulary
-    * route (round-7 verdict "what's wrong" #3): a 30k-merge vocabulary
-    * under the reference 1-per-iteration loop is ~2 sequential Spark
-    * jobs per merge; here each vocab scan selects up to `batchK`
-    * mutually NON-INTERACTING pairs (no shared symbol — their censuses
-    * are invariant under each other's application, so applying them in
-    * one chained fold is order-independent) and applies them together,
-    * cutting the driver-loop job count ~batchK×.
+    * object scaladoc for the tie rule and the per-iteration plan shape).
     *
-    * Semantics: this is the standard parallel-BPE approximation. For
-    * pairs selected in one batch, merged-pair counts are exact (symbol-
-    * disjointness ⇒ census invariance), but a pair CREATED by an earlier
-    * selection (e.g. (ab, c) after merging (a, b)) cannot be seen until
-    * the next scan — sequential [[train]] could rank it above the
+    * `batchK` is the number of merges one vocab scan may select. With
+    * `batchK` = 1 (the default) training is the exact sequential
+    * reference: one argmax per scan (SubDocSpec: naive-reference
+    * parity). `batchK` > 1 is the production-vocabulary route (round-7
+    * verdict "what's wrong" #3): a 30k-merge vocabulary at one merge per
+    * scan is ~2 sequential Spark jobs per merge; here each scan selects
+    * up to `batchK` mutually NON-INTERACTING pairs (no shared symbol —
+    * their censuses are invariant under each other's application, so
+    * applying them in one chained fold is order-independent) and applies
+    * them together, cutting the driver-loop job count ~batchK×.
+    *
+    * Semantics at `batchK` > 1: the standard parallel-BPE approximation.
+    * For pairs selected in one batch, merged-pair counts are exact
+    * (symbol-disjointness ⇒ census invariance), but a pair CREATED by an
+    * earlier selection (e.g. (ab, c) after merging (a, b)) cannot be seen
+    * until the next scan — one merge per scan could rank it above the
     * batch's later picks. Where no created pair overtakes (typical for
     * real corpora, where adjacent ranks differ in weight), the merge
-    * tables coincide — spec-asserted on such fixtures, with `batchK = 1`
-    * degenerating to [[train]]'s exact sequence. Selection is greedy
-    * over the (weight DESC, pair ASC) order, so output stays
+    * tables coincide — spec-asserted on such fixtures. Selection is
+    * greedy over the (weight DESC, pair ASC) order, so output stays
     * deterministic and partition-invariant. Candidates come from a
     * `limit(4·batchK)` TakeOrdered — still a k-bounded driver action.
     *
@@ -179,12 +138,13 @@ object Bpe {
     * overtaking needs a created pair's count to beat a same-scan
     * candidate, i.e. adjacent ranks closer than the created pair's
     * mass; pick batchK well under the corpus's typical same-weight run
-    * length (8 is conservative for Zipfian word frequencies), and use
+    * length (8 is conservative for Zipfian word frequencies), and keep
     * batchK = 1 where exact reference parity matters more than the
-    * ~batchK× scan saving. */
-  def trainBatched(words: DataFrame, wordCol: String, weightCol: String,
-                   numMerges: Int, batchK: Int = 8, minPairCount: Long = 2L,
-                   checkpointEvery: Int = 8): DataFrame = graft.Storage.scoped { st =>
+    * ~batchK× scan saving. Lineage is capped every `checkpointEvery`
+    * scans. */
+  def train(words: DataFrame, wordCol: String, weightCol: String,
+            numMerges: Int, minPairCount: Long = 2L,
+            checkpointEvery: Int = 8, batchK: Int = 1): DataFrame = graft.Storage.scoped { st =>
     require(numMerges >= 1, s"numMerges must be >= 1, got $numMerges")
     require(batchK >= 1, s"batchK must be >= 1, got $batchK")
     val spark = words.sparkSession
@@ -192,8 +152,12 @@ object Bpe {
     var base = st.materialize(words
       .select(split(col(wordCol), "").as("syms"),
         col(weightCol).cast("long").as("weight")))
-    // same pending-merges discipline as [[train]] (r15): one
-    // BpeApplyMergesExpr carries every merge since the last checkpoint
+    // merges since the last checkpoint ride in ONE BpeApplyMergesExpr
+    // (r15): the census plan's SOURCE is then identical at every
+    // iteration (the list lives in the expression object, not the
+    // tree), so whole-stage codegen compiles once per checkpoint window
+    // instead of once per merge, and each pass rewrites a word in
+    // O(symbols) instead of the chained fold's O(symbols²) appends.
     val pending = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
     def symsNow: DataFrame =
       if (pending.isEmpty) base

@@ -566,37 +566,15 @@ object Dedup {
       .filter(col("jaccard") >= threshold)
   }
 
-  /** Exact Jaccard via dense-dictionary bitmaps (bounded-vocabulary path).
-    *
-    * Set intersection for a candidate pair is popcount(AND) — a codegen'd
-    * primitive loop (BitAndCountExpr), thousands of times cheaper than the
-    * round-1 inverted-index self-join, whose hot-shingle groups exploded
-    * to sum(df²) ≈ 73M rows at sf0.1. Exactly the same result set as
-    * brute-force Jaccard, so the DuckDB oracle stays the plain formulation.
-    *
-    * `maxVocab` (round-11 broadcast audit): the dictionary is BROADCAST
-    * and every document carries a V-bit bitmap, so an oversized
-    * vocabulary fails this path by construction — the routed entry
-    * ([[jaccardPairs]]) measures the vocabulary first and never
-    * sends an unbounded one here, but a direct caller used to get an
-    * opaque executor OOM instead of this actionable error (the
-    * semDedupLocal `maxCellRows` discipline). */
-  def jaccardBitmapPairs(df: DataFrame, idCol: String, textCol: String,
-                         shingleN: Int, threshold: Double,
-                         maxVocab: Long = 1L << 22,
-                         unicodeForm: Option[String] = None): DataFrame = Storage.scoped { st =>
-    val sh = shingleRows(df, idCol, textCol, shingleN, unicodeForm)
-    val (dict, vocab) = denseDictionary(st, sh,
-      df.sparkSession.sparkContext.defaultParallelism)
-    require(vocab <= maxVocab,
-      s"jaccardBitmapPairs: measured shingle vocabulary $vocab exceeds " +
-        s"maxVocab=$maxVocab — the dense-dictionary broadcast and per-doc " +
-        s"bitmaps are vocabulary-sized; use the inverted-index path " +
-        s"(jaccardPairs routes on measured vocab) or raise maxVocab " +
-        s"deliberately")
-    jaccardBitmapFrom(st, sh, dict, vocab.toInt, threshold)
-  }
-
+  /** Exact Jaccard via dense-dictionary bitmaps — [[jaccardPairs]]'s
+    * bounded-vocabulary route. Set intersection for a candidate pair is
+    * popcount(AND) — a codegen'd primitive loop (BitAndCountExpr),
+    * thousands of times cheaper than the round-1 inverted-index
+    * self-join, whose hot-shingle groups exploded to sum(df²) ≈ 73M rows
+    * at sf0.1. Exactly the same result set as brute-force Jaccard, so the
+    * DuckDB oracle stays the plain formulation. The dictionary is
+    * BROADCAST and every document carries a `v`-bit bitmap, so the
+    * caller must have measured `v` against its vocabulary gate. */
   private def jaccardBitmapFrom(st: Storage.Scope, sh: DataFrame,
                                 dict: DataFrame, v: Int,
                                 threshold: Double): DataFrame = {
@@ -654,7 +632,8 @@ object Dedup {
       .filter(col("jaccard") >= threshold)
   }
 
-  /** Exact Jaccard via the inverted index (unbounded-vocabulary path):
+  /** Exact Jaccard via the inverted index — [[jaccardPairs]]'s
+    * unbounded-vocabulary, low-threshold route:
     * self-join on the shingle (a hash shuffle on `sh` — the index), count
     * rows per surviving pair = |intersection|, union by
     * |A| + |B| − |A∩B|. No V-sized structure anywhere, so the vocabulary
@@ -665,12 +644,6 @@ object Dedup {
     * (document-frequency cap), which changes semantics and is therefore
     * not silently applied here.
     */
-  def jaccardInvertedPairs(df: DataFrame, idCol: String, textCol: String,
-                           shingleN: Int, threshold: Double,
-                           unicodeForm: Option[String] = None): DataFrame =
-    jaccardInvertedFrom(shingleRows(df, idCol, textCol, shingleN, unicodeForm),
-      threshold)
-
   private def jaccardInvertedFrom(sh: DataFrame, threshold: Double): DataFrame = {
     val sz = sh.groupBy(col("id")).agg(count(lit(1)).as("sz"))
     val inter = sh.toDF("id_a", "sh")
@@ -835,7 +808,8 @@ object Dedup {
     *    most d positions. Candidates = equi-join on the gram with
     *    position band `|posA - posB| <= d` and length filter
     *    `|lenA - lenB| <= d` — an inverted q-gram index, the same
-    *    explode → shuffle-on-token shape as [[jaccardInvertedPairs]],
+    *    explode → shuffle-on-token shape as [[jaccardPairs]]'s
+    *    inverted-index route,
     *    with per-gram fanout bounded by gram selectivity, never corpus
     *    size. Completeness of the generator is the pigeonhole above; the
     *    exact `levenshtein` verify (codegen'd, per candidate) makes

@@ -554,16 +554,33 @@ object Similarity {
     * boundary — the clustered-removal set stays a subset of the global
     * rule (a same-cell neighbor is still a real neighbor), recall just
     * rises. Output: one row per input vector — (id, cell, cent_sim,
-    * kept) with `cell` the primary (nearest) centroid.
+    * kept) with `cell` the primary (nearest) centroid. Zero-norm vectors
+    * have no direction, join no group, and are always kept.
     *
     * 100 TB shape (the paper's own cost model): candidate work is
     * Σ cell² — size k ≈ √N so cells hold ~√N vectors, train centroids on
     * a `trainFraction` sample (scan-side filter, no shuffle) and assign
     * the full corpus map-side (the k×dim centroid matrix rides in the
-    * plan). The pair join shuffles (cell, id, order-key) rows only;
-    * embeddings join back per surviving candidate inside [[verifyPairs]];
-    * AQE skew-join splits hot cells. Zero-norm vectors have no direction,
-    * join no pairs, and are always kept.
+    * plan). Verification is PER-CELL LOCAL ([[keepFirstRemoved]]): each
+    * vector ships ONCE per probed cell, cells gather with collect_list,
+    * and the pairwise decimal-gated cosine runs inside each group. A
+    * candidate join would ship two embeddings per pair instead — ~1 KB
+    * per pair, ~230 GB of shuffle at the 234M-pair 100× geometry against
+    * ~0.3 GB gathered (SCALE.md r9). A cell's group must fit an executor
+    * (~cell_size × dim×8 B — size k to the corpus).
+    *
+    * `chunks` ≥ 2 is the HOT-CELL mitigation: cell members are
+    * hash-split into `chunks` buckets by id and the gather runs per CHUNK
+    * PAIR, so a mega-cell of n rows becomes chunks² independent tasks of
+    * ≤ (n/chunks)² comparisons over ≤ 2n/chunks gathered rows — task
+    * COUNT absorbs the skew (the SCALE.md semdedup_hotcell tier). Same
+    * answer as `chunks` = 1 (spec-asserted on both fixtures, both keep
+    * orders); payload cost is 2·chunks copies per (vector, probed cell).
+    *
+    * `maxCellRows` > 0 arms an upfront guard (one cheap count over the
+    * member rows): if any probed cell exceeds it, fail fast with the
+    * offending cell, its size, and the remedies — rather than an opaque
+    * executor OOM mid-gather.
     *
     * Reference analog: none (no embedding ops in the reference) — a
     * training-data north-star operator. */
@@ -571,117 +588,52 @@ object Similarity {
                k: Int, probes: Int, lloydIters: Int, seed: Long,
                tau: Double, keepBy: String = "id",
                trainFraction: Double = 1.0,
-               materialize: Boolean = true): DataFrame = Storage.scoped { s =>
-    require(keepBy == "id" || keepBy == "centroid",
-      s"keepBy must be 'id' or 'centroid', got '$keepBy'")
-    val cents = trainIvfCentroids(df, idCol, embCol, k, lloydIters, seed,
-      trainFraction)
-    // cached: feeds the assignment self-join and both verify joins
-    val base = s.cache(df.select(col(idCol).as("id"), col(embCol).as("emb"),
-        l2NormSq(col(embCol)).as("nsq")))
-    // cent_sim = cosine to the PRIMARY centroid == max over cells (the
-    // assignment is the argmax). Zero-norm rows have no cosine (NULL
-    // cent_sim, guarded — ANSI mode makes a bare /0 an error, not NULL)
-    // and are excluded from pair generation below: no direction, no
-    // neighbors, always kept.
-    val cos = cents.map(c => dotProduct(col("emb"), typedLit(c)) / sqrt(col("nsq")))
-    val centSim = when(col("nsq") > 0,
-      round(if (cos.size == 1) cos.head else greatest(cos: _*), 6))
-    val assigned = base.select(col("id"), col("nsq"),
-      element_at(ivfAssign(col("emb"), cents, 1), 1).as("cell"),
-      centSim.as("cent_sim"),
-      ivfAssign(col("emb"), cents, probes).as("cells"))
-    val sides = assigned.filter(col("nsq") > 0)
-      .select(col("id"), col("cent_sim"), explode(col("cells")).as("cellx"))
-    val a = sides.select(col("id").as("id_a"), col("cent_sim").as("cs_a"),
-      col("cellx").as("cell_a"))
-    val b = sides.select(col("id").as("id_b"), col("cent_sim").as("cs_b"),
-      col("cellx").as("cell_b"))
-    // precedence: a survives b — candidate pairs carry only ids + the
-    // 6dp-rounded order key, never embeddings
-    val precedes =
-      if (keepBy == "id") col("id_a") < col("id_b")
-      else col("cs_a") < col("cs_b") ||
-        (col("cs_a") === col("cs_b") && col("id_a") < col("id_b"))
-    val pairs = a.join(b, col("cell_a") === col("cell_b") && precedes)
-      .select(col("id_a"), col("id_b")).distinct()
-    // pair sides carry nsq > 0 only (filtered above), so the verify
-    // division is safe under ANSI semantics
-    val removed = verifyPairs(pairs, base.filter(col("nsq") > 0)
-        .select(col("id"), col("emb"), col("nsq")), tau)
-      .select(col("id_b").as("id")).distinct()
-      .withColumn("__rm", lit(true))
-    output(assigned.join(removed, Seq("id"), "left")
-        .select(col("id"), col("cell"), col("cent_sim"),
-          coalesce(!col("__rm"), lit(true)).as("kept")), materialize)
-  }
-
-  /** [[semDedup]] with PER-CELL LOCAL verification — the shuffle-feasible
-    * form of the symmetric pass at 100 TB geometry. The candidate-join
-    * formulation ships TWO embeddings per candidate pair: with k ∝ corpus
-    * the pair count grows linearly but the payload constant is brutal
-    * (~1 KB/pair ⇒ ~230 GB of shuffle at the 234M-pair 100× probe
-    * geometry — measured to exceed a 74 GB-free box in SCALE.md r9).
-    * Here each vector ships ONCE per probed cell (O(N·probes) rows,
-    * ~0.5 KB each ≈ 0.3 GB at the same geometry), cells gather with
-    * collect_list, and the pairwise decimal-gated cosine runs INSIDE
-    * each cell group as nested array HOFs (exists/filter over the
-    * gathered structs with the codegen'd fold dot product) — pure
-    * Catalyst expressions, no UDF, no driver loop.
-    *
-    * Semantics are EXACTLY [[semDedup]]'s relational keep-first
-    * (spec-asserted equal on clustered and isotropic fixtures): removed
-    * iff a preceding same-cell neighbor reaches `tau` under the same
-    * DECIMAL(9,4) gate. Trade-offs vs the join form: a cell's group must
-    * fit an executor (~cell_size × dim×8 B — size k to the corpus, the
-    * standing contract), and with `chunks` = 1 a hot cell is ONE task
-    * computing its n² (AQE cannot split a group; the join form can
-    * skew-split but pays the pair payload). Zero-norm vectors join no
-    * group and are kept.
-    *
-    * `chunks` ≥ 2 is the HOT-CELL mitigation (round-10): cell members are
-    * hash-split into `chunks` buckets by id and the gather runs per CHUNK
-    * PAIR instead of per cell — group key (cell, witnessChunk,
-    * targetChunk), each member shipping once as a removal target into its
-    * own chunk's `chunks` pair-groups and once as a witness into the
-    * other side's. A mega-cell of n rows becomes chunks² independent
-    * tasks of ≤ (n/chunks)² comparisons over ≤ 2n/chunks gathered rows —
-    * task COUNT absorbs the skew, peak per-task memory and wall drop by
-    * chunks (the SCALE.md semdedup_hotcell tier). Same keep-first rule: x
-    * is removed iff ANY chunk-pair group holds a preceding witness at
-    * `tau`, and every (witness, target) chunk combination meets in
-    * exactly one group, so the union over groups is exactly the per-cell
-    * predicate (spec-asserted equal to chunks = 1 on both fixtures, both
-    * keep orders). Payload cost: 2·chunks copies per (vector, probed
-    * cell) vs 1 — still O(N) against the join form's O(pairs).
-    *
-    * `maxCellRows` > 0 arms an upfront guard (one cheap count over the
-    * already-built member rows): if any probed cell exceeds it, fail fast
-    * with the offending cell, its size, and the remedies — rather than an
-    * opaque executor OOM mid-gather (the documented contract made
-    * checkable). */
-  def semDedupLocal(df: DataFrame, idCol: String, embCol: String,
-                    k: Int, probes: Int, lloydIters: Int, seed: Long,
-                    tau: Double, keepBy: String = "id",
-                    trainFraction: Double = 1.0,
-                    materialize: Boolean = true,
-                    chunks: Int = 1,
-                    maxCellRows: Long = 0L): DataFrame = Storage.scoped { s =>
-    require(keepBy == "id" || keepBy == "centroid",
-      s"keepBy must be 'id' or 'centroid', got '$keepBy'")
+               materialize: Boolean = true,
+               chunks: Int = 1,
+               maxCellRows: Long = 0L): DataFrame = Storage.scoped { s =>
+    requireKeepBy(keepBy)
     require(chunks >= 1, s"chunks must be >= 1, got $chunks")
     val cents = trainIvfCentroids(df, idCol, embCol, k, lloydIters, seed,
       trainFraction)
-    val base = s.cache(df.select(col(idCol).as("id"), col(embCol).as("emb"),
-        l2NormSq(col(embCol)).as("nsq")))
+    // cached: feeds the member gather, the cell guard and the output join
+    val assigned = assignCells(s.cache(df.select(col(idCol).as("id"),
+      col(embCol).as("emb"), l2NormSq(col(embCol)).as("nsq"))), cents, probes)
+    output(keptRows(assigned,
+      keepFirstRemoved(assigned, keepBy, tau, chunks, maxCellRows)), materialize)
+  }
+
+  private def requireKeepBy(keepBy: String): Unit =
+    require(keepBy == "id" || keepBy == "centroid",
+      s"keepBy must be 'id' or 'centroid', got '$keepBy'")
+
+  /** The SemDeDup cell assignment of (id, emb, nsq) rows under `cents`:
+    * adds the primary `cell`, `cent_sim` (cosine to the primary centroid
+    * == max over centroids, rounded to 6 dp) and the `probes` nearest
+    * `cells`. Zero-norm rows have no cosine: NULL cent_sim, guarded —
+    * ANSI mode makes a bare /0 an error, not NULL. */
+  private def assignCells(vecs: DataFrame, cents: Seq[Seq[Double]],
+                          probes: Int): DataFrame = {
     val cos = cents.map(c => dotProduct(col("emb"), typedLit(c)) / sqrt(col("nsq")))
-    val centSim = when(col("nsq") > 0,
-      round(if (cos.size == 1) cos.head else greatest(cos: _*), 6))
-    val assigned = base.select(col("id"), col("emb"), col("nsq"),
+    vecs.select(col("id"), col("emb"), col("nsq"),
       element_at(ivfAssign(col("emb"), cents, 1), 1).as("cell"),
-      centSim.as("cent_sim"),
+      when(col("nsq") > 0,
+        round(if (cos.size == 1) cos.head else greatest(cos: _*), 6)).as("cent_sim"),
       ivfAssign(col("emb"), cents, probes).as("cells"))
-    // one row per (vector, probed cell): the WHOLE shuffled payload
+  }
+
+  /** The keep-first kernel of every SemDeDup form: the distinct `id`s of
+    * [[assignCells]] rows that have a PRECEDING (under `keepBy`)
+    * neighbor sharing a probed cell at DECIMAL(9,4) cosine >= `tau`.
+    * One row per (vector, probed cell) ships — the whole shuffled
+    * payload — and cells gather with collect_list; the pairwise cosine
+    * runs INSIDE each group as nested array HOFs (exists/filter over the
+    * gathered structs with the codegen'd fold dot product) — pure
+    * Catalyst expressions, no UDF, no driver loop. Zero-norm rows join
+    * no group. With `chunks` = 1 a hot cell is ONE task computing its n²
+    * (AQE cannot split a group); `chunks` ≥ 2 gathers per chunk pair
+    * (see [[semDedup]]). */
+  private def keepFirstRemoved(assigned: DataFrame, keepBy: String, tau: Double,
+                               chunks: Int, maxCellRows: Long): DataFrame = {
     val members = assigned.filter(col("nsq") > 0)
       .select(explode(col("cells")).as("cellx"),
         struct(col("id"), col("cent_sim").as("cs"),
@@ -702,12 +654,11 @@ object Similarity {
         .orderBy(col("n").desc).limit(1).collect()
       if (hot.nonEmpty) {
         throw new IllegalStateException(
-          s"semDedupLocal: cell ${hot.head.getInt(0)} holds " +
+          s"semDedup: cell ${hot.head.getInt(0)} holds " +
           s"${hot.head.getLong(1)} members (> maxCellRows=$maxCellRows). " +
           "A gathered cell group must fit one executor. Remedies: raise " +
           "`chunks` (chunk-pair gather bounds each task to " +
-          "(cell/chunks)^2 work), raise `k` so cells shrink, or use the " +
-          "candidate-join form semDedup (AQE skew-splits, higher payload).")
+          "(cell/chunks)^2 work) or raise `k` so cells shrink.")
       }
     }
     val removedRows =
@@ -739,13 +690,15 @@ object Similarity {
             exists(col("ws"), y => precedes(y, x) && decCos(y, x) >= tau)))
             .as("r"))
       }
-    val removed = removedRows
-      .select(col("r.id").as("id")).distinct()
-      .withColumn("__rm", lit(true))
-    output(assigned.join(removed, Seq("id"), "left")
-        .select(col("id"), col("cell"), col("cent_sim"),
-          coalesce(!col("__rm"), lit(true)).as("kept")), materialize)
+    removedRows.select(col("r.id").as("id")).distinct()
   }
+
+  /** The SemDeDup output: (id, cell, cent_sim, kept) per assigned row,
+    * `kept` false iff the id is in `removed`. */
+  private def keptRows(assigned: DataFrame, removed: DataFrame): DataFrame =
+    assigned.join(removed.withColumn("__rm", lit(true)), Seq("id"), "left")
+      .select(col("id"), col("cell"), col("cent_sim"),
+        coalesce(!col("__rm"), lit(true)).as("kept"))
 
   /** Incremental SemDeDup: a NEW batch of vectors deduped against the
     * cell-partitioned corpus layout written by
@@ -770,7 +723,8 @@ object Similarity {
     * the corpus scan as partition pruning — the history read opens
     * probed/k of the corpus directories and nothing is re-assigned on the
     * corpus side. Corpus embeddings ride the candidate join once; the
-    * intra-batch pass is batch-sized. `probes` governs recall (a corpus
+    * intra-batch pass is [[semDedup]]'s per-cell gather over the batch.
+    * `probes` governs recall (a corpus
     * twin is caught iff its top-1 cell is among the batch vector's
     * `probes` nearest); removals are a subset of the global rule at any
     * setting. Zero-norm batch vectors have no direction and are always
@@ -781,20 +735,11 @@ object Similarity {
                       centroids: Seq[Seq[Double]], probes: Int,
                       tau: Double, keepBy: String = "id",
                       materialize: Boolean = true): DataFrame = Storage.scoped { s =>
-    require(keepBy == "id" || keepBy == "centroid",
-      s"keepBy must be 'id' or 'centroid', got '$keepBy'")
-    val batchSides = s.cache(batch.select(col(idCol).as("id"), col(embCol).as("emb"),
-        l2NormSq(col(embCol)).as("nsq")))
-    val cos = centroids.map(c =>
-      dotProduct(col("emb"), typedLit(c)) / sqrt(col("nsq")))
-    val centSim = when(col("nsq") > 0,
-      round(if (cos.size == 1) cos.head else greatest(cos: _*), 6))
-    val assigned = batchSides.select(col("id"), col("nsq"),
-      element_at(ivfAssign(col("emb"), centroids, 1), 1).as("cell"),
-      centSim.as("cent_sim"),
-      ivfAssign(col("emb"), centroids, probes).as("cells"))
+    requireKeepBy(keepBy)
+    val assigned = assignCells(s.cache(batch.select(col(idCol).as("id"),
+      col(embCol).as("emb"), l2NormSq(col(embCol)).as("nsq"))), centroids, probes)
     val batchCells = assigned.filter(col("nsq") > 0)
-      .select(col("id"), col("cent_sim"), explode(col("cells")).as("cellx"))
+      .select(col("id"), col("emb"), col("nsq"), explode(col("cells")).as("cellx"))
     // k-bounded driver collect — the price of partition pruning (the
     // ivfNearDupsAgainstLayout contract)
     val probed = batchCells.select(col("cellx")).distinct()
@@ -804,7 +749,7 @@ object Similarity {
       .select(col("cell").as("cellx"), col(idCol).as("corpus_id"),
         col(embCol).as("emb_b"), l2NormSq(col(embCol)).as("nsq_b"))
     val crossRemoved = corpus
-      .join(batchCells.join(batchSides, "id"), Seq("cellx"))
+      .join(batchCells, Seq("cellx"))
       .filter(col("id") =!= col("corpus_id"))
       .dropDuplicates("id", "corpus_id")
       .select(col("id"),
@@ -812,23 +757,10 @@ object Similarity {
           (sqrt(col("nsq")) * sqrt(col("nsq_b")))).as("sim_d"))
       .filter(col("sim_d") >= tau - 1e-4)
       .filter(col("sim_d").cast(DecimalType(9, 4)) >= tau)
-      .select(col("id")).distinct()
-    // intra-batch keep-first: the symmetric relational rule, batch-sized
-    val a = batchCells.toDF("id_a", "cs_a", "cell_a")
-    val b = batchCells.toDF("id_b", "cs_b", "cell_b")
-    val precedes =
-      if (keepBy == "id") col("id_a") < col("id_b")
-      else col("cs_a") < col("cs_b") ||
-        (col("cs_a") === col("cs_b") && col("id_a") < col("id_b"))
-    val pairs = a.join(b, col("cell_a") === col("cell_b") && precedes)
-      .select(col("id_a"), col("id_b")).distinct()
-    val intraRemoved = verifyPairs(pairs, batchSides.filter(col("nsq") > 0)
-        .select(col("id"), col("emb"), col("nsq")), tau)
-      .select(col("id_b").as("id")).distinct()
-    val removed = crossRemoved.unionByName(intraRemoved).distinct()
-      .withColumn("__rm", lit(true))
-    output(assigned.join(removed, Seq("id"), "left")
-        .select(col("id"), col("cell"), col("cent_sim"),
-          coalesce(!col("__rm"), lit(true)).as("kept")), materialize)
+      .select(col("id"))
+    val intraRemoved = keepFirstRemoved(assigned, keepBy, tau,
+      chunks = 1, maxCellRows = 0L)
+    output(keptRows(assigned, crossRemoved.unionByName(intraRemoved).distinct()),
+      materialize)
   }
 }

@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -152,9 +153,6 @@ object Embeddings extends QueryPack {
         .orderBy(col("vec_id"))
     }),
 
-    // -- a second row for the same labeling only because the oracle's query set is frozen
-    "dedup_components_star" -> ((s, dir) => queries("dedup_components")(s, dir)),
-
     // -- the INCREMENTAL form (round-12): the identical cosine pair set
     //    folded into a STANDING component map in three deterministic
     //    batches (id_a % 3 — each fold merges across earlier batches, so
@@ -244,70 +242,16 @@ object Embeddings extends QueryPack {
     //    set). Gates: anchor n_true, subset via except, vertex recall
     //    >= 0.9 (2-probe boundary replication recovers cell-split
     //    neighborhoods), nonempty.
-    "dedup_semdedup" -> ((s, dir) => {
-      val globalRemoved = materializeOnce(queries("dedup_embedding_cosine")(s, dir)
-        .select(col("id_b")).distinct())
-      val removed = materializeOnce(Similarity.semDedup(Tables(s, dir, "embeddings"),
-          "vec_id", "embedding",
-          k = 8, probes = 3, lloydIters = 3, seed = 42, tau = 0.3)
-        .filter(!col("kept"))
-        .select(col("id").as("id_b")))
-      globalRemoved.agg(count(lit(1)).as("n_true"))
-        .crossJoin(removed.except(globalRemoved).agg(count(lit(1)).as("n_extra")))
-        .crossJoin(removed.agg(count(lit(1)).as("n_removed")))
-        .select(col("n_true"),
-          (col("n_extra") === 0).as("subset_ok"),
-          (col("n_removed") >= col("n_true") * 0.9).as("recall_ok"),
-          (col("n_removed") > 0).as("nonempty"))
-    }),
+    "dedup_semdedup" -> ((s, dir) => semDedupContract(s, dir, chunks = 1)),
 
-    // -- the per-cell LOCAL verification form (round-9): identical
-    //    contract to dedup_semdedup — clustered removals ⊆ the global
-    //    keep-min-id rule, >= 0.9 vertex recall — computed by the
-    //    shuffle-feasible in-group pairwise pass instead of the
-    //    candidate join. [[graft.operators.Similarity.semDedupLocal]].
-    "dedup_semdedup_local" -> ((s, dir) => {
-      val globalRemoved = materializeOnce(queries("dedup_embedding_cosine")(s, dir)
-        .select(col("id_b")).distinct())
-      val removed = materializeOnce(Similarity.semDedupLocal(Tables(s, dir, "embeddings"),
-          "vec_id", "embedding",
-          k = 8, probes = 3, lloydIters = 3, seed = 42, tau = 0.3)
-        .filter(!col("kept"))
-        .select(col("id").as("id_b")))
-      globalRemoved.agg(count(lit(1)).as("n_true"))
-        .crossJoin(removed.except(globalRemoved).agg(count(lit(1)).as("n_extra")))
-        .crossJoin(removed.agg(count(lit(1)).as("n_removed")))
-        .select(col("n_true"),
-          (col("n_extra") === 0).as("subset_ok"),
-          (col("n_removed") >= col("n_true") * 0.9).as("recall_ok"),
-          (col("n_removed") > 0).as("nonempty"))
-    }),
-
-    // -- the chunk-pair gather form (round-10 hot-cell mitigation):
-    //    identical contract to dedup_semdedup_local, computed with cell
-    //    members hash-split into 3 chunks and gathered per chunk PAIR —
-    //    a mega-cell becomes chunks² bounded tasks instead of one n²
-    //    task. Spec-asserted answer-identical to the whole-cell gather
-    //    (SemDedupSpec); this row pins the subset/recall contract
-    //    against DuckDB's exact global rule.
-    //    [[graft.operators.Similarity.semDedupLocal]] (chunks = 3).
-    "dedup_semdedup_chunked" -> ((s, dir) => {
-      val globalRemoved = materializeOnce(queries("dedup_embedding_cosine")(s, dir)
-        .select(col("id_b")).distinct())
-      val removed = materializeOnce(Similarity.semDedupLocal(Tables(s, dir, "embeddings"),
-          "vec_id", "embedding",
-          k = 8, probes = 3, lloydIters = 3, seed = 42, tau = 0.3,
-          chunks = 3)
-        .filter(!col("kept"))
-        .select(col("id").as("id_b")))
-      globalRemoved.agg(count(lit(1)).as("n_true"))
-        .crossJoin(removed.except(globalRemoved).agg(count(lit(1)).as("n_extra")))
-        .crossJoin(removed.agg(count(lit(1)).as("n_removed")))
-        .select(col("n_true"),
-          (col("n_extra") === 0).as("subset_ok"),
-          (col("n_removed") >= col("n_true") * 0.9).as("recall_ok"),
-          (col("n_removed") > 0).as("nonempty"))
-    }),
+    // -- the chunk-pair gather (round-10 hot-cell mitigation): identical
+    //    contract, computed with cell members hash-split into 3 chunks
+    //    and gathered per chunk PAIR — a mega-cell becomes chunks²
+    //    bounded tasks instead of one n² task. Spec-asserted
+    //    answer-identical to the whole-cell gather (SemDedupSpec); this
+    //    row pins the subset/recall contract against DuckDB's exact
+    //    global rule.
+    "dedup_semdedup_chunked" -> ((s, dir) => semDedupContract(s, dir, chunks = 3)),
 
     // -- incremental SemDeDup (round-9: the daily-batch form every other
     //    dedup family has): the vec_id % 10 == 0 batch deduped against
@@ -553,6 +497,27 @@ object Embeddings extends QueryPack {
     })
   )
 
+  /** The dedup_semdedup contract row for [[Similarity.semDedup]] at
+    * `chunks`: the global keep-min-id anchor n_true and the subset,
+    * recall and nonempty gates (see the dedup_semdedup query). */
+  private def semDedupContract(s: SparkSession, dir: String,
+                               chunks: Int): DataFrame = {
+    val globalRemoved = materializeOnce(queries("dedup_embedding_cosine")(s, dir)
+      .select(col("id_b")).distinct())
+    val removed = materializeOnce(Similarity.semDedup(Tables(s, dir, "embeddings"),
+        "vec_id", "embedding",
+        k = 8, probes = 3, lloydIters = 3, seed = 42, tau = 0.3, chunks = chunks)
+      .filter(!col("kept"))
+      .select(col("id").as("id_b")))
+    globalRemoved.agg(count(lit(1)).as("n_true"))
+      .crossJoin(removed.except(globalRemoved).agg(count(lit(1)).as("n_extra")))
+      .crossJoin(removed.agg(count(lit(1)).as("n_removed")))
+      .select(col("n_true"),
+        (col("n_extra") === 0).as("subset_ok"),
+        (col("n_removed") >= col("n_true") * 0.9).as("recall_ok"),
+        (col("n_removed") > 0).as("nonempty"))
+  }
+
   /** Brute-force cosine top-10 against vec_id 0 — q23's oracle, and (by
     * the exact-re-rank contract) sim_ann_pq's too. */
   private val bruteTopkSql: String =
@@ -566,6 +531,20 @@ object Embeddings extends QueryPack {
       |       / (sqrt(e.nsq) * sqrt(q.nsq)) AS DECIMAL(9,4)) AS DOUBLE) AS sim
       |FROM e, q
       |ORDER BY sim DESC, vec_id LIMIT 10""".stripMargin
+
+  /** Global keep-min-id removal count recomputed exactly: a vector is
+    * removed under the unclustered rule iff SOME lower id is an exact
+    * >= 0.3 neighbor (decimal-gated like dedup_embedding_cosine). */
+  private val semDedupGlobalSql: String =
+    """WITH e AS (
+      |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
+      |    list_reduce(list_transform(CAST(embedding AS DOUBLE[]), x -> x * x), (a, b) -> a + b) AS nsq
+      |  FROM embeddings)
+      |SELECT count(DISTINCT b.vec_id) AS n_true, TRUE AS subset_ok,
+      |  TRUE AS recall_ok, TRUE AS nonempty
+      |FROM e a JOIN e b ON a.vec_id < b.vec_id
+      |WHERE CAST(list_reduce(list_transform(range(1, len(a.v) + 1), i -> a.v[i] * b.v[i]), (x, y) -> x + y)
+      |       / (sqrt(a.nsq) * sqrt(b.nsq)) AS DECIMAL(9,4)) >= 0.3""".stripMargin
 
   // Oracle note: round 1 used DuckDB's list_cosine_similarity, whose internal
   // accumulation is NOT the sequential double fold Spark performs → 1-ulp
@@ -651,32 +630,6 @@ object Embeddings extends QueryPack {
         |  TRUE AS overlap_ok, TRUE AS sims_exact_ok
         |FROM embeddings""".stripMargin,
 
-    // same global-rule anchor as dedup_semdedup — the local form shares
-    // the exact contract, only the physical verification differs
-    "dedup_semdedup_local" ->
-      """WITH e AS (
-        |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-        |    list_reduce(list_transform(CAST(embedding AS DOUBLE[]), x -> x * x), (a, b) -> a + b) AS nsq
-        |  FROM embeddings)
-        |SELECT count(DISTINCT b.vec_id) AS n_true, TRUE AS subset_ok,
-        |  TRUE AS recall_ok, TRUE AS nonempty
-        |FROM e a JOIN e b ON a.vec_id < b.vec_id
-        |WHERE CAST(list_reduce(list_transform(range(1, len(a.v) + 1), i -> a.v[i] * b.v[i]), (x, y) -> x + y)
-        |       / (sqrt(a.nsq) * sqrt(b.nsq)) AS DECIMAL(9,4)) >= 0.3""".stripMargin,
-
-    // same anchor again for the chunk-pair gather arm: the physical
-    // split changes nothing about the relational rule
-    "dedup_semdedup_chunked" ->
-      """WITH e AS (
-        |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-        |    list_reduce(list_transform(CAST(embedding AS DOUBLE[]), x -> x * x), (a, b) -> a + b) AS nsq
-        |  FROM embeddings)
-        |SELECT count(DISTINCT b.vec_id) AS n_true, TRUE AS subset_ok,
-        |  TRUE AS recall_ok, TRUE AS nonempty
-        |FROM e a JOIN e b ON a.vec_id < b.vec_id
-        |WHERE CAST(list_reduce(list_transform(range(1, len(a.v) + 1), i -> a.v[i] * b.v[i]), (x, y) -> x + y)
-        |       / (sqrt(a.nsq) * sqrt(b.nsq)) AS DECIMAL(9,4)) >= 0.3""".stripMargin,
-
     // the incremental global rule recomputed exactly: a batch
     // (vec_id % 10 = 0) vector is removed iff SOME corpus vector or some
     // smaller batch id is a decimal-cosine >= 0.3 neighbor — corpus
@@ -693,19 +646,10 @@ object Embeddings extends QueryPack {
         |WHERE CAST(list_reduce(list_transform(range(1, len(a.v) + 1), i -> a.v[i] * b.v[i]), (x, y) -> x + y)
         |       / (sqrt(a.nsq) * sqrt(b.nsq)) AS DECIMAL(9,4)) >= 0.3""".stripMargin,
 
-    // global keep-min-id removal count recomputed exactly: a vector is
-    // removed under the unclustered rule iff SOME lower id is an exact
-    // >= 0.3 neighbor (decimal-gated like dedup_embedding_cosine)
-    "dedup_semdedup" ->
-      """WITH e AS (
-        |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-        |    list_reduce(list_transform(CAST(embedding AS DOUBLE[]), x -> x * x), (a, b) -> a + b) AS nsq
-        |  FROM embeddings)
-        |SELECT count(DISTINCT b.vec_id) AS n_true, TRUE AS subset_ok,
-        |  TRUE AS recall_ok, TRUE AS nonempty
-        |FROM e a JOIN e b ON a.vec_id < b.vec_id
-        |WHERE CAST(list_reduce(list_transform(range(1, len(a.v) + 1), i -> a.v[i] * b.v[i]), (x, y) -> x + y)
-        |       / (sqrt(a.nsq) * sqrt(b.nsq)) AS DECIMAL(9,4)) >= 0.3""".stripMargin,
+    "dedup_semdedup" -> semDedupGlobalSql,
+
+    // the chunk-pair gather changes nothing about the relational rule
+    "dedup_semdedup_chunked" -> semDedupGlobalSql,
 
     "emb_quantize_int8" ->
       """WITH e AS (
@@ -725,29 +669,6 @@ object Embeddings extends QueryPack {
         |FROM q ORDER BY vec_id""".stripMargin,
 
     "dedup_components" ->
-      """WITH RECURSIVE e0 AS (
-        |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-        |    list_reduce(list_transform(CAST(embedding AS DOUBLE[]), x -> x * x), (a, b) -> a + b) AS nsq
-        |  FROM embeddings),
-        |p AS (
-        |  SELECT a.vec_id AS id_a, b.vec_id AS id_b
-        |  FROM e0 a JOIN e0 b ON a.vec_id < b.vec_id
-        |  WHERE CAST(list_reduce(list_transform(range(1, len(a.v) + 1), i -> a.v[i] * b.v[i]), (x, y) -> x + y)
-        |         / (sqrt(a.nsq) * sqrt(b.nsq)) AS DECIMAL(9,4)) >= 0.3),
-        |ed AS (SELECT id_a AS src, id_b AS dst FROM p
-        |       UNION SELECT id_b, id_a FROM p),
-        |reach(id, r) AS (
-        |  SELECT DISTINCT src, src FROM ed
-        |  UNION
-        |  SELECT ed.src, reach.r FROM ed JOIN reach ON ed.dst = reach.id)
-        |SELECT emb.vec_id,
-        |  COALESCE(c.component, emb.vec_id) AS component
-        |FROM embeddings emb
-        |LEFT JOIN (SELECT id, MIN(r) AS component FROM reach GROUP BY id) c
-        |  ON emb.vec_id = c.id
-        |ORDER BY emb.vec_id""".stripMargin,
-
-    "dedup_components_star" ->
       """WITH RECURSIVE e0 AS (
         |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
         |    list_reduce(list_transform(CAST(embedding AS DOUBLE[]), x -> x * x), (a, b) -> a + b) AS nsq

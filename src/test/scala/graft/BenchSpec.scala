@@ -4,7 +4,8 @@ import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** `graft.Bench`'s timing loop and report: an entry that throws is
-  * reported failed, not timed as a finished query. */
+  * reported failed, not timed as a finished query, and an alias is timed
+  * once, through its target. */
 class BenchSpec extends SparkSpec {
 
   private val entries: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
@@ -33,5 +34,21 @@ class BenchSpec extends SparkSpec {
     val node = json.readTree(full)
     assert(node.get("total_with_operators").asDouble == 2 * ok)
     assert(node.get("operators").size == 1 && node.get("operators").get("a_ok").asDouble == ok)
+  }
+
+  test("an alias is timed through its target once and reported under its own name") {
+    var runs = Map.empty[String, Int]
+    def counted(name: String): (SparkSession, String) => DataFrame = (s, _) => {
+      runs += name -> (runs.getOrElse(name, 0) + 1); s.range(10).toDF("id")
+    }
+    val queries = Map("a" -> counted("a"), "a_alias" -> counted("a_alias"), "b" -> counted("b"))
+    val timed = Bench.timeAliased(spark, "unused", reps = 2, Seq("b", "a_alias", "a"),
+      queries, aliases = Map("a_alias" -> "a"))
+    assert(timed.map(_.name) == Seq("a", "a_alias", "b"))
+    assert(timed(1).times == timed(0).times && !timed(1).failed)
+    // one warm-up plus two reps each; the alias's own entry never runs
+    assert(runs == Map("a" -> 3, "b" -> 3))
+    assert(Bench.timeAliased(spark, "unused", reps = 1, Seq("a_alias"),
+      queries, aliases = Map("a_alias" -> "a")).map(_.name) == Seq("a_alias"))
   }
 }

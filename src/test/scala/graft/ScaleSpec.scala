@@ -536,7 +536,7 @@ class ScaleSpec extends SparkSpec {
     try {
       emb.count()
       def removed(chunks: Int): Set[Long] =
-        Similarity.semDedupLocal(emb, "vec_id", "embedding", k = 16,
+        Similarity.semDedup(emb, "vec_id", "embedding", k = 16,
           probes = 1, lloydIters = 2, seed = 42, tau = 0.8,
           trainFraction = 1.0, chunks = chunks)
           .filter(!col("kept")).collect().map(_.getLong(0)).toSet

@@ -37,14 +37,6 @@ class DedupSpec extends SparkSpec {
     } yield (ia, ib, jr)).toSet
   }
 
-  test("jaccardBitmapPairs equals brute-force jaccard exactly") {
-    val got = Dedup.jaccardBitmapPairs(docs, "doc_id", "text", 2, 0.2)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val expect = bruteJaccard(0.2)
-    assert(got == expect)
-    assert(got.size >= 10, "planted near-dups must be found")
-  }
-
   test("denseDictionary: dense unique ids across a forced-multi-partition dictionary") {
     val sp = spark
     import sp.implicits._
@@ -61,17 +53,17 @@ class DedupSpec extends SparkSpec {
     assert(ids.distinct.length == 5000)
   }
 
-  test("repeated jaccardBitmapPairs calls on different inputs add no CacheManager entry") {
+  test("repeated jaccardPairs calls on different inputs add no CacheManager entry") {
     // the dictionary's shard-rank cache lives in the call's scope: a
     // cache returned with the dictionary left one entry per call that
     // only clearCache() reclaimed
     val sp = spark
     import sp.implicits._
     val entries = graft.StorageSpec.cachedEntries(spark)
-    val a = Dedup.jaccardBitmapPairs(
+    val a = Dedup.jaccardPairs(
       Seq((1L, "a b c d"), (2L, "a b c e")).toDF("doc_id", "text"),
       "doc_id", "text", 2, 0.2).collect()
-    val b = Dedup.jaccardBitmapPairs(
+    val b = Dedup.jaccardPairs(
       Seq((1L, "x y z"), (2L, "x y z"), (3L, "q r")).toDF("doc_id", "text"),
       "doc_id", "text", 2, 0.2).collect()
     assert(a.length == 1 && b.length == 1)

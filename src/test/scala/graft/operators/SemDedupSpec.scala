@@ -152,23 +152,53 @@ class SemDedupSpec extends SparkSpec {
       s"vertex recall ${removed.size}/${truth.size}")
   }
 
-  test("semDedupLocal equals semDedup on clustered and isotropic data, both keep orders") {
-    // the per-cell local-verification form must be answer-identical to
-    // the candidate-join form — same cells, same relational keep-first,
-    // same decimal gate — on cluster-aligned cells AND on isotropic
-    // noise (sf0.001 embeddings at the weak-pruning tau), with boundary
-    // replication (probes > 1) exercised on both
+  /** Driver-side replay of SemDeDup's keep-first rule, one row
+    * (id, primary cell, cent_sim, kept) per vector. Only the cells come
+    * from the engine (the same trainIvfCentroids + ivfAssign calls, so
+    * probes > 1 replays exactly); the centroid cosine, the precedence and
+    * the decimal cosine gate are recomputed here: x is removed iff some
+    * other vector sharing a probed cell precedes it at cosine >= tau. */
+  private def keepFirstReplay(df: DataFrame, k: Int, probes: Int, tau: Double,
+                              keepBy: String): Set[(Long, Int, Option[String], Boolean)] = {
+    import graft.functions.ivfAssign
+    val cents = Similarity.trainIvfCentroids(df, "vec_id", "embedding", k,
+      lloydIters = 2, seed = 42)
+    val rows = df.select(col("vec_id"), col("embedding").cast("array<double>"),
+        ivfAssign(col("embedding"), cents, 1).as("top"),
+        ivfAssign(col("embedding"), cents, probes).as("cells"))
+      .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray,
+        r.getSeq[Int](2).head, r.getSeq[Int](3).toSet))
+    def dot(a: Seq[Double], b: Seq[Double]) = a.zip(b).map { case (x, y) => x * y }.sum
+    val nsq = rows.map { case (id, v, _, _) => id -> v.map(x => x * x).sum }.toMap
+    val cs = rows.map { case (id, v, _, _) =>
+      id -> Option.when(nsq(id) > 0)(BigDecimal(cents.map(c => dot(v, c) / math.sqrt(nsq(id))).max)
+        .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
+    }.toMap
+    def precedes(a: Long, b: Long) =
+      if (keepBy == "id") a < b
+      else cs(a).get < cs(b).get || (cs(a) == cs(b) && a < b)
+    rows.map { case (id, v, top, cells) =>
+      val removed = nsq(id) > 0 && rows.exists { case (id2, v2, _, cells2) =>
+        id2 != id && nsq(id2) > 0 && cells.exists(cells2) && precedes(id2, id) &&
+          BigDecimal(dot(v2, v) / (math.sqrt(nsq(id2)) * math.sqrt(nsq(id))))
+            .setScale(4, BigDecimal.RoundingMode.HALF_UP) >= tau
+      }
+      (id, top, cs(id).map(_.toString), !removed)
+    }.toSet
+  }
+
+  test("semDedup equals a driver-side keep-first replay on clustered and isotropic data, both keep orders") {
+    // cluster-aligned cells AND isotropic noise (sf0.001 embeddings at
+    // the weak-pruning tau), boundary replication (probes > 1) on both
     def run(df: DataFrame, k: Int, probes: Int, tau: Double, keepBy: String) = {
-      def snap(out: org.apache.spark.sql.DataFrame) =
-        out.collect().map(r => (r.getLong(0), r.getInt(1),
+      val got = Similarity.semDedup(df, "vec_id", "embedding", k, probes,
+          lloydIters = 2, seed = 42, tau = tau, keepBy = keepBy)
+        .collect().map(r => (r.getLong(0), r.getInt(1),
           Option(r.get(2)).map(_.toString), r.getBoolean(3))).toSet
-      val a = snap(Similarity.semDedup(df, "vec_id", "embedding", k, probes,
-        lloydIters = 2, seed = 42, tau = tau, keepBy = keepBy))
-      val b = snap(Similarity.semDedupLocal(df, "vec_id", "embedding", k, probes,
-        lloydIters = 2, seed = 42, tau = tau, keepBy = keepBy))
-      assert(a == b, s"local != join form (k=$k probes=$probes keepBy=$keepBy): " +
-        s"only-join=${(a -- b).take(5)} only-local=${(b -- a).take(5)}")
-      assert(a.exists(!_._4), "fixture must remove something")
+      val expected = keepFirstReplay(df, k, probes, tau, keepBy)
+      assert(got == expected, s"operator != replay (k=$k probes=$probes keepBy=$keepBy): " +
+        s"only-operator=${(got -- expected).take(5)} only-replay=${(expected -- got).take(5)}")
+      assert(got.exists(!_._4), "fixture must remove something")
     }
     run(clustered, k = 3, probes = 1, tau = 0.8, keepBy = "id")
     run(clustered, k = 3, probes = 2, tau = 0.8, keepBy = "centroid")
@@ -177,9 +207,9 @@ class SemDedupSpec extends SparkSpec {
     run(emb, k = 8, probes = 3, tau = 0.3, keepBy = "id")
   }
 
-  test("semDedupLocal chunked (chunks >= 2) equals the unchunked per-cell gather") {
+  test("semDedup chunked (chunks >= 2) equals the unchunked per-cell gather") {
     // the chunk-pair gather must be answer-identical to the whole-cell
-    // gather (and hence to semDedup): every (witness, target) chunk
+    // gather: every (witness, target) chunk
     // combination meets in exactly one group, so the union of group
     // predicates is the per-cell predicate — on cluster-aligned cells,
     // isotropic noise, both keep orders, chunks both < and > cell size
@@ -188,9 +218,9 @@ class SemDedupSpec extends SparkSpec {
       def snap(out: DataFrame) =
         out.collect().map(r => (r.getLong(0), r.getInt(1),
           Option(r.get(2)).map(_.toString), r.getBoolean(3))).toSet
-      val whole = snap(Similarity.semDedupLocal(df, "vec_id", "embedding",
+      val whole = snap(Similarity.semDedup(df, "vec_id", "embedding",
         k, probes, lloydIters = 2, seed = 42, tau = tau, keepBy = keepBy))
-      val chunked = snap(Similarity.semDedupLocal(df, "vec_id", "embedding",
+      val chunked = snap(Similarity.semDedup(df, "vec_id", "embedding",
         k, probes, lloydIters = 2, seed = 42, tau = tau, keepBy = keepBy,
         chunks = chunks))
       assert(whole == chunked,
@@ -208,17 +238,17 @@ class SemDedupSpec extends SparkSpec {
     run(emb, k = 8, probes = 3, tau = 0.3, keepBy = "id", chunks = 3)
   }
 
-  test("semDedupLocal maxCellRows guard fails actionably on a hot cell") {
+  test("semDedup maxCellRows guard fails actionably on a hot cell") {
     // every clustered fixture cell holds 20 members (probes = 1), so a
     // cap of 10 must trip and name the remedy; a cap of 64 must pass
     val e = intercept[IllegalStateException] {
-      Similarity.semDedupLocal(clustered, "vec_id", "embedding",
+      Similarity.semDedup(clustered, "vec_id", "embedding",
         k = 3, probes = 1, lloydIters = 3, seed = 42, tau = 0.8,
         maxCellRows = 10)
     }
     assert(e.getMessage.contains("maxCellRows=10"))
     assert(e.getMessage.contains("chunks"), "message must name the remedy")
-    val ok = Similarity.semDedupLocal(clustered, "vec_id", "embedding",
+    val ok = Similarity.semDedup(clustered, "vec_id", "embedding",
       k = 3, probes = 1, lloydIters = 3, seed = 42, tau = 0.8,
       maxCellRows = 64)
     assert(ok.count() == 60)

@@ -344,25 +344,24 @@ class SubDocSpec extends SparkSpec {
     assert(got === expected)
   }
 
-  test("trainBatched: batchK=1 is exactly sequential; disjoint batches match; conflicts defer") {
+  test("batched train: batchK=1 is exactly sequential; disjoint batches match; conflicts defer") {
     val sp = spark
     import sp.implicits._
     def table(df: org.apache.spark.sql.DataFrame) =
       df.orderBy(col("rank")).collect()
         .map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3))).toSeq
-    // batchK=1 degenerates to train's exact sequence on the classic corpus
-    val classic = Seq("low" -> 5L, "lower" -> 2L, "lowest" -> 6L,
+    // batchK=1 is the naive reference's exact sequence on the classic corpus
+    val classic = Map("low" -> 5L, "lower" -> 2L, "lowest" -> 6L,
       "new" -> 6L, "newest" -> 3L, "wide" -> 3L, "widest" -> 2L)
-      .toDF("word", "weight")
-    assert(table(Bpe.trainBatched(classic, "word", "weight", numMerges = 10,
-        batchK = 1, minPairCount = 2L)) ===
-      table(Bpe.train(classic, "word", "weight", numMerges = 10,
-        minPairCount = 2L)))
+    assert(table(Bpe.train(classic.toSeq.toDF("word", "weight"), "word", "weight",
+        numMerges = 10, batchK = 1, minPairCount = 2L)) ===
+      naiveBpeW(classic, numMerges = 10, minPair = 2L)
+        .zipWithIndex.map { case ((a, b, w), i) => (i + 1, a, b, w) })
     // four symbol-disjoint pairs: ONE scan selects all four, and the
     // table (ranks, pairs, weights) is identical to the sequential run
     val disjoint = Seq("ab" -> 100L, "cd" -> 90L, "ef" -> 80L, "gh" -> 70L)
       .toDF("word", "weight")
-    assert(table(Bpe.trainBatched(disjoint, "word", "weight", numMerges = 4,
+    assert(table(Bpe.train(disjoint, "word", "weight", numMerges = 4,
         batchK = 4)) ===
       table(Bpe.train(disjoint, "word", "weight", numMerges = 4)))
     // (a,b) and (b,c) share a symbol: the batch takes only (a,b) and the
@@ -370,13 +369,13 @@ class SubDocSpec extends SparkSpec {
     // both in one fold would have recorded the stale 95
     val conflict = Seq("ab" -> 100L, "bc" -> 90L, "abc" -> 5L)
       .toDF("word", "weight")
-    val got = table(Bpe.trainBatched(conflict, "word", "weight",
+    val got = table(Bpe.train(conflict, "word", "weight",
       numMerges = 2, batchK = 2))
     assert(got === table(Bpe.train(conflict, "word", "weight", numMerges = 2)))
     assert(got === Seq((1, "a", "b", 105L), (2, "b", "c", 90L)))
   }
 
-  test("trainBatched: created-pair overtaking — the documented divergence appears and is bounded") {
+  test("batched train: created-pair overtaking — the documented divergence appears and is bounded") {
     val sp = spark
     import sp.implicits._
     def table(df: org.apache.spark.sql.DataFrame) =
@@ -393,7 +392,7 @@ class SubDocSpec extends SparkSpec {
       .toDF("word", "weight")
     val seq2 = table(Bpe.train(words, "word", "weight", numMerges = 2,
       minPairCount = 1L))
-    val bat2 = table(Bpe.trainBatched(words, "word", "weight", numMerges = 2,
+    val bat2 = table(Bpe.train(words, "word", "weight", numMerges = 2,
       batchK = 2, minPairCount = 1L))
     assert(seq2 === Seq((1, "a", "b", 190L), (2, "ab", "c", 90L)),
       s"sequential must rank the created pair second: $seq2")
@@ -401,15 +400,12 @@ class SubDocSpec extends SparkSpec {
       s"the batch must miss the created pair: $bat2")
     assert(seq2.head == bat2.head && seq2(1) != bat2(1),
       "divergence is exactly the created-pair rank (1 of 2 rows)")
-    // batchK = 1 re-censuses between merges and stays exact
-    assert(table(Bpe.trainBatched(words, "word", "weight", numMerges = 2,
-      batchK = 1, minPairCount = 1L)) === seq2)
     // at numMerges = 3 both tables CONVERGE again (the batched run's
     // next scan sees (ab,c)): same merge SET, different ranks — the
     // divergence is an ordering window of width < batchK, not a loss
     val seq3 = table(Bpe.train(words, "word", "weight", numMerges = 3,
       minPairCount = 1L)).map(t => (t._2, t._3)).toSet
-    val bat3 = table(Bpe.trainBatched(words, "word", "weight", numMerges = 3,
+    val bat3 = table(Bpe.train(words, "word", "weight", numMerges = 3,
       batchK = 2, minPairCount = 1L)).map(t => (t._2, t._3)).toSet
     assert(seq3 === bat3, s"merge SETS must converge at +1 scan: $seq3 vs $bat3")
   }
