@@ -195,31 +195,7 @@ object Quantize {
                          query: Seq[Double], k: Int,
                          centroids: Seq[Seq[Double]], nprobe: Int,
                          codebooks: Seq[Seq[Seq[Double]]], shortlist: Int,
-                         trustCellColumn: Boolean = false): DataFrame = {
-    import graft.operators.Similarity
-    val probed = Similarity.probedCells(query, centroids, nprobe)
-    require(!trustCellColumn || df.columns.contains("cell"),
-      "trustCellColumn requires a `cell` column (see Layout.ivfPartition)")
-    val withCell =
-      if (trustCellColumn) df.select(col(idCol), col(embCol).as("emb"), col("cell"))
-      else df.select(col(idCol), col(embCol).as("emb"),
-        element_at(graft.functions.ivfAssign(col(embCol), centroids, 1), 1)
-          .as("cell"))
-    val cells = withCell.filter(col("cell").isin(probed: _*))
-    val ksub = codebooks.head.length
-    val lut = adcLut(query, codebooks)
-    val short = cells
-      .select(col(idCol),
-        pqAdc(pqEncode(col("emb").cast("array<double>"), codebooks), lut, ksub)
-          .as("adc"))
-      .orderBy(col("adc").desc, col(idCol))
-      .limit(shortlist)
-      .select(col(idCol))
-    cells.join(short, Seq(idCol), "left_semi")
-      .select(col(idCol),
-        cosineSim(col("emb"), typedLit(query))
-          .cast(DecimalType(9, 4)).cast("double").as("sim"))
-      .orderBy(col("sim").desc, col(idCol))
-      .limit(k)
-  }
+                         trustCellColumn: Boolean = false): DataFrame =
+    pqTopKForVector(Similarity.probedCellRows(df, idCol, embCol, query,
+      centroids, nprobe, trustCellColumn), idCol, embCol, query, k, codebooks, shortlist)
 }

@@ -61,34 +61,31 @@ object Similarity {
 
   /** Candidate near-dup pairs via multi-band LSH, verified by exact cosine.
     *
-    * Output: (id_a, id_b, sim DECIMAL(9,4)) with id_a < id_b and
-    * sim >= simThreshold, restricted to pairs colliding in >= 1 band.
-    * The banded join ships only (bucketKey, id); embeddings and norms are
-    * joined back per deduped candidate for exact verification (identical
-    * decimal semantics to the brute-force query, so LSH output ⊆ exact
-    * output and recall is measurable with two counts).
+    * Output: (id_a, id_b, sim DOUBLE) with id_a < id_b and sim >=
+    * simThreshold under the decimal gate ([[gatedCosine]]), restricted to
+    * pairs colliding in >= 1 band. The banded join ships only (bucketKey,
+    * id); embeddings and norms are joined back per deduped candidate
+    * ([[candidatePairs]]) with the brute-force query's decimal semantics,
+    * so LSH output ⊆ exact output and recall is measurable with two
+    * counts. A zero-norm vector has no direction and pairs with nothing.
     */
   def lshNearDupPairs(df: DataFrame, idCol: String, embCol: String,
                       dim: Int, rowsPerBand: Int, bands: Int, seed: Long,
                       simThreshold: Double,
                       materialize: Boolean = true): DataFrame = Storage.scoped { s =>
-    val numPlanes = rowsPerBand * bands
     // cached: base feeds the banded self-join AND both verify joins —
     // without it the O(dim·numPlanes)-per-row hyperplane projection (and
     // the source scan) re-executes once per reference
-    val base = s.cache(df.select(col(idCol).as("id"), col(embCol).as("emb"),
-      l2NormSq(col(embCol)).as("nsq"),
-      hyperplaneBits(col(embCol), dim, numPlanes, seed).as("bits")))
-    val banded = base.select(col("id"),
-      explode(bandKeys(col("bits"), bands, rowsPerBand)).as("bucket"))
-    val pairs = banded.toDF("id_a", "bucket")
-      .join(banded.toDF("id_b", "bucket_b"),
-        col("bucket") === col("bucket_b") && col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"))
-      .distinct()
-    output(verifyPairs(pairs, base.select(col("id"), col("emb"), col("nsq")),
+    val base = s.cache(vectors(df, idCol, embCol).withColumn("bits",
+      hyperplaneBits(col("emb"), dim, rowsPerBand * bands, seed)))
+    output(candidatePairs(base, bandKeys(col("bits"), bands, rowsPerBand),
       simThreshold), materialize)
   }
+
+  /** The (id, emb, nsq) rows every pair path starts from. */
+  private def vectors(df: DataFrame, idCol: String, embCol: String): DataFrame =
+    df.select(col(idCol).as("id"), col(embCol).as("emb"),
+      l2NormSq(col(embCol)).as("nsq"))
 
   /** The scoped operators' result: the (small) output eagerly
     * materialized, so the scope releases the cached working set before
@@ -102,30 +99,50 @@ object Similarity {
   private def output(out: DataFrame, materialize: Boolean): DataFrame =
     if (materialize) Storage.materializeOnce(out) else out
 
-  /** Exact cosine verification of candidate (id_a, id_b) pairs — the shared
-    * tail of every approximate candidate generator (LSH, IVF). Joins
-    * embeddings + norms back per candidate, computes the codegen'd
-    * sequential-fold cosine and applies the identical decimal threshold
-    * semantics as the brute-force queries, so approximate output ⊆ exact
-    * output and recall is measurable with two counts. */
-  private def verifyPairs(pairs: DataFrame, sides: DataFrame,
-                          simThreshold: Double): DataFrame =
-    pairs
+  /** The candidate-pair path of [[lshNearDupPairs]] and
+    * [[ivfNearDupPairs]]: explode each (id, emb, nsq) row of `base` into
+    * its bucket `keys`, self-join on key with id_a < id_b (only (key, id)
+    * rows shuffle), take `distinct` across keys, then join embeddings and
+    * norms back per candidate for the exact [[gatedPairs]] verify. */
+  private def candidatePairs(base: DataFrame, keys: Column,
+                             simThreshold: Double): DataFrame = {
+    val keyed = base.select(col("id"), explode(keys).as("key"))
+    val sides = base.select(col("id"), col("emb"), col("nsq"))
+    val pairs = keyed.toDF("id_a", "key")
+      .join(keyed.toDF("id_b", "key_b"),
+        col("key") === col("key_b") && col("id_a") < col("id_b"))
+      .select(col("id_a"), col("id_b"))
+      .distinct()
       .join(sides.toDF("id_a", "emb_a", "nsq_a"), "id_a")
       .join(sides.toDF("id_b", "emb_b", "nsq_b"), "id_b")
-      .select(col("id_a"), col("id_b"),
-        (dotProduct(col("emb_a"), col("emb_b")) /
-          (sqrt(col("nsq_a")) * sqrt(col("nsq_b")))).as("sim_d"))
-      // rounded >= t means true value >= t - 5e-5; prefilter with slack on
-      // the cheap double before allocating decimals
-      .filter(col("sim_d") >= simThreshold - 1e-4)
-      .select(col("id_a"), col("id_b"),
-        col("sim_d").cast(DecimalType(9, 4)).as("sim_q"))
-      .filter(col("sim_q") >= simThreshold)
-      // decimal gates the threshold exactly; emit double (decimal→double is
-      // exact, and decimal physical representations hash differently across
-      // engines in the driver's canonicalization)
-      .select(col("id_a"), col("id_b"), col("sim_q").cast("double").as("sim"))
+    gatedPairs(pairs, "id_a", "id_b", simThreshold)
+  }
+
+  /** The decimal cosine gate of every pair check: the DECIMAL(9,4)
+    * rounding of dot / (sqrt(nsq_a)·sqrt(nsq_b)), the brute-force
+    * queries' exact semantics, compared `>= t` by the caller. NULL (which
+    * fails that comparison) where the pair cannot pass: a zero norm on
+    * either side — no direction, and ANSI mode makes a bare /0 an error —
+    * or a double below t − 1e-4 (rounded >= t means a true value >=
+    * t − 5e-5, so the cheap double keeps decimal allocation off the
+    * pairs that cannot reach t). Plain column arithmetic, so it also
+    * runs inside the array lambdas of [[keepFirstRemoved]]. */
+  private def gatedCosine(embA: Column, nsqA: Column, embB: Column, nsqB: Column,
+                          t: Double): Column = {
+    val cos = dotProduct(embA, embB) / (sqrt(nsqA) * sqrt(nsqB))
+    when(nsqA > 0 && nsqB > 0 && cos >= t - 1e-4, cos.cast(DecimalType(9, 4)))
+  }
+
+  /** (a, b, emb_a, nsq_a, emb_b, nsq_b) rows to the (a, b, sim) pairs at
+    * or above `t` under [[gatedCosine]]. The decimal gates the threshold
+    * exactly; double is the output type (decimal→double is exact, and
+    * decimal physical representations hash differently across engines
+    * in the driver's canonicalization). */
+  private def gatedPairs(rows: DataFrame, a: String, b: String, t: Double): DataFrame =
+    rows.select(col(a), col(b), gatedCosine(col("emb_a"), col("nsq_a"),
+        col("emb_b"), col("nsq_b"), t).as("sim_q"))
+      .filter(col("sim_q") >= t)
+      .select(col(a), col(b), col("sim_q").cast("double").as("sim"))
 
   /** Spherical-k-means centroids for IVF partitioning, trained with a few
     * Lloyd iterations entirely as Spark jobs.
@@ -154,15 +171,7 @@ object Similarity {
     // cached: init runs k TakeOrdered actions and each Lloyd iteration
     // one aggregation — without caching, every action re-scans (and with
     // trainFraction < 1, RE-SAMPLES) the upstream source
-    val base = s.cache(sampled
-      .select(col(idCol).as("id"), col(embCol).cast("array<double>").as("emb"),
-        l2NormSq(col(embCol)).as("nsq"))
-      .filter(col("nsq") > 0))
-
-    def normalized(v: Array[Double]): Array[Double] = {
-      val n = math.sqrt(v.map(x => x * x).sum)
-      if (n == 0) v else v.map(_ / n)
-    }
+    val base = s.cache(trainingRows(sampled, idCol, embCol))
 
     // Farthest-point (k-means++-style, deterministic) init. Two regimes:
     //
@@ -182,46 +191,13 @@ object Similarity {
     //    (hash-ranked sample; ties broken by sample order).
     var cents: Seq[Seq[Double]] =
       if (k <= FarthestPointExactK) {
-        val first = base
-          .orderBy(xxhash64(col("id"), lit(seed)), col("id"))
-          .limit(1)
-          .select(col("emb"))
-          .collect()
-        require(first.nonEmpty, "empty training set for IVF centroids")
-        var cs: Seq[Seq[Double]] =
-          Seq(normalized(first.head.getSeq[Double](0).toArray).toSeq)
-        while (cs.size < k) {
-          // r15: ONE step-shape-invariant expression instead of a
-          // growing greatest(dot_product(emb, typedLit(c)) / sqrt(nsq))
-          // chain — the chain's expression tree differed every step, so
-          // each TakeOrdered scan compiled a fresh codegen class; with
-          // the chosen set captured inside MaxDotExpr the per-step plan
-          // source is identical and the codegen cache hits from step 2
-          // on. Bit-identical selection: max(d_c/s) == max(d_c)/s for
-          // the row's positive norm s (division by a positive double is
-          // monotone and the divided max IS the max divided value), and
-          // each d_c is the same ascending-index fold (MaxDotExpr
-          // scaladoc; SimilaritySpec pins the centroids equal).
-          val maxCos = graft.functions.maxCentroidDot(col("emb"), cs) /
-            sqrt(col("nsq"))
-          val next = base
-            .select(col("id"), col("emb"), maxCos.as("max_cos"))
-            .orderBy(col("max_cos"), col("id"))
-            .limit(1)
-            .select(col("emb"))
-            .collect()
-          cs = cs :+ normalized(next.head.getSeq[Double](0).toArray).toSeq
-        }
+        var cs: Seq[Seq[Double]] = Seq(hashRanked(base, seed, 1).head.toSeq)
+        while (cs.size < k)
+          cs = cs :+ unit(farthestStep(base, cs).collect().head
+            .getSeq[Double](0).toArray).toSeq
         cs
       } else {
-        val sampleSize = math.max(64 * k, 4096)
-        val cand = base
-          .orderBy(xxhash64(col("id"), lit(seed)), col("id"))
-          .limit(sampleSize)
-          .select(col("emb"))
-          .collect()
-          .map(r => normalized(r.getSeq[Double](0).toArray))
-        require(cand.nonEmpty, "empty training set for IVF centroids")
+        val cand = hashRanked(base, seed, math.max(64 * k, 4096))
         require(cand.length >= k,
           s"IVF k=$k exceeds the ${cand.length}-row training set — size k to the corpus")
         val chosen = new Array[Array[Double]](k)
@@ -273,12 +249,56 @@ object Similarity {
         seen(cell) = true
       }
       cents = cents.zipWithIndex.map { case (old, c) =>
-        val m = normalized(acc(c))
+        val m = unit(acc(c))
         if (seen(c) && m.exists(_ != 0.0)) m.toSeq else old
       }
     }
     cents
   }
+
+  /** The IVF training projection: (id, emb double[], nsq) rows with a
+    * nonzero norm — a zero vector cannot express a direction. */
+  private def trainingRows(df: DataFrame, idCol: String, embCol: String): DataFrame =
+    df.select(col(idCol).as("id"), col(embCol).cast("array<double>").as("emb"),
+        l2NormSq(col(embCol)).as("nsq"))
+      .filter(col("nsq") > 0)
+
+  /** `v` scaled to unit L2 norm; a zero vector stays zero. The one
+    * driver-side normalisation: init seeds, Lloyd means, query vectors. */
+  private def unit(v: Array[Double]): Array[Double] = {
+    val n = math.sqrt(v.map(x => x * x).sum)
+    if (n == 0) v else v.map(_ / n)
+  }
+
+  /** The first `n` [[trainingRows]] by `xxhash64(id, seed)` rank (ties →
+    * lower id), unit-normalised: one TakeOrdered job. Its head is the
+    * first seed of both init regimes. */
+  private def hashRanked(base: DataFrame, seed: Long, n: Int): Array[Array[Double]] = {
+    val rows = base.orderBy(xxhash64(col("id"), lit(seed)), col("id"))
+      .limit(n).select(col("emb")).collect()
+      .map(r => unit(r.getSeq[Double](0).toArray))
+    require(rows.nonEmpty, "empty training set for IVF centroids")
+    rows
+  }
+
+  /** One exact farthest-point init step as a lazy TakeOrdered(1) frame:
+    * the training row whose max cosine to the `chosen` seeds is smallest
+    * (ties → lower id). r15: ONE step-shape-invariant expression instead
+    * of a growing greatest(dot_product(emb, typedLit(c)) / sqrt(nsq))
+    * chain — the chain's expression tree differed every step, so each
+    * scan compiled a fresh codegen class; with the chosen set captured
+    * inside MaxDotExpr the per-step plan source is identical and the
+    * codegen cache hits from step 2 on. Bit-identical selection:
+    * max(d_c/s) == max(d_c)/s for the row's positive norm s (division by
+    * a positive double is monotone), and each d_c is the same
+    * ascending-index fold (MaxDotExpr scaladoc; SimilaritySpec pins it). */
+  private def farthestStep(base: DataFrame, chosen: Seq[Seq[Double]]): DataFrame =
+    base.select(col("id"), col("emb"),
+        (graft.functions.maxCentroidDot(col("emb"), chosen) / sqrt(col("nsq")))
+          .as("max_cos"))
+      .orderBy(col("max_cos"), col("id"))
+      .limit(1)
+      .select(col("emb"))
 
   /** The fold-route Lloyd iteration frame: map-side cell assignment
     * (centroids ride in the plan) + ONE per-(partition, cell) aggregate
@@ -305,12 +325,7 @@ object Similarity {
                           k: Int, seed: Long): DataFrame = {
     val cents = trainIvfCentroids(df, idCol, embCol, k, lloydIters = 0,
       seed = seed)
-    val base = df
-      .select(col(idCol).as("id"),
-        col(embCol).cast("array<double>").as("emb"),
-        l2NormSq(col(embCol)).as("nsq"))
-      .filter(col("nsq") > 0)
-    lloydFoldFrame(base, cents, cents.head.length)
+    lloydFoldFrame(trainingRows(df, idCol, embCol), cents, cents.head.length)
   }
 
   /** One farthest-point init step as a lazy frame over the first seed —
@@ -324,33 +339,20 @@ object Similarity {
     * runs only the first-seed job; the frame itself is lazy. */
   def initStepFrame(df: DataFrame, idCol: String, embCol: String,
                     seed: Long): DataFrame = {
-    val base = df
-      .select(col(idCol).as("id"),
-        col(embCol).cast("array<double>").as("emb"),
-        l2NormSq(col(embCol)).as("nsq"))
-      .filter(col("nsq") > 0)
-    val first = base.orderBy(xxhash64(col("id"), lit(seed)), col("id"))
-      .limit(1).select(col("emb")).collect()
-    require(first.nonEmpty, "empty training set for IVF centroids")
-    val v = first.head.getSeq[Double](0).toArray
-    val n = math.sqrt(v.map(x => x * x).sum)
-    val c0 = (if (n == 0) v else v.map(_ / n)).toSeq
-    base.select(col("id"), col("emb"),
-        (graft.functions.maxCentroidDot(col("emb"), Seq(c0)) /
-          sqrt(col("nsq"))).as("max_cos"))
-      .orderBy(col("max_cos"), col("id"))
-      .limit(1)
-      .select(col("emb"))
+    val base = trainingRows(df, idCol, embCol)
+    farthestStep(base, Seq(hashRanked(base, seed, 1).head.toSeq))
   }
 
   /** Candidate near-dup pairs via IVF (inverted-file) cell partitioning,
     * verified by exact cosine: train spherical-k-means centroids, assign
     * every vector to its `probes` nearest cells, and restrict the pair
-    * join to vectors sharing a cell.
+    * join to vectors sharing ANY probed cell — [[lshNearDupPairs]]'s
+    * candidate path ([[candidatePairs]]) with cells as the bucket keys.
     *
     * Output contract matches [[lshNearDupPairs]]: (id_a, id_b, sim DOUBLE)
     * with id_a < id_b, sim >= simThreshold under the decimal gate, and
     * IVF output ⊆ brute-force output (recall measurable with two counts).
+    * A zero-norm vector is left out of training and pairs with nothing.
     *
     * Scale notes: assignment is map-side (centroids ride in the plan); the
     * candidate join shuffles (cell, id) pairs only — embeddings are joined
@@ -358,7 +360,9 @@ object Similarity {
     * k to the corpus (k ≈ N/√N keeps cells ~√N) and lean on AQE skew
     * handling for hot cells. On isotropic low-threshold data (the synthetic
     * test embeddings) cells prune weakly — same caveat as the LSH scaladoc;
-    * IVF earns its keep on real clustered corpora. */
+    * IVF earns its keep on real clustered corpora. Gathering each cell
+    * once and verifying inside the group ([[semDedup]]'s kernel) returned
+    * the same pairs at sf0.1 but ran slower than this join (ROADMAP). */
   def ivfNearDupPairs(df: DataFrame, idCol: String, embCol: String,
                       k: Int, probes: Int, lloydIters: Int, seed: Long,
                       simThreshold: Double,
@@ -367,130 +371,131 @@ object Similarity {
     val cents = trainIvfCentroids(df, idCol, embCol, k, lloydIters, seed, trainFraction)
     // cached — base feeds the cell self-join and both verify joins (see
     // lshNearDupPairs)
-    val base = s.cache(df.select(col(idCol).as("id"), col(embCol).as("emb"),
-      l2NormSq(col(embCol)).as("nsq")))
-    val cells = base.select(col("id"),
-      explode(ivfAssign(col("emb"), cents, probes)).as("cell"))
-    val pairs = cells.toDF("id_a", "cell")
-      .join(cells.toDF("id_b", "cell_b"),
-        col("cell") === col("cell_b") && col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"))
-      .distinct()
-    output(verifyPairs(pairs, base.select(col("id"), col("emb"), col("nsq")),
+    val base = s.cache(vectors(df, idCol, embCol))
+    output(candidatePairs(base, ivfAssign(col("emb"), cents, probes),
       simThreshold), materialize)
   }
 
   /** Incremental embedding near-dup detection: a NEW batch of vectors
     * against the cell-partitioned corpus layout written by
     * graft.catalog.Layout.ivfPartition — the embedding-side analog of
-    * graft.operators.Dedup.minHashNearDupsAgainstIndex.
-    *
-    * 100 TB shape: the batch is assigned to its `probes` nearest cells
-    * map-side (centroid matrix rides in the plan); the distinct probed
-    * cells (a k-bounded set) are collected and pushed into the corpus
-    * scan as an IN-filter on the PARTITION column, so the history read is
-    * partition pruning — probed/k of the corpus directories, with nothing
-    * re-assigned on the corpus side. The candidate join is left to
-    * Catalyst/AQE: a day-sized batch broadcasts (corpus never shuffles);
-    * a batch past the broadcast threshold falls back to a shuffle sized
-    * to the PRUNED cells, not the corpus — no unconditional broadcast
-    * hint (the vocab-broadcast lesson). Corpus embeddings ride the
-    * candidate join once (the corpus side of the join IS the pruned
-    * scan; a join-back would scan it twice). Verification is the exact
-    * codegen'd cosine
-    * with the same decimal threshold semantics as [[ivfNearDupPairs]] —
-    * precision 1.0 by construction; recall is governed by `probes`.
-    * `centroids` must be the layout's own trained matrix (version-pinned
-    * metadata, like a bucketing spec). Output: (batch_id, corpus_id, sim)
-    * for cross pairs with cosine >= simThreshold; ids present on both
-    * sides are excluded. */
+    * graft.operators.Dedup.minHashNearDupsAgainstIndex. The probe is
+    * [[layoutPairs]]: partition-pruned corpus read, candidate join left
+    * to Catalyst/AQE, the exact codegen'd cosine under the same decimal
+    * gate as [[ivfNearDupPairs]] — precision 1.0 by construction; recall
+    * is governed by `probes`. `centroids` must be the layout's own
+    * trained matrix (version-pinned metadata, like a bucketing spec).
+    * Output: (batch_id, corpus_id, sim) for cross pairs with cosine >=
+    * simThreshold; ids present on both sides are excluded, and a
+    * zero-norm vector on either side pairs with nothing. */
   def ivfNearDupsAgainstLayout(batch: DataFrame, corpusLayout: DataFrame,
                                idCol: String, embCol: String,
                                centroids: Seq[Seq[Double]], probes: Int,
                                simThreshold: Double,
                                materialize: Boolean = true): DataFrame = Storage.scoped { s =>
-    val batchSides = s.cache(batch.select(col(idCol).as("batch_id"),
-        col(embCol).as("emb_a"), l2NormSq(col(embCol)).as("nsq_a")))
-    val batchCells = batchSides.select(col("batch_id"),
-      explode(ivfAssign(col("emb_a"), centroids, probes)).as("cell"))
-    // k-bounded driver collect (<= min(|batch|·probes, k) cell ids) — the
-    // price of turning the history read into partition pruning
-    val probed = batchCells.select(col("cell")).distinct()
-      .collect().map(_.getInt(0)).sorted
-    val corpus = corpusLayout
-      .filter(col("cell").isin(probed.map(Integer.valueOf): _*))
-      .select(col("cell"), col(idCol).as("corpus_id"),
-        col(embCol).as("emb_b"), l2NormSq(col(embCol)).as("nsq_b"))
-    val joined = corpus
-      .join(batchCells.join(batchSides, "batch_id"), Seq("cell"))
-      .filter(col("batch_id") =!= col("corpus_id"))
-      .dropDuplicates("batch_id", "corpus_id")
-      .select(col("batch_id"), col("corpus_id"),
-        (dotProduct(col("emb_a"), col("emb_b")) /
-          (sqrt(col("nsq_a")) * sqrt(col("nsq_b")))).as("sim_d"))
-      .filter(col("sim_d") >= simThreshold - 1e-4)
-      .select(col("batch_id"), col("corpus_id"),
-        col("sim_d").cast(DecimalType(9, 4)).as("sim_q"))
-      .filter(col("sim_q") >= simThreshold)
-      .select(col("batch_id"), col("corpus_id"),
-        col("sim_q").cast("double").as("sim"))
-    output(joined, materialize)
+    output(layoutPairs(s.cache(vectors(batch, idCol, embCol)), corpusLayout,
+      idCol, embCol, centroids, probes, simThreshold), materialize)
   }
 
-  /** IVF-accelerated top-k for one query vector: probe the query's
-    * `nprobe` nearest cells and rank only vectors assigned (top-1) to
-    * those cells — the classic IVF search path.
+  /** The batch-vs-layout probe of [[ivfNearDupsAgainstLayout]] and
+    * [[semDedupAgainst]]: (batch_id, corpus_id, sim) for each (id, emb,
+    * nsq) row of `batch` and each corpus row in one of its `probes`
+    * nearest cells, gated at `t` ([[gatedPairs]]).
     *
-    * Query-to-cell assignment happens on the DRIVER (nprobe dot products
-    * against k centroids — microseconds); the corpus side is a single
-    * scan-filter (`ivf_assign(emb)[0] ∈ probedCells`) followed by
-    * TakeOrderedAndProject: no shuffle, no join. At 100 TB with the corpus
-    * WRITTEN partitioned by cell id (see [[trainIvfCentroids]] — the same
-    * assignment expression works in a `partitionBy` column), the filter
-    * becomes partition pruning and the scan touches only nprobe/k of the
-    * data; unpartitioned, it is still a full scan but with candidate
-    * ranking bounded to the probed cells. */
+    * 100 TB shape: the batch is assigned map-side (centroid matrix rides
+    * in the plan); the distinct probed cells (a k-bounded driver collect,
+    * <= min(|batch|·probes, k) ids — the price of partition pruning) are
+    * pushed into the corpus scan as an IN-filter on the PARTITION column,
+    * so the history read opens probed/k of the corpus directories and
+    * re-assigns nothing. The candidate join is left to Catalyst/AQE: a
+    * day-sized batch broadcasts (corpus never shuffles); a batch past the
+    * broadcast threshold falls back to a shuffle sized to the PRUNED
+    * cells — no unconditional broadcast hint (the vocab-broadcast
+    * lesson). Corpus embeddings ride the candidate join once (the pruned
+    * scan IS that join side; a join-back would scan it twice). Unscoped:
+    * `batch` is read twice, so the caller caches it. */
+  private def layoutPairs(batch: DataFrame, corpusLayout: DataFrame,
+                          idCol: String, embCol: String,
+                          centroids: Seq[Seq[Double]], probes: Int,
+                          t: Double): DataFrame = {
+    val batchCells = batch.select(col("id").as("batch_id"), col("emb").as("emb_a"),
+      col("nsq").as("nsq_a"), explode(ivfAssign(col("emb"), centroids, probes)).as("cell"))
+    val probed = batchCells.select(col("cell")).distinct()
+      .collect().map(_.getInt(0)).sorted.toSeq
+    val corpus = corpusLayout
+      .filter(col("cell").isin(probed: _*))
+      .select(col("cell"), col(idCol).as("corpus_id"),
+        col(embCol).as("emb_b"), l2NormSq(col(embCol)).as("nsq_b"))
+    gatedPairs(corpus.join(batchCells, Seq("cell"))
+      .filter(col("batch_id") =!= col("corpus_id"))
+      .dropDuplicates("batch_id", "corpus_id"), "batch_id", "corpus_id", t)
+  }
+
   /** Driver-side query-to-cell assignment: the nprobe nearest centroids
     * by cosine (normalized query · centroid), deterministic tie-break by
     * cell id. Microseconds of driver math — k×dim products. */
-  private[operators] def probedCells(queryVec: Seq[Double],
-                                     centroids: Seq[Seq[Double]],
-                                     nprobe: Int): Seq[Int] = {
-    val qn = {
-      val n = math.sqrt(queryVec.map(x => x * x).sum)
-      if (n == 0) queryVec else queryVec.map(_ / n)
-    }
+  private def probedCells(queryVec: Seq[Double], centroids: Seq[Seq[Double]],
+                          nprobe: Int): Seq[Int] = {
+    val qn = unit(queryVec.toArray)
     centroids.zipWithIndex
       .map { case (c, i) => (i, c.zip(qn).map { case (x, y) => x * y }.sum) }
       .sortBy { case (i, d) => (-d, i) }
       .take(nprobe).map(_._1)
   }
 
+  /** The IVF probe of one query vector: `df`'s (idCol, embCol, cell) rows
+    * whose top-1 `cell` is among the query's `nprobe` nearest
+    * ([[probedCells]]) — the candidate set of [[topKForVectorIvf]] and
+    * `Quantize.ivfPqTopKForVector`.
+    *
+    * `trustCellColumn`: the caller vouches that the DataFrame's `cell`
+    * column is the top-1 assignment under THIS centroid matrix (the
+    * partitionBy(cell) layout written by Layout.ivfPartition — centroids
+    * are version-pinned metadata of that layout). Filtering on the
+    * partition column — not on a recomputed expression over the
+    * embedding — is what turns the probe into PARTITION PRUNING, so the
+    * scan opens only nprobe/k of the corpus directories (LayoutSpec
+    * plan-asserts this). Opt-in, NOT inferred from a column named `cell`:
+    * probing a layout written from a different centroid matrix (or a
+    * coincidental user column) would silently return wrong candidates. */
+  private[operators] def probedCellRows(df: DataFrame, idCol: String, embCol: String,
+                                        queryVec: Seq[Double],
+                                        centroids: Seq[Seq[Double]], nprobe: Int,
+                                        trustCellColumn: Boolean): DataFrame = {
+    require(!trustCellColumn || df.columns.contains("cell"),
+      "trustCellColumn requires a `cell` column (see Layout.ivfPartition)")
+    val cell =
+      if (trustCellColumn) col("cell")
+      else element_at(ivfAssign(col(embCol), centroids, 1), 1)
+    val probed = probedCells(queryVec, centroids, nprobe)
+    df.select(col(idCol), col(embCol), cell.as("cell"))
+      .filter(col("cell").isin(probed: _*))
+  }
+
+  /** IVF-accelerated top-k for one query vector: probe the query's
+    * `nprobe` nearest cells and rank only vectors assigned to those
+    * cells — the classic IVF search path.
+    *
+    * Query-to-cell assignment happens on the DRIVER (nprobe dot products
+    * against k centroids — microseconds); the corpus side is a single
+    * scan-filter ([[probedCellRows]]) followed by TakeOrderedAndProject:
+    * no shuffle, no join. With the corpus WRITTEN partitioned by cell id
+    * (Layout.ivfPartition, `trustCellColumn = true`) the filter becomes
+    * partition pruning and the scan touches only nprobe/k of the data;
+    * unpartitioned, it is still a full scan but with candidate ranking
+    * bounded to the probed cells.
+    *
+    * `assignReplicas` > 1 = the standard IVF replication tradeoff: each
+    * vector is indexed under its top-R cells, costing R× storage/scan in
+    * the partitioned layout but catching neighbors that sit just across a
+    * cell boundary (overlap@10 on the isotropic test data: 5-9 at R=1 vs
+    * 8-10 at R=2 across scales and seeds). R=1 keeps the single-cell
+    * partition-pruning layout. */
   def topKForVectorIvf(df: DataFrame, idCol: String, embCol: String,
                        queryVec: Seq[Double], k: Int,
                        centroids: Seq[Seq[Double]], nprobe: Int,
                        assignReplicas: Int = 1,
                        trustCellColumn: Boolean = false): DataFrame = {
-    val probed = probedCells(queryVec, centroids, nprobe)
-    val qv = typedLit(queryVec)
-    // assignReplicas > 1 = the standard IVF replication tradeoff: each
-    // vector is indexed under its top-R cells, costing R× storage/scan in
-    // the partitioned layout but catching neighbors that sit just across a
-    // cell boundary (overlap@10 on the isotropic test data: 5-9 at R=1 vs
-    // 8-10 at R=2 across scales and seeds). R=1 keeps the single-cell
-    // partition-pruning layout.
-    // trustCellColumn: the caller vouches that the DataFrame's `cell`
-    // column is the top-1 assignment under THIS centroid matrix (the
-    // partitionBy(cell) layout written by Layout.ivfPartition — centroids
-    // are version-pinned metadata of that layout). Filtering on the
-    // partition column — not on a recomputed expression over the
-    // embedding — is what turns the probe into PARTITION PRUNING, so the
-    // scan opens only nprobe/k of the corpus directories (LayoutSpec
-    // plan-asserts this). Opt-in, NOT inferred from a column named `cell`:
-    // probing a layout written from a different centroid matrix (or a
-    // coincidental user column) would silently return wrong candidates.
-    require(!trustCellColumn || df.columns.contains("cell"),
-      "trustCellColumn requires a `cell` column (see Layout.ivfPartition)")
     // the flag's whole contract is partition pruning, and the replica
     // branch below recomputes assignment over a full scan — honoring the
     // flag silently would give the caller a full-corpus scan they believe
@@ -499,21 +504,14 @@ object Similarity {
       "trustCellColumn only applies to the top-1 layout (assignReplicas = 1); " +
         "a replicated layout needs its own materialized cells")
     val candidates =
-      if (assignReplicas <= 1) {
-        val withCell =
-          if (trustCellColumn) df.select(col(idCol), col(embCol).as("emb"), col("cell"))
-          else df.select(col(idCol), col(embCol).as("emb"),
-            element_at(ivfAssign(col(embCol), centroids, 1), 1).as("cell"))
-        withCell.filter(col("cell").isin(probed: _*))
-      }
+      if (assignReplicas <= 1)
+        probedCellRows(df, idCol, embCol, queryVec, centroids, nprobe, trustCellColumn)
       else
-        df.select(col(idCol), col(embCol).as("emb"),
-            ivfAssign(col(embCol), centroids, assignReplicas).as("cells"))
-          .filter(arrays_overlap(col("cells"),
-            typedLit(probed.map(_.toInt))))
+        df.filter(arrays_overlap(ivfAssign(col(embCol), centroids, assignReplicas),
+          typedLit(probedCells(queryVec, centroids, nprobe))))
     candidates
-      .select(col(idCol),
-        cosineSim(col("emb"), qv).cast(DecimalType(9, 4)).cast("double").as("sim"))
+      .select(col(idCol), cosineSim(col(embCol), typedLit(queryVec))
+        .cast(DecimalType(9, 4)).cast("double").as("sim"))
       .orderBy(col("sim").desc, col(idCol))
       .limit(k)
   }
@@ -596,8 +594,7 @@ object Similarity {
     val cents = trainIvfCentroids(df, idCol, embCol, k, lloydIters, seed,
       trainFraction)
     // cached: feeds the member gather, the cell guard and the output join
-    val assigned = assignCells(s.cache(df.select(col(idCol).as("id"),
-      col(embCol).as("emb"), l2NormSq(col(embCol)).as("nsq"))), cents, probes)
+    val assigned = assignCells(s.cache(vectors(df, idCol, embCol)), cents, probes)
     output(keptRows(assigned,
       keepFirstRemoved(assigned, keepBy, tau, chunks, maxCellRows)), materialize)
   }
@@ -643,10 +640,10 @@ object Similarity {
       else a.getField("cs") < b.getField("cs") ||
         (a.getField("cs") === b.getField("cs") &&
           a.getField("id") < b.getField("id"))
-    def decCos(a: Column, b: Column): Column =
-      (dotProduct(a.getField("emb"), b.getField("emb")) /
-        (sqrt(a.getField("nsq")) * sqrt(b.getField("nsq"))))
-        .cast(DecimalType(9, 4))
+    // y is a preceding neighbor of x
+    def removes(y: Column, x: Column): Column =
+      precedes(y, x) && gatedCosine(y.getField("emb"), y.getField("nsq"),
+        x.getField("emb"), x.getField("nsq"), tau) >= tau
     if (maxCellRows > 0) {
       // one cheap count over (cell, id) rows — no embeddings shuffled
       val hot = members.groupBy(col("cellx")).agg(count(lit(1)).as("n"))
@@ -666,7 +663,7 @@ object Similarity {
         members.groupBy(col("cellx"))
           .agg(collect_list(col("m")).as("grp"))
           .select(explode(filter(col("grp"), x =>
-            exists(col("grp"), y => precedes(y, x) && decCos(y, x) >= tau)))
+            exists(col("grp"), y => removes(y, x))))
             .as("r"))
       else {
         // chunk-pair gather: member m with hash chunk h enters group
@@ -687,7 +684,7 @@ object Similarity {
           .agg(collect_list(when(col("is_t"), col("m"))).as("ts"),
             collect_list(when(!col("is_t"), col("m"))).as("ws"))
           .select(explode(filter(col("ts"), x =>
-            exists(col("ws"), y => precedes(y, x) && decCos(y, x) >= tau)))
+            exists(col("ws"), y => removes(y, x))))
             .as("r"))
       }
     removedRows.select(col("r.id").as("id")).distinct()
@@ -719,45 +716,26 @@ object Similarity {
     * 100 TB shape: batch vectors assign map-side against the PINNED
     * centroid matrix (the layout's version-pinned metadata — a re-trained
     * matrix would scatter corpus and batch across incompatible cells);
-    * the distinct probed cells (k-bounded) are collected and pushed into
-    * the corpus scan as partition pruning — the history read opens
-    * probed/k of the corpus directories and nothing is re-assigned on the
-    * corpus side. Corpus embeddings ride the candidate join once; the
-    * intra-batch pass is [[semDedup]]'s per-cell gather over the batch.
-    * `probes` governs recall (a corpus
+    * the cross pass is [[ivfNearDupsAgainstLayout]]'s probe
+    * ([[layoutPairs]]: partition-pruned corpus read, nothing re-assigned
+    * on the corpus side), and the intra-batch pass is [[semDedup]]'s
+    * per-cell gather over the batch. `probes` governs recall (a corpus
     * twin is caught iff its top-1 cell is among the batch vector's
     * `probes` nearest); removals are a subset of the global rule at any
-    * setting. Zero-norm batch vectors have no direction and are always
-    * kept. Output: one row per batch vector — (id, cell, cent_sim, kept)
-    * with `cell` the primary assignment under the layout's matrix. */
+    * setting. Zero-norm vectors have no direction: a batch one is always
+    * kept, a corpus one removes nothing. Output: one row per batch
+    * vector — (id, cell, cent_sim, kept) with `cell` the primary
+    * assignment under the layout's matrix. */
   def semDedupAgainst(batch: DataFrame, corpusLayout: DataFrame,
                       idCol: String, embCol: String,
                       centroids: Seq[Seq[Double]], probes: Int,
                       tau: Double, keepBy: String = "id",
                       materialize: Boolean = true): DataFrame = Storage.scoped { s =>
     requireKeepBy(keepBy)
-    val assigned = assignCells(s.cache(batch.select(col(idCol).as("id"),
-      col(embCol).as("emb"), l2NormSq(col(embCol)).as("nsq"))), centroids, probes)
-    val batchCells = assigned.filter(col("nsq") > 0)
-      .select(col("id"), col("emb"), col("nsq"), explode(col("cells")).as("cellx"))
-    // k-bounded driver collect — the price of partition pruning (the
-    // ivfNearDupsAgainstLayout contract)
-    val probed = batchCells.select(col("cellx")).distinct()
-      .collect().map(_.getInt(0)).sorted
-    val corpus = corpusLayout
-      .filter(col("cell").isin(probed.map(Integer.valueOf): _*))
-      .select(col("cell").as("cellx"), col(idCol).as("corpus_id"),
-        col(embCol).as("emb_b"), l2NormSq(col(embCol)).as("nsq_b"))
-    val crossRemoved = corpus
-      .join(batchCells, Seq("cellx"))
-      .filter(col("id") =!= col("corpus_id"))
-      .dropDuplicates("id", "corpus_id")
-      .select(col("id"),
-        (dotProduct(col("emb"), col("emb_b")) /
-          (sqrt(col("nsq")) * sqrt(col("nsq_b")))).as("sim_d"))
-      .filter(col("sim_d") >= tau - 1e-4)
-      .filter(col("sim_d").cast(DecimalType(9, 4)) >= tau)
-      .select(col("id"))
+    val vecs = s.cache(vectors(batch, idCol, embCol))
+    val assigned = assignCells(vecs, centroids, probes)
+    val crossRemoved = layoutPairs(vecs, corpusLayout, idCol, embCol,
+      centroids, probes, tau).select(col("batch_id").as("id"))
     val intraRemoved = keepFirstRemoved(assigned, keepBy, tau,
       chunks = 1, maxCellRows = 0L)
     output(keptRows(assigned, crossRemoved.unionByName(intraRemoved).distinct()),

@@ -6,6 +6,7 @@ import org.apache.spark.sql.types.DecimalType
 
 import graft.Storage.materializeOnce
 import graft.Tables
+import graft.catalog.Layout
 import graft.functions.cosineSim
 import graft.operators.Similarity
 
@@ -27,22 +28,10 @@ object Embeddings extends QueryPack {
     // -- Q23: brute-force cosine top-k against one query vector. The
     //    1-row query side is broadcast — no shuffle of the big side; top-k
     //    is TakeOrderedAndProject (per-partition heaps, driver merges k).
-    "q23_cosine_topk" -> ((s, dir) => {
-      val emb = Tables(s, dir, "embeddings")
-      val q = emb.filter(col("vec_id") === 0).select(col("embedding").as("qv"))
-      emb.crossJoin(broadcast(q))
-        .select(col("vec_id"),
-          // DECIMAL(9,4) quantization, not round(double): double rounding
-          // differs by 1 ulp across engines; the decimal cast is exact on
-          // both. The FINAL type is double (decimal(9,4)→double is exact
-          // everywhere): Spark-parquet and DuckDB decimals hash differently
-          // in the driver's canonicalization even when equal as values
-          // (round-2 hash_match=false on every decimal-typed column).
-          cosineSim(col("embedding"), col("qv"))
-            .cast(DecimalType(9, 4)).cast("double").as("sim"))
+    "q23_cosine_topk" -> ((s, dir) =>
+      queryCosines(Tables(s, dir, "embeddings"))
         .orderBy(col("sim").desc, col("vec_id"))
-        .limit(10)
-    }),
+        .limit(10)),
 
     // -- embedding-cosine near-dup pairs above a threshold. Brute-force
     //    O(n²) pair join is the exactness baseline; the LSH query below is
@@ -78,7 +67,7 @@ object Embeddings extends QueryPack {
           col("sim_d").cast(DecimalType(9, 4)).as("sim_q"))
         .filter(col("sim_q") >= 0.3)
         // decimal filters the threshold exactly; double is the OUTPUT type
-        // (representation-free across engines — see q23 note above)
+        // (representation-free across engines — see queryCosines)
         .select(col("id_a"), col("id_b"), col("sim_q").cast("double").as("sim"))
         .orderBy(col("id_a"), col("id_b"))
     }),
@@ -95,26 +84,11 @@ object Embeddings extends QueryPack {
     //                  come back empty);
     //      recall_ok — LSH found >= 90% of the true pairs;
     //      nonempty  — the bucketing produced pairs at all.
-    "sim_ann_lsh" -> ((s, dir) => {
-      // both sides feed two contract arms each (count + except):
-      // materialize once via localCheckpoint so the O(n²) brute join and
-      // the banding pipeline run once, not twice. ContextCleaner-managed —
-      // blocks are released when the frames are GC'd, unlike persist whose
-      // CacheManager entries outlive the call until clearCache().
-      val brute = materializeOnce(queries("dedup_embedding_cosine")(s, dir)
-        .select(col("id_a"), col("id_b")))
-      val lsh = materializeOnce(Similarity.lshNearDupPairs(Tables(s, dir, "embeddings"),
-          "vec_id", "embedding",
+    "sim_ann_lsh" -> ((s, dir) =>
+      subsetRecall(brutePairs(s, dir), Similarity.lshNearDupPairs(
+          Tables(s, dir, "embeddings"), "vec_id", "embedding",
           dim = 64, rowsPerBand = 4, bands = 24, seed = 42, simThreshold = 0.3)
-        .select(col("id_a"), col("id_b")))
-      brute.agg(count(lit(1)).as("n_true"))
-        .crossJoin(lsh.except(brute).agg(count(lit(1)).as("n_extra")))
-        .crossJoin(lsh.agg(count(lit(1)).as("n_found")))
-        .select(col("n_true"),
-          (col("n_extra") === 0).as("subset_ok"),
-          (col("n_found") >= col("n_true") * 0.9).as("recall_ok"),
-          (col("n_found") > 0).as("nonempty"))
-    }),
+        .select(col("id_a"), col("id_b")))),
 
     // -- int8 quantization round trip: per-vector scale, codes, and max
     //    reconstruction error — the 4× storage compression for a 100 TB
@@ -142,16 +116,9 @@ object Embeddings extends QueryPack {
     //    is hash-checked against a DuckDB recursive CTE computing min
     //    reachable id over the identical pair set. Isolated vectors keep
     //    their own id via the left join + coalesce.
-    "dedup_components" -> ((s, dir) => {
-      val pairs = queries("dedup_embedding_cosine")(s, dir)
-        .select(col("id_a"), col("id_b"))
-      val comps = graft.operators.Dedup.connectedComponents(pairs, "id_a", "id_b")
-      Tables(s, dir, "embeddings").select(col("vec_id"))
-        .join(comps, col("vec_id") === col("id"), "left")
-        .select(col("vec_id"),
-          coalesce(col("component"), col("vec_id")).as("component"))
-        .orderBy(col("vec_id"))
-    }),
+    "dedup_components" -> ((s, dir) =>
+      labelAll(s, dir, graft.operators.Dedup.connectedComponents(
+        brutePairs(s, dir), "id_a", "id_b"))),
 
     // -- the INCREMENTAL form (round-12): the identical cosine pair set
     //    folded into a STANDING component map in three deterministic
@@ -164,13 +131,11 @@ object Embeddings extends QueryPack {
     //    operator's. [[graft.catalog.Layout.componentsIndexAppend]] /
     //    [[graft.catalog.Layout.componentsResolve]].
     "dedup_components_incr" -> ((s, dir) => {
-      import graft.catalog.Layout
       val table = "cmp_incr_gate"
       // the pair checkpoint is released once the folds are complete: the
       // result below reads only the standing tables
       graft.Storage.scoped { st =>
-        val pairs = st.materialize(queries("dedup_embedding_cosine")(s, dir)
-          .select(col("id_a"), col("id_b")))
+        val pairs = st.materialize(brutePairs(s, dir))
         Layout.dropComponentsIndex(s, table)
         def slice(i: Int) = pairs.filter(col("id_a") % 3 === i)
         Layout.componentsIndex(s, slice(0), "id_a", "id_b", buckets = 4,
@@ -181,12 +146,7 @@ object Embeddings extends QueryPack {
         Layout.componentsIndexAppend(s, slice(2), "id_a", "id_b", buckets = 4,
           tableName = table, batchTag = Some("gate_b2"))
       }
-      val comps = Layout.componentsResolve(s, table)
-      Tables(s, dir, "embeddings").select(col("vec_id"))
-        .join(comps, col("vec_id") === col("id"), "left")
-        .select(col("vec_id"),
-          coalesce(col("component"), col("vec_id")).as("component"))
-        .orderBy(col("vec_id"))
+      labelAll(s, dir, Layout.componentsResolve(s, table))
     }),
 
     // -- ANN via IVF: spherical-k-means cells + multi-probe assignment +
@@ -200,36 +160,19 @@ object Embeddings extends QueryPack {
     //    SELF-VERIFYING (round-4: was rows-only): same contract shape as
     //    sim_ann_lsh — exact pair count anchored by DuckDB, subset via
     //    except, recall >= 0.9, nonempty.
-    "sim_ann_ivf" -> ((s, dir) => {
-      // materialize both sides once — see sim_ann_lsh
-      val brute = materializeOnce(queries("dedup_embedding_cosine")(s, dir)
-        .select(col("id_a"), col("id_b")))
-      val ivf = materializeOnce(Similarity.ivfNearDupPairs(Tables(s, dir, "embeddings"),
-          "vec_id", "embedding",
+    "sim_ann_ivf" -> ((s, dir) =>
+      subsetRecall(brutePairs(s, dir), Similarity.ivfNearDupPairs(
+          Tables(s, dir, "embeddings"), "vec_id", "embedding",
           k = 8, probes = 3, lloydIters = 3, seed = 42, simThreshold = 0.3)
-        .select(col("id_a"), col("id_b")))
-      brute.agg(count(lit(1)).as("n_true"))
-        .crossJoin(ivf.except(brute).agg(count(lit(1)).as("n_extra")))
-        .crossJoin(ivf.agg(count(lit(1)).as("n_found")))
-        .select(col("n_true"),
-          (col("n_extra") === 0).as("subset_ok"),
-          (col("n_found") >= col("n_true") * 0.9).as("recall_ok"),
-          (col("n_found") > 0).as("nonempty"))
-    }),
+        .select(col("id_a"), col("id_b")))),
 
     // -- IVF recall gate (oracle-checked), same contract as sim_ann_recall:
     //    ivf ⊆ brute-force (identical exact-verify semantics), so recall =
     //    n_found / n_true; the oracle recomputes n_true independently.
-    "sim_ann_ivf_recall" -> ((s, dir) => {
-      val emb = Tables(s, dir, "embeddings")
-      val brute = queries("dedup_embedding_cosine")(s, dir)
-      val ivf = Similarity.ivfNearDupPairs(emb, "vec_id", "embedding",
-          k = 8, probes = 3, lloydIters = 3, seed = 42, simThreshold = 0.3)
-      brute.agg(count(lit(1)).as("n_true"))
-        .crossJoin(ivf.agg(count(lit(1)).as("n_found")))
-        .select(col("n_true"),
-          (col("n_found") >= col("n_true") * 0.9).as("recall_ok"))
-    }),
+    "sim_ann_ivf_recall" -> ((s, dir) =>
+      recall(queries("dedup_embedding_cosine")(s, dir), Similarity.ivfNearDupPairs(
+        Tables(s, dir, "embeddings"), "vec_id", "embedding",
+        k = 8, probes = 3, lloydIters = 3, seed = 42, simThreshold = 0.3))),
 
     // -- SemDeDup (Abbas et al. 2023): spherical-k-means clusters + exact
     //    within-cluster cosine, keep-first under the id order
@@ -270,38 +213,25 @@ object Embeddings extends QueryPack {
       val cents = Similarity.trainIvfCentroids(corpus, "vec_id", "embedding",
         k = 8, lloydIters = 2, seed = 42)
       val table = "emb_semdedup_incr_gate"
-      // a stale managed-table dir survives the session (the in-memory
-      // catalog forgets the table, the warehouse dir keeps it), and
-      // saveAsTable then refuses with LOCATION_ALREADY_EXISTS
-      s.sql(s"DROP TABLE IF EXISTS $table")
-      val loc = new org.apache.hadoop.fs.Path(
-        s.conf.get("spark.sql.warehouse.dir") + s"/$table")
-      val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(loc)) fs.delete(loc, true)
-      graft.catalog.Layout.ivfPartitionOf(s, corpus, "embedding", cents, table)
+      Layout.dropTable(s, table)
+      Layout.ivfPartitionOf(s, corpus, "embedding", cents, table)
       // probes = 5 of 8: recall measured 0.93-1.0 across sf tiers at the
       // gate's isotropic tau = 0.3 (the weak-pruning regime — a corpus
       // twin is caught iff its top-1 cell is among the batch vector's
       // probes; 3 of 8 measured 0.87, under the 0.9 contract)
-      val removed = materializeOnce(Similarity.semDedupAgainst(batch, s.table(table),
+      val removed = Similarity.semDedupAgainst(batch, s.table(table),
           "vec_id", "embedding", cents, probes = 5, tau = 0.3)
-        .filter(!col("kept")).select(col("id")))
+        .filter(!col("kept")).select(col("id"))
       // exact global-rule arm, same sequential-fold + decimal semantics
-      val globalRemoved = materializeOnce(batch
+      val globalRemoved = batch
         .select(col("vec_id").as("b_id"), col("embedding").as("emb_a"))
         .crossJoin(emb.select(col("vec_id").as("a_id"),
           col("embedding").as("emb_b")))
         .filter(col("a_id") % 10 =!= 0 || col("a_id") < col("b_id"))
         .filter(cosineSim(col("emb_a"), col("emb_b"))
           .cast(DecimalType(9, 4)) >= 0.3)
-        .select(col("b_id").as("id")).distinct())
-      globalRemoved.agg(count(lit(1)).as("n_true"))
-        .crossJoin(removed.except(globalRemoved).agg(count(lit(1)).as("n_extra")))
-        .crossJoin(removed.agg(count(lit(1)).as("n_removed")))
-        .select(col("n_true"),
-          (col("n_extra") === 0).as("subset_ok"),
-          (col("n_removed") >= col("n_true") * 0.9).as("recall_ok"),
-          (col("n_removed") > 0).as("nonempty"))
+        .select(col("b_id").as("id")).distinct()
+      subsetRecall(globalRemoved, removed)
     }),
 
     // -- IVF top-k search for one query vector (vec 0): probe the 3
@@ -321,31 +251,8 @@ object Embeddings extends QueryPack {
     //                      cosine (ranking is approximate, the reported
     //                      similarity is not), asserted against the
     //                      brute-force computation for those ids.
-    "sim_ann_ivf_topk" -> ((s, dir) => {
-      val emb = Tables(s, dir, "embeddings")
-      val qvec = emb.filter(col("vec_id") === 0)
-        .select(col("embedding").cast("array<double>")).collect().head.getSeq[Double](0)
-      val cents = Similarity.trainIvfCentroids(emb, "vec_id", "embedding",
-        k = 8, lloydIters = 3, seed = 42)
-      val topk = Similarity.topKForVectorIvf(emb, "vec_id", "embedding", qvec,
-        k = 10, cents, nprobe = 3, assignReplicas = 2)
-      val q = emb.filter(col("vec_id") === 0).select(col("embedding").as("qv"))
-      val exact = emb.crossJoin(broadcast(q))
-        .select(col("vec_id"),
-          cosineSim(col("embedding"), col("qv"))
-            .cast(DecimalType(9, 4)).cast("double").as("sim_x"))
-      val brute10 = queries("q23_cosine_topk")(s, dir).select(col("vec_id"))
-      emb.agg(count(lit(1)).as("n_corpus"))
-        .crossJoin(topk.agg(count(lit(1)).as("n_results")))
-        .crossJoin(topk.select(col("vec_id")).intersect(brute10)
-          .agg(count(lit(1)).as("n_overlap")))
-        .crossJoin(topk.join(exact, "vec_id")
-          .filter(col("sim") =!= col("sim_x")).agg(count(lit(1)).as("n_sim_bad")))
-        .select(col("n_corpus"),
-          (col("n_results") >= 5 && col("n_results") <= 10).as("n_results_ok"),
-          (col("n_overlap") >= 5).as("overlap_ok"),
-          (col("n_sim_bad") === 0).as("sims_exact_ok"))
-    }),
+    "sim_ann_ivf_topk" -> ((s, dir) =>
+      topkContract(s, dir, ivfTop10(Tables(s, dir, "embeddings")))),
 
     // -- IVF top-k overlap gate: |ivf_top10 ∩ brute_top10| >= 5. Measured
     //    8-10 with 2-way assignment across sf0.001/sf0.01/sf0.1 and seeds
@@ -355,13 +262,7 @@ object Embeddings extends QueryPack {
     //    top-k itself — sim_ann_ivf_topk now returns its own contract row,
     //    not the ranked ids.)
     "sim_ann_ivf_topk_check" -> ((s, dir) => {
-      val emb = Tables(s, dir, "embeddings")
-      val qvec = emb.filter(col("vec_id") === 0)
-        .select(col("embedding").cast("array<double>")).collect().head.getSeq[Double](0)
-      val cents = Similarity.trainIvfCentroids(emb, "vec_id", "embedding",
-        k = 8, lloydIters = 3, seed = 42)
-      val ivf = Similarity.topKForVectorIvf(emb, "vec_id", "embedding", qvec,
-        k = 10, cents, nprobe = 3, assignReplicas = 2).select(col("vec_id"))
+      val ivf = ivfTop10(Tables(s, dir, "embeddings")).select(col("vec_id"))
       val brute = queries("q23_cosine_topk")(s, dir).select(col("vec_id"))
       ivf.intersect(brute).agg(count(lit(1)).as("n_overlap"))
         .select(lit(10L).as("k"), (col("n_overlap") >= 5).as("overlap_ok"))
@@ -388,15 +289,8 @@ object Embeddings extends QueryPack {
       val cents = Similarity.trainIvfCentroids(emb, "vec_id", "embedding",
         k = 8, lloydIters = 2, seed = 42)
       val table = "emb_ivf_incr_gate"
-      // a stale managed-table dir survives the session (the in-memory
-      // catalog forgets the table, the warehouse dir keeps it), and
-      // saveAsTable then refuses with LOCATION_ALREADY_EXISTS
-      s.sql(s"DROP TABLE IF EXISTS $table")
-      val loc = new org.apache.hadoop.fs.Path(
-        s.conf.get("spark.sql.warehouse.dir") + s"/$table")
-      val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(loc)) fs.delete(loc, true)
-      graft.catalog.Layout.ivfPartition(s, dir, cents, table)
+      Layout.dropTable(s, table)
+      Layout.ivfPartition(s, dir, cents, table)
       val batch = emb.filter(col("vec_id") % 10 === 0)
         .select((col("vec_id") + 1000000L).as("vec_id"), col("embedding"))
       val got = Similarity.ivfNearDupsAgainstLayout(batch, s.table(table),
@@ -428,16 +322,10 @@ object Embeddings extends QueryPack {
     //    computes |brute| independently and asserts the >= 0.9 recall
     //    contract — a recall regression (e.g. round 1's single-band 2%)
     //    becomes a red correctness row, not a silent rows-only pass.
-    "sim_ann_recall" -> ((s, dir) => {
-      val emb = Tables(s, dir, "embeddings")
-      val brute = queries("dedup_embedding_cosine")(s, dir)
-      val lsh = Similarity.lshNearDupPairs(emb, "vec_id", "embedding",
-          dim = 64, rowsPerBand = 4, bands = 24, seed = 42, simThreshold = 0.3)
-      brute.agg(count(lit(1)).as("n_true"))
-        .crossJoin(lsh.agg(count(lit(1)).as("n_found")))
-        .select(col("n_true"),
-          (col("n_found") >= col("n_true") * 0.9).as("recall_ok"))
-    }),
+    "sim_ann_recall" -> ((s, dir) =>
+      recall(queries("dedup_embedding_cosine")(s, dir), Similarity.lshNearDupPairs(
+        Tables(s, dir, "embeddings"), "vec_id", "embedding",
+        dim = 64, rowsPerBand = 4, bands = 24, seed = 42, simThreshold = 0.3))),
 
     // -- PQ compressed-domain search: codes are m=8 ints per vector (the
     //    32×-class tier; codes ride the scan, embeddings stay cold), the
@@ -452,10 +340,7 @@ object Embeddings extends QueryPack {
       val emb = Tables(s, dir, "embeddings")
       val books = Quantize.trainPqCodebooks(emb, "vec_id", "embedding",
         dim = 64, m = 8, ksub = 16, lloydIters = 2, seed = 42)
-      val q = emb.filter(col("vec_id") === 0)
-        .select(col("embedding").cast("array<double>"))
-        .first().getSeq[Double](0).toSeq
-      Quantize.pqTopKForVector(emb, "vec_id", "embedding", q, k = 10,
+      Quantize.pqTopKForVector(emb, "vec_id", "embedding", queryVec(emb), k = 10,
         books, shortlist = 192)
     }),
 
@@ -469,54 +354,112 @@ object Embeddings extends QueryPack {
     "sim_ann_ivfpq" -> ((s, dir) => {
       import graft.operators.Quantize
       val emb = Tables(s, dir, "embeddings")
-      val qvec = emb.filter(col("vec_id") === 0)
-        .select(col("embedding").cast("array<double>"))
-        .first().getSeq[Double](0).toSeq
       val cents = Similarity.trainIvfCentroids(emb, "vec_id", "embedding",
         k = 8, lloydIters = 3, seed = 42)
       val books = Quantize.trainPqCodebooks(emb, "vec_id", "embedding",
         dim = 64, m = 8, ksub = 16, lloydIters = 2, seed = 42)
-      val topk = Quantize.ivfPqTopKForVector(emb, "vec_id", "embedding",
-        qvec, k = 10, cents, nprobe = 4, books, shortlist = 192)
-      val q = emb.filter(col("vec_id") === 0).select(col("embedding").as("qv"))
-      val exact = emb.crossJoin(broadcast(q))
-        .select(col("vec_id"),
-          cosineSim(col("embedding"), col("qv"))
-            .cast(DecimalType(9, 4)).cast("double").as("sim_x"))
-      val brute10 = queries("q23_cosine_topk")(s, dir).select(col("vec_id"))
-      emb.agg(count(lit(1)).as("n_corpus"))
-        .crossJoin(topk.agg(count(lit(1)).as("n_results")))
-        .crossJoin(topk.select(col("vec_id")).intersect(brute10)
-          .agg(count(lit(1)).as("n_overlap")))
-        .crossJoin(topk.join(exact, "vec_id")
-          .filter(col("sim") =!= col("sim_x")).agg(count(lit(1)).as("n_sim_bad")))
-        .select(col("n_corpus"),
-          (col("n_results") >= 5 && col("n_results") <= 10).as("n_results_ok"),
-          (col("n_overlap") >= 5).as("overlap_ok"),
-          (col("n_sim_bad") === 0).as("sims_exact_ok"))
+      topkContract(s, dir, Quantize.ivfPqTopKForVector(emb, "vec_id", "embedding",
+        queryVec(emb), k = 10, cents, nprobe = 4, books, shortlist = 192))
     })
   )
+
+  /** Each vector's exact cosine to vec_id 0 as (vec_id, sim): the 1-row
+    * query side is broadcast, no shuffle of the big side. DECIMAL(9,4)
+    * quantization, not round(double): double rounding differs by 1 ulp
+    * across engines; the decimal cast is exact on both. The FINAL type is
+    * double (decimal(9,4)→double is exact everywhere): Spark-parquet and
+    * DuckDB decimals hash differently in the driver's canonicalization
+    * even when equal as values. */
+  private def queryCosines(emb: DataFrame): DataFrame = {
+    val q = emb.filter(col("vec_id") === 0).select(col("embedding").as("qv"))
+    emb.crossJoin(broadcast(q))
+      .select(col("vec_id"), cosineSim(col("embedding"), col("qv"))
+        .cast(DecimalType(9, 4)).cast("double").as("sim"))
+  }
+
+  /** vec_id 0's embedding, the query vector of every top-k gate. */
+  private def queryVec(emb: DataFrame): Seq[Double] =
+    emb.filter(col("vec_id") === 0).select(col("embedding").cast("array<double>"))
+      .first().getSeq[Double](0).toSeq
+
+  /** The IVF top-10 of the sim_ann_ivf_topk gates: 3 of 8 cells probed,
+    * 2-way corpus assignment. */
+  private def ivfTop10(emb: DataFrame): DataFrame =
+    Similarity.topKForVectorIvf(emb, "vec_id", "embedding", queryVec(emb), k = 10,
+      Similarity.trainIvfCentroids(emb, "vec_id", "embedding",
+        k = 8, lloydIters = 3, seed = 42),
+      nprobe = 3, assignReplicas = 2)
+
+  /** The contract row of an approximate (vec_id, sim) top-10 against
+    * vec_id 0 (see sim_ann_ivf_topk): corpus size, 5 <= |topk| <= 10,
+    * >= 5 of q23's exact top-10, and every emitted sim exact. */
+  private def topkContract(s: SparkSession, dir: String, topk: DataFrame): DataFrame = {
+    val emb = Tables(s, dir, "embeddings")
+    val exact = queryCosines(emb).withColumnRenamed("sim", "sim_x")
+    val brute10 = queries("q23_cosine_topk")(s, dir).select(col("vec_id"))
+    emb.agg(count(lit(1)).as("n_corpus"))
+      .crossJoin(topk.agg(count(lit(1)).as("n_results")))
+      .crossJoin(topk.select(col("vec_id")).intersect(brute10)
+        .agg(count(lit(1)).as("n_overlap")))
+      .crossJoin(topk.join(exact, "vec_id")
+        .filter(col("sim") =!= col("sim_x")).agg(count(lit(1)).as("n_sim_bad")))
+      .select(col("n_corpus"),
+        (col("n_results") >= 5 && col("n_results") <= 10).as("n_results_ok"),
+        (col("n_overlap") >= 5).as("overlap_ok"),
+        (col("n_sim_bad") === 0).as("sims_exact_ok"))
+  }
+
+  /** Every vector's (vec_id, component) under the (id, component)
+    * labeling `comps`; an isolated vector keeps its own id. */
+  private def labelAll(s: SparkSession, dir: String, comps: DataFrame): DataFrame =
+    Tables(s, dir, "embeddings").select(col("vec_id"))
+      .join(comps, col("vec_id") === col("id"), "left")
+      .select(col("vec_id"),
+        coalesce(col("component"), col("vec_id")).as("component"))
+      .orderBy(col("vec_id"))
+
+  /** The (id_a, id_b) pairs of the exact dedup_embedding_cosine query. */
+  private def brutePairs(s: SparkSession, dir: String): DataFrame =
+    queries("dedup_embedding_cosine")(s, dir).select(col("id_a"), col("id_b"))
+
+  /** The self-verifying contract row of an approximate operator whose
+    * `found` rows must be a subset of the exact `truth` rows: n_true
+    * (DuckDB recomputes it), subset_ok (found except truth is empty),
+    * recall_ok (|found| >= 0.9·|truth|) and nonempty. Both sides feed two
+    * arms each (count + except), so each is materialized once via
+    * localCheckpoint — ContextCleaner-managed, released when the frames
+    * are GC'd, unlike persist whose CacheManager entries outlive the call
+    * until clearCache(). */
+  private def subsetRecall(truth: DataFrame, found: DataFrame): DataFrame = {
+    val t = materializeOnce(truth)
+    val f = materializeOnce(found)
+    t.agg(count(lit(1)).as("n_true"))
+      .crossJoin(f.except(t).agg(count(lit(1)).as("n_extra")))
+      .crossJoin(f.agg(count(lit(1)).as("n_found")))
+      .select(col("n_true"),
+        (col("n_extra") === 0).as("subset_ok"),
+        (col("n_found") >= col("n_true") * 0.9).as("recall_ok"),
+        (col("n_found") > 0).as("nonempty"))
+  }
+
+  /** The recall gate row: n_true = |truth| (DuckDB recomputes it) and
+    * recall_ok = |found| >= 0.9·|truth|, for an operator whose output is
+    * a subset of the truth by construction. */
+  private def recall(truth: DataFrame, found: DataFrame): DataFrame =
+    truth.agg(count(lit(1)).as("n_true"))
+      .crossJoin(found.agg(count(lit(1)).as("n_found")))
+      .select(col("n_true"),
+        (col("n_found") >= col("n_true") * 0.9).as("recall_ok"))
 
   /** The dedup_semdedup contract row for [[Similarity.semDedup]] at
     * `chunks`: the global keep-min-id anchor n_true and the subset,
     * recall and nonempty gates (see the dedup_semdedup query). */
   private def semDedupContract(s: SparkSession, dir: String,
-                               chunks: Int): DataFrame = {
-    val globalRemoved = materializeOnce(queries("dedup_embedding_cosine")(s, dir)
-      .select(col("id_b")).distinct())
-    val removed = materializeOnce(Similarity.semDedup(Tables(s, dir, "embeddings"),
-        "vec_id", "embedding",
-        k = 8, probes = 3, lloydIters = 3, seed = 42, tau = 0.3, chunks = chunks)
-      .filter(!col("kept"))
-      .select(col("id").as("id_b")))
-    globalRemoved.agg(count(lit(1)).as("n_true"))
-      .crossJoin(removed.except(globalRemoved).agg(count(lit(1)).as("n_extra")))
-      .crossJoin(removed.agg(count(lit(1)).as("n_removed")))
-      .select(col("n_true"),
-        (col("n_extra") === 0).as("subset_ok"),
-        (col("n_removed") >= col("n_true") * 0.9).as("recall_ok"),
-        (col("n_removed") > 0).as("nonempty"))
-  }
+                               chunks: Int): DataFrame =
+    subsetRecall(queries("dedup_embedding_cosine")(s, dir).select(col("id_b")).distinct(),
+      Similarity.semDedup(Tables(s, dir, "embeddings"), "vec_id", "embedding",
+          k = 8, probes = 3, lloydIters = 3, seed = 42, tau = 0.3, chunks = chunks)
+        .filter(!col("kept")).select(col("id").as("id_b")))
 
   /** Brute-force cosine top-10 against vec_id 0 — q23's oracle, and (by
     * the exact-re-rank contract) sim_ann_pq's too. */
@@ -545,6 +488,56 @@ object Embeddings extends QueryPack {
       |FROM e a JOIN e b ON a.vec_id < b.vec_id
       |WHERE CAST(list_reduce(list_transform(range(1, len(a.v) + 1), i -> a.v[i] * b.v[i]), (x, y) -> x + y)
       |       / (sqrt(a.nsq) * sqrt(b.nsq)) AS DECIMAL(9,4)) >= 0.3""".stripMargin
+
+  /** The exact pair count behind the sim_ann_lsh / sim_ann_ivf
+    * contracts, with their subset, recall and nonempty gates asserted. */
+  private val annPairsSql: String =
+    """WITH e AS (
+      |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
+      |    list_reduce(list_transform(CAST(embedding AS DOUBLE[]), x -> x * x), (a, b) -> a + b) AS nsq
+      |  FROM embeddings)
+      |SELECT count(*) AS n_true, TRUE AS subset_ok, TRUE AS recall_ok,
+      |  TRUE AS nonempty
+      |FROM e a JOIN e b ON a.vec_id < b.vec_id
+      |WHERE CAST(list_reduce(list_transform(range(1, len(a.v) + 1), i -> a.v[i] * b.v[i]), (x, y) -> x + y)
+      |       / (sqrt(a.nsq) * sqrt(b.nsq)) AS DECIMAL(9,4)) >= 0.3""".stripMargin
+
+  /** The exact pair count behind the LSH and IVF recall gates. */
+  private val annRecallSql: String =
+    """WITH e AS (
+      |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
+      |    list_reduce(list_transform(CAST(embedding AS DOUBLE[]), x -> x * x), (a, b) -> a + b) AS nsq
+      |  FROM embeddings)
+      |SELECT count(*) AS n_true, TRUE AS recall_ok
+      |FROM e a JOIN e b ON a.vec_id < b.vec_id
+      |WHERE CAST(list_reduce(list_transform(range(1, len(a.v) + 1), i -> a.v[i] * b.v[i]), (x, y) -> x + y)
+      |       / (sqrt(a.nsq) * sqrt(b.nsq)) AS DECIMAL(9,4)) >= 0.3""".stripMargin
+
+  /** Min-reachable-id labeling over the >= 0.3 cosine pairs (recursive
+    * CTE); batching the fold must not change it, so dedup_components and
+    * dedup_components_incr share it. */
+  private val componentsSql: String =
+    """WITH RECURSIVE e0 AS (
+      |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
+      |    list_reduce(list_transform(CAST(embedding AS DOUBLE[]), x -> x * x), (a, b) -> a + b) AS nsq
+      |  FROM embeddings),
+      |p AS (
+      |  SELECT a.vec_id AS id_a, b.vec_id AS id_b
+      |  FROM e0 a JOIN e0 b ON a.vec_id < b.vec_id
+      |  WHERE CAST(list_reduce(list_transform(range(1, len(a.v) + 1), i -> a.v[i] * b.v[i]), (x, y) -> x + y)
+      |         / (sqrt(a.nsq) * sqrt(b.nsq)) AS DECIMAL(9,4)) >= 0.3),
+      |ed AS (SELECT id_a AS src, id_b AS dst FROM p
+      |       UNION SELECT id_b, id_a FROM p),
+      |reach(id, r) AS (
+      |  SELECT DISTINCT src, src FROM ed
+      |  UNION
+      |  SELECT ed.src, reach.r FROM ed JOIN reach ON ed.dst = reach.id)
+      |SELECT emb.vec_id,
+      |  COALESCE(c.component, emb.vec_id) AS component
+      |FROM embeddings emb
+      |LEFT JOIN (SELECT id, MIN(r) AS component FROM reach GROUP BY id) c
+      |  ON emb.vec_id = c.id
+      |ORDER BY emb.vec_id""".stripMargin
 
   // Oracle note: round 1 used DuckDB's list_cosine_similarity, whose internal
   // accumulation is NOT the sequential double fold Spark performs → 1-ulp
@@ -603,27 +596,8 @@ object Embeddings extends QueryPack {
     // Self-verifying ANN contracts (see the queries): DuckDB recomputes the
     // exact anchor (brute-force pair count / result-set size) and asserts
     // the subset/recall/exact-sim booleans computed Spark-side.
-    "sim_ann_lsh" ->
-      """WITH e AS (
-        |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-        |    list_reduce(list_transform(CAST(embedding AS DOUBLE[]), x -> x * x), (a, b) -> a + b) AS nsq
-        |  FROM embeddings)
-        |SELECT count(*) AS n_true, TRUE AS subset_ok, TRUE AS recall_ok,
-        |  TRUE AS nonempty
-        |FROM e a JOIN e b ON a.vec_id < b.vec_id
-        |WHERE CAST(list_reduce(list_transform(range(1, len(a.v) + 1), i -> a.v[i] * b.v[i]), (x, y) -> x + y)
-        |       / (sqrt(a.nsq) * sqrt(b.nsq)) AS DECIMAL(9,4)) >= 0.3""".stripMargin,
-
-    "sim_ann_ivf" ->
-      """WITH e AS (
-        |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-        |    list_reduce(list_transform(CAST(embedding AS DOUBLE[]), x -> x * x), (a, b) -> a + b) AS nsq
-        |  FROM embeddings)
-        |SELECT count(*) AS n_true, TRUE AS subset_ok, TRUE AS recall_ok,
-        |  TRUE AS nonempty
-        |FROM e a JOIN e b ON a.vec_id < b.vec_id
-        |WHERE CAST(list_reduce(list_transform(range(1, len(a.v) + 1), i -> a.v[i] * b.v[i]), (x, y) -> x + y)
-        |       / (sqrt(a.nsq) * sqrt(b.nsq)) AS DECIMAL(9,4)) >= 0.3""".stripMargin,
+    "sim_ann_lsh" -> annPairsSql,
+    "sim_ann_ivf" -> annPairsSql,
 
     "sim_ann_ivf_topk" ->
       """SELECT count(*) AS n_corpus, TRUE AS n_results_ok,
@@ -668,72 +642,10 @@ object Embeddings extends QueryPack {
         |      i -> abs(v[i] - CAST(codes[i] AS DOUBLE) * scale))) AS DECIMAL(12,8)) AS DOUBLE) AS max_err
         |FROM q ORDER BY vec_id""".stripMargin,
 
-    "dedup_components" ->
-      """WITH RECURSIVE e0 AS (
-        |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-        |    list_reduce(list_transform(CAST(embedding AS DOUBLE[]), x -> x * x), (a, b) -> a + b) AS nsq
-        |  FROM embeddings),
-        |p AS (
-        |  SELECT a.vec_id AS id_a, b.vec_id AS id_b
-        |  FROM e0 a JOIN e0 b ON a.vec_id < b.vec_id
-        |  WHERE CAST(list_reduce(list_transform(range(1, len(a.v) + 1), i -> a.v[i] * b.v[i]), (x, y) -> x + y)
-        |         / (sqrt(a.nsq) * sqrt(b.nsq)) AS DECIMAL(9,4)) >= 0.3),
-        |ed AS (SELECT id_a AS src, id_b AS dst FROM p
-        |       UNION SELECT id_b, id_a FROM p),
-        |reach(id, r) AS (
-        |  SELECT DISTINCT src, src FROM ed
-        |  UNION
-        |  SELECT ed.src, reach.r FROM ed JOIN reach ON ed.dst = reach.id)
-        |SELECT emb.vec_id,
-        |  COALESCE(c.component, emb.vec_id) AS component
-        |FROM embeddings emb
-        |LEFT JOIN (SELECT id, MIN(r) AS component FROM reach GROUP BY id) c
-        |  ON emb.vec_id = c.id
-        |ORDER BY emb.vec_id""".stripMargin,
+    "dedup_components" -> componentsSql,
+    "dedup_components_incr" -> componentsSql,
 
-    // identical oracle to dedup_components: batching the fold must not
-    // change the labeling of the same edge set
-    "dedup_components_incr" ->
-      """WITH RECURSIVE e0 AS (
-        |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-        |    list_reduce(list_transform(CAST(embedding AS DOUBLE[]), x -> x * x), (a, b) -> a + b) AS nsq
-        |  FROM embeddings),
-        |p AS (
-        |  SELECT a.vec_id AS id_a, b.vec_id AS id_b
-        |  FROM e0 a JOIN e0 b ON a.vec_id < b.vec_id
-        |  WHERE CAST(list_reduce(list_transform(range(1, len(a.v) + 1), i -> a.v[i] * b.v[i]), (x, y) -> x + y)
-        |         / (sqrt(a.nsq) * sqrt(b.nsq)) AS DECIMAL(9,4)) >= 0.3),
-        |ed AS (SELECT id_a AS src, id_b AS dst FROM p
-        |       UNION SELECT id_b, id_a FROM p),
-        |reach(id, r) AS (
-        |  SELECT DISTINCT src, src FROM ed
-        |  UNION
-        |  SELECT ed.src, reach.r FROM ed JOIN reach ON ed.dst = reach.id)
-        |SELECT emb.vec_id,
-        |  COALESCE(c.component, emb.vec_id) AS component
-        |FROM embeddings emb
-        |LEFT JOIN (SELECT id, MIN(r) AS component FROM reach GROUP BY id) c
-        |  ON emb.vec_id = c.id
-        |ORDER BY emb.vec_id""".stripMargin,
-
-    "sim_ann_ivf_recall" ->
-      """WITH e AS (
-        |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-        |    list_reduce(list_transform(CAST(embedding AS DOUBLE[]), x -> x * x), (a, b) -> a + b) AS nsq
-        |  FROM embeddings)
-        |SELECT count(*) AS n_true, TRUE AS recall_ok
-        |FROM e a JOIN e b ON a.vec_id < b.vec_id
-        |WHERE CAST(list_reduce(list_transform(range(1, len(a.v) + 1), i -> a.v[i] * b.v[i]), (x, y) -> x + y)
-        |       / (sqrt(a.nsq) * sqrt(b.nsq)) AS DECIMAL(9,4)) >= 0.3""".stripMargin,
-
-    "sim_ann_recall" ->
-      """WITH e AS (
-        |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-        |    list_reduce(list_transform(CAST(embedding AS DOUBLE[]), x -> x * x), (a, b) -> a + b) AS nsq
-        |  FROM embeddings)
-        |SELECT count(*) AS n_true, TRUE AS recall_ok
-        |FROM e a JOIN e b ON a.vec_id < b.vec_id
-        |WHERE CAST(list_reduce(list_transform(range(1, len(a.v) + 1), i -> a.v[i] * b.v[i]), (x, y) -> x + y)
-        |       / (sqrt(a.nsq) * sqrt(b.nsq)) AS DECIMAL(9,4)) >= 0.3""".stripMargin
+    "sim_ann_ivf_recall" -> annRecallSql,
+    "sim_ann_recall" -> annRecallSql
   )
 }

@@ -85,11 +85,6 @@ object StreamOps {
     }
   }
 
-  /** Exact streaming dedup on key columns: first occurrence wins, state
-    * kept forever (bounded sources / tests) — `dropDuplicates`. */
-  def dedupExact(df: DataFrame, keys: Seq[String]): DataFrame =
-    df.dropDuplicates(keys)
-
   /** Dedup with state expiry at the watermark: duplicates arriving within
     * the watermark delay of the first occurrence are dropped; state is
     * evicted afterwards, bounding memory at 100 TB stream scale. Caller

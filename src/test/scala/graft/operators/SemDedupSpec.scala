@@ -94,6 +94,25 @@ class SemDedupSpec extends SparkSpec {
         s"${removed.size}/${expected.size}")
   }
 
+  test("a zero-norm corpus vector in a probed cell removes nothing in semDedupAgainst") {
+    import graft.functions.ivfAssign
+    val sp = spark
+    import sp.implicits._
+    val corpus = clustered.filter(col("vec_id") % 2 === 0)
+    val batch = clustered.filter(col("vec_id") % 2 =!= 0)
+    val cents = Similarity.trainIvfCentroids(corpus, "vec_id", "embedding",
+      k = 3, lloydIters = 3, seed = 42)
+    // every cell holds batch members, so the zero vector's cell is probed
+    def run(c: DataFrame) = Similarity.semDedupAgainst(batch,
+        c.withColumn("cell", element_at(ivfAssign(col("embedding"), cents, 1), 1)),
+        "vec_id", "embedding", cents, probes = 1, tau = 0.8)
+      .collect().map(r => (r.getLong(0), r.getBoolean(3))).toSet
+    val zero = Seq((9998L, Seq.fill(32)(0.0))).toDF("vec_id", "embedding")
+    val out = run(corpus)
+    assert(out.exists(!_._2), "fixture must remove something")
+    assert(run(corpus.unionByName(zero)) == out)
+  }
+
   test("semDedup keepBy=centroid is keep-first under the (cent_sim, id) order within cells") {
     val out = Similarity.semDedup(clustered, "vec_id", "embedding",
         k = 3, probes = 1, lloydIters = 3, seed = 42, tau = 0.8,

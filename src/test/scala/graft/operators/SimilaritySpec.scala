@@ -102,6 +102,79 @@ class SimilaritySpec extends SparkSpec {
     assert(run() == run())
   }
 
+  /** `df` plus one all-zero vector: it has no direction, so under the
+    * cosine gate it pairs with nothing. */
+  private def withZero(df: DataFrame): DataFrame = {
+    val sp = spark
+    import sp.implicits._
+    df.unionByName(Seq((9999L, Seq.fill(32)(0.0))).toDF("vec_id", "embedding"))
+  }
+
+  private def triples(df: DataFrame): Set[(Long, Long, Double)] =
+    df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+
+  test("a zero-norm vector pairs with nothing in lshNearDupPairs") {
+    // 4-plane bands: the zero vector's constant sign bits collide with
+    // many buckets, so it reaches the verify step as a candidate
+    def lsh(df: DataFrame) = triples(Similarity.lshNearDupPairs(df, "vec_id",
+      "embedding", dim = 32, rowsPerBand = 4, bands = 8, seed = 42, simThreshold = 0.9))
+    val lshPairs = lsh(embs)
+    assert(lshPairs.nonEmpty)
+    assert(lsh(withZero(embs)) == lshPairs)
+  }
+
+  test("a zero-norm vector pairs with nothing in ivfNearDupPairs") {
+    // the zero vector shares its (tie-broken) cell with a whole cluster
+    def ivf(df: DataFrame) = triples(Similarity.ivfNearDupPairs(df, "vec_id",
+      "embedding", k = 3, probes = 1, lloydIters = 3, seed = 42, simThreshold = 0.8))
+    val ivfPairs = ivf(clustered)
+    assert(ivfPairs.nonEmpty)
+    assert(ivf(withZero(clustered)) == ivfPairs)
+  }
+
+  test("a zero-norm batch vector pairs with nothing in ivfNearDupsAgainstLayout") {
+    import graft.functions.ivfAssign
+    val cents = Similarity.trainIvfCentroids(clustered, "vec_id", "embedding",
+      k = 3, lloydIters = 3, seed = 42)
+    val layout = clustered.withColumn("cell",
+      element_at(ivfAssign(col("embedding"), cents, 1), 1))
+    val batch = clustered.filter(col("vec_id") % 5 === 0)
+      .select((col("vec_id") + 5000L).as("vec_id"), col("embedding"))
+    def run(b: DataFrame) = triples(Similarity.ivfNearDupsAgainstLayout(b, layout,
+      "vec_id", "embedding", cents, probes = 1, simThreshold = 0.8))
+    val pairs = run(batch)
+    assert(pairs.nonEmpty)
+    assert(run(withZero(batch)) == pairs)
+  }
+
+  test("ivfNearDupPairs at probes = 3 equals a replay over shared probed cells on isotropic data") {
+    import graft.functions.ivfAssign
+    // the sim_ann_ivf gate's geometry: isotropic embeddings, k = 8 cells,
+    // 3 probes, the weak-pruning threshold 0.3
+    val emb = graft.Tables(spark, "/root/testdata/sf0.001", "embeddings")
+      .select(col("vec_id"), col("embedding"))
+    val cents = Similarity.trainIvfCentroids(emb, "vec_id", "embedding",
+      k = 8, lloydIters = 3, seed = 42)
+    val rows = emb.select(col("vec_id"), col("embedding").cast("array<double>"),
+        ivfAssign(col("embedding"), cents, 3).as("cells"))
+      .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray, r.getSeq[Int](2).toSet))
+    def nrm(v: Array[Double]) = math.sqrt(v.map(x => x * x).sum)
+    def decCos(a: Array[Double], b: Array[Double]) =
+      BigDecimal(a.zip(b).map { case (x, y) => x * y }.sum / (nrm(a) * nrm(b)))
+        .setScale(4, BigDecimal.RoundingMode.HALF_UP)
+    val scored = for {
+      (ia, va, ca) <- rows.toSeq; (ib, vb, cb) <- rows.toSeq if ia < ib
+      sim = decCos(va, vb) if sim >= 0.3
+    } yield (ia, ib, sim.toDouble, ca.exists(cb))
+    val expected = scored.collect { case (a, b, s, true) => (a, b, s) }.toSet
+    assert(expected.nonEmpty && expected.size < scored.size,
+      s"cells must prune some but not all pairs: ${expected.size}/${scored.size}")
+    val got = triples(Similarity.ivfNearDupPairs(emb, "vec_id", "embedding",
+      k = 8, probes = 3, lloydIters = 3, seed = 42, simThreshold = 0.3))
+    assert(got == expected, s"only-operator=${(got -- expected).take(5)} " +
+      s"only-replay=${(expected -- got).take(5)}")
+  }
+
   test("Lloyd fold route yields bit-identical centroids to the posexplode route (r15)") {
     // the r15 per-row fold (NormalizedVectorSumAgg, merge pinned to
     // ascending partition id) vs the replaced posexplode + (cell, pos)
